@@ -15,7 +15,7 @@ test:
 	python -m pytest tests/ -x -q
 
 bench:
-	python bench.py
+	python3 perfbench/run.py --workload all --seed 1 --seconds 12 --trace 0
 
 check:
 	python tools/check_oracles.py

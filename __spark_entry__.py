@@ -2,10 +2,11 @@
 
 ``entry`` runs the flagship maintenance lifecycle (synthesize → ingest →
 compact → Z-order cluster → MERGE corrections → scan) and returns a
-verification DataFrame. ``queries``/``oracle_sql`` cover the operator
-inventory of SURVEY.md §2 plus the training-data ops; implementations
-live in ``e_commerce_lakehouse_spark/queries.py`` with DuckDB twins in
-``e_commerce_lakehouse_spark/oracles.py``.
+verification DataFrame. ``queries``/``oracle_sql`` cover the engine:
+the table format, the maintenance and row-level operators, ETL, the
+source readers, streaming, transcript ops, sketches and metadata
+aggregates. Implementations live in ``e_commerce_lakehouse_spark/queries.py``
+with DuckDB twins in ``e_commerce_lakehouse_spark/oracles.py``.
 """
 
 from __future__ import annotations

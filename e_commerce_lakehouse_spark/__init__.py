@@ -10,9 +10,10 @@ format implemented here from scratch:
                   per-file min/max stats, snapshot-pinned pruned scans
 - ``operators/``  the five maintenance operators (compaction, Z-order /
                   Hilbert clustering, manifest rewrite, snapshot expire +
-                  GC, MERGE INTO) plus the reference's ETL dataflow
-                  operators (validate / dedup / transform) and
-                  training-data ops (dedup family, ANN, text analysis)
+                  GC, MERGE INTO), row-level DELETE/UPDATE, schema
+                  evolution, the reference's ETL dataflow operators
+                  (validate / dedup / transform), transcript
+                  training-data ops and manifest-level sketches
 - ``functions/``  vectorized key functions (Z-order & Hilbert interleave)
 - ``plans/``      driver-side planning: bin-packing, skew/salting helpers
 - ``sources/``    CSV/Excel/parquet ingestion (reference §2.1 parity)

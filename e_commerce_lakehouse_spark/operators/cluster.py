@@ -18,7 +18,7 @@ Two execution modes:
 - single-pass (default): ``repartitionByRange(n, key)`` (one shuffle,
   Spark range-sampling balances partitions even under hot-conv skew since
   the key mixes hash(conv_id) bits) + ``sortWithinPartitions`` + write.
-  Best throughput; this is what bench.py measures.
+  Best throughput.
 - sharded (``shards=K``): stage 1 spills a keyed temp copy hash-bucketed
   by key-quantile shard; stage 2 sorts/writes each shard as its own
   checkpointed file group. Twice the I/O, but a killed run resumes at

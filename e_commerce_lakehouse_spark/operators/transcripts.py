@@ -253,9 +253,8 @@ def response_latency(tr: DataFrame) -> DataFrame:
 def conversation_dedup(tr: DataFrame) -> DataFrame:
     """Conversation-granularity exact dedup: fingerprint = md5 of the
     turn texts in turn order, length-prefixed (`len:text`) and
-    unit-separated so no text can forge a boundary — the transcript
-    analog of document exact dedup (operators/dedup.py), where the
-    dedup unit is the whole multi-turn conversation.
+    unit-separated so no text can forge a boundary — exact dedup where
+    the dedup unit is the whole multi-turn conversation.
 
     Two shuffles: the per-conv fingerprint aggregate (collect_list is
     bounded by one conversation's turns), then a fingerprint-group
@@ -945,10 +944,9 @@ def turn_windows(
     tr: DataFrame, window_turns: int = 8, stride: int = 4
 ) -> DataFrame:
     """Long-conversation splitter: overlapping ``window_turns``-turn
-    training windows at ``stride`` — the TURN-granularity companion of
-    the char-chunker (operators/curation.chunk_documents): a 400-turn
-    agent session becomes ~100 overlapping windows a trainer can pack
-    independently, preserving local turn continuity.
+    training windows at ``stride``: a 400-turn agent session becomes
+    ~100 overlapping windows a trainer can pack independently,
+    preserving local turn continuity.
 
     Window w covers turns [w*stride, w*stride + window_turns); turns in
     the inter-window gap of a sparse stride (stride > window_turns)

@@ -17,184 +17,8 @@ _ORDERS_VALID = (
     "AND o_totalprice <= 150000.0 AND o_orderdate IS NOT NULL"
 )
 
-# shared CTE: distinct word-3-gram shingles per document (mirrors
-# operators/dedup.word_shingles semantics incl. the short-doc fallback)
-_SHINGLES = """
-shingles AS (
-    SELECT doc_id, unnest(list_distinct(
-        CASE WHEN len(w) >= 3 THEN
-            list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-        ELSE [array_to_string(w, ' ')] END)) AS shingle
-    FROM (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w FROM documents)
-)
-"""
-
-_JACCARD = f"""
-WITH {_SHINGLES},
--- 60-bit md5-prefix int shingle keys (mirror of dedup.ngram_jaccard_pairs:
--- the self-join runs on 8-byte ints, not strings)
-shing AS (
-    SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS shingle
-    FROM shingles
-),
--- df-cut mirror (max_df_frac=0.5): drop shingles present in more than
--- half the corpus before the self-join
-cut AS (
-    SELECT s.doc_id, s.shingle FROM shing s
-    JOIN (SELECT shingle FROM (
-            SELECT shingle, count(DISTINCT doc_id) AS df_ FROM shing GROUP BY shingle)
-          WHERE df_ <= 0.5 * (SELECT count(DISTINCT doc_id) FROM documents)) r
-      USING (shingle)
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM cut GROUP BY doc_id),
-inter AS (
-    SELECT s1.doc_id AS a, s2.doc_id AS b, count(*) AS inter
-    FROM cut s1 JOIN cut s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-    GROUP BY s1.doc_id, s2.doc_id
-),
-jac AS (
-    SELECT i.a, i.b, round(i.inter::DOUBLE / (za.sz + zb.sz - i.inter), 6) AS jaccard
-    FROM inter i
-    JOIN sizes za ON za.doc_id = i.a
-    JOIN sizes zb ON zb.doc_id = i.b
-)
-"""
-
-def _minhash_sig_sql() -> str:
-    """Twin of dedup.minhash_signatures: one md5 per shingle, split into
-    two 30-bit words, 12 Carter-Wegman min-aggs over BIGINTs."""
-    from .operators.dedup import _MH_PRIME, _mh_params
-
-    aggs = []
-    for j in range(12):
-        a, b = _mh_params(j)
-        aggs.append(f"min(({a} * w1 + {b} * w2 + {j}) % {_MH_PRIME}) AS h{j}")
-    return (
-        ",\nshw AS (SELECT doc_id,"
-        " ('0x' || substr(md5(shingle), 1, 8))::BIGINT % 1073741824 AS w1,"
-        " ('0x' || substr(md5(shingle), 9, 8))::BIGINT % 1073741824 AS w2"
-        " FROM shingles)"
-        ",\nsig AS (SELECT doc_id, " + ", ".join(aggs) + " FROM shw GROUP BY doc_id)"
-    )
-
-
-_MINHASH_SIG = _minhash_sig_sql()
-
-_BANDS = ",\nbanded AS (SELECT doc_id, " + ", ".join(
-    "md5(" + " || '|' || ".join(f"h{b * 4 + r}::VARCHAR" for r in range(4)) + f") AS band{b}"
-    for b in range(3)
-) + " FROM sig)"
-
-_COS = """
-round(list_sum(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]))
- / nullif(sqrt(list_sum(list_transform(a.e, x -> x * x)))
-  * sqrt(list_sum(list_transform(b.e, x -> x * x))), 0), 4)
-"""
-
-
-# ---------------------------------------------------------- LSH twin SQL
-# The sign-LSH bucket signature (operators/similarity.lsh_bucket_signature)
-# is a pure deterministic function of the input: hyperplanes derive from
-# md5(seed|plane|dim) and the center is the 6-dp-rounded dataset mean.
-# These helpers mirror it bit-for-bit in DuckDB so q24/q26 are fully
-# value-hash oracled despite being "approximate" operators.
-
-_DIM = 64
-_LSH_PLANES = 6
-_LSH_TABLES = 4
-_LSH_SEED = 42
-
-
-def _ev_ctr_sql(source_pred: str = "") -> str:
-    ms = ", ".join(f"round(avg(e[{i + 1}]), 6) AS m{i + 1}" for i in range(_DIM))
-    return (
-        f"ev AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings{source_pred}),\n"
-        f"ctr AS (SELECT {ms} FROM ev)"
-    )
-
-
-def _bucket_expr(seed: int) -> str:
-    """One table's bucket signature: bit p = sign(sum_i (e[i]-m_i)*w_pi),
-    terms summed LEFT-ASSOCIATIVELY to match Spark's sequential fold."""
-    from .operators.similarity import _hyperplane
-
-    bits = []
-    for p in range(_LSH_PLANES):
-        plane = _hyperplane(seed, p, _DIM)
-        dot = " + ".join(f"(e[{i + 1}] - m{i + 1}) * {w!r}" for i, w in enumerate(plane))
-        bits.append(f"CASE WHEN ({dot}) >= 0 THEN {1 << p} ELSE 0 END")
-    return "(" + " + ".join(bits) + ")"
-
-
-def _banded_lsh_sql() -> str:
-    ks = ", ".join(
-        f"{_bucket_expr(_LSH_SEED + 1000 * t)} AS k{t}" for t in range(_LSH_TABLES)
-    )
-    return f"b AS (SELECT vec_id, e, {ks} FROM ev, ctr)"
-
-_TEXT_VOTES = """
-WITH toks AS (
-    SELECT doc_id, text, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents
-), feat AS (
-    SELECT doc_id, text, w,
-        len(list_filter(w, t -> t IN ('the','a','of','and','to')))::INTEGER AS sw_hits,
-        len(list_filter(w, t -> t IN ('the','a','and')))::INTEGER AS v_en,
-        len(list_filter(w, t -> t IN ('der','die','und')))::INTEGER AS v_de,
-        len(list_filter(w, t -> t IN ('le','la','et')))::INTEGER AS v_fr,
-        len(list_filter(w, t -> t IN ('el','la','y')))::INTEGER AS v_es
-    FROM toks
-), scored AS (
-    SELECT doc_id, text, w, v_en, v_de, v_fr, v_es,
-        round(sw_hits::DOUBLE / greatest(len(w), 1), 6) AS swr,
-        round(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE
-              / greatest(length(text), 1), 6) AS pr,
-        greatest(v_en, v_de, v_fr, v_es) AS best
-    FROM feat
-)
-"""
 
 ALL: dict[str, str] = {
-    "q01_groupby_agg": """
-        SELECT l_returnflag, l_linestatus,
-            round(sum(l_quantity), 2) AS sum_qty,
-            round(sum(l_extendedprice), 2) AS sum_base_price,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-            round(avg(l_quantity), 4) AS avg_qty,
-            round(avg(l_discount), 4) AS avg_disc,
-            count(*) AS count_order
-        FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "q31_sql_over_views": """
-        SELECT l_returnflag, l_linestatus,
-            round(sum(l_quantity), 2) AS sum_qty,
-            round(sum(l_extendedprice), 2) AS sum_base_price,
-            round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-            round(avg(l_quantity), 4) AS avg_qty,
-            round(avg(l_discount), 4) AS avg_disc,
-            count(*) AS count_order
-        FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "q02_join_agg": """
-        SELECT o_orderkey, o_totalprice,
-            count(l_linenumber) AS n_items, round(sum(l_quantity), 2) AS sum_qty
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        GROUP BY o_orderkey, o_totalprice
-    """,
-    "q03_broadcast_dim_join": """
-        SELECT r_name, round(sum(o_totalprice), 2) AS revenue, count(*) AS n_orders
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY r_name
-    """,
-    "q04_window_dedup_latest": """
-        SELECT user_id, event_id, ts, event_type FROM (
-            SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
-            FROM events) WHERE rn = 1
-    """,
     "q05_validation_filter": f"""
         SELECT o_orderkey, o_totalprice FROM orders
         WHERE coalesce({_ORDERS_VALID}, false)
@@ -210,55 +34,11 @@ ALL: dict[str, str] = {
                count(*) AS n, round(avg(o_totalprice), 4) AS avg_amount
         FROM orders GROUP BY 1
     """,
-    "q08_group_counts": """
-        SELECT p_brand, count(*) AS n_parts, round(avg(p_retailprice), 4) AS avg_price
-        FROM part GROUP BY p_brand
-    """,
-    "q09_union_dedup": """
-        SELECT DISTINCT * FROM (SELECT * FROM orders UNION ALL SELECT * FROM orders)
-    """,
-    "q10_except": """
-        SELECT o_orderkey, o_totalprice FROM (
-            SELECT * FROM orders
-            EXCEPT
-            SELECT * FROM orders WHERE o_totalprice > 0 AND o_totalprice <= 150000.0)
-    """,
     "q11_date_parts": """
         SELECT EXTRACT(year FROM o_orderdate)::INTEGER AS year,
                EXTRACT(month FROM o_orderdate)::INTEGER AS month,
                count(*) AS n_orders, round(sum(o_totalprice), 2) AS sum_amount
         FROM orders GROUP BY 1, 2
-    """,
-    "q12_string_clean": """
-        SELECT c_custkey, upper(trim(c_name)) AS name_clean,
-               length(c_name)::INTEGER AS name_len,
-               upper(trim(c_mktsegment)) AS segment_clean
-        FROM customer WHERE length(trim(c_name)) > 0
-    """,
-    "q13_topk_per_group": """
-        SELECT o_orderpriority, o_orderkey, o_totalprice, rnk FROM (
-            SELECT o_orderpriority, o_orderkey, o_totalprice,
-                row_number() OVER (PARTITION BY o_orderpriority
-                                   ORDER BY o_totalprice DESC NULLS LAST, o_orderkey ASC NULLS FIRST)::INTEGER AS rnk
-            FROM orders) WHERE rnk <= 3
-    """,
-    "q14_json_extract": """
-        SELECT event_type, round(avg(k), 4) AS avg_k, count(*) AS n FROM (
-            SELECT event_type, regexp_extract(props, '"k": (\\d+)', 1)::INTEGER AS k
-            FROM events) GROUP BY event_type
-    """,
-    "q15_windowed_time_agg": """
-        SELECT date_trunc('hour', ts) AS window_start, event_type,
-               count(*) AS n, round(sum(value), 2) AS sum_value
-        FROM events GROUP BY 1, 2
-    """,
-    "q16_sessionize": """
-        SELECT user_id, sum(s)::BIGINT AS n_sessions, count(*) AS n_events FROM (
-            SELECT user_id,
-                CASE WHEN lag(ts) OVER w IS NULL
-                          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0 END AS s
-            FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        GROUP BY user_id
     """,
     "q17_merge_upsert": """
         WITH source AS (
@@ -271,402 +51,12 @@ ALL: dict[str, str] = {
         UNION ALL
         SELECT event_id, round(value, 2) AS value FROM source
     """,
-    "q18_count_distinct": """
-        SELECT user_id, count(DISTINCT event_type) AS n_types, count(*) AS n_events
-        FROM events GROUP BY user_id
-    """,
-    "q19_text_analysis": _TEXT_VOTES + """
-        SELECT doc_id,
-            len(w)::INTEGER AS n_tokens,
-            len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))::INTEGER
-                AS n_tokens_bpe,
-            length(text)::INTEGER AS n_chars_computed,
-            swr AS stopword_ratio,
-            pr AS punct_ratio,
-            round(CASE WHEN length(text) BETWEEN 100 AND 20000 THEN 0.5 ELSE 0.0 END
-                  + least(swr * 5, 0.3)
-                  + CASE WHEN pr <= 0.1 THEN 0.2 ELSE 0.0 END, 6) AS quality,
-            CASE WHEN best = 0 OR ((v_en = best)::INT + (v_de = best)::INT
-                                   + (v_fr = best)::INT + (v_es = best)::INT) > 1 THEN 'und'
-                 WHEN v_en = best THEN 'en' WHEN v_de = best THEN 'de'
-                 WHEN v_fr = best THEN 'fr' WHEN v_es = best THEN 'es'
-                 ELSE 'und' END AS lang_guess,
-            md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
-        FROM scored
-    """,
-    "q20_exact_dedup": """
-        SELECT min(doc_id) AS doc_id, md5(text) AS content_hash, count(*) AS n_copies
-        FROM (SELECT * FROM documents UNION ALL SELECT * FROM documents)
-        GROUP BY md5(text)
-    """,
-    "q21_ngram_jaccard": _JACCARD + """
-        SELECT a, b, jaccard FROM jac WHERE jaccard >= 0.12
-    """,
-    "q22_minhash_lsh": "WITH " + _SHINGLES + _MINHASH_SIG + _BANDS + """,
-        cands AS (
-            SELECT DISTINCT a, b FROM (
-                SELECT x.doc_id a, y.doc_id b FROM banded x JOIN banded y
-                    ON x.band0 = y.band0 AND x.doc_id < y.doc_id
-                UNION ALL
-                SELECT x.doc_id a, y.doc_id b FROM banded x JOIN banded y
-                    ON x.band1 = y.band1 AND x.doc_id < y.doc_id
-                UNION ALL
-                SELECT x.doc_id a, y.doc_id b FROM banded x JOIN banded y
-                    ON x.band2 = y.band2 AND x.doc_id < y.doc_id))
-        SELECT c.a, c.b,
-            round(("""
-    + " + ".join(f"(sa.h{j} = sb.h{j})::INT" for j in range(12))
-    + """) / 12.0, 6) AS jaccard_est
-        FROM cands c JOIN sig sa ON sa.doc_id = c.a JOIN sig sb ON sb.doc_id = c.b
-        WHERE round(("""
-    + " + ".join(f"(sa.h{j} = sb.h{j})::INT" for j in range(12))
-    + """) / 12.0, 6) >= 0.25
-    """,
-    "q23_simhash": """
-        WITH toks AS (
-            SELECT doc_id, unnest(list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+'))) AS tok
-            FROM documents),
-        th AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
-        votes AS (
-            SELECT doc_id, bits.bit,
-                   sum(CASE WHEN (h >> bits.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-            FROM th, (SELECT unnest(range(0, 60)) AS bit) bits
-            GROUP BY doc_id, bits.bit),
-        sigs AS (
-            SELECT doc_id, sum(CASE WHEN v > 0 THEN (1::BIGINT << bit) ELSE 0 END)::BIGINT AS sig
-            FROM votes GROUP BY doc_id)
-        SELECT x.doc_id AS a, y.doc_id AS b,
-               bit_count(xor(x.sig, y.sig))::INTEGER AS hamming
-        FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
-        WHERE bit_count(xor(x.sig, y.sig)) <= 3
-    """,
-    "q24_embedding_neardup": f"""
-        WITH {_ev_ctr_sql()},
-        {_banded_lsh_sql()},
-        cands AS (SELECT DISTINCT a, b FROM (
-            {" UNION ALL ".join(
-                f"SELECT x.vec_id AS a, y.vec_id AS b FROM b x JOIN b y "
-                f"ON x.k{t} = y.k{t} AND x.vec_id < y.vec_id"
-                for t in range(_LSH_TABLES))}))
-        SELECT c.a, c.b, {_COS} AS cos
-        FROM cands c JOIN ev a ON a.vec_id = c.a JOIN ev b ON b.vec_id = c.b
-        WHERE {_COS} >= 0.40
-    """,
-    "q25_ann_topk": f"""
-        SELECT query_id, neighbor_id, rank FROM (
-            SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-                row_number() OVER (PARTITION BY q.vec_id
-                                   ORDER BY {_COS.replace("a.e", "v.e").replace("b.e", "q.e")} DESC,
-                                            v.vec_id ASC)::INTEGER AS rank
-            FROM (SELECT vec_id, embedding::DOUBLE[] e FROM embeddings WHERE vec_id < 8) q
-            JOIN (SELECT vec_id, embedding::DOUBLE[] e FROM embeddings) v
-                ON v.vec_id <> q.vec_id)
-        WHERE rank <= 5
-    """,
-    "q26_lsh_ann_topk": f"""
-        WITH {_ev_ctr_sql()},
-        {_banded_lsh_sql()},
-        cands AS (SELECT DISTINCT query_id, neighbor_id FROM (
-            {" UNION ALL ".join(
-                f"SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id FROM b q JOIN b v "
-                f"ON q.k{t} = v.k{t} AND q.vec_id < 8 AND v.vec_id <> q.vec_id"
-                for t in range(_LSH_TABLES))})),
-        scored AS (
-            SELECT c.query_id, c.neighbor_id,
-                   {_COS.replace("a.e", "v.e").replace("b.e", "q.e")} AS cos
-            FROM cands c JOIN ev v ON v.vec_id = c.neighbor_id
-                         JOIN ev q ON q.vec_id = c.query_id)
-        SELECT query_id, neighbor_id, rank, cos FROM (
-            SELECT query_id, neighbor_id, cos,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id ASC)::INTEGER AS rank
-            FROM scored) WHERE rank <= 5
-    """,
-    "q27_range_join": """
-        SELECT b.event_id AS buy_id, count(e.event_id) AS n_prior_events
-        FROM events b JOIN events e
-            ON b.user_id = e.user_id
-           AND e.ts >= b.ts - INTERVAL 30 MINUTES
-           AND e.ts < b.ts
-        WHERE b.event_type = 'purchase'
-        GROUP BY b.event_id
-    """,
-    "q32_rollup": """
-        SELECT o_orderpriority, o_orderstatus, count(*) AS n,
-               round(sum(o_totalprice), 2) AS revenue
-        FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-    """,
-    "q33_conditional_pivot": """
-        SELECT user_id,
-            round(sum(CASE WHEN event_type = 'view' THEN value END), 2) AS sum_view,
-            round(sum(CASE WHEN event_type = 'click' THEN value END), 2) AS sum_click,
-            round(sum(CASE WHEN event_type = 'purchase' THEN value END), 2) AS sum_purchase,
-            round(sum(CASE WHEN event_type = 'signup' THEN value END), 2) AS sum_signup,
-            round(sum(CASE WHEN event_type = 'error' THEN value END), 2) AS sum_error
-        FROM events GROUP BY user_id
-    """,
-    "q34_intersect": """
-        SELECT user_id FROM events WHERE event_type = 'click'
-        INTERSECT
-        SELECT user_id FROM events WHERE event_type = 'purchase'
-    """,
-    "q28_asof_join": """
-        WITH u AS (
-            SELECT user_id AS k, ts, NULL::BIGINT AS o_orderkey, event_id, 'e' AS side FROM events
-            UNION ALL
-            SELECT o_custkey AS k, o_orderdate AS ts, o_orderkey, NULL::BIGINT AS event_id, 'o' AS side
-            FROM orders)
-        SELECT o_orderkey, k AS o_custkey, last_event_id FROM (
-            SELECT *, last_value(event_id IGNORE NULLS) OVER (
-                PARTITION BY k ORDER BY ts ASC, side ASC, coalesce(event_id, o_orderkey) ASC
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_event_id
-            FROM u) WHERE side = 'o'
-    """,
-    "q35_multimodal_decode": """
-        -- closed-form twin of the FakeCodec decode (multimodal.py): body
-        -- cell (x,y) = (x*31 + y*17 + seed) % 251, row-major; features
-        -- are integer-exact so no float rounding is involved
-        WITH m AS (
-            SELECT doc_id AS media_id,
-                   (8 + (doc_id * 7 + 42) % 24)::INTEGER AS width,
-                   (8 + (doc_id * 13 + 42) % 24)::INTEGER AS height,
-                   42 + doc_id AS seed
-            FROM documents WHERE doc_id < 200)
-        SELECT media_id, 'image' AS kind, width, height,
-               (width * height)::INTEGER AS n_bytes,
-               (SELECT sum(((xx % width) * 31 + (xx // width) * 17 + seed) % 251)
-                FROM range(0, 1024) t(xx)   -- 1024 > max w*h (31*31)
-                WHERE xx < width * height)::BIGINT AS sum_value,
-               true AS ok
-        FROM m
-    """,
     "q36_skew_salted_agg": """
         SELECT user_id, count(*) AS n, min(value) AS min_value,
                max(value) AS max_value
         FROM events GROUP BY user_id
     """,
-    "q29_keep_latest_dedup": """
-        SELECT user_id, event_type, event_id FROM (
-            SELECT user_id, event_type, event_id,
-                row_number() OVER (PARTITION BY user_id, event_type
-                                   ORDER BY ts DESC, event_id DESC) AS rn
-            FROM events) WHERE rn = 1
-    """,
-    "q37_cube": """
-        SELECT o_orderpriority, o_orderstatus, count(*) AS n,
-               round(sum(o_totalprice), 2) AS revenue
-        FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
-    """,
-    "q38_exact_percentiles": """
-        -- quantile_cont = Spark's exact `percentile`: linear interpolation
-        -- on the sorted values
-        SELECT o_orderpriority,
-               round(quantile_cont(o_totalprice, 0.5), 2) AS p50,
-               round(quantile_cont(o_totalprice, 0.9), 2) AS p90,
-               count(*) AS n
-        FROM orders GROUP BY o_orderpriority
-    """,
-    "q39_semi_anti_join": """
-        WITH w AS (
-            SELECT c_mktsegment, count(*) AS n_with_orders FROM customer c
-            WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-            GROUP BY c_mktsegment),
-        wo AS (
-            SELECT c_mktsegment, count(*) AS n_without_orders FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-            GROUP BY c_mktsegment)
-        SELECT coalesce(w.c_mktsegment, wo.c_mktsegment) AS c_mktsegment,
-               coalesce(n_with_orders, 0) AS n_with_orders,
-               coalesce(n_without_orders, 0) AS n_without_orders
-        FROM w FULL OUTER JOIN wo USING (c_mktsegment)
-    """,
-    "q40_explode_token_counts": """
-        SELECT token, count(*) AS n FROM (
-            SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
-            FROM documents)
-        GROUP BY token HAVING count(*) >= 50
-    """,
-    "q41_running_sum": """
-        SELECT event_id, user_id,
-               round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value
-        FROM events
-    """,
-    "q42_collect_sorted_set": """
-        SELECT user_id,
-               array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types,
-               count(*) AS n
-        FROM events GROUP BY user_id
-    """,
-    "q44_multiway_dim_join": """
-        SELECT n_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               count(*) AS n
-        FROM orders
-        JOIN lineitem ON o_orderkey = l_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA' AND c_nationkey = s_nationkey
-          AND o_orderdate >= TIMESTAMP '1995-01-01'
-          AND o_orderdate <  TIMESTAMP '1996-01-01'
-        GROUP BY n_name
-    """,
-    "q45_grouping_sets": """
-        SELECT o_orderpriority, o_orderstatus, count(*) AS n,
-               round(sum(o_totalprice), 2) AS revenue
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
-    """,
-    "q46_above_customer_avg": """
-        SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
-        FROM orders o
-        WHERE o_totalprice > (SELECT round(avg(o2.o_totalprice), 4)
-                              FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-    """,
-    "q47_argmax_per_group": """
-        -- deterministic arg-max/min: ties broken by orderkey, mirroring
-        -- Spark's max(struct(price, orderkey))
-        WITH r AS (
-            SELECT o_orderpriority, o_orderkey, o_totalprice,
-                row_number() OVER (PARTITION BY o_orderpriority
-                    ORDER BY o_totalprice DESC NULLS LAST, o_orderkey DESC NULLS LAST) AS rhi,
-                row_number() OVER (PARTITION BY o_orderpriority
-                    ORDER BY o_totalprice ASC NULLS FIRST, o_orderkey ASC NULLS FIRST) AS rlo
-            FROM orders)
-        -- conditional aggregation, NOT a self-join USING the group key:
-        -- a join would drop the NULL-priority group (NULL <> NULL),
-        -- while Spark's groupBy keeps it (fuzz-relational finding)
-        SELECT o_orderpriority,
-               max(CASE WHEN rhi = 1 THEN o_orderkey END) AS max_orderkey,
-               round(max(CASE WHEN rhi = 1 THEN o_totalprice END), 2) AS max_price,
-               max(CASE WHEN rlo = 1 THEN o_orderkey END) AS min_orderkey,
-               round(max(CASE WHEN rlo = 1 THEN o_totalprice END), 2) AS min_price
-        FROM r GROUP BY o_orderpriority
-    """,
-    "q48_date_spine_gapfill": """
-        WITH b AS (SELECT min(ts::DATE) AS lo, max(ts::DATE) AS hi FROM events),
-        spine AS (
-            SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY))::DATE AS day FROM b),
-        daily AS (SELECT ts::DATE AS day, count(*) AS cnt FROM events GROUP BY 1)
-        SELECT spine.day AS day, coalesce(cnt, 0) AS n_events
-        FROM spine LEFT JOIN daily USING (day)
-    """,
-    "q49_rank_distributions": """
-        SELECT o_orderkey, o_orderpriority,
-               round(percent_rank() OVER w, 6) AS pct_rank,
-               round(cume_dist() OVER w, 6) AS cume
-        FROM orders
-        WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice NULLS FIRST)
-    """,
-    "q50_embedding_centroids": """
-        SELECT label, (dim - 1)::INTEGER AS dim,
-               round(avg(x), 5) AS centroid, count(*) AS n
-        FROM (SELECT label, unnest(embedding) AS x,
-                     generate_subscripts(embedding, 1) AS dim
-              FROM embeddings)
-        GROUP BY label, dim
-    """,
-    "q51_deterministic_sample": """
-        SELECT source, count(*) AS n_sampled, sum(n_chars)::BIGINT AS chars_sampled
-        FROM documents
-        WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
-              < (0.25 * 4294967296)::BIGINT
-        GROUP BY source
-    """,
-    "q43_ntile_buckets": """
-        SELECT o_orderpriority, q, count(*) AS n,
-               round(avg(o_totalprice), 2) AS avg_price
-        FROM (
-            SELECT o_orderpriority, o_totalprice,
-                   ntile(4) OVER (PARTITION BY o_orderpriority
-                                  ORDER BY o_totalprice NULLS FIRST,
-                                           o_orderkey NULLS FIRST) AS q
-            FROM orders)
-        GROUP BY o_orderpriority, q
-    """,
 }
-
-# q52: the q22 pair list wrapped in a recursive min-label CTE. The
-# `cc.label < e.dst` guard prunes propagation of non-minimal labels —
-# the component's min id m reaches every member (all other ids > m), so
-# min(label) per node is exact while the recursion stays near-linear.
-ALL["q52_dedup_clusters"] = f"""
-WITH RECURSIVE pairs AS ({ALL["q22_minhash_lsh"]}),
-edges AS (SELECT a AS src, b AS dst FROM pairs
-          UNION SELECT b AS src, a AS dst FROM pairs),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-cc AS (
-    SELECT node, node AS label FROM nodes
-    UNION
-    SELECT e.dst AS node, cc.label FROM cc
-    JOIN edges e ON cc.node = e.src WHERE cc.label < e.dst
-),
-final AS (SELECT node AS doc_id, min(label) AS cluster_id FROM cc GROUP BY node)
-SELECT doc_id, cluster_id,
-       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-FROM final
-"""
-
-
-# q53: IVF ANN mirror. Every stage of operators/similarity.ivf_ann_topk
-# is deterministic: seeds = n_cells smallest md5(vec_id) rows; one Lloyd
-# step with per-(cell, dim) means rounded to 6 dp; argmax assignment /
-# probe ranking on 5-dp cosines with cell-asc tiebreak; exact 4-dp
-# re-rank within probed cells.
-def _ivf_sql(n_cells: int = 16, nprobe: int = 4, k: int = 5) -> str:
-    # 5 dp to match the Spark side's coarsened comparison rounding
-    cos5 = """
-round(list_sum(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]))
- / nullif(sqrt(list_sum(list_transform(a.e, x -> x * x)))
-  * sqrt(list_sum(list_transform(b.e, x -> x * x))), 0), 5)
-"""
-    return f"""
-WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-seeds AS (
-    SELECT vec_id, e,
-           row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) AS cell
-    FROM ev QUALIFY cell <= {n_cells}),
-assign0 AS (
-    SELECT vec_id, e, cell FROM (
-        SELECT a.vec_id, a.e, b.cell,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {cos5} DESC, b.cell ASC) AS rn
-        FROM ev a CROSS JOIN (SELECT cell, e FROM seeds) b) WHERE rn = 1),
-cent AS (
-    SELECT cell, i, round(avg(e[i]), 6) AS m
-    FROM assign0 CROSS JOIN (SELECT unnest(range(1, len((SELECT e FROM ev LIMIT 1)) + 1)) AS i)
-    GROUP BY cell, i),
-centl AS (SELECT cell, list(m ORDER BY i) AS e FROM cent GROUP BY cell),
-assign AS (
-    SELECT vec_id, e, cell FROM (
-        SELECT a.vec_id, a.e, b.cell,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {cos5} DESC, b.cell ASC) AS rn
-        FROM ev a CROSS JOIN centl b) WHERE rn = 1),
-probes AS (
-    SELECT query_id, cell FROM (
-        SELECT a.vec_id AS query_id, b.cell,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {cos5} DESC, b.cell ASC) AS rn
-        FROM (SELECT * FROM ev WHERE vec_id < 8) a CROSS JOIN centl b)
-    WHERE rn <= {nprobe}),
-scored AS (
-    SELECT p.query_id, a.vec_id AS neighbor_id,
-           {_COS.replace("a.e", "a.e").replace("b.e", "q.e")} AS cos
-    FROM probes p
-    JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.query_id
-    JOIN ev q ON q.vec_id = p.query_id)
-SELECT query_id, neighbor_id, rank, cos FROM (
-    SELECT query_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cos DESC, neighbor_id ASC)::INTEGER AS rank
-    FROM scored) WHERE rank <= {k}
-"""
-
-
-ALL["q53_ivf_ann_topk"] = _ivf_sql()
 
 
 # q54: the row-level lifecycle's final table state, purely relationally —
@@ -689,42 +79,6 @@ final AS (
     FROM cow)
 SELECT source, lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS chars
 FROM final WHERE NOT (n_chars > 5000) GROUP BY source, lang
-"""
-
-
-# q55: the streaming windowed agg on a bounded replay equals the batch
-# GROUP BY — same SQL as q15 with the window-start column name.
-ALL["q55_streaming_windowed_agg"] = """
-    SELECT date_trunc('hour', ts) AS window_start, event_type,
-           count(*) AS n, round(sum(value), 2) AS sum_value
-    FROM events GROUP BY 1, 2
-"""
-
-
-# q56: the composed training-data pipeline — dedup survivors, quality
-# gate, deterministic sample, per-(source, lang) budget. Reuses the q19
-# quality/lang mirror (_TEXT_VOTES) and q20/q51's survivor/sample tricks.
-ALL["q56_training_pipeline"] = _TEXT_VOTES + """,
-surv AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-feats AS (
-    SELECT sc.doc_id, d.source,
-        round(CASE WHEN length(sc.text) BETWEEN 100 AND 20000 THEN 0.5 ELSE 0.0 END
-              + least(swr * 5, 0.3)
-              + CASE WHEN pr <= 0.1 THEN 0.2 ELSE 0.0 END, 6) AS quality,
-        CASE WHEN best = 0 OR ((v_en = best)::INT + (v_de = best)::INT
-                               + (v_fr = best)::INT + (v_es = best)::INT) > 1 THEN 'und'
-             WHEN v_en = best THEN 'en' WHEN v_de = best THEN 'de'
-             WHEN v_fr = best THEN 'fr' WHEN v_es = best THEN 'es'
-             ELSE 'und' END AS lang_guess,
-        len(sc.w)::INTEGER AS n_tokens
-    FROM scored sc
-    JOIN surv USING (doc_id)
-    JOIN documents d ON d.doc_id = sc.doc_id
-    WHERE ('0x' || substr(md5(sc.doc_id::VARCHAR), 1, 8))::BIGINT
-          < (0.5 * 4294967296)::BIGINT)
-SELECT source, lang_guess, count(*) AS n_docs, sum(n_tokens)::BIGINT AS tokens,
-       round(avg(quality), 6) AS avg_quality
-FROM feats WHERE quality >= 0.7 GROUP BY source, lang_guess
 """
 
 
@@ -901,184 +255,6 @@ FROM changes GROUP BY change_type, lang
 """
 
 
-# ------------------------------------------------------ curation (round 4)
-
-# q63: both sides shingled exactly like _SHINGLES (distinct word 3-grams,
-# 60-bit md5-prefix keys); overlap counted on DISTINCT hashes per doc.
-ALL["q63_decontamination"] = """
-WITH corpus AS (SELECT * FROM documents WHERE doc_id % 37 <> 0),
-bench AS (SELECT * FROM documents WHERE doc_id % 37 = 0),
-bsh AS (
-    SELECT DISTINCT ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM (
-        SELECT unnest(list_distinct(
-            CASE WHEN len(w) >= 3 THEN
-                list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-            ELSE [array_to_string(w, ' ')] END)) AS shingle
-        FROM (SELECT regexp_split_to_array(trim(lower(text)), '\\s+') AS w FROM bench))),
-csh AS (
-    SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN len(w) >= 3 THEN
-                list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-            ELSE [array_to_string(w, ' ')] END)) AS shingle
-        FROM (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w FROM corpus))),
-hits AS (
-    SELECT c.doc_id, count(DISTINCT c.h) AS n FROM csh c JOIN bsh b ON c.h = b.h
-    GROUP BY c.doc_id)
-SELECT c.doc_id, coalesce(h.n, 0) AS n_hit_shingles, coalesce(h.n, 0) > 0 AS contaminated
-FROM corpus c LEFT JOIN hits h ON c.doc_id = h.doc_id
-"""
-
-# q64: the packing offsets relationally — one global running sum in
-# doc_id order (DuckDB can afford the global window; the Spark side is
-# the distributed prefix sum under test).
-ALL["q64_sequence_packing"] = """
-WITH toks AS (
-    SELECT doc_id,
-        len(regexp_split_to_array(trim(lower(text)), '\\s+'))::INTEGER AS n_tokens
-    FROM documents),
-cum AS (
-    SELECT doc_id, n_tokens,
-        sum(n_tokens) OVER (ORDER BY doc_id
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS c
-    FROM toks)
-SELECT doc_id, n_tokens,
-    (c - n_tokens)::BIGINT AS start_offset,
-    ((c - n_tokens) // 256)::BIGINT AS first_chunk,
-    ((c - 1) // 256)::BIGINT AS last_chunk,
-    ((c - 1) // 256 - (c - n_tokens) // 256 + 1)::BIGINT AS n_chunks_spanned
-FROM cum
-"""
-
-# q65: Gopher repetition signals; fractions rounded to 6 dp in both
-# engines before the pass-flag comparison.
-ALL["q65_repetition_quality"] = """
-WITH w AS (
-    SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w FROM documents),
-base AS (
-    SELECT doc_id,
-        len(w)::INTEGER AS n_words,
-        round(1.0 - len(list_distinct(w)) * 1.0 / len(w), 6) AS dup_word_frac,
-        CASE WHEN len(w) >= 2 THEN round(1.0 - len(list_distinct(
-                list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])
-            )) * 1.0 / (len(w) - 1), 6) ELSE 0.0 END AS dup_2gram_frac,
-        CASE WHEN len(w) >= 3 THEN round(1.0 - len(list_distinct(
-                list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-            )) * 1.0 / (len(w) - 2), 6) ELSE 0.0 END AS dup_3gram_frac
-    FROM w),
-tw AS (
-    SELECT doc_id, round(max(c) * 1.0 / sum(c), 6) AS top_word_frac FROM (
-        SELECT doc_id, tok, count(*) AS c FROM (
-            SELECT doc_id, unnest(w) AS tok FROM w)
-        GROUP BY doc_id, tok)
-    GROUP BY doc_id)
-SELECT b.doc_id, b.n_words, b.dup_word_frac, b.dup_2gram_frac, b.dup_3gram_frac,
-    t.top_word_frac,
-    (t.top_word_frac <= 0.20 AND b.dup_2gram_frac <= 0.60) AS gopher_pass
-FROM base b JOIN tw t ON b.doc_id = t.doc_id
-"""
-
-# q66: deterministic per-language quota sample by md5 rank.
-ALL["q66_stratified_sample"] = """
-SELECT doc_id, lang, rnk::INTEGER AS sample_rank FROM (
-    SELECT doc_id, lang,
-        row_number() OVER (PARTITION BY lang
-                           ORDER BY md5(doc_id::VARCHAR), doc_id) AS rnk
-    FROM documents) WHERE rnk <= 20
-"""
-
-# q67: smoothed IDF = ln((N+1)/(df+1)); tf-weighted mean per doc.
-ALL["q67_tfidf_scores"] = """
-WITH toks AS (
-    SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
-    FROM documents),
-n AS (SELECT count(*) AS nd FROM documents),
-dfreq AS (
-    SELECT tok, ln(((SELECT nd FROM n) + 1.0) / (count(DISTINCT doc_id) + 1.0)) AS idf
-    FROM toks GROUP BY tok),
-tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY doc_id, tok)
-SELECT doc_id, count(*)::BIGINT AS n_distinct_tokens,
-    round(sum(tf * idf) / sum(tf), 6) AS mean_idf,
-    round(max(idf), 6) AS max_idf
-FROM tf JOIN dfreq USING (tok) GROUP BY doc_id
-"""
-
-# q68: uniform-target mixture weights per source domain.
-ALL["q68_domain_mix"] = """
-WITH counts AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-tot AS (SELECT sum(n_docs) AS t, count(*) AS k FROM counts)
-SELECT source, n_docs,
-    round(n_docs * 1.0 / t, 6) AS actual_frac,
-    round(1.0 / k, 6) AS target_frac,
-    round((1.0 / k) / (n_docs * 1.0 / t), 6) AS weight
-FROM counts, tot
-"""
-
-# q69: inject deterministic PII, then count/redact with the SAME regexes
-# (Java ∩ RE2 subset); redaction order email → phone → ipv4 as in
-# operators/text.py PII_RULES.
-ALL["q69_pii_redaction"] = r"""
-WITH inj AS (
-    SELECT doc_id, source,
-        text || ' contact user' || doc_id::VARCHAR
-             || '@mail.example.com or 10.' || (doc_id % 200)::VARCHAR
-             || '.0.1 call +1 555-' || lpad((doc_id % 1000)::VARCHAR, 3, '0')
-             || '-0199 done' AS text
-    FROM documents),
-red AS (
-    SELECT doc_id, source,
-        len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-        len(regexp_extract_all(text, '\+?[0-9]{3}[- ][0-9]{3}[- ][0-9]{4}')) AS n_phones,
-        len(regexp_extract_all(text, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS n_ipv4,
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(text,
-              '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-            '\+?[0-9]{3}[- ][0-9]{3}[- ][0-9]{4}', '<PHONE>', 'g'),
-          '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g') AS rtext
-    FROM inj)
-SELECT source, count(*)::BIGINT AS n_docs,
-    sum(n_emails)::BIGINT AS emails,
-    sum(n_phones)::BIGINT AS phones,
-    sum(n_ipv4)::BIGINT AS ipv4s,
-    sum(length(rtext))::BIGINT AS redacted_chars,
-    sum(len(regexp_extract_all(rtext, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-      + len(regexp_extract_all(rtext, '\+?[0-9]{3}[- ][0-9]{3}[- ][0-9]{4}'))
-      + len(regexp_extract_all(rtext, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')))::BIGINT AS residual
-FROM red GROUP BY source
-"""
-
-# q70: canonical form = lower → strip non-[a-z0-9\s] → collapse \s+ → trim,
-# md5 of the canonical form groups case/punct/whitespace twins.
-ALL["q70_normalized_dedup"] = r"""
-WITH u AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 10000000, '  ' || upper(text) || ' !!  ' FROM documents),
-norm AS (
-    SELECT doc_id,
-        md5(trim(regexp_replace(regexp_replace(lower(text),
-            '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS norm_hash
-    FROM u)
-SELECT min(doc_id)::BIGINT AS doc_id, norm_hash, count(*)::BIGINT AS n_copies
-FROM norm GROUP BY norm_hash
-"""
-
-# q71: per-source percent_rank length band [0.05, 0.95], rolled up.
-ALL["q71_length_outlier_filter"] = r"""
-WITH ranked AS (
-    SELECT source, lang, n_chars,
-        round(percent_rank() OVER (PARTITION BY source ORDER BY n_chars), 6)
-            AS length_pct
-    FROM documents)
-SELECT source, lang, count(*)::BIGINT AS n_kept,
-    min(n_chars)::BIGINT AS min_len, max(n_chars)::BIGINT AS max_len,
-    sum(n_chars)::BIGINT AS sum_len
-FROM ranked
-WHERE length_pct >= 0.05 AND length_pct <= 0.95
-GROUP BY source, lang
-"""
-
 # q72: the bounded stream-stream join must equal the plain batch join —
 # purchases attributed to same-user clicks within the preceding 6 hours.
 ALL["q72_stream_stream_join"] = """
@@ -1098,31 +274,6 @@ JOIN events p
  AND p.ts <= c.ts + INTERVAL 6 HOUR
 """
 
-# q73: streaming session windows on a bounded replay == relational
-# sessionization — a new session starts when the same-user gap is
-# STRICTLY > 30 min — probed: Spark merges an event landing exactly at
-# prev_ts + gap (the window end is inclusive for merging).
-ALL["q73_streaming_session_window"] = """
-WITH g AS (
-    SELECT user_id, ts, event_id, value,
-        CASE WHEN lag(ts) OVER w IS NULL
-                  OR ts - lag(ts) OVER w > INTERVAL 1800 SECOND
-             THEN 1 ELSE 0 END AS new_s
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), s AS (
-    SELECT user_id, ts, value,
-        sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS UNBOUNDED PRECEDING) AS sid
-    FROM g)
-SELECT user_id,
-       min(ts) AS session_start,
-       max(ts) AS session_last,
-       count(*)::BIGINT AS n_events,
-       round(sum(value), 2) AS sum_value
-FROM s
-GROUP BY user_id, sid
-"""
 
 # q74/q75: reader round-trips — the oracle states the truth about the
 # ORIGINAL rows (documents + the literal stress rows); the Spark side
@@ -1177,74 +328,6 @@ UNION ALL
 SELECT '__corrupt__', '', 3::BIGINT, 0::BIGINT, 0::BIGINT
 """
 
-# q78: substring-window containment — 8-word windows, 60-bit md5-prefix
-# keys, per-window doc counts, per-doc duplicated fraction + flag.
-ALL["q78_window_containment"] = r"""
-WITH u AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 2000000, substr(text, 1, 200) FROM documents WHERE doc_id < 5),
-wds AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS w FROM u),
-sh AS (SELECT doc_id, unnest(list_distinct(
-    CASE WHEN len(w) >= 8 THEN list_transform(range(1, len(w) - 6),
-        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-             w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7])
-    ELSE [array_to_string(w, ' ')] END)) AS s FROM wds),
-keyed AS (SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS wk FROM sh),
-m AS (SELECT doc_id, count(*) OVER (PARTITION BY wk) AS docs_with FROM keyed),
-p AS (SELECT doc_id, count(*) AS n_windows,
-        sum(CASE WHEN docs_with > 1 THEN 1 ELSE 0 END) AS n_dup_windows
-      FROM m GROUP BY doc_id)
-SELECT doc_id, n_windows::BIGINT AS n_windows,
-       n_dup_windows::BIGINT AS n_dup_windows,
-       round(n_dup_windows::DOUBLE / n_windows, 6) AS dup_frac,
-       (round(n_dup_windows::DOUBLE / n_windows, 6) >= 0.5)::INTEGER AS is_dup
-FROM p
-"""
-
-# q79: incremental MinHash dedup — same signature family as q22, but the
-# source is documents + planted truncated copies, and candidates are
-# strictly new (doc_id >= 400, incl. planted 3000000+) x corpus (< 400).
-_Q79_SHINGLES = r"""
-shingles AS (
-    SELECT doc_id, unnest(list_distinct(
-        CASE WHEN len(w) >= 3 THEN
-            list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-        ELSE [array_to_string(w, ' ')] END)) AS shingle
-    FROM (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS w FROM (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 3000000, substr(text, 1, length(text) - 30)
-        FROM documents WHERE doc_id < 10))
-)
-"""
-_EST12 = " + ".join(f"(sa.h{j} = sb.h{j})::INT" for j in range(12))
-ALL["q79_incremental_minhash_dedup"] = (
-    "WITH " + _Q79_SHINGLES + _MINHASH_SIG + _BANDS + """,
-    cands AS (
-        SELECT DISTINCT nid AS new_id, cid AS corpus_id FROM (
-            SELECT x.doc_id nid, y.doc_id cid FROM banded x JOIN banded y
-                ON x.band0 = y.band0 AND x.doc_id >= 400 AND y.doc_id < 400
-            UNION ALL
-            SELECT x.doc_id nid, y.doc_id cid FROM banded x JOIN banded y
-                ON x.band1 = y.band1 AND x.doc_id >= 400 AND y.doc_id < 400
-            UNION ALL
-            SELECT x.doc_id nid, y.doc_id cid FROM banded x JOIN banded y
-                ON x.band2 = y.band2 AND x.doc_id >= 400 AND y.doc_id < 400))
-    SELECT c.new_id, c.corpus_id,
-        round((""" + _EST12 + """) / 12.0, 6) AS jaccard_est
-    FROM cands c JOIN sig sa ON sa.doc_id = c.new_id
-                 JOIN sig sb ON sb.doc_id = c.corpus_id
-    WHERE round((""" + _EST12 + """) / 12.0, 6) >= 0.25
-""")
-
-# q80: stream-static enrichment join on bounded replay == batch join.
-ALL["q80_stream_static_join"] = """
-SELECT c.c_mktsegment, e.event_type, count(*)::BIGINT AS n,
-       round(sum(e.value), 2) AS sum_value
-FROM events e JOIN customer c ON e.user_id = c.c_custkey
-GROUP BY c.c_mktsegment, e.event_type
-"""
 
 # q81: table-as-stream drain == relational truth over documents (the
 # in-between compaction must contribute zero rows).
@@ -1315,40 +398,6 @@ SELECT source, count(*)::BIGINT AS n_min, max(_h) AS kth_hash,
 FROM ranked WHERE rn <= 16 GROUP BY source
 """
 
-# q85: bucketized range join == plain inequality join (exactly-once pair
-# production means the aggregate is identical).
-ALL["q85_interval_range_join"] = """
-WITH win AS (
-    SELECT o_orderkey AS win_id,
-           datediff('day', DATE '1970-01-01', o_orderdate) AS ws,
-           datediff('day', DATE '1970-01-01', o_orderdate) + 14 AS we
-    FROM orders WHERE o_orderkey % 97 = 0
-), pts AS (
-    SELECT l_extendedprice,
-           datediff('day', DATE '1970-01-01', l_shipdate) AS sd
-    FROM lineitem
-)
-SELECT w.win_id, count(*)::BIGINT AS n_ship,
-       round(sum(p.l_extendedprice), 2) AS sum_price
-FROM pts p JOIN win w ON p.sd BETWEEN w.ws AND w.we
-GROUP BY w.win_id
-"""
-
-# q86: A-ES weighted sample — ln(u)/w rounded to 9 dp (see operator
-# docstring for why rounding makes the rank engine-independent), id
-# tiebreak, top-100.
-ALL["q86_weighted_sample"] = '''
-WITH pri AS (
-    SELECT doc_id, n_chars,
-           round(ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT
-                     + 1.0) / 1152921504606846976.0)
-                 / n_chars::DOUBLE, 9) AS priority
-    FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
-)
-SELECT doc_id, n_chars, priority FROM pri
-ORDER BY priority DESC, doc_id LIMIT 100
-'''
-
 
 # q87: the schema-evolution lifecycle's final state, purely relationally —
 # the rename is an alias, the widen a cast, the vintage split a CASE on
@@ -1366,54 +415,6 @@ SELECT source,
 FROM documents
 GROUP BY source, lang
 """
-
-
-# q88: SemDeDup mirror. The assignment CTEs are q53's (same deterministic
-# quantizer); dup rule: EXISTS a smaller-id row in the same cell with
-# 4-dp cosine >= tau. tau low on purpose — synthetic embeddings have no
-# true near-dups; the hash proves the machinery.
-def _semdedup_sql(n_cells: int = 8, tau: float = 0.3) -> str:
-    cos5 = """
-round(list_sum(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]))
- / nullif(sqrt(list_sum(list_transform(a.e, x -> x * x)))
-  * sqrt(list_sum(list_transform(b.e, x -> x * x))), 0), 5)
-"""
-    cos4 = cos5.replace(", 5)", ", 4)")
-    return f"""
-WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-seeds AS (
-    SELECT vec_id, e,
-           row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) AS cell
-    FROM ev QUALIFY cell <= {n_cells}),
-assign0 AS (
-    SELECT vec_id, e, cell FROM (
-        SELECT a.vec_id, a.e, b.cell,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {cos5} DESC, b.cell ASC) AS rn
-        FROM ev a CROSS JOIN (SELECT cell, e FROM seeds) b) WHERE rn = 1),
-cent AS (
-    SELECT cell, i, round(avg(e[i]), 6) AS m
-    FROM assign0 CROSS JOIN (SELECT unnest(range(1, len((SELECT e FROM ev LIMIT 1)) + 1)) AS i)
-    GROUP BY cell, i),
-centl AS (SELECT cell, list(m ORDER BY i) AS e FROM cent GROUP BY cell),
-assign AS (
-    SELECT vec_id, e, cell FROM (
-        SELECT a.vec_id, a.e, b.cell,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {cos5} DESC, b.cell ASC) AS rn
-        FROM ev a CROSS JOIN centl b) WHERE rn = 1),
-dups AS (
-    SELECT DISTINCT a.vec_id
-    FROM assign a JOIN assign b
-      ON b.cell = a.cell AND b.vec_id < a.vec_id
-    WHERE {cos4} >= {tau})
-SELECT s.vec_id, s.cell,
-       CASE WHEN d.vec_id IS NULL THEN 0 ELSE 1 END AS is_dup
-FROM assign s LEFT JOIN dups d ON d.vec_id = s.vec_id
-"""
-
-
-ALL["q88_semdedup"] = _semdedup_sql()
 
 
 # q89: six windowed counts over the q30 transcripts derivation — the
@@ -1525,165 +526,6 @@ ALL["q93_manifest_ndv_sketch"] = (
 )
 
 
-# q94: sliding-window chunking mirror — same start-offset arithmetic
-# (ceil((n - window)/stride) * stride, floored at 0), 1-based inclusive
-# list_slice == Spark's slice(start, length).
-ALL["q94_chunk_documents"] = """
-WITH d AS (
-    SELECT doc_id, string_split(text, ' ') AS w FROM documents
-), s AS (
-    SELECT doc_id, w, len(w) AS n,
-           GREATEST(0, CAST(ceil((len(w) - 64)::DOUBLE / 48) AS INT) * 48)
-               AS last
-    FROM d
-), c AS (
-    SELECT doc_id, w, n, (last / 48 + 1)::INT AS n_chunks,
-           unnest(range(0, last + 1, 48)) AS st
-    FROM s
-)
-SELECT doc_id,
-       (st / 48)::INT AS chunk_idx,
-       n_chunks,
-       array_to_string(list_slice(w, st + 1, st + 64), ' ') AS chunk_text,
-       LEAST(n - st, 64)::INT AS n_words
-FROM c
-"""
-
-
-# q95: sessionization mirror — same lag/gap/running-sum construction;
-# date_diff('second') == Spark's floor-epoch subtraction (both count
-# whole-second boundary crossings).
-ALL["q95_sessionize"] = """
-WITH o AS (
-    SELECT *, lag(ts) OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS prev
-    FROM events
-), f AS (
-    SELECT *, CASE WHEN prev IS NULL
-                     OR date_diff('second', prev, ts) > 1800
-                   THEN 1 ELSE 0 END AS ns
-    FROM o
-), s AS (
-    SELECT *, SUM(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS UNBOUNDED PRECEDING) AS session_idx
-    FROM f
-)
-SELECT user_id, session_idx::BIGINT AS session_idx,
-       min(ts) AS session_start, max(ts) AS session_end,
-       count(*)::BIGINT AS n_events,
-       count(DISTINCT event_type)::BIGINT AS n_event_types,
-       round(sum(value), 2) AS sum_value
-FROM s
-GROUP BY user_id, session_idx
-"""
-
-
-# q96: ordered funnel — stage k's frontier is min(ts) of step-k events
-# STRICTLY AFTER the user's stage-(k-1) frontier; pct is one raw IEEE
-# division of the same two ints in both engines (bit-identical).
-ALL["q96_funnel"] = """
-WITH s1 AS (
-    SELECT user_id, min(ts) AS t FROM events
-    WHERE event_type = 'signup' GROUP BY user_id
-), s2 AS (
-    SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s1 USING (user_id)
-    WHERE e.event_type = 'view' AND e.ts > s1.t GROUP BY e.user_id
-), s3 AS (
-    SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s2 USING (user_id)
-    WHERE e.event_type = 'click' AND e.ts > s2.t GROUP BY e.user_id
-), s4 AS (
-    SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s3 USING (user_id)
-    WHERE e.event_type = 'purchase' AND e.ts > s3.t GROUP BY e.user_id
-), c AS (
-    SELECT 1 AS stage, 'signup' AS step, (SELECT count(*) FROM s1) AS n
-    UNION ALL
-    SELECT 2, 'view', (SELECT count(*) FROM s2)
-    UNION ALL
-    SELECT 3, 'click', (SELECT count(*) FROM s3)
-    UNION ALL
-    SELECT 4, 'purchase', (SELECT count(*) FROM s4)
-)
-SELECT stage::BIGINT AS stage, step, n::BIGINT AS n_users,
-       n::DOUBLE / (SELECT count(*) FROM s1) AS pct_of_first
-FROM c
-"""
-
-
-# q97: weekly retention triangle — date_trunc('week') is Monday-start
-# in BOTH engines; offsets are exact multiples of 7 days so the /7 is
-# integral (DuckDB's rounding BIGINT cast == Spark's truncation).
-ALL["q97_retention_cohorts"] = """
-WITH c AS (
-    SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-    FROM events GROUP BY user_id
-), a AS (
-    SELECT DISTINCT user_id, date_trunc('week', ts) AS activity_week
-    FROM events
-)
-SELECT c.cohort_week,
-       (date_diff('day', c.cohort_week, a.activity_week) / 7)::BIGINT
-           AS week_offset,
-       count(DISTINCT a.user_id)::BIGINT AS n_users
-FROM a JOIN c USING (user_id)
-GROUP BY 1, 2
-"""
-
-
-# q98: Okapi BM25 mirror — identical arithmetic shape and association
-# order as curation.bm25_scores (k1=1.2, b=0.75, Lucene-smoothed idf);
-# avgdl is the same exact int-sum/count division in both engines.
-ALL["q98_bm25_scores"] = """
-WITH dl AS (
-    SELECT doc_id,
-           len(regexp_split_to_array(trim(lower(text)), '\\s+')) AS dl
-    FROM documents),
-stats AS (
-    SELECT count(*) AS n, sum(dl)::DOUBLE / count(*) AS avgdl FROM dl),
-toks AS (
-    SELECT d.doc_id, l.dl,
-           unnest(regexp_split_to_array(trim(lower(d.text)), '\\s+')) AS tok
-    FROM documents d JOIN dl l USING (doc_id)),
-tf AS (
-    SELECT doc_id, dl, tok, count(*) AS tf FROM toks
-    WHERE tok IN ('spark', 'merge', 'window') GROUP BY doc_id, dl, tok),
-dfreq AS (
-    SELECT tok,
-           ln(1 + ((SELECT n FROM stats) - count(DISTINCT doc_id) + 0.5)
-                  / (count(DISTINCT doc_id) + 0.5)) AS idf
-    FROM tf GROUP BY tok)
-SELECT doc_id, count(DISTINCT tok)::BIGINT AS n_matched_terms,
-       round(sum(idf * tf * 2.2
-                 / (tf + 1.2 * (0.25 + 0.75 * dl
-                                / (SELECT avgdl FROM stats)))), 6) AS bm25
-FROM tf JOIN dfreq USING (tok)
-GROUP BY doc_id
-"""
-
-
-# q99: C4-style trigram heavy hitters — identical tokenization as q19
-# (regex \s+ on trimmed text); the 1-based inclusive slice w[i:i+2] is
-# Spark's slice(toks, i, 3); ties broken by gram text on both sides so
-# the top-20 cut and the rank are deterministic.
-ALL["q99_ngram_heavy_hitters"] = """
-WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-    FROM documents),
-grams AS (
-    SELECT doc_id, array_to_string(w[i:i+2], ' ') AS gram
-    FROM (SELECT doc_id, w, unnest(range(1, len(w) - 1)) AS i
-          FROM toks WHERE len(w) >= 3)),
-agg AS (
-    SELECT gram, count(*)::BIGINT AS n_occurrences,
-           count(DISTINCT doc_id)::BIGINT AS n_docs
-    FROM grams GROUP BY gram),
-topk AS (
-    SELECT * FROM agg ORDER BY n_occurrences DESC, gram LIMIT 20)
-SELECT gram, n_occurrences, n_docs,
-       row_number() OVER (ORDER BY n_occurrences DESC, gram)::BIGINT AS rank
-FROM topk
-"""
-
-
 # q100: idempotent COPY INTO relationally — the 'initial' slice (two of
 # three thirds, loaded once despite the glob being copied TWICE) and the
 # 'final' slice (all rows after only the new file loads) both equal the
@@ -1739,34 +581,6 @@ UNION ALL SELECT 'final' AS slice, * FROM f
 """
 
 
-# q102: deterministic shard shuffle — shard/pos are pure functions of
-# md5('ep1:' || doc_id), so DuckDB reproduces the exact permutation.
-ALL["q102_shard_shuffle"] = """
-WITH h AS (
-    SELECT doc_id, md5('ep1:' || doc_id::VARCHAR) AS hk FROM documents)
-SELECT doc_id,
-       (('0x' || substr(hk, 1, 8))::BIGINT % 16)::INTEGER AS shard,
-       row_number() OVER (
-           PARTITION BY ('0x' || substr(hk, 1, 8))::BIGINT % 16
-           ORDER BY hk, doc_id) AS pos
-FROM h
-"""
-
-# q103: keep-best-per-cluster — the q52 component CTE joined to the
-# corpus, electing max(n_chars) (ties: min doc_id) per cluster.
-ALL["q103_cluster_representatives"] = f"""
-WITH clusters AS ({ALL["q52_dedup_clusters"]})
-SELECT cluster_id, doc_id AS rep_doc_id, cluster_size,
-       n_chars AS rep_n_chars
-FROM (
-    SELECT c.cluster_id, c.doc_id, c.cluster_size, d.n_chars,
-           row_number() OVER (PARTITION BY c.cluster_id
-                              ORDER BY d.n_chars DESC, c.doc_id) AS rn
-    FROM clusters c JOIN documents d USING (doc_id))
-WHERE rn = 1
-"""
-
-
 # q104: auto-maintenance — every planner-chosen step (full cluster,
 # materialize_deletes, incremental cluster, manifest rewrite, expire)
 # is content-preserving over already-committed state, so the final
@@ -1793,1752 +607,6 @@ WHERE NOT (turn_idx % 5 <> 0 AND role = 'tool' AND turn_idx % 7 = 0)
 GROUP BY role
 """
 
-
-# q105: leakage-safe split — same recursive-CTE components as q52, then
-# unit = coalesce(cluster_id, doc_id) and the q51-style md5 gate on the
-# UNIT (seed '0:', threshold = floor(0.125 * 2^32) = 536870912, exact
-# in binary so no float-rounding divergence between engines).
-ALL["q105_leakage_safe_split"] = f"""
-WITH RECURSIVE pairs AS ({ALL["q22_minhash_lsh"]}),
-edges AS (SELECT a AS src, b AS dst FROM pairs
-          UNION SELECT b AS src, a AS dst FROM pairs),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-cc AS (
-    SELECT node, node AS label FROM nodes
-    UNION
-    SELECT e.dst AS node, cc.label FROM cc
-    JOIN edges e ON cc.node = e.src WHERE cc.label < e.dst
-),
-final AS (SELECT node AS doc_id, min(label) AS cluster_id FROM cc GROUP BY node),
-labeled AS (
-    SELECT d.doc_id, d.source, d.n_chars,
-           coalesce(f.cluster_id, d.doc_id) AS split_unit
-    FROM documents d LEFT JOIN final f USING (doc_id)),
-gated AS (
-    SELECT *,
-           CASE WHEN ('0x' || substr(md5('0:' || split_unit::VARCHAR), 1, 8))::BIGINT
-                     < 536870912
-                THEN 'val' ELSE 'train' END AS split
-    FROM labeled)
-SELECT split, source, count(*) AS n_docs, sum(n_chars)::BIGINT AS n_chars,
-       count(DISTINCT split_unit) AS n_units
-FROM gated
-GROUP BY split, source
-"""
-
-# q106: cross-source overlap matrix over first-8-normalized-word
-# fingerprints (q70's canonical form). Aggregate-first: pair counts are
-# arithmetic on (fp, source) counts — C(cnt,2) within a source,
-# cnt_a*cnt_b across — never a row-level self-join.
-ALL["q106_cross_source_overlap"] = r"""
-WITH norm AS (
-    SELECT source,
-        md5(array_to_string(
-            (string_split(trim(regexp_replace(regexp_replace(lower(text),
-                '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '))[1:8],
-            ' ')) AS fp
-    FROM documents),
-per AS (SELECT fp, source AS src, count(*) AS cnt FROM norm GROUP BY 1, 2),
-j AS (
-    SELECT a.fp, a.src AS source_a, b.src AS source_b,
-        CASE WHEN a.src = b.src THEN a.cnt * (a.cnt - 1) // 2
-             ELSE a.cnt * b.cnt END AS pair_cnt
-    FROM per a JOIN per b ON a.fp = b.fp AND a.src <= b.src)
-SELECT source_a, source_b,
-    count(DISTINCT fp)::BIGINT AS n_shared_fps,
-    sum(pair_cnt)::BIGINT AS n_dup_pairs
-FROM j WHERE pair_cnt > 0
-GROUP BY source_a, source_b
-"""
-
-# q107: XLM-R temperature resampling, alpha=0.5 via IEEE-exact sqrt;
-# shares rounded to 9 dp before the quota multiply and the product to
-# 6 dp before floor (the q86 cross-engine ulp guard), quota capped at
-# the stratum population, filled by md5(id) rank.
-ALL["q107_temperature_resample"] = """
-WITH counts AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
-z AS (SELECT sum(sqrt(n_docs)) AS z FROM counts),
-q AS (
-    SELECT lang,
-        least(n_docs,
-              floor(round(200 * round(sqrt(n_docs) / (SELECT z FROM z), 9),
-                          6))::BIGINT)::INTEGER AS quota
-    FROM counts),
-r AS (
-    SELECT doc_id, lang,
-        row_number() OVER (PARTITION BY lang
-                           ORDER BY md5(doc_id::VARCHAR), doc_id) AS rnk
-    FROM documents)
-SELECT r.doc_id, r.lang, r.rnk::INTEGER AS sample_rank, q.quota
-FROM r JOIN q USING (lang) WHERE rnk <= quota
-"""
-
-# q108: CCNet-shaped perplexity bucketing — add-one bigram LM trained on
-# the corpus itself; per-doc mean -ln p in nats, 6-dp rounded (the q67
-# ulp guard); exact tertiles via ntile(3) ordered by (score, doc_id).
-ALL["q108_perplexity_buckets"] = r"""
-WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS w
-    FROM documents),
-v AS (SELECT count(DISTINCT tok) AS vsz
-      FROM (SELECT unnest(w) AS tok FROM toks)),
-pos AS (SELECT doc_id, unnest(w) AS w1, generate_subscripts(w, 1) AS i,
-               len(w) AS n, w
-        FROM toks),
-big AS (SELECT doc_id, w1, w[i + 1] AS w2 FROM pos WHERE i < n),
-c12 AS (SELECT w1, w2, count(*) AS c12 FROM big GROUP BY 1, 2),
-c1 AS (SELECT w1, count(*) AS c1 FROM big GROUP BY 1),
-sc AS (
-    SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-        round(avg(-ln((c12 + 1.0) / (c1 + (SELECT vsz FROM v)))), 6)
-            AS cross_entropy
-    FROM big JOIN c12 USING (w1, w2) JOIN c1 USING (w1)
-    GROUP BY doc_id),
-b AS (SELECT *, ntile(3) OVER (ORDER BY cross_entropy, doc_id) AS nt FROM sc)
-SELECT doc_id, n_bigrams, cross_entropy,
-    CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-FROM b
-"""
-
-# q109: composed quality gate, first-failed-rule attribution. Rule
-# fragments reuse q65 (Gopher) and q69 (PII regex, Java ∩ RE2 subset);
-# fixed order length -> lang -> repetition -> pii makes the funnel
-# additive.
-ALL["q109_quality_funnel"] = r"""
-WITH w AS (
-    SELECT doc_id, lang, text, length(text)::BIGINT AS n_chars,
-        regexp_split_to_array(trim(lower(text)), '\s+') AS w
-    FROM documents),
-d2 AS (
-    SELECT doc_id,
-        CASE WHEN len(w) >= 2 THEN round(1.0 - len(list_distinct(
-                list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])
-            )) * 1.0 / (len(w) - 1), 6) ELSE 0.0 END AS dup2
-    FROM w),
-tw AS (
-    SELECT doc_id, round(max(c) * 1.0 / sum(c), 6) AS twf FROM (
-        SELECT doc_id, tok, count(*) AS c FROM (
-            SELECT doc_id, unnest(w) AS tok FROM w)
-        GROUP BY doc_id, tok)
-    GROUP BY doc_id),
-pii AS (
-    SELECT doc_id,
-        len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-      + len(regexp_extract_all(text, '\+?[0-9]{3}[- ][0-9]{3}[- ][0-9]{4}'))
-      + len(regexp_extract_all(text, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b'))
-        AS n_pii
-    FROM w),
-rules AS (
-    -- LEFT joins + IS NULL arms: a null text is a 'length' failure and
-    -- a null lang a 'lang' failure, never a silently dropped row
-    SELECT w.doc_id, w.n_chars,
-        CASE WHEN w.n_chars IS NULL OR w.n_chars < 100 OR w.n_chars > 2000
-                 THEN 'length'
-             WHEN w.lang IS NULL OR w.lang NOT IN ('en', 'es', 'de', 'fr')
-                 THEN 'lang'
-             WHEN tw.twf > 0.20 OR d2.dup2 > 0.60 THEN 'repetition'
-             WHEN pii.n_pii > 0 THEN 'pii'
-             ELSE 'none' END AS first_failed_rule
-    FROM w LEFT JOIN d2 USING (doc_id) LEFT JOIN tw USING (doc_id)
-           LEFT JOIN pii USING (doc_id))
-SELECT doc_id, n_chars, first_failed_rule,
-    (first_failed_rule = 'none') AS keep
-FROM rules
-"""
-
-# q110: exact nearest-rank quantiles of n_chars, ties by doc_id — the
-# target rank is max(1, ceil(q*n)).
-ALL["q110_exact_quantiles"] = """
-WITH r AS (
-    SELECT n_chars,
-        row_number() OVER (ORDER BY n_chars, doc_id) AS rnk,
-        count(*) OVER () AS n
-    FROM documents),
-t AS (SELECT q::DOUBLE AS q FROM (VALUES (0.5), (0.9), (0.99)) AS t(q))
-SELECT t.q AS quantile, r.rnk::BIGINT AS rank, r.n_chars::BIGINT AS value
-FROM r JOIN t ON r.rnk = greatest(1, ceil(t.q * r.n)::BIGINT)
-"""
-
-# q111: per-source exact nearest-rank quantiles; target rank is
-# max(1, ceil(q*n_group)), ties by doc_id.
-ALL["q111_grouped_exact_quantiles"] = """
-WITH r AS (
-    SELECT source, n_chars, doc_id,
-        row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS rnk,
-        count(*) OVER (PARTITION BY source) AS n
-    FROM documents),
-t AS (SELECT q::DOUBLE AS q FROM (VALUES (0.5), (0.9)) AS t(q))
-SELECT r.source, t.q AS quantile, r.rnk::BIGINT AS rank,
-    r.n_chars::BIGINT AS value
-FROM r JOIN t ON r.rnk = greatest(1, ceil(t.q * r.n)::BIGINT)
-"""
-
-# q112: UNPIVOT/melt of wide part attributes — UNION ALL is the portable
-# form of the same generator.
-ALL["q112_unpivot"] = """
-SELECT p_partkey, 'p_size' AS attr, p_size::DOUBLE AS val FROM part
-UNION ALL
-SELECT p_partkey, 'p_retailprice' AS attr, p_retailprice AS val FROM part
-"""
-
-# q113: SCD2 build — collapse consecutive duplicate states per user
-# (null-safe change detection), then half-open validity intervals via
-# lead(); ties break on event_id in every window.
-ALL["q113_scd2_build"] = """
-WITH c AS (
-    SELECT user_id, ts, event_id, event_type,
-        lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
-        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-    FROM events),
-ch AS (
-    SELECT user_id, ts, event_id, event_type FROM c
-    WHERE rn = 1 OR event_type IS DISTINCT FROM prev)
-SELECT user_id,
-    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)::BIGINT AS version,
-    event_type AS state,
-    ts AS valid_from,
-    lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-    event_id::BIGINT AS change_event_id,
-    (lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL) AS is_current
-FROM ch
-"""
-
-# q114: point-in-time join — dim from non-purchase events, probes are
-# purchases; valid_from <= ts < valid_to (open version matches to
-# infinity); LEFT so pre-first-state purchases keep NULL state.
-ALL["q114_point_in_time_join"] = """
-WITH c AS (
-    SELECT user_id, ts, event_id, event_type,
-        lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
-        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-    FROM events WHERE event_type <> 'purchase'),
-dim AS (
-    SELECT user_id,
-        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)::BIGINT AS version,
-        event_type AS state,
-        ts AS valid_from,
-        lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to
-    FROM c
-    WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
-p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-SELECT p.event_id, p.user_id, p.ts, dim.state, dim.version
-FROM p LEFT JOIN dim
-  ON dim.user_id = p.user_id AND dim.valid_from <= p.ts
- AND (dim.valid_to IS NULL OR p.ts < dim.valid_to)
-"""
-
-# q115: exact linear stats — moments summed exactly (DuckDB SUM(BIGINT)
-# -> HUGEINT), THEN cast to double; closed forms keep the identical
-# expression shape as operators/stats.exact_linear_stats so both engines
-# run the same IEEE op sequence. y is price in cents.
-ALL["q115_stats_profile"] = """
-WITH m AS (
-    SELECT l_returnflag,
-        count(*)::DOUBLE AS n,
-        sum(l_quantity::BIGINT)::DOUBLE AS sx,
-        sum(round(l_extendedprice * 100)::BIGINT)::DOUBLE AS sy,
-        sum(l_quantity::BIGINT * l_quantity::BIGINT)::DOUBLE AS sxx,
-        sum(round(l_extendedprice * 100)::BIGINT
-            * round(l_extendedprice * 100)::BIGINT)::DOUBLE AS syy,
-        sum(l_quantity::BIGINT
-            * round(l_extendedprice * 100)::BIGINT)::DOUBLE AS sxy
-    FROM lineitem
-    -- pairwise-complete only, mirroring exact_linear_stats: NULLs on
-    -- either side leave n and the moments together
-    WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-    GROUP BY l_returnflag)
-SELECT l_returnflag, n::BIGINT AS n,
-    round(sx / n, 6) AS mean_x,
-    round(sy / n, 6) AS mean_y,
-    round((sxy - sx * sy / n) / (n - 1.0), 6) AS covar_xy,
-    round(((sxy - sx * sy / n) / (n - 1.0))
-        / sqrt(((sxx - sx * sx / n) / (n - 1.0))
-             * ((syy - sy * sy / n) / (n - 1.0))), 6) AS corr_xy,
-    round(((sxy - sx * sy / n) / (n - 1.0))
-        / ((sxx - sx * sx / n) / (n - 1.0)), 6) AS slope_yx
-FROM m
-"""
-
-# q116: equi-width histogram + cumulative distribution over the
-# aggregated buckets.
-ALL["q116_histogram"] = """
-WITH h AS (
-    SELECT floor(o_totalprice / 50000.0)::BIGINT AS bucket,
-        count(*)::BIGINT AS n
-    FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1)
-SELECT bucket, (bucket * 50000)::DOUBLE AS bucket_lo, n,
-    sum(n) OVER (ORDER BY bucket)::BIGINT AS cum_n,
-    round(sum(n) OVER (ORDER BY bucket) * 1.0 / sum(n) OVER (), 6) AS cum_frac
-FROM h
-"""
-
-# q117: blocked Levenshtein pairs over DISTINCT part names (block = last
-# name token); a.name < b.name orders each unordered pair once.
-ALL["q117_fuzzy_name_pairs"] = """
-WITH v AS (
-    SELECT string_split(p_name, ' ')[-1] AS block, p_name AS name,
-        count(*)::BIGINT AS n, min(p_partkey)::BIGINT AS sample_key
-    FROM part GROUP BY 1, 2)
-SELECT a.block, a.name AS name_a, a.n AS n_a, a.sample_key AS key_a,
-    b.name AS name_b, b.n AS n_b, b.sample_key AS key_b,
-    levenshtein(a.name, b.name)::BIGINT AS dist
-FROM v a JOIN v b ON a.block = b.block AND a.name < b.name
-WHERE levenshtein(a.name, b.name) <= 2
-"""
-
-# q118: per-source KL divergence vs the corpus language mix; NULL lang
-# is its own bucket; probabilities are exact integer ratios.
-ALL["q118_mixture_drift"] = """
-WITH b AS (
-    SELECT coalesce(source, '__null__') AS grp,
-           coalesce(lang, '__null__') AS cat FROM documents),
-gc AS (SELECT grp, cat, count(*)::BIGINT AS c_gc FROM b GROUP BY 1, 2),
-g AS (SELECT grp, sum(c_gc)::BIGINT AS n_g FROM gc GROUP BY 1),
-c AS (SELECT cat, sum(c_gc)::BIGINT AS c_c FROM gc GROUP BY 1),
-t AS (SELECT sum(c_c)::BIGINT AS n_total FROM c)
-SELECT gc.grp AS source, max(g.n_g)::BIGINT AS n_docs,
-    count(*)::BIGINT AS n_cats,
-    round(sum((c_gc * 1.0 / n_g)
-        * ln((c_gc * 1.0 / n_g) / (c_c * 1.0 / n_total))), 6) AS kl_nats
-FROM gc JOIN g USING (grp) JOIN c USING (cat) CROSS JOIN t
-GROUP BY gc.grp
-"""
-
-# q119: incremental SCD2 apply == full rebuild over the same effective
-# log (pre-cutoff events for everyone, post-cutoff only for the
-# user_id % 7 == 0 batch) — same build SQL as q113 on the filtered log.
-ALL["q119_scd2_incremental_apply"] = """
-WITH ev AS (
-    SELECT * FROM events
-    WHERE ts <= TIMESTAMP '2024-01-29 00:00:00' OR user_id % 7 = 0),
-c AS (
-    SELECT user_id, ts, event_id, event_type,
-        lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
-        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-    FROM ev),
-ch AS (
-    SELECT user_id, ts, event_id, event_type FROM c
-    WHERE rn = 1 OR event_type IS DISTINCT FROM prev)
-SELECT user_id,
-    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)::BIGINT AS version,
-    event_type AS state,
-    ts AS valid_from,
-    lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-    event_id::BIGINT AS change_event_id,
-    (lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL) AS is_current
-FROM ch
-"""
-
-# q120: sliding-window batch expansion — every event belongs to exactly
-# two 10-minute windows aligned on 5-minute slides: s1 = floor(ts to 5
-# min) and s1 - 5 min (ts < s1 + 5 min < both windows' ends).
-ALL["q120_streaming_sliding_window"] = """
-WITH e AS (
-    SELECT event_type, value,
-        (epoch_us(ts) // 300000000) * 300000000 AS s1us
-    FROM events),
-w AS (
-    SELECT make_timestamp(s1us) AS window_start, event_type, value FROM e
-    UNION ALL
-    SELECT make_timestamp(s1us - 300000000), event_type, value FROM e)
-SELECT window_start, event_type, count(*) AS n,
-    round(sum(value), 2) AS sum_value
-FROM w GROUP BY 1, 2
-"""
-
-# q121: SCD2 state timeline — occupancy from exact microsecond interval
-# lengths (open versions clamped to max valid_from), peak concurrency by
-# sweep line with departures-before-arrivals at equal instants; the
-# final join is null-safe (NULL state is a real group).
-ALL["q121_state_timeline"] = """
-WITH c AS (
-    SELECT user_id, ts, event_id, event_type,
-        lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
-        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-    FROM events),
-ch AS (
-    SELECT user_id, ts, event_id, event_type FROM c
-    WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
-dim AS (
-    SELECT user_id, event_type AS state, ts AS valid_from,
-        lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-        event_id AS ceid
-    FROM ch),
-v AS (
-    -- clamp to the horizon (mirrors state_timeline): ends cut at h,
-    -- versions opening after h excluded; default h = max(valid_from)
-    SELECT state, user_id, valid_from AS vf,
-        least(coalesce(valid_to, (SELECT max(valid_from) FROM dim)),
-              (SELECT max(valid_from) FROM dim)) AS ve, ceid
-    FROM dim
-    WHERE valid_from <= (SELECT max(valid_from) FROM dim)),
-occ AS (
-    -- n_keys counts a NULL key as a real key (count DISTINCT drops it)
-    SELECT state, count(*)::BIGINT AS n_versions,
-        (count(DISTINCT user_id)
-         + max(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END))::BIGINT
-            AS n_keys,
-        sum(epoch_us(ve) - epoch_us(vf))::BIGINT AS occupied_us
-    FROM v GROUP BY state),
-d AS (
-    SELECT state, vf AS ts, 1 AS delta, ceid FROM v
-    UNION ALL
-    SELECT state, ve AS ts, -1 AS delta, ceid FROM v),
-pk AS (
-    SELECT state, max(conc)::BIGINT AS peak_concurrent FROM (
-        SELECT state, sum(delta) OVER (
-            PARTITION BY state ORDER BY ts, delta, ceid
-            ROWS UNBOUNDED PRECEDING) AS conc
-        FROM d)
-    GROUP BY state)
-SELECT occ.state, occ.n_versions, occ.n_keys, occ.occupied_us,
-    pk.peak_concurrent
-FROM occ JOIN pk ON occ.state IS NOT DISTINCT FROM pk.state
-"""
-
-# q122: rolling z-score anomalies over the trailing-10 exclusive frame;
-# z is rounded 4 dp BEFORE the threshold compare on both engines.
-ALL["q122_rolling_zscore"] = """
-WITH s AS (
-    SELECT user_id, ts, event_id, value,
-        avg(value) OVER w AS m,
-        stddev_samp(value) OVER w AS sd,
-        count(value) OVER w AS np
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING))
-SELECT user_id, ts, event_id, value, round((value - m) / sd, 4) AS z
-FROM s
-WHERE np >= 5 AND sd > 0 AND abs(round((value - m) / sd, 4)) > 2.0
-"""
-
-# q123: daily active / new / cumulative distinct users — first-day marks
-# plus a running sum over the per-day aggregate; NULL users excluded
-# like COUNT(DISTINCT).
-ALL["q123_cumulative_distinct"] = """
-WITH e AS (SELECT user_id, ts::DATE AS day FROM events
-           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-a AS (SELECT day, count(DISTINCT user_id)::BIGINT AS n_active
-      FROM e GROUP BY 1),
-f AS (SELECT user_id, min(day) AS day FROM e GROUP BY 1),
-n AS (SELECT day, count(*)::BIGINT AS n_new FROM f GROUP BY 1)
-SELECT a.day, a.n_active, coalesce(n.n_new, 0)::BIGINT AS n_new,
-    sum(coalesce(n.n_new, 0)) OVER (ORDER BY a.day)::BIGINT AS cum_users
-FROM a LEFT JOIN n USING (day)
-"""
-
-# q124: frequent co-purchased part pairs — distinct-first, item-support
-# prune (>=2), pair support >=2, lift from exact integer counts; the
-# basket-size cap (1000) never binds on this data but mirrors the
-# operator's corruption guard.
-ALL["q124_copurchase_pairs"] = """
-WITH bi AS (
-    SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
-    FROM lineitem WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
-ok AS (
-    SELECT basket FROM bi GROUP BY basket HAVING count(*) <= 1000),
-b AS (SELECT bi.* FROM bi JOIN ok USING (basket)),
-sup AS (
-    SELECT item, count(*)::BIGINT AS support
-    FROM b GROUP BY item HAVING count(*) >= 2),
-f AS (SELECT b.* FROM b JOIN sup USING (item)),
-tot AS (SELECT count(DISTINCT basket)::DOUBLE AS t FROM b),
-pc AS (
-    SELECT a.item AS item_a, c.item AS item_b, count(*)::BIGINT AS n_baskets
-    FROM f a JOIN f c ON a.basket = c.basket AND a.item < c.item
-    GROUP BY 1, 2 HAVING count(*) >= 2)
-SELECT pc.item_a, pc.item_b, pc.n_baskets,
-    sa.support AS support_a, sb.support AS support_b,
-    round((pc.n_baskets::DOUBLE * tot.t)
-          / (sa.support::DOUBLE * sb.support::DOUBLE), 6) AS lift
-FROM pc
-JOIN sup sa ON sa.item = pc.item_a
-JOIN sup sb ON sb.item = pc.item_b
-CROSS JOIN tot
-"""
-
-# q125: gaps-and-islands longest consecutive-order-day streak per
-# customer; tie on equal lengths -> earliest start.
-ALL["q125_order_day_streaks"] = """
-WITH d AS (
-    SELECT DISTINCT o_custkey AS key, o_orderdate::DATE AS day
-    FROM orders WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL),
-i AS (
-    SELECT key, day,
-        day - CAST(row_number() OVER (PARTITION BY key ORDER BY day)
-                   AS INTEGER) AS grp
-    FROM d),
-s AS (
-    SELECT key, grp, count(*)::BIGINT AS len, min(day) AS start
-    FROM i GROUP BY 1, 2),
-r AS (
-    SELECT key, start,
-        row_number() OVER (PARTITION BY key
-                           ORDER BY len DESC, start ASC) AS rk
-    FROM s),
-agg AS (
-    SELECT key, sum(len)::BIGINT AS active_days,
-        count(*)::BIGINT AS n_streaks, max(len)::BIGINT AS longest_streak
-    FROM s GROUP BY 1)
-SELECT agg.key, agg.active_days, agg.n_streaks, agg.longest_streak,
-    r.start AS longest_start
-FROM agg JOIN r ON agg.key = r.key AND r.rk = 1
-"""
-
-# q126: time-weighted average value per user — step semantics, exact
-# integer micro-units x microseconds, HUGEINT products (int64 would
-# overflow), one IEEE division at the end.
-ALL["q126_time_weighted_avg"] = """
-WITH base AS (
-    SELECT user_id AS key, epoch_us(ts) AS ts_us, event_id AS tb,
-        round(value * 1e6)::BIGINT AS v_u
-    FROM events
-    WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
-held AS (
-    SELECT key, v_u,
-        lead(ts_us) OVER (PARTITION BY key ORDER BY ts_us, tb) - ts_us
-            AS dur_us
-    FROM base),
-g AS (
-    SELECT key, count(*)::BIGINT AS n_obs, sum(dur_us)::BIGINT AS held_us,
-        sum(v_u::HUGEINT * dur_us::HUGEINT) AS vw
-    FROM held WHERE dur_us IS NOT NULL GROUP BY key)
-SELECT key, n_obs, held_us,
-    round(vw::DOUBLE / (held_us::DOUBLE * 1e6), 6) AS twa
-FROM g WHERE held_us > 0
-"""
-
-# q127: largest-remainder proration of the order total across lines —
-# pure BIGINT cents arithmetic, floor-div base, leftover cents to the
-# largest remainders, linenumber tiebreak. Allocations sum back exactly.
-ALL["q127_prorate_order_total"] = """
-WITH l AS (
-    SELECT l_orderkey, l_linenumber,
-        round(l_extendedprice * 100)::BIGINT AS weight_c,
-        round(o_totalprice * 100)::BIGINT AS total_c
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL
-      AND l_extendedprice IS NOT NULL
-      AND round(l_extendedprice * 100) >= 0
-      AND round(o_totalprice * 100)::BIGINT >= 0),
-s AS (
-    SELECT *, sum(weight_c) OVER (PARTITION BY l_orderkey)::BIGINT AS ws
-    FROM l),
-b AS (
-    SELECT *, (total_c * weight_c) // ws AS base,
-        (total_c * weight_c) % ws AS rem
-    FROM s WHERE ws > 0),
-d AS (
-    SELECT *,
-        total_c - sum(base) OVER (PARTITION BY l_orderkey)::BIGINT
-            AS leftover,
-        row_number() OVER (PARTITION BY l_orderkey
-                           ORDER BY rem DESC, l_linenumber ASC,
-                                    weight_c DESC) AS rk
-    FROM b)
-SELECT l_orderkey, l_linenumber, weight_c,
-    (base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END)::BIGINT AS alloc_c
-FROM d
-"""
-
-# q128: per-document unigram Shannon entropy (nats) over the repo-wide
-# whitespace tokenizer; ln(n) - sum(c ln c)/n on exact counts, 6 dp.
-ALL["q128_token_entropy"] = """
-WITH tok AS (
-    SELECT doc_id,
-        unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
-    FROM documents),
-c AS (
-    SELECT doc_id, tok, count(*) AS c
-    FROM tok WHERE tok <> '' GROUP BY 1, 2),
-g AS (
-    SELECT doc_id, sum(c)::BIGINT AS n_tokens,
-        count(*)::BIGINT AS n_distinct,
-        sum(c::DOUBLE * ln(c::DOUBLE)) AS clogc
-    FROM c GROUP BY 1)
-SELECT doc_id, n_tokens, n_distinct,
-    round(ln(n_tokens::DOUBLE) - clogc / n_tokens::DOUBLE, 6) AS entropy
-FROM g
-"""
-
-# q129: first-order Markov transition matrix over user event sequences
-# (ts, event_id order); NULL event_type is a real state (rn>1 guard, not
-# prev IS NOT NULL); probabilities exact-integer divisions, 6 dp.
-ALL["q129_event_transitions"] = """
-WITH seq AS (
-    SELECT event_type,
-        lag(event_type) OVER w AS prev_state,
-        row_number() OVER w AS rn
-    FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-t AS (
-    SELECT prev_state, event_type AS next_state,
-        count(*)::BIGINT AS n_transitions
-    FROM seq WHERE rn > 1 GROUP BY 1, 2)
-SELECT prev_state, next_state, n_transitions,
-    round(n_transitions::DOUBLE
-          / sum(n_transitions) OVER (PARTITION BY prev_state)::DOUBLE,
-          6) AS prob
-FROM t
-"""
-
-# q130: exact set-similarity join. The oracle is the BRUTE-FORCE
-# token-sharing join (pairs with no shared token have Jaccard 0 < t, so
-# it is complete); the Spark side answers through rarest-first prefix
-# filtering, so the hash proves the filter is lossless.
-ALL["q130_set_similarity_join"] = """
-WITH tok AS (
-    SELECT doc_id, unnest(list_distinct(
-        regexp_split_to_array(trim(lower(text)), '\\s+'))) AS tok
-    FROM documents),
-sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY doc_id),
-inter AS (
-    SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS i
-    FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
-    GROUP BY 1, 2)
-SELECT a, b, round(i / (sa.s + sb.s - i), 6) AS jaccard
-FROM inter JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-WHERE round(i / (sa.s + sb.s - i), 6) >= 0.9
-"""
-
-# q131: per-document shingle novelty — first corpus appearance = min
-# doc_id per 60-bit int shingle key (same key trick as q21/q22).
-ALL["q131_shingle_novelty"] = f"""
-WITH {_SHINGLES},
-h AS (
-    SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS sh
-    FROM shingles),
-first_seen AS (SELECT sh, min(doc_id) AS first_id FROM h GROUP BY sh)
-SELECT doc_id, count(*)::BIGINT AS n_shingles,
-    sum((first_id = doc_id)::INT)::BIGINT AS n_novel,
-    round(sum((first_id = doc_id)::INT) / count(*), 6) AS novelty
-FROM h JOIN first_seen USING (sh) GROUP BY doc_id
-"""
-
-# q132: inter-arrival burstiness — exact integer-microsecond gaps,
-# HUGEINT moments (mirror of Spark's DECIMAL(38,0), the q115/q126
-# recipe), fixed-shape closed forms expanded inline exactly as the
-# Spark expression tree builds them.
-ALL["q132_interarrival_burstiness"] = """
-WITH g AS (
-    SELECT user_id AS key,
-        epoch_us(ts) - lag(epoch_us(ts)) OVER (
-            PARTITION BY user_id ORDER BY ts, event_id) AS gap
-    FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-m AS (
-    SELECT key, count(*)::DOUBLE AS n,
-        sum(gap)::BIGINT AS s1i,
-        sum(gap::HUGEINT)::DOUBLE AS s1,
-        sum(gap::HUGEINT * gap::HUGEINT)::DOUBLE AS s2,
-        max(gap)::BIGINT AS max_gap_us
-    FROM g WHERE gap IS NOT NULL GROUP BY key
-    HAVING count(*) >= 2)
-SELECT key, n::BIGINT AS n_gaps,
-    round((s1i // n::BIGINT)::DOUBLE / 1000000.0, 6) AS mean_gap_s,
-    round(floor(sqrt((s2 - s1 * s1 / n) / (n - 1.0)))::DOUBLE
-        / 1000000.0, 6) AS sd_gap_s,
-    max_gap_us,
-    CASE WHEN sqrt((s2 - s1 * s1 / n) / (n - 1.0)) + s1 / n = 0 THEN 0.0
-         ELSE round((sqrt((s2 - s1 * s1 / n) / (n - 1.0)) - s1 / n)
-                  / (sqrt((s2 - s1 * s1 / n) / (n - 1.0)) + s1 / n), 6)
-    END AS burstiness
-FROM m
-"""
-
-# q133: streaming at-least-once dedup — the stream delivers every event
-# twice; dropDuplicatesWithinWatermark must collapse them, so the
-# deduped aggregate equals the single-delivery batch aggregate (q55's
-# grouping, proven hash-stable).
-ALL["q133_streaming_dedup"] = """
-    SELECT date_trunc('hour', ts) AS hour_start, event_type,
-           count(*) AS n, round(sum(value), 2) AS sum_value
-    FROM events GROUP BY 1, 2
-"""
-
-# q134: Deequ-style column profile of orders — exact nulls/NDV,
-# completeness = 1.0 - nulls/rows (same IEEE shape), type-bucketed
-# min/max in typed columns.
-
-
-def _q134_col(name: str, kind: str) -> str:
-    mn, mx = f"min({name})", f"max({name})"
-    num = ("NULL::DOUBLE", "NULL::DOUBLE")
-    s = ("NULL::VARCHAR", "NULL::VARCHAR")
-    ts = ("NULL::TIMESTAMP", "NULL::TIMESTAMP")
-    if kind == "num":
-        num = (mn + "::DOUBLE", mx + "::DOUBLE")
-    elif kind == "str":
-        s = (mn, mx)
-    elif kind == "ts":
-        ts = (mn, mx)
-    return f"""
-    SELECT '{name}' AS col_name, count(*) AS n_rows,
-        sum(({name} IS NULL)::INT)::BIGINT AS n_nulls,
-        count(DISTINCT {name})::BIGINT AS n_distinct,
-        round(1.0 - sum(({name} IS NULL)::INT) / count(*), 6) AS completeness,
-        {num[0]} AS mn_num, {s[0]} AS mn_str, {ts[0]} AS mn_ts,
-        {num[1]} AS mx_num, {s[1]} AS mx_str, {ts[1]} AS mx_ts
-    FROM orders"""
-
-
-ALL["q134_column_profile"] = " UNION ALL ".join(
-    _q134_col(n, k)
-    for n, k in [
-        ("o_orderkey", "num"),
-        ("o_custkey", "num"),
-        ("o_orderstatus", "str"),
-        ("o_totalprice", "num"),
-        ("o_orderdate", "ts"),
-        ("o_orderpriority", "str"),
-    ]
-)
-
-# q135: recency-decayed engagement — integer half-life buckets, power-of-
-# two weights on micro-units, HUGEINT sum (mirror of Spark DECIMAL(38,0)),
-# one constant division (2^4 * 1e6).
-ALL["q135_recency_decay"] = """
-WITH b AS (
-    SELECT user_id AS key, ts::DATE AS d,
-        round(value * 1e6)::BIGINT AS v_u,
-        date_diff('day', ts::DATE, DATE '2024-02-01') AS age
-    FROM events
-    WHERE user_id IS NOT NULL AND value IS NOT NULL),
-f AS (SELECT *, (age // 7)::INT AS e FROM b WHERE age BETWEEN 0 AND 28)
-SELECT key, count(*)::BIGINT AS n_events, max(d) AS last_day,
-    round(sum(v_u::HUGEINT * ((1::BIGINT << (4 - e))::HUGEINT))::DOUBLE
-          / 16000000.0, 6) AS decay_score
-FROM f GROUP BY key
-"""
-
-# q136: FK orphan audit — LEFT JOIN against DISTINCT parent keys; NULL
-# FKs are counted, not orphaned (SQL FK semantics).
-
-
-def _q136_rel(rel: str, child: str, fk: str, parent: str, pk: str) -> str:
-    return f"""
-    SELECT '{rel}' AS relation, count(*) AS n_child,
-        sum(({fk} IS NULL)::INT)::BIGINT AS n_null_fk,
-        sum(({fk} IS NOT NULL AND p.{pk} IS NULL)::INT)::BIGINT AS n_orphans,
-        round(sum(({fk} IS NOT NULL AND p.{pk} IS NULL)::INT) / count(*), 6)
-            AS orphan_rate
-    FROM {child} LEFT JOIN (SELECT DISTINCT {pk} FROM {parent}) p
-        ON {fk} = p.{pk}"""
-
-
-ALL["q136_referential_integrity"] = " UNION ALL ".join(
-    _q136_rel(*r)
-    for r in [
-        ("lineitem->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("lineitem->part", "lineitem", "l_partkey", "part", "p_partkey"),
-        ("lineitem->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        ("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
-    ]
-)
-
-# q137: session path mining — q95's session rule (floor-second gap,
-# strictly > 1800), first-5 steps string_agg'd in (ts, event_id) order,
-# NULL steps as the literal 'NULL'.
-ALL["q137_session_paths"] = """
-WITH o AS (
-    SELECT user_id, ts, event_id,
-        coalesce(event_type, 'NULL') AS et,
-        lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-    FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-f AS (
-    SELECT *, CASE WHEN prev IS NULL
-                     OR date_diff('second', prev, ts) > 1800
-                   THEN 1 ELSE 0 END AS ns
-    FROM o),
-s AS (
-    SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS UNBOUNDED PRECEDING) AS sid
-    FROM f),
-r AS (
-    SELECT user_id, sid, et,
-        row_number() OVER (PARTITION BY user_id, sid
-                           ORDER BY ts, event_id) AS rn
-    FROM s),
-p AS (
-    SELECT user_id, sid, string_agg(et, '>' ORDER BY rn) AS path
-    FROM r WHERE rn <= 5 GROUP BY 1, 2)
-SELECT path, count(*)::BIGINT AS n_sessions,
-    count(DISTINCT user_id)::BIGINT AS n_users
-FROM p GROUP BY path
-"""
-
-# q138: winsorized mean — exact nearest-rank clamps (k = ceil(q·n), the
-# same double ceil shape as Spark), integer cents, HUGEINT sum.
-ALL["q138_winsorized_mean"] = """
-WITH base AS (
-    SELECT o_orderpriority AS grp,
-        round(o_totalprice * 100)::BIGINT AS v_c, o_orderkey AS tb
-    FROM orders WHERE o_totalprice IS NOT NULL),
-r AS (
-    SELECT grp, v_c,
-        row_number() OVER (PARTITION BY grp ORDER BY v_c, tb) AS rn,
-        count(*) OVER (PARTITION BY grp) AS n
-    FROM base),
-m AS (
-    SELECT grp, v_c,
-        max(CASE WHEN rn = ceil(0.1 * n) THEN v_c END)
-            OVER (PARTITION BY grp) AS v_lo,
-        max(CASE WHEN rn = ceil(0.9 * n) THEN v_c END)
-            OVER (PARTITION BY grp) AS v_hi
-    FROM r),
-g AS (
-    SELECT grp, count(*)::BIGINT AS n, min(v_lo) AS lo, min(v_hi) AS hi,
-        sum(greatest(least(v_c, v_hi), v_lo)::HUGEINT) AS s,
-        sum(v_c::HUGEINT) AS sr
-    FROM m GROUP BY grp)
-SELECT grp AS o_orderpriority, n,
-    round(lo / 100.0, 6) AS p_lo, round(hi / 100.0, 6) AS p_hi,
-    round(s::DOUBLE / n / 100.0, 6) AS winsorized_mean,
-    round(sr::DOUBLE / n / 100.0, 6) AS raw_mean
-FROM g
-"""
-
-# q139: cumulative-deviation change point — D_t·N = N·cum − t·total is a
-# pure integer, so the argmax day cannot split engines; ties → earliest
-# day.
-ALL["q139_cusum_changepoint"] = """
-WITH daily AS (
-    SELECT event_type AS grp, ts::DATE AS day, count(*)::BIGINT AS x
-    FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-s AS (
-    SELECT grp, day,
-        sum(x) OVER (PARTITION BY grp ORDER BY day
-                     ROWS UNBOUNDED PRECEDING) AS cum,
-        row_number() OVER (PARTITION BY grp ORDER BY day) AS t,
-        sum(x) OVER (PARTITION BY grp) AS total,
-        count(*) OVER (PARTITION BY grp) AS n_days
-    FROM daily),
-d AS (
-    SELECT grp, day, n_days, total,
-        n_days * cum - t * total AS d_scaled,
-        row_number() OVER (PARTITION BY grp
-            ORDER BY abs(n_days * cum - t * total) DESC, day ASC) AS rk
-    FROM s)
-SELECT grp AS event_type, n_days::BIGINT AS n_days,
-    total::BIGINT AS n_events, day AS change_day,
-    round(abs(d_scaled)::DOUBLE / n_days::DOUBLE, 6) AS cusum_stat
-FROM d WHERE rk = 1 AND n_days >= 2
-"""
-
-# q140: deterministic negative sampling — q51's md5-gate hash for user,
-# item, and pair keys; bucket equi-join; NOT EXISTS anti-join.
-ALL["q140_negative_sampling"] = """
-WITH ex AS (
-    SELECT user_id, event_type,
-        regexp_extract(props, '"k": (\\d+)', 1)::INTEGER AS item_id
-    FROM events WHERE props IS NOT NULL),
-pos AS (
-    SELECT DISTINCT user_id, item_id FROM ex
-    WHERE event_type = 'purchase' AND user_id IS NOT NULL
-      AND item_id IS NOT NULL),
-cat AS (SELECT DISTINCT item_id FROM ex WHERE item_id IS NOT NULL),
-ub AS (
-    SELECT user_id,
-        ('0x' || substr(md5(user_id::VARCHAR), 1, 8))::BIGINT % 8 AS b
-    FROM (SELECT DISTINCT user_id FROM pos)),
-ib AS (
-    SELECT item_id,
-        ('0x' || substr(md5(item_id::VARCHAR), 1, 8))::BIGINT % 8 AS b
-    FROM cat),
-cand AS (SELECT ub.user_id, ib.item_id FROM ub JOIN ib USING (b)),
-neg AS (
-    SELECT c.user_id, c.item_id FROM cand c
-    WHERE NOT EXISTS (SELECT 1 FROM pos p
-                      WHERE p.user_id = c.user_id
-                        AND p.item_id = c.item_id)),
-r AS (
-    SELECT user_id, item_id,
-        row_number() OVER (PARTITION BY user_id ORDER BY
-            ('0x' || substr(md5(user_id::VARCHAR || '#'
-                || item_id::VARCHAR), 1, 8))::BIGINT ASC,
-            item_id ASC) AS rnk
-    FROM neg)
-SELECT user_id, item_id AS neg_item, rnk::BIGINT AS rnk
-FROM r WHERE rnk <= 3
-"""
-
-# q141: embedding diversity via the sum-of-vectors identity — exact
-# integer micro-unit moments (HUGEINT, mirror of Spark DECIMAL(38,0)),
-# two fixed-shape divisions; single-vector groups emit NULL (no pairs).
-ALL["q141_embedding_diversity"] = """
-WITH e AS (
-    SELECT label AS grp,
-        generate_subscripts(embedding, 1) AS dim,
-        round(unnest(embedding)::DOUBLE * 1e6)::BIGINT AS v
-    FROM embeddings),
-pd AS (
-    SELECT grp, dim, sum(v::HUGEINT) AS s,
-        sum(v::HUGEINT * v::HUGEINT) AS q
-    FROM e GROUP BY 1, 2),
-pg AS (SELECT grp, sum(s * s) AS ss, sum(q) AS q FROM pd GROUP BY grp),
-n AS (SELECT label AS grp, count(embedding)::BIGINT AS n_vecs
-      FROM embeddings GROUP BY 1)
-SELECT grp AS label, n_vecs,
-    round(q::DOUBLE / n_vecs::DOUBLE / 1e12, 6) AS avg_sq_norm,
-    CASE WHEN n_vecs > 1 THEN
-        round((ss - q)::DOUBLE / (n_vecs * (n_vecs - 1))::DOUBLE / 1e12, 6)
-    END AS mean_pairwise_dot
-FROM pg JOIN n USING (grp)
-"""
-
-# q142: quantile normalization — exact integer ranks, one division per
-# row, singleton groups pinned to 0.5.
-ALL["q142_quantile_transform"] = """
-WITH base AS (
-    SELECT o_orderpriority AS grp,
-        round(o_totalprice * 100)::BIGINT AS v_c, o_orderkey AS tb
-    FROM orders WHERE o_totalprice IS NOT NULL),
-r AS (
-    SELECT grp, tb, v_c,
-        row_number() OVER (PARTITION BY grp ORDER BY v_c, tb) AS rn,
-        count(*) OVER (PARTITION BY grp) AS n
-    FROM base)
-SELECT grp AS o_orderpriority, tb AS o_orderkey,
-    round(v_c / 100.0, 6) AS o_totalprice,
-    CASE WHEN n > 1 THEN round((rn - 1) / (n - 1), 6) ELSE 0.5 END AS qnorm
-FROM r
-"""
-
-# q143: median/MAD outliers — nearest-rank ceil(n/2) (lower median, the
-# same float-div ceil shape as Spark), integer-cent comparisons.
-ALL["q143_robust_outliers"] = """
-WITH base AS (
-    SELECT o_orderpriority AS grp,
-        round(o_totalprice * 100)::BIGINT AS v_c, o_orderkey AS tb
-    FROM orders WHERE o_totalprice IS NOT NULL),
-r AS (
-    SELECT grp, v_c, tb,
-        row_number() OVER (PARTITION BY grp ORDER BY v_c, tb) AS rn,
-        count(*) OVER (PARTITION BY grp) AS n
-    FROM base),
-m AS (
-    SELECT grp, v_c, tb, n,
-        max(CASE WHEN rn = ceil(n / 2) THEN v_c END)
-            OVER (PARTITION BY grp) AS med
-    FROM r),
-d AS (SELECT grp, v_c, tb, n, med, abs(v_c - med) AS dd FROM m),
-dr AS (
-    SELECT grp, med, dd, n,
-        row_number() OVER (PARTITION BY grp ORDER BY dd, tb) AS drn
-    FROM d),
-mm AS (
-    SELECT grp, med, dd,
-        max(CASE WHEN drn = ceil(n / 2) THEN dd END)
-            OVER (PARTITION BY grp) AS mad
-    FROM dr)
-SELECT grp AS o_orderpriority, count(*)::BIGINT AS n,
-    round(min(med) / 100.0, 6) AS median,
-    round(min(mad) / 100.0, 6) AS mad,
-    sum((dd > 3 * mad)::INT)::BIGINT AS n_outliers
-FROM mm GROUP BY grp
-"""
-
-# q144: Gini by the exact rank formula — integer cents x integer ranks
-# as HUGEINT; ties in v_c leave Σ i·x invariant, so the rank order is
-# engine-stable by construction.
-ALL["q144_gini_concentration"] = """
-WITH base AS (
-    SELECT l_returnflag AS grp,
-        round(l_extendedprice * 100)::BIGINT AS v_c,
-        l_orderkey * 10 + l_linenumber AS tb
-    FROM lineitem
-    WHERE l_extendedprice IS NOT NULL AND l_extendedprice >= 0),
-r AS (
-    SELECT grp, v_c,
-        row_number() OVER (PARTITION BY grp ORDER BY v_c, tb) AS i
-    FROM base),
-g AS (
-    SELECT grp, count(*)::BIGINT AS n, sum(v_c::HUGEINT) AS sx,
-        sum(i::HUGEINT * v_c::HUGEINT) AS six
-    FROM r GROUP BY grp)
-SELECT grp AS l_returnflag, n,
-    CASE WHEN sx > 0 THEN
-        round((2 * six - (n + 1) * sx)::DOUBLE / (n * sx)::DOUBLE, 6)
-    END AS gini
-FROM g
-"""
-
-# q145: Welch t — per-arm HUGEINT moments from ONE conditional
-# aggregate, q115's fixed closed-form shapes; means in micro-units.
-ALL["q145_ab_welch_t"] = """
-WITH b AS (
-    SELECT event_type AS grp, (user_id % 2 = 0) AS a,
-        round(value * 1e6)::BIGINT AS v
-    FROM events WHERE value IS NOT NULL AND user_id IS NOT NULL),
-m AS (
-    SELECT grp,
-        sum(a::INT)::DOUBLE AS na, sum((NOT a)::INT)::DOUBLE AS nb,
-        sum(CASE WHEN a THEN v::HUGEINT ELSE 0::HUGEINT END)::DOUBLE AS sa,
-        sum(CASE WHEN NOT a THEN v::HUGEINT ELSE 0::HUGEINT END)::DOUBLE AS sb,
-        sum(CASE WHEN a THEN v::HUGEINT * v::HUGEINT
-                 ELSE 0::HUGEINT END)::DOUBLE AS qa,
-        sum(CASE WHEN NOT a THEN v::HUGEINT * v::HUGEINT
-                 ELSE 0::HUGEINT END)::DOUBLE AS qb
-    FROM b GROUP BY grp)
-SELECT grp AS event_type, na::BIGINT AS n_a, nb::BIGINT AS n_b,
-    CASE WHEN na > 0 THEN round(sa / na, 6) END AS mean_a,
-    CASE WHEN nb > 0 THEN round(sb / nb, 6) END AS mean_b,
-    CASE WHEN na >= 2 AND nb >= 2 THEN
-        round((sa / na - sb / nb)
-            / sqrt(((qa - sa * sa / na) / (na - 1.0)) / na
-                 + ((qb - sb * sb / nb) / (nb - 1.0)) / nb), 6)
-    END AS welch_t
-FROM m
-"""
-
-# q146: exact 7-day rolling distinct users — user-day expansion into the
-# window's report days, count-distinct per day, full gap-filled spine.
-ALL["q146_rolling_distinct_users"] = """
-WITH ud AS (
-    SELECT DISTINCT user_id AS u, ts::DATE AS day FROM events
-    WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-b AS (SELECT min(day) AS lo, max(day) AS hi FROM ud),
-spine AS (
-    SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY))::DATE AS day
-    FROM b),
-exp AS (
-    SELECT u, unnest(generate_series(day, day + 6, INTERVAL 1 DAY))::DATE
-        AS day
-    FROM ud),
-roll AS (SELECT day, count(DISTINCT u) AS rolling_users FROM exp GROUP BY 1),
-today AS (SELECT day, count(DISTINCT u) AS active_today FROM ud GROUP BY 1)
-SELECT spine.day AS day,
-    coalesce(active_today, 0)::BIGINT AS active_today,
-    coalesce(rolling_users, 0)::BIGINT AS rolling_users
-FROM spine LEFT JOIN today USING (day) LEFT JOIN roll USING (day)
-"""
-
-# q147: cohort LTV triangle — integer month offsets ((Δyear)*12 +
-# Δmonth), integer-cent revenue, running HUGEINT cumulative over the
-# aggregated cells, one division per output row.
-ALL["q147_cohort_ltv"] = """
-WITH base AS (
-    SELECT o_custkey AS key, date_trunc('month', o_orderdate)::DATE AS am,
-        round(o_totalprice * 100)::BIGINT AS v_c
-    FROM orders
-    WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
-      AND o_totalprice IS NOT NULL),
-firsts AS (SELECT key, min(am) AS cohort_month FROM base GROUP BY key),
-sized AS (SELECT cohort_month, count(DISTINCT key) AS cohort_size
-          FROM firsts GROUP BY 1),
-cells AS (
-    SELECT cohort_month,
-        ((year(am) - year(cohort_month)) * 12
-         + (month(am) - month(cohort_month)))::BIGINT AS month_offset,
-        count(DISTINCT key)::BIGINT AS n_active,
-        sum(v_c::HUGEINT) AS rev_c
-    FROM base JOIN firsts USING (key)
-    GROUP BY 1, 2),
-cum AS (
-    SELECT *, sum(rev_c) OVER (PARTITION BY cohort_month
-        ORDER BY month_offset ROWS UNBOUNDED PRECEDING) AS cum_c
-    FROM cells)
-SELECT cohort_month, month_offset, n_active,
-    round(rev_c::DOUBLE / 100.0, 6) AS revenue,
-    round(cum_c::DOUBLE / cohort_size::DOUBLE / 100.0, 6)
-        AS cum_ltv_per_user
-FROM cum JOIN sized USING (cohort_month)
-"""
-
-# q148: conversion lag — first-to-first strict ordering, HUGEINT lag
-# sums, nearest-rank median (the same float-div ceil shape as Spark).
-ALL["q148_conversion_lag"] = """
-WITH f AS (
-    SELECT user_id, min(epoch_us(ts)) AS t0 FROM events
-    WHERE user_id IS NOT NULL AND ts IS NOT NULL
-      AND event_type = 'signup' GROUP BY 1),
-t AS (
-    SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-    WHERE user_id IS NOT NULL AND ts IS NOT NULL
-      AND event_type = 'purchase' GROUP BY 1),
-lags AS (
-    SELECT f.user_id AS u, t1 - t0 AS lag_us
-    FROM f JOIN t USING (user_id) WHERE t1 > t0),
-r AS (
-    SELECT lag_us, row_number() OVER (ORDER BY lag_us, u) AS rn,
-        count(*) OVER () AS n
-    FROM lags),
-a AS (
-    SELECT count(*)::BIGINT AS n_converted, sum(lag_us::HUGEINT) AS s,
-        max(CASE WHEN rn = ceil(n / 2) THEN lag_us END) AS med
-    FROM r),
-nf AS (SELECT count(*)::BIGINT AS n_from FROM f)
-SELECT n_from, n_converted,
-    CASE WHEN n_converted > 0 THEN
-        round(s::DOUBLE / n_converted::DOUBLE / 1000000.0, 6)
-    END AS mean_lag_s,
-    CASE WHEN n_converted > 0 THEN round(med / 1000000.0, 6)
-    END AS median_lag_s,
-    CASE WHEN n_from > 0 THEN
-        round(n_converted::DOUBLE / n_from::DOUBLE, 6)
-    END AS conversion_rate
-FROM a CROSS JOIN nf
-"""
-
-# q149: exact triangles + transitivity over the q124 pair graph —
-# canonical a<b<c wedge join, HUGEINT wedge totals, 6T/Σd(d−1).
-ALL["q149_triangle_count"] = (
-    "WITH pairs AS (" + ALL["q124_copurchase_pairs"] + """),
-e AS (SELECT DISTINCT least(item_a, item_b) AS a,
-             greatest(item_a, item_b) AS b
-      FROM pairs WHERE item_a IS NOT NULL AND item_b IS NOT NULL
-        AND item_a <> item_b),
-deg AS (
-    SELECT v, count(*) AS d FROM (
-        SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
-    GROUP BY v),
-c AS (SELECT count(*)::BIGINT AS n_nodes,
-             sum((d * (d - 1))::HUGEINT) AS w2 FROM deg),
-ne AS (SELECT count(*)::BIGINT AS n_edges FROM e),
-tri AS (
-    SELECT count(*)::BIGINT AS n_triangles
-    FROM e e1 JOIN e e2 ON e1.b = e2.a
-    JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b)
-SELECT n_nodes, n_edges, n_triangles,
-    CASE WHEN w2 > 0 THEN
-        round((6 * n_triangles)::DOUBLE / w2::DOUBLE, 6)
-    END AS transitivity
-FROM c CROSS JOIN ne CROSS JOIN tri
-"""
-)
-
-# q150: Pareto/ABC — integer-cent cumulative shares, pure integer class
-# boundaries, (rev desc, item asc) rank order.
-ALL["q150_pareto_abc"] = """
-WITH per_item AS (
-    SELECT l_returnflag AS grp, l_partkey AS item,
-        sum(round(l_extendedprice * 100)::BIGINT) AS rev_c
-    FROM lineitem
-    WHERE l_partkey IS NOT NULL AND l_extendedprice IS NOT NULL
-    GROUP BY 1, 2),
-cum AS (
-    SELECT grp, rev_c,
-        sum(rev_c::HUGEINT) OVER (PARTITION BY grp
-            ORDER BY rev_c DESC, item ASC
-            ROWS UNBOUNDED PRECEDING) AS cum_c,
-        sum(rev_c::HUGEINT) OVER (PARTITION BY grp) AS tot_c
-    FROM per_item),
-cls AS (
-    SELECT grp, rev_c, tot_c,
-        CASE WHEN cum_c * 100 <= tot_c * 80 THEN 'A'
-             WHEN cum_c * 100 <= tot_c * 95 THEN 'B'
-             ELSE 'C' END AS abc_class
-    FROM cum)
-SELECT grp AS l_returnflag, abc_class, count(*)::BIGINT AS n_items,
-    round(sum(rev_c::HUGEINT)::DOUBLE / 100.0, 6) AS revenue,
-    round(sum(rev_c::HUGEINT)::DOUBLE / min(tot_c)::DOUBLE, 6) AS share
-FROM cls GROUP BY 1, 2
-"""
-
-# q151: exact-total stratified split — integer basis-point quotas,
-# largest-remainder leftover (remainder desc, stratum asc), md5-rank
-# selection within stratum. Invariant: sum(n_test) = N*2000 // 10000.
-ALL["q151_exact_stratified_split"] = """
-WITH base AS (
-    SELECT source AS st, doc_id AS rid FROM documents
-    WHERE doc_id IS NOT NULL),
-counts AS (SELECT st, count(*)::BIGINT AS n_s FROM base GROUP BY st),
-tot AS (
-    SELECT sum(n_s)::BIGINT AS n_total_all,
-        sum((n_s * 2000) // 10000)::BIGINT AS base_sum
-    FROM counts),
-quotas AS (
-    SELECT st, n_s,
-        ((n_s * 2000) // 10000)::BIGINT
-        + CASE WHEN row_number() OVER (
-                ORDER BY (n_s * 2000) % 10000 DESC, st ASC NULLS LAST)
-            <= ((n_total_all * 2000) // 10000) - base_sum
-          THEN 1 ELSE 0 END AS quota
-    FROM counts CROSS JOIN tot),
-ranked AS (
-    SELECT st, rid,
-        row_number() OVER (PARTITION BY st
-            ORDER BY md5(rid::VARCHAR) ASC, rid ASC) AS rn
-    FROM base)
-SELECT r.st AS source, count(*)::BIGINT AS n_total,
-    sum((r.rn <= q.quota)::INT)::BIGINT AS n_test,
-    (count(*) - sum((r.rn <= q.quota)::INT))::BIGINT AS n_train
-FROM ranked r JOIN quotas q ON r.st IS NOT DISTINCT FROM q.st
-GROUP BY r.st
-"""
-
-# q152: MinHash calibration — the q22 candidate set joined against the
-# NO-CUT exact shingle-Jaccard pair set at the same threshold;
-# integer-scaled |est − exact| for the MAE.
-ALL["q152_sketch_calibration"] = (
-    "WITH " + _SHINGLES + """,
-sh AS (
-    SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS s
-    FROM shingles),
-sz AS (SELECT doc_id, count(*) AS z FROM sh GROUP BY 1),
-inter AS (
-    SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS i
-    FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-    GROUP BY 1, 2),
-texact AS (
-    SELECT a, b, round(i / (za.z + zb.z - i), 6) AS jaccard
-    FROM inter JOIN sz za ON za.doc_id = a JOIN sz zb ON zb.doc_id = b
-    WHERE round(i / (za.z + zb.z - i), 6) >= 0.25),
-cands AS (SELECT a, b, jaccard_est FROM ("""
-    + ALL["q22_minhash_lsh"]
-    + """) q22x),
-hits AS (
-    SELECT c.a, c.b, jaccard_est, jaccard
-    FROM cands c JOIN texact USING (a, b)),
-m AS (
-    SELECT count(*)::BIGINT AS n_hits,
-        sum(abs(round((jaccard_est - jaccard) * 1e6))::BIGINT::HUGEINT)
-            AS sd
-    FROM hits),
-nt AS (SELECT count(*)::BIGINT AS n_true FROM texact),
-nc AS (SELECT count(*)::BIGINT AS n_candidates FROM cands)
-SELECT n_candidates, n_true, n_hits,
-    CASE WHEN n_candidates > 0 THEN
-        round(n_hits::DOUBLE / n_candidates::DOUBLE, 6) END AS precision,
-    CASE WHEN n_true > 0 THEN
-        round(n_hits::DOUBLE / n_true::DOUBLE, 6) END AS recall,
-    CASE WHEN n_hits > 0 THEN
-        round(sd::DOUBLE / 1e6 / n_hits::DOUBLE, 6) END AS mae
-FROM nc CROSS JOIN nt CROSS JOIN m
-"""
-)
-
-# q153: last-touch attribution — last_value IGNORE NULLS over the same
-# frame; '(direct)' for conversions with no prior touch.
-ALL["q153_last_touch_attribution"] = """
-WITH m AS (
-    SELECT event_type, value,
-        last_value(CASE WHEN event_type IS NULL
-                          OR event_type <> 'purchase'
-                        THEN coalesce(event_type, 'NULL') END
-                   IGNORE NULLS) OVER (
-            PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS ch
-    FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL)
-SELECT coalesce(ch, '(direct)') AS channel,
-    count(*)::BIGINT AS n_conversions,
-    round(sum(round(value * 100)::BIGINT) / 100.0, 6) AS revenue
-FROM m WHERE event_type = 'purchase'
-GROUP BY 1
-"""
-
-# q154: document-level PMI pairs — exact df counts, HUGEINT products
-# (mirror of Spark DECIMAL(38,0)), one division, one ln.
-ALL["q154_pmi_pairs"] = """
-WITH toks AS (
-    SELECT DISTINCT doc_id AS doc,
-        unnest(list_distinct(
-            regexp_split_to_array(trim(lower(text)), '\\s+'))) AS tok
-    FROM documents),
-nd AS (SELECT count(DISTINCT doc)::BIGINT AS n_docs FROM toks),
-dfreq AS (SELECT tok, count(*)::BIGINT AS c FROM toks GROUP BY tok),
-pairs AS (
-    SELECT a.tok AS tok_a, b.tok AS tok_b, count(*)::BIGINT AS n_ab
-    FROM toks a JOIN toks b ON a.doc = b.doc AND a.tok < b.tok
-    GROUP BY 1, 2 HAVING count(*) >= 50)
-SELECT tok_a, tok_b, n_ab, da.c AS c_a, db.c AS c_b,
-    round(ln((n_ab::HUGEINT * n_docs::HUGEINT)::DOUBLE
-           / (da.c::HUGEINT * db.c::HUGEINT)::DOUBLE), 6) AS pmi
-FROM pairs
-JOIN dfreq da ON da.tok = tok_a
-JOIN dfreq db ON db.tok = tok_b
-CROSS JOIN nd
-"""
-
-# q155: RFM segmentation — exact ntiles over the per-key aggregate with
-# (metric, key) tiebreaks (the q43 ntile-parity contract).
-ALL["q155_rfm_segments"] = """
-WITH base AS (
-    SELECT o_custkey AS key, o_orderdate::DATE AS d,
-        round(o_totalprice * 100)::BIGINT AS v_c
-    FROM orders
-    WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
-      AND o_totalprice IS NOT NULL),
-prof AS (
-    SELECT key, max(d) AS last_d, count(*)::BIGINT AS freq,
-        sum(v_c::HUGEINT) AS mon_c
-    FROM base GROUP BY key),
-anch AS (SELECT max(d) AS anchor_d FROM base),
-scored AS (
-    SELECT key, mon_c,
-        5 - ntile(4) OVER (ORDER BY date_diff('day', last_d, anchor_d) ASC,
-                           key ASC) AS r_score,
-        ntile(4) OVER (ORDER BY freq ASC, key ASC) AS f_score,
-        ntile(4) OVER (ORDER BY mon_c ASC, key ASC) AS m_score
-    FROM prof CROSS JOIN anch)
-SELECT r_score::BIGINT AS r_score, f_score::BIGINT AS f_score,
-    m_score::BIGINT AS m_score,
-    count(*)::BIGINT AS n_customers,
-    round(sum(mon_c)::DOUBLE / count(*)::DOUBLE / 100.0, 6) AS avg_monetary
-FROM scored GROUP BY 1, 2, 3
-"""
-
-# q156: linear multi-touch attribution — distinct prior channels per
-# conversion via a strict (ts, event_id) inequality join, equal split
-# with largest-remainder cents to the alphabetically-first channels.
-ALL["q156_linear_attribution"] = """
-WITH ev AS (
-    SELECT user_id, ts, event_id, event_type, value FROM events
-    WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-convs AS (
-    SELECT user_id, ts, event_id AS cid,
-        round(value * 100)::BIGINT AS v_c
-    FROM ev WHERE event_type = 'purchase' AND value IS NOT NULL),
-touch AS (
-    SELECT user_id, ts, event_id,
-        coalesce(event_type, 'NULL') AS ch
-    FROM ev WHERE event_type IS NULL OR event_type <> 'purchase'),
-pc AS (
-    SELECT DISTINCT c.cid, c.v_c, t.ch
-    FROM convs c JOIN touch t ON t.user_id = c.user_id
-        AND (t.ts < c.ts OR (t.ts = c.ts AND t.event_id < c.cid))),
-withk AS (
-    SELECT cid, v_c, ch,
-        row_number() OVER (PARTITION BY cid ORDER BY ch) - 1 AS pos,
-        count(*) OVER (PARTITION BY cid) AS k
-    FROM pc),
-direct AS (
-    SELECT '(direct)' AS ch, c.v_c FROM convs c
-    WHERE NOT EXISTS (SELECT 1 FROM pc WHERE pc.cid = c.cid)),
-credits AS (
-    SELECT ch, (v_c // k + (pos < v_c % k)::INT)::BIGINT AS credit_c
-    FROM withk
-    UNION ALL SELECT ch, v_c AS credit_c FROM direct)
-SELECT ch AS channel, count(*)::BIGINT AS n_touchpoints,
-    round(sum(credit_c::HUGEINT)::DOUBLE / 100.0, 6) AS revenue
-FROM credits GROUP BY ch
-"""
-
-# q157: level-3 A-priori triples — same basket universe and pair list
-# as q124, two frequent-pair leg checks, exact counts.
-ALL["q157_frequent_triples"] = """
-WITH bi AS (
-    SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
-    FROM lineitem WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
-ok AS (SELECT basket FROM bi GROUP BY basket HAVING count(*) <= 1000),
-b0 AS (SELECT bi.* FROM bi JOIN ok USING (basket)),
-sup AS (SELECT item FROM b0 GROUP BY item HAVING count(*) >= 2),
-f AS (SELECT b0.* FROM b0 JOIN sup USING (item)),
-pairs AS (
-    SELECT a.item AS pa, c.item AS pb
-    FROM f a JOIN f c ON a.basket = c.basket AND a.item < c.item
-    GROUP BY 1, 2 HAVING count(*) >= 2),
-fitems AS (
-    SELECT DISTINCT pa AS item FROM pairs
-    UNION SELECT pb AS item FROM pairs),
-b AS (SELECT b0.* FROM b0 JOIN fitems USING (item)),
-t AS (
-    SELECT x.item AS ia, y.item AS ib, z.item AS ic,
-        count(*)::BIGINT AS n
-    FROM b x
-    JOIN b y ON x.basket = y.basket AND x.item < y.item
-    JOIN pairs p1 ON p1.pa = x.item AND p1.pb = y.item
-    JOIN b z ON z.basket = x.basket AND y.item < z.item
-    JOIN pairs p2 ON p2.pa = x.item AND p2.pb = z.item
-    GROUP BY 1, 2, 3 HAVING count(*) >= 2)
-SELECT ia AS item_a, ib AS item_b, ic AS item_c, n AS n_baskets FROM t
-"""
-
-# q158: join-key skew profile — exact per-key counts, one division for
-# the factor, string_agg of the top-k keys in rank order.
-ALL["q158_skew_profile"] = """
-WITH per AS (
-    SELECT coalesce(user_id::VARCHAR, 'NULL') AS k, count(*) AS c
-    FROM events GROUP BY 1),
-r AS (
-    SELECT k, c, row_number() OVER (ORDER BY c DESC, k ASC) AS rn
-    FROM per)
-SELECT sum(c)::BIGINT AS n_rows, count(*)::BIGINT AS n_keys,
-    max(c)::BIGINT AS max_key_rows,
-    round(max(c)::DOUBLE / (sum(c)::DOUBLE / count(*)::DOUBLE), 6)
-        AS skew_factor,
-    string_agg(CASE WHEN rn <= 5 THEN k END, ',' ORDER BY rn) AS top_keys
-FROM r
-"""
-
-# q159: per-source duplicate burden — content-hash aggregates, one
-# division per group.
-ALL["q159_dedup_burden"] = """
-WITH per AS (
-    SELECT source AS grp, md5(text) AS h, count(*) AS n_copies,
-        sum(length(text)::HUGEINT) AS chars_all,
-        min(length(text)) AS chars_keep
-    FROM documents GROUP BY 1, 2)
-SELECT grp AS source, sum(n_copies)::BIGINT AS n_docs,
-    count(*)::BIGINT AS n_unique,
-    round((sum(n_copies) - count(*))::DOUBLE / sum(n_copies)::DOUBLE, 6)
-        AS dup_rate,
-    sum(chars_all - chars_keep::HUGEINT)::BIGINT AS chars_reclaimable
-FROM per GROUP BY grp
-"""
-
-# q160: hierarchical contribution shares — exact cents, two window
-# levels over the aggregated (region, nation) table.
-ALL["q160_hierarchical_shares"] = """
-WITH rev AS (
-    SELECT r_name, n_name,
-        sum(round(o_totalprice * 100)::BIGINT::HUGEINT) AS rev_c,
-        count(*)::BIGINT AS n_orders
-    FROM orders
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    WHERE o_totalprice IS NOT NULL
-    GROUP BY 1, 2)
-SELECT r_name, n_name, n_orders,
-    round(rev_c::DOUBLE / 100.0, 6) AS revenue,
-    round(rev_c::DOUBLE
-          / sum(rev_c) OVER (PARTITION BY r_name)::DOUBLE, 6)
-        AS nation_share_of_region,
-    round(sum(rev_c) OVER (PARTITION BY r_name)::DOUBLE
-          / sum(rev_c) OVER ()::DOUBLE, 6) AS region_share_of_total
-FROM rev
-"""
-
-# q161: hard negatives — q25's cosine/rank machinery with the label
-# filter applied before ranking; 4-dp cosine, (cos desc, id asc) ties.
-ALL["q161_hard_negatives"] = f"""
-SELECT query_id, neg_id, rank, cos FROM (
-    SELECT q.vec_id AS query_id, v.vec_id AS neg_id,
-        {_COS.replace("a.e", "v.e").replace("b.e", "q.e")} AS cos,
-        row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY {_COS.replace("a.e", "v.e").replace("b.e", "q.e")} DESC,
-                     v.vec_id ASC)::BIGINT AS rank
-    FROM (SELECT vec_id, embedding::DOUBLE[] AS e, label
-          FROM embeddings WHERE vec_id < 8) q
-    JOIN (SELECT vec_id, embedding::DOUBLE[] AS e, label
-          FROM embeddings) v
-        ON v.vec_id <> q.vec_id AND v.label <> q.label)
-WHERE rank <= 3
-"""
-
-# q162: k-anonymity / l-diversity — exact equivalence-class counts,
-# NULL quasi values are real classes, NULL sensitive counts as one
-# distinct value, one division for the exposed share.
-ALL["q162_privacy_audit"] = """
-WITH classes AS (
-    SELECT c_nationkey, c_mktsegment, count(*) AS cls_n,
-        count(DISTINCT coalesce(c_acctbal::VARCHAR, 'NULL')) AS cls_l
-    FROM customer GROUP BY 1, 2)
-SELECT sum(cls_n)::BIGINT AS n_rows, count(*)::BIGINT AS n_classes,
-    min(cls_n)::BIGINT AS k_anonymity, min(cls_l)::BIGINT AS l_diversity,
-    max(cls_n)::BIGINT AS largest_class,
-    round(sum(CASE WHEN cls_n < 5 THEN cls_n ELSE 0 END)::DOUBLE
-          / sum(cls_n)::DOUBLE, 6) AS exposed_share
-FROM classes
-"""
-
-# q163: converting session paths — q137's session/path CTEs plus a
-# whole-session conversion flag.
-ALL["q163_converting_paths"] = """
-WITH o AS (
-    SELECT user_id, ts, event_id,
-        coalesce(event_type, 'NULL') AS et,
-        lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-    FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-f AS (
-    SELECT *, CASE WHEN prev IS NULL
-                     OR date_diff('second', prev, ts) > 1800
-                   THEN 1 ELSE 0 END AS ns
-    FROM o),
-s AS (
-    SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS UNBOUNDED PRECEDING) AS sid
-    FROM f),
-r AS (
-    SELECT user_id, sid, et,
-        row_number() OVER (PARTITION BY user_id, sid
-                           ORDER BY ts, event_id) AS rn
-    FROM s),
-p AS (
-    SELECT user_id, sid,
-        string_agg(CASE WHEN rn <= 5 THEN et END, '>' ORDER BY rn) AS path,
-        max((et = 'purchase')::INT) AS conv
-    FROM r GROUP BY 1, 2)
-SELECT path, count(*)::BIGINT AS n_sessions,
-    sum(conv)::BIGINT AS n_converted,
-    round(sum(conv)::DOUBLE / count(*)::DOUBLE, 6) AS conversion_rate
-FROM p GROUP BY path
-"""
-
-# q164: post-dedup token budget — content-hash aggregate, each distinct
-# text's tokens counted once for the effective number.
-ALL["q164_effective_tokens"] = """
-WITH per AS (
-    SELECT source AS grp, md5(text) AS h, count(*) AS n_copies,
-        min(len(regexp_split_to_array(trim(lower(text)), '\\s+')))
-            AS toks_one
-    FROM documents GROUP BY 1, 2)
-SELECT grp AS source,
-    sum(n_copies::HUGEINT * toks_one::HUGEINT)::BIGINT AS raw_tokens,
-    sum(toks_one::HUGEINT)::BIGINT AS effective_tokens,
-    round(sum(n_copies::HUGEINT * toks_one::HUGEINT)::DOUBLE
-          / sum(toks_one::HUGEINT)::DOUBLE, 6) AS duplication_factor
-FROM per GROUP BY grp
-"""
-
-
-# q165: integer PageRank — unrolled CTE chain (SQL forbids aggregates in
-# recursive members, so fixed iterations unroll mechanically); floor
-# division (`//`, positive operands) mirrors Spark's `div` exactly.
-def _pagerank_sql(iters: int = 3, scale: int = 10**12, dp: int = 85) -> str:
-    pre = f"""
-WITH pairs AS MATERIALIZED ({ALL["q124_copurchase_pairs"]}),
-und AS MATERIALIZED (
-    SELECT DISTINCT least(item_a, item_b) AS x,
-        greatest(item_a, item_b) AS y
-    FROM pairs WHERE item_a IS NOT NULL AND item_b IS NOT NULL
-      AND item_a <> item_b),
-e AS MATERIALIZED (SELECT x AS src, y AS dst FROM und
-      UNION ALL SELECT y AS src, x AS dst FROM und),
-deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY src),
-nn AS (SELECT count(*) AS n FROM deg),
-r0 AS (SELECT src, deg, ({scale} // n) AS rank_s
-       FROM deg CROSS JOIN nn)"""
-    body = ""
-    for i in range(1, iters + 1):
-        p = i - 1
-        body += f""",
-c{i} AS MATERIALIZED (
-    SELECT e.dst AS src, (r{p}.rank_s // r{p}.deg) AS c
-    FROM r{p} JOIN e ON e.src = r{p}.src),
-i{i} AS MATERIALIZED (SELECT src, sum(c::HUGEINT)::BIGINT AS inflow
-         FROM c{i} GROUP BY src),
-r{i} AS MATERIALIZED (
-    SELECT d.src, d.deg,
-        ((({scale} // nn.n) * {100 - dp}) // 100)
-        + ({dp} * coalesce(i{i}.inflow, 0)) // 100 AS rank_s
-    FROM deg d CROSS JOIN nn LEFT JOIN i{i} ON i{i}.src = d.src)"""
-    return (
-        pre
-        + body
-        + f"""
-SELECT src AS node, rank_s::BIGINT AS rank_scaled,
-    round(rank_s::DOUBLE / {float(scale)}, 9) AS rank
-FROM r{iters}
-"""
-    )
-
-
-ALL["q165_integer_pagerank"] = _pagerank_sql()
-
-# q166: header-vs-lines reconciliation — integer cents, full-outer
-# join, 1-row rollup.
-ALL["q166_order_reconciliation"] = """
-WITH h AS (
-    SELECT o_orderkey AS k, round(o_totalprice * 100)::BIGINT AS hdr_c
-    FROM orders WHERE o_orderkey IS NOT NULL),
-l AS (
-    SELECT l_orderkey AS k,
-        sum(round(l_extendedprice * 100)::BIGINT::HUGEINT)::BIGINT AS lin_c
-    FROM lineitem WHERE l_orderkey IS NOT NULL GROUP BY 1),
-j AS (
-    SELECT coalesce(h.k, l.k) AS k, hdr_c, lin_c,
-        abs(hdr_c - lin_c) AS drift_c
-    FROM h FULL OUTER JOIN l ON h.k = l.k)
-SELECT count(*)::BIGINT AS n_orders,
-    sum((hdr_c IS NULL)::INT)::BIGINT AS n_headerless,
-    sum((lin_c IS NULL)::INT)::BIGINT AS n_lineless,
-    sum((drift_c <= 0)::INT)::BIGINT AS n_matched,
-    sum((drift_c > 0)::INT)::BIGINT AS n_drifted,
-    max(drift_c)::BIGINT AS max_drift_c,
-    sum(drift_c::HUGEINT)::BIGINT AS total_drift_c
-FROM j
-"""
-
-# q167: duplicate-payment candidates — equi-join on (customer, cents),
-# 7-day residual filter, id_a < id_b canonical pairs.
-ALL["q167_duplicate_payments"] = """
-WITH base AS (
-    SELECT o_custkey AS key, round(o_totalprice * 100)::BIGINT AS amt_c,
-        o_orderdate::DATE AS d, o_orderkey AS oid
-    FROM orders
-    WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
-      AND o_orderdate IS NOT NULL AND o_orderkey IS NOT NULL)
-SELECT a.key, round(a.amt_c / 100.0, 6) AS amount,
-    a.oid AS id_a, b.oid AS id_b,
-    abs(date_diff('day', a.d, b.d))::BIGINT AS days_apart
-FROM base a JOIN base b
-    ON a.key = b.key AND a.amt_c = b.amt_c AND a.oid < b.oid
-WHERE abs(date_diff('day', a.d, b.d)) <= 7
-"""
-
-# q168: shipping-SLA percentiles — q111's nearest-rank machinery on the
-# derived ship-lag metric.
-ALL["q168_shipping_sla"] = """
-WITH lagt AS (
-    SELECT o_orderpriority AS prio,
-        date_diff('day', o_orderdate::DATE, l_shipdate::DATE)::BIGINT
-            AS lag_days,
-        l_orderkey * 10 + l_linenumber AS lid
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE l_shipdate IS NOT NULL AND o_orderdate IS NOT NULL),
-r AS (
-    SELECT prio, lag_days, lid,
-        row_number() OVER (PARTITION BY prio ORDER BY lag_days, lid) AS rnk,
-        count(*) OVER (PARTITION BY prio) AS n
-    FROM lagt),
-t AS (SELECT q::DOUBLE AS q FROM (VALUES (0.5), (0.9), (0.99)) AS t(q))
-SELECT r.prio, t.q AS quantile, r.rnk::BIGINT AS rank,
-    r.lag_days AS value
-FROM r JOIN t ON r.rnk = greatest(1, ceil(t.q * r.n)::BIGINT)
-"""
-
-
-# q169: shard rebalance diff — modulo vs rendezvous (HRW) placement;
-# the rendezvous argmax via arg_max over an exploded shard spine (same
-# md5 values as Spark's array_max projection).
-def _shard_rebalance_sql(n_from: int = 8, n_to: int = 10) -> str:
-    def h(expr: str) -> str:
-        return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-    return f"""
-WITH ids AS (SELECT doc_id::VARCHAR AS sid FROM documents),
-rdv AS (
-    SELECT sid,
-        arg_max(CASE WHEN s < {n_from} THEN s END,
-                CASE WHEN s < {n_from}
-                     THEN {h("sid || '#' || s::VARCHAR")} END) AS r_from,
-        arg_max(s, {h("sid || '#' || s::VARCHAR")}) AS r_to
-    FROM ids CROSS JOIN (SELECT unnest(range({n_to})) AS s)
-    GROUP BY sid),
-marked AS (
-    SELECT
-        (({h("sid")}) % {n_from} <> ({h("sid")}) % {n_to})::INT AS mv_mod,
-        (r_from <> r_to)::INT AS mv_rdv
-    FROM rdv),
-agg AS (
-    SELECT count(*)::BIGINT AS n_rows,
-        sum(mv_mod)::BIGINT AS mv_mod, sum(mv_rdv)::BIGINT AS mv_rdv
-    FROM marked)
-SELECT 'modulo' AS policy, n_rows, mv_mod AS n_moved,
-    round(mv_mod::DOUBLE / n_rows::DOUBLE, 6) AS pct_moved FROM agg
-UNION ALL
-SELECT 'rendezvous' AS policy, n_rows, mv_rdv AS n_moved,
-    round(mv_rdv::DOUBLE / n_rows::DOUBLE, 6) AS pct_moved FROM agg
-"""
-
-
-ALL["q169_shard_rebalance"] = _shard_rebalance_sql()
-
-# q170: bucketed co-located join — the ORACLE checks the join+agg
-# semantics; the no-Exchange physical property is pinned by
-# tests/test_bucketing.py (DuckDB has no notion of Spark bucketing).
-ALL["q170_bucketed_colocated_join"] = """
-SELECT o_orderstatus, count(*)::BIGINT AS n_lines,
-    round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY o_orderstatus
-"""
-
-# q171: watermark lateness — the oracle states the semantics as the
-# naive single-window prefix max (fine at sf0.01); the Spark side runs
-# the distributed range-shuffle + Arrow prefix-max instead.
-ALL["q171_watermark_lateness"] = """
-WITH base AS (
-    SELECT event_id AS aid, event_type AS etype, epoch_us(ts) AS ts_us
-    FROM events
-    WHERE event_id IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL),
-rm AS (
-    SELECT etype, ts_us,
-        max(ts_us) OVER (ORDER BY aid
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS wm_us
-    FROM base),
-lt AS (
-    SELECT etype,
-        greatest(0, coalesce(wm_us - ts_us, 0))::BIGINT AS late_us
-    FROM rm),
-b AS (
-    SELECT etype,
-        CASE WHEN late_us = 0 THEN 'on_time'
-             WHEN late_us <= 60000000 THEN 'le_60s'
-             WHEN late_us <= 3600000000 THEN 'le_1h'
-             WHEN late_us <= 86400000000 THEN 'le_24h'
-             ELSE 'gt_24h' END AS bucket,
-        late_us
-    FROM lt)
-SELECT etype AS event_type, bucket, count(*)::BIGINT AS n_events,
-    floor(max(late_us) / 1000000)::BIGINT AS max_late_sec
-FROM b GROUP BY 1, 2
-"""
-
-# q172: FCFS allocation waterfall — exclusive running sum per part in
-# (shipdate, line id) order, integer fill clamp, per-part stats.
-ALL["q172_greedy_allocation"] = """
-WITH demand AS (
-    SELECT l_partkey AS key, l_quantity::BIGINT AS qty,
-        epoch_us(l_shipdate) AS prio,
-        l_orderkey * 10 + l_linenumber AS line_id
-    FROM lineitem
-    WHERE l_partkey IS NOT NULL AND l_quantity IS NOT NULL),
-budgets AS (
-    SELECT key, ((sum(qty) * 3) // 5)::BIGINT AS budget
-    FROM demand GROUP BY key),
-lines AS (
-    SELECT d.key, d.qty, b.budget,
-        coalesce(sum(d.qty) OVER (PARTITION BY d.key
-            ORDER BY d.prio, d.line_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before_q
-    FROM demand d JOIN budgets b USING (key)),
-f AS (
-    SELECT key, budget, qty,
-        greatest(0, least(qty::HUGEINT, budget - before_q))::BIGINT AS fill
-    FROM lines)
-SELECT key, budget, count(*)::BIGINT AS n_lines,
-    sum(qty)::BIGINT AS demand_qty, sum(fill)::BIGINT AS filled_qty,
-    sum((fill = qty)::INT)::BIGINT AS n_filled_full,
-    sum((fill > 0 AND fill < qty)::INT)::BIGINT AS n_partial,
-    sum((fill = 0)::INT)::BIGINT AS n_starved,
-    round(sum(fill)::DOUBLE / sum(qty)::DOUBLE, 6) AS fill_rate
-FROM f GROUP BY key, budget
-"""
-
-# q173: Benford first-digit audit — digits from exact integer cents;
-# expectation/chi2 in the same fixed double shape as the Spark side.
-ALL["q173_benford_audit"] = """
-WITH base AS (
-    SELECT substr((round(o_totalprice * 100)::BIGINT)::VARCHAR, 1, 1)::INT
-        AS digit
-    FROM orders
-    WHERE o_totalprice IS NOT NULL
-      AND round(o_totalprice * 100)::BIGINT > 0),
-obs AS (SELECT digit, count(*)::BIGINT AS n_obs FROM base GROUP BY digit),
-tot AS (SELECT count(*)::DOUBLE AS t FROM base),
-e AS (
-    SELECT digit, n_obs,
-        t * log10(1 + 1.0 / digit::DOUBLE) AS exp_n
-    FROM obs, tot)
-SELECT digit, n_obs, round(exp_n, 6) AS expected_n,
-    round((n_obs::DOUBLE - exp_n) * (n_obs::DOUBLE - exp_n) / exp_n, 6)
-        AS chi2_term
-FROM e
-"""
-
-# q174: DOW seasonality — arithmetic epoch-day DOW ((days+4)%7,
-# Sun=0), HUGEINT micro-unit moments mirroring Spark DECIMAL(38,0).
-ALL["q174_seasonality_index"] = """
-WITH base AS (
-    SELECT event_type AS etype,
-        ((date_diff('day', DATE '1970-01-01', ts::DATE) + 4) % 7)::INT
-            AS dow,
-        round(value * 1e6)::BIGINT AS v_u
-    FROM events
-    WHERE event_type IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
-pd AS (
-    SELECT etype, dow, count(*)::BIGINT AS n, sum(v_u::HUGEINT) AS s
-    FROM base GROUP BY 1, 2),
-pt AS (
-    SELECT etype, count(*)::BIGINT AS tn, sum(v_u::HUGEINT) AS ts_
-    FROM base GROUP BY 1)
-SELECT pd.etype AS event_type, pd.dow, pd.n,
-    round((pd.s::DOUBLE / pd.n::DOUBLE) / (pt.ts_::DOUBLE / pt.tn::DOUBLE), 6)
-        AS seasonal_index
-FROM pd JOIN pt ON pd.etype = pt.etype
-"""
 
 # q175: transcript projection + per-conversation integrity audit —
 # same deterministic role cycle and (ts, event_id) turn order as
@@ -3577,90 +645,6 @@ SELECT conv_id, count(*)::BIGINT AS n_turns,
 FROM a GROUP BY conv_id
 """
 
-# q176: FIFO lot matching — cumulative-interval overlap; HUGEINT
-# window sums mirror Spark's exact longs.
-ALL["q176_fifo_lot_matching"] = """
-WITH demand AS (
-    SELECT l_partkey AS key, l_quantity::BIGINT AS qty,
-        epoch_us(l_shipdate) AS prio,
-        l_orderkey * 10 + l_linenumber AS line_id
-    FROM lineitem
-    WHERE l_partkey IS NOT NULL AND l_quantity IS NOT NULL
-      AND l_quantity > 0),
-dint AS (
-    SELECT key, line_id, qty,
-        coalesce(sum(qty) OVER (PARTITION BY key ORDER BY prio, line_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS dlo
-    FROM demand),
-tot AS (SELECT key, sum(qty)::BIGINT AS t FROM demand GROUP BY key),
-lots AS (
-    SELECT key, s::INT AS lot_id, ((t + 3) // 4)::BIGINT AS lot_qty
-    FROM tot CROSS JOIN (SELECT unnest(range(4)) AS s)),
-m AS (
-    SELECT d.key, l.lot_id,
-        least(d.dlo + d.qty, l.lot_qty::HUGEINT * (l.lot_id + 1))
-          - greatest(d.dlo, l.lot_qty::HUGEINT * l.lot_id) AS mq
-    FROM dint d JOIN lots l ON d.key = l.key),
-agg AS (
-    SELECT key, lot_id, count(*)::BIGINT AS n_lines,
-        sum(mq)::BIGINT AS consumed_qty
-    FROM m WHERE mq > 0 GROUP BY 1, 2)
-SELECT l.key, l.lot_id, l.lot_qty,
-    coalesce(a.n_lines, 0)::BIGINT AS n_lines,
-    coalesce(a.consumed_qty, 0)::BIGINT AS consumed_qty,
-    (l.lot_qty - coalesce(a.consumed_qty, 0))::BIGINT AS leftover_qty,
-    (coalesce(a.consumed_qty, 0) = l.lot_qty) AS exhausted
-FROM lots l LEFT JOIN agg a ON l.key = a.key AND l.lot_id = a.lot_id
-"""
-
-
-# q177: deterministic Poisson bootstrap — the CDF thresholds are the
-# SAME Python floats the Spark operator embeds (stats.POISSON1_CDF),
-# interpolated at full repr precision, so both engines invert the
-# identical step function.
-def _bootstrap_ci_sql(n_resamples: int = 200, seed: int = 42,
-                      alpha: float = 0.05) -> str:
-    from .operators.stats import POISSON1_CDF
-
-    cases = " ".join(
-        f"WHEN u < {c!r} THEN {k}" for k, c in enumerate(POISSON1_CDF)
-    )
-    return f"""
-WITH base AS (
-    SELECT o_orderkey::VARCHAR AS id,
-        round(o_totalprice * 100)::BIGINT AS v_c
-    FROM orders
-    WHERE o_totalprice IS NOT NULL AND o_orderkey IS NOT NULL),
-bs AS (SELECT unnest(range({n_resamples})) AS b),
-u AS (
-    SELECT b, v_c,
-        (('0x' || substr(md5(concat_ws('|', '{seed}', b::VARCHAR, id)),
-            1, 13))::BIGINT)::DOUBLE / 4503599627370496.0 AS u
-    FROM base CROSS JOIN bs),
-w AS (SELECT b, v_c, CASE {cases} ELSE {len(POISSON1_CDF)} END AS w FROM u),
-m AS (
-    SELECT b, sum(w)::BIGINT AS nw, sum(w::HUGEINT * v_c) AS sv
-    FROM w GROUP BY b),
-means AS (
-    SELECT b, sv::DOUBLE / (nw::DOUBLE * 100.0) AS mean_b
-    FROM m WHERE nw > 0),
-nb AS (SELECT count(*)::BIGINT AS nb FROM means),
-r AS (
-    SELECT mean_b, row_number() OVER (ORDER BY mean_b, b) AS rk
-    FROM means),
-pt AS (
-    SELECT count(*)::BIGINT AS n, sum(v_c::HUGEINT) AS sv FROM base)
-SELECT pt.n, nb.nb AS n_resamples,
-    round(pt.sv::DOUBLE / (pt.n::DOUBLE * 100.0), 6) AS mean,
-    round((SELECT mean_b FROM r, nb
-           WHERE rk = greatest(1, ceil({alpha / 2.0!r} * nb))), 6) AS ci_lo,
-    round((SELECT mean_b FROM r, nb
-           WHERE rk = greatest(1, ceil({1.0 - alpha / 2.0!r} * nb))), 6) AS ci_hi
-FROM pt, nb
-"""
-
-
-ALL["q177_bootstrap_ci"] = _bootstrap_ci_sql()
 
 # q178-q180 share q175's transcript projection (same deterministic
 # role cycle and (ts, event_id) turn order).
@@ -3868,460 +852,10 @@ SELECT conv_id, count(*)::BIGINT AS n_examples,
 FROM e WHERE role = 'assistant' GROUP BY conv_id
 """
 
-# q189: char-level dup-span audit — same L-gram marking + island merge.
-ALL["q189_dup_span_audit"] = """
-WITH pos AS (
-    SELECT doc_id, length(text)::BIGINT AS n_chars, text,
-        unnest(range(1, length(text) - 20 + 2)) AS p
-    FROM documents WHERE length(text) >= 20),
-g AS (SELECT doc_id, n_chars, p, md5(substr(text, p, 20)) AS h FROM pos),
-hot AS (SELECT h FROM g GROUP BY h HAVING count(*) >= 2),
-d AS (
-    SELECT g.doc_id, g.n_chars, g.p, g.p + 20 AS e
-    FROM g JOIN hot USING (h)),
-w AS (
-    SELECT *, max(e) OVER (PARTITION BY doc_id ORDER BY p
-        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-    FROM d),
-i AS (
-    SELECT *, sum(CASE WHEN pme IS NULL OR p > pme THEN 1 ELSE 0 END)
-        OVER (PARTITION BY doc_id ORDER BY p
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-    FROM w),
-s AS (
-    SELECT doc_id, max(n_chars) AS n_chars, isl,
-        (max(e) - min(p))::BIGINT AS span_chars
-    FROM i GROUP BY doc_id, isl)
-SELECT doc_id, count(*)::BIGINT AS n_dup_spans,
-    sum(span_chars)::BIGINT AS dup_chars,
-    ((sum(span_chars)::BIGINT * 1000000) // max(n_chars))::BIGINT
-        AS dup_frac_ppm
-FROM s GROUP BY doc_id
-"""
-
-# q190: inverted index — q40 tokenization, 0-based pre-filter positions,
-# order-independent posting signature (sum mod 2^61 of 60-bit digests).
-ALL["q190_inverted_index"] = """
-WITH toks AS (
-    SELECT doc_id,
-        regexp_split_to_array(trim(lower(text)), '\\s+') AS arr
-    FROM documents),
-t AS (
-    SELECT doc_id, unnest(arr) AS term,
-        generate_subscripts(arr, 1) - 1 AS ord
-    FROM toks),
-tf AS (SELECT * FROM t WHERE term <> ''),
-pd AS (
-    SELECT term, doc_id, count(*)::BIGINT AS tfreq,
-        md5(string_agg(ord::VARCHAR, ',' ORDER BY ord)) AS docfp
-    FROM tf GROUP BY term, doc_id),
-s AS (
-    SELECT term, tfreq,
-        ('0x' || substr(md5(doc_id::VARCHAR || '#' || docfp), 1, 15))::BIGINT
-            AS v
-    FROM pd)
-SELECT term, count(*)::BIGINT AS df, sum(tfreq)::BIGINT AS cf,
-    (sum(v::HUGEINT) % 2305843009213693952)::BIGINT AS postings_sig
-FROM s GROUP BY term
-"""
-
-# q191: IDF-weighted set cosine with rare-shingle blocking — integer
-# 1e6-scaled weights so dot/norm sums are exact; only sqrt/division are
-# doubles (both correctly rounded per IEEE-754 in either engine).
-ALL["q191_tfidf_cosine_pairs"] = r"""
-WITH sh2 AS (
-    SELECT doc_id, unnest(list_distinct(
-        CASE WHEN len(w) >= 2 THEN
-            list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])
-        ELSE [array_to_string(w, ' ')] END)) AS shingle
-    FROM (SELECT doc_id,
-              regexp_split_to_array(trim(lower(text)), '\s+') AS w
-          FROM documents)),
-n AS (SELECT count(*)::DOUBLE AS nd FROM documents),
-dfreq AS (SELECT shingle, count(*) AS dfc FROM sh2 GROUP BY shingle),
-vec AS (
-    SELECT s.doc_id, s.shingle,
-        round(ln(((SELECT nd FROM n) + 1.0) / (dfc + 1.0))
-            * 1000000.0)::BIGINT AS w,
-        dfc
-    FROM sh2 s JOIN dfreq USING (shingle)),
-norms AS (SELECT doc_id, sum(w * w)::BIGINT AS norm2 FROM vec GROUP BY doc_id),
-rare AS (SELECT doc_id, shingle FROM vec WHERE dfc BETWEEN 2 AND 20),
-cand AS (
-    SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-    FROM rare x JOIN rare y USING (shingle)
-    WHERE x.doc_id < y.doc_id),
-dots AS (
-    SELECT c.a, c.b, sum(va.w * vb.w)::BIGINT AS dot,
-        count(*)::BIGINT AS n_shared
-    FROM cand c
-    JOIN vec va ON va.doc_id = c.a
-    JOIN vec vb ON vb.doc_id = c.b AND vb.shingle = va.shingle
-    GROUP BY c.a, c.b)
-SELECT d.a AS doc_a, d.b AS doc_b, d.n_shared,
-    (CASE WHEN na.norm2 > 0 AND nb.norm2 > 0 THEN round(d.dot::DOUBLE
-        / (sqrt(na.norm2::DOUBLE) * sqrt(nb.norm2::DOUBLE)), 6)
-     ELSE 0.0 END) AS cosine
-FROM dots d
-JOIN norms na ON na.doc_id = d.a
-JOIN norms nb ON nb.doc_id = d.b
-WHERE (CASE WHEN na.norm2 > 0 AND nb.norm2 > 0 THEN round(d.dot::DOUBLE
-    / (sqrt(na.norm2::DOUBLE) * sqrt(nb.norm2::DOUBLE)), 6)
-     ELSE 0.0 END) >= 0.3
-"""
-
-# q192: per-tool execution latency (tool turn -> next turn, integer
-# micros) grouped nearest-rank quantiles, tid tiebreak.
-ALL["q192_tool_latency_quantiles"] = f"""
-WITH {_TRANSCRIPT_CTE_TOOL},
-nx AS (
-    SELECT conv_id, turn_idx, role, event_type, ts_us,
-        lead(ts_us) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-            AS next_ts
-    FROM tr),
-lat AS (
-    SELECT event_type AS tool, (next_ts - ts_us)::BIGINT AS lat_us,
-        conv_id || ':' || turn_idx::VARCHAR AS tid
-    FROM nx
-    WHERE role = 'tool' AND event_type IS NOT NULL
-        AND next_ts IS NOT NULL),
-r AS (
-    SELECT tool, lat_us, tid,
-        row_number() OVER (PARTITION BY tool ORDER BY lat_us, tid) AS rnk,
-        count(*) OVER (PARTITION BY tool) AS n
-    FROM lat),
-t AS (SELECT q::DOUBLE AS q FROM (VALUES (0.5), (0.95)) AS t(q))
-SELECT r.tool, t.q AS quantile, r.rnk::BIGINT AS rank,
-    r.lat_us::BIGINT AS value
-FROM r JOIN t ON r.rnk = greatest(1, ceil(t.q * r.n)::BIGINT)
-"""
-
-
-# q193: k-core — unrolled peel chain, same edge CTE as pagerank.
-def _kcore_sql(k: int = 3, rounds: int = 6) -> str:
-    # every CTE in the peel chain is referenced twice downstream —
-    # without MATERIALIZED DuckDB re-inlines the whole upstream pipeline
-    # per reference (2^rounds expansions, ~260 s at sf0.01; 0.3 s
-    # materialized)
-    pre = f"""
-WITH pairs AS MATERIALIZED ({ALL["q124_copurchase_pairs"]}),
-und AS MATERIALIZED (
-    SELECT DISTINCT least(item_a, item_b) AS x,
-        greatest(item_a, item_b) AS y
-    FROM pairs WHERE item_a IS NOT NULL AND item_b IS NOT NULL
-      AND item_a <> item_b),
-e AS MATERIALIZED (SELECT x AS src, y AS dst FROM und
-      UNION ALL SELECT y AS src, x AS dst FROM und),
-a0 AS MATERIALIZED (SELECT DISTINCT src FROM e)"""
-    body = ""
-    for i in range(1, rounds + 1):
-        p = i - 1
-        body += f""",
-d{i} AS MATERIALIZED (
-    SELECT e.src, count(*)::BIGINT AS degree
-    FROM e JOIN a{p} x ON e.src = x.src JOIN a{p} y ON e.dst = y.src
-    GROUP BY e.src),
-a{i} AS MATERIALIZED (SELECT src FROM d{i} WHERE degree >= {k})"""
-    return (
-        pre
-        + body
-        + f"""
-SELECT src AS node, degree FROM d{rounds} WHERE degree >= {k}
-"""
-    )
-
-
-ALL["q193_kcore"] = _kcore_sql()
-
-# q194: leave-one-out target encoding, exact cents + integer division.
-ALL["q194_target_encode_loo"] = """
-WITH t AS (
-    SELECT event_id, event_type, round(value * 100)::BIGINT AS v
-    FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
-g AS (
-    SELECT *, sum(v) OVER (PARTITION BY event_type) AS s,
-        count(*) OVER (PARTITION BY event_type) AS n
-    FROM t)
-SELECT event_id, event_type,
-    CASE WHEN n > 1 THEN
-        round((((s - v) * 1000000) // ((n - 1) * 100))::DOUBLE
-            / 1000000.0, 6)
-    END AS loo_enc
-FROM g
-"""
-
-
-# q195: equi-depth drift — nearest-rank median ts split, decile bounds
-# from the reference half (same ceil(q*n) float contract as q110).
-def _equidepth_drift_sql(n_buckets: int = 10) -> str:
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = ",\n".join(
-        f"""b{i} AS (
-    SELECT v AS b FROM rr
-    WHERE rnk = greatest(1, ceil({q!r} * (SELECT n FROM nref))::BIGINT))"""
-        for i, q in enumerate(qs, 1)
-    )
-    bsum = " + ".join(
-        f"(t.v > (SELECT b FROM b{i}))::INT" for i in range(1, len(qs) + 1)
-    )
-    return f"""
-WITH t AS (
-    SELECT event_id, epoch_us(ts) AS tt, round(value * 100)::BIGINT AS v
-    FROM events
-    WHERE ts IS NOT NULL AND value IS NOT NULL AND event_id IS NOT NULL),
-n_all AS (SELECT count(*) AS n FROM t),
-rt AS (
-    SELECT tt, row_number() OVER (ORDER BY tt, event_id) AS rnk FROM t),
-med AS (
-    SELECT tt AS med_t FROM rt
-    WHERE rnk = greatest(1, ceil(0.5 * (SELECT n FROM n_all))::BIGINT)),
-ref AS (SELECT * FROM t WHERE tt <= (SELECT med_t FROM med)),
-nref AS (SELECT count(*) AS n FROM ref),
-rr AS (
-    SELECT v, row_number() OVER (ORDER BY v, event_id) AS rnk FROM ref),
-{bounds},
-bk AS (
-    SELECT ({bsum}) AS bucket,
-        (t.tt <= (SELECT med_t FROM med))::INT AS is_ref
-    FROM t),
-g AS (
-    SELECT bucket, sum(is_ref)::BIGINT AS n_ref,
-        sum(1 - is_ref)::BIGINT AS n_cur
-    FROM bk GROUP BY bucket),
-tot AS (SELECT sum(n_ref) AS tr, sum(n_cur) AS tc FROM g)
-SELECT bucket, n_ref, n_cur,
-    ((n_ref * 1000000) // tr)::BIGINT AS share_ref_ppm,
-    (CASE WHEN tc > 0 THEN (n_cur * 1000000) // tc ELSE 0 END)::BIGINT
-        AS share_cur_ppm,
-    abs(((n_ref * 1000000) // tr)
-        - CASE WHEN tc > 0 THEN (n_cur * 1000000) // tc ELSE 0 END)::BIGINT
-        AS abs_diff_ppm
-FROM g, tot
-"""
-
-
-ALL["q195_equidepth_drift"] = _equidepth_drift_sql()
-
-
-# q196: percentile_cont — interpolation between the two nearest global
-# ranks; raw doubles (bit-identical: same integer bounds, same IEEE ops).
-def _interp_quantiles_sql(qs=(0.25, 0.5, 0.75, 0.95)) -> str:
-    rows = ", ".join(f"({q!r})" for q in sorted(qs))
-    return f"""
-WITH r AS (
-    SELECT n_chars::BIGINT AS v, doc_id,
-        row_number() OVER (ORDER BY n_chars, doc_id) AS rnk
-    FROM documents
-    WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),
-n AS (SELECT count(*) AS n FROM r),
-t AS (SELECT q::DOUBLE AS q FROM (VALUES {rows}) AS t(q)),
-b AS (
-    SELECT q,
-        floor(q * ((SELECT n FROM n) - 1) + 1.0)::BIGINT AS lo_rank,
-        ceil(q * ((SELECT n FROM n) - 1) + 1.0)::BIGINT AS hi_rank,
-        (q * ((SELECT n FROM n) - 1) + 1.0)
-            - floor(q * ((SELECT n FROM n) - 1) + 1.0) AS frac
-    FROM t)
-SELECT b.q AS quantile, b.lo_rank, b.hi_rank,
-    (lo.v::DOUBLE + (hi.v::DOUBLE - lo.v::DOUBLE) * b.frac) AS value
-FROM b JOIN r lo ON lo.rnk = b.lo_rank JOIN r hi ON hi.rnk = b.hi_rank
-"""
-
-
-ALL["q196_interpolated_quantiles"] = _interp_quantiles_sql()
-
-# q197: directional rules over the q124 pair mining, exact-ppm confidence.
-ALL["q197_association_rules"] = (
-    "WITH pairs AS (" + ALL["q124_copurchase_pairs"] + """),
-r AS (
-    SELECT item_a AS antecedent, item_b AS consequent,
-        n_baskets AS n_both, support_a AS support_ante,
-        support_b AS support_cons, lift
-    FROM pairs
-    UNION ALL
-    SELECT item_b, item_a, n_baskets, support_b, support_a, lift
-    FROM pairs)
-SELECT antecedent, consequent, n_both, support_ante, support_cons, lift,
-    ((n_both * 1000000) // support_ante)::BIGINT AS confidence_ppm
-FROM r WHERE ((n_both * 1000000) // support_ante) >= 100000
-"""
-)
-
-
-# q198: exact integer Lloyd k-means — unrolled assign/update chain.
-def _kmeans_sql(k: int = 8, rounds: int = 2, scale: int = 10**6) -> str:
-    pre = f"""
-WITH pts AS MATERIALIZED (
-    SELECT vec_id AS id,
-        generate_subscripts(embedding, 1) - 1 AS dim,
-        greatest(-134217728, least(134217728,
-            round(unnest(embedding)::DOUBLE * {float(scale)})::BIGINT))
-            AS pv
-    FROM embeddings
-    WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
-seeds AS (
-    SELECT id, (row_number() OVER (ORDER BY id) - 1)::INT AS cid
-    FROM (SELECT DISTINCT vec_id AS id FROM embeddings
-          WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-          ORDER BY id LIMIT {k})),
-c0 AS (
-    SELECT s.cid, p.dim, p.pv AS cv
-    FROM pts p JOIN seeds s ON p.id = s.id)"""
-    body = ""
-    for i in range(1, rounds + 1):
-        p = i - 1
-        body += f""",
-d{i} AS MATERIALIZED (
-    SELECT p.id, c.cid,
-        sum((p.pv - c.cv) * (p.pv - c.cv))::BIGINT AS dist2
-    FROM pts p JOIN c{p} c ON p.dim = c.dim
-    GROUP BY p.id, c.cid),
-a{i} AS MATERIALIZED (
-    SELECT id, cid, dist2 FROM (
-        SELECT id, cid, dist2,
-            row_number() OVER (PARTITION BY id ORDER BY dist2, cid) AS rn
-        FROM d{i})
-    WHERE rn = 1),
-c{i} AS MATERIALIZED (
-    SELECT a.cid, p.dim, (sum(p.pv) // count(*))::BIGINT AS cv
-    FROM pts p JOIN a{i} a ON p.id = a.id
-    GROUP BY a.cid, p.dim)"""
-    return (
-        pre
-        + body
-        + f"""
-SELECT id AS vec_id, cid::INT AS cluster_id, dist2
-FROM a{rounds}
-"""
-    )
-
-
-ALL["q198_kmeans_integer"] = _kmeans_sql()
-
-
-# q199: near-duplicate conversations — the q22 MinHash pipeline with the
-# shingle base swapped to per-conversation concatenated transcripts
-# (reuse the q22 text after its WITH keyword, rebasing the shingle scan
-# onto convdoc).
-_q22 = ALL["q22_minhash_lsh"]
-_q22_body = _q22.split("WITH", 1)[1]
-ALL["q199_conversation_neardup"] = (
-    "WITH "
-    + _TRANSCRIPT_CTE_TOOL.strip()
-    + """,
-convdoc AS (
-    SELECT conv_id AS doc_id,
-        string_agg(text, ' ' ORDER BY turn_idx) AS text
-    FROM tr GROUP BY conv_id),
-"""
-    + _q22_body.replace("FROM documents", "FROM convdoc", 1).lstrip()
-)
-
-
-# q200: composed transcript curation pipeline — exact-dedup keepers,
-# near-dup drop (q199 pairs as a nested-WITH CTE, the q52 pattern),
-# quality gate, cost + context-pack joins.
-ALL["q200_transcript_training_pipeline"] = (
-    "WITH "
-    + _TRANSCRIPT_CTE_TOOL.strip()
-    + """,
-fp AS (
-    SELECT conv_id,
-        md5(string_agg(length(text)::VARCHAR || ':' || text, chr(31)
-            ORDER BY turn_idx)) AS fingerprint
-    FROM tr GROUP BY conv_id),
-keepers AS (
-    SELECT conv_id FROM fp f
-    WHERE conv_id = (SELECT min(conv_id) FROM fp g
-                     WHERE g.fingerprint = f.fingerprint)),
-pairs AS ("""
-    + ALL["q199_conversation_neardup"]
-    + """),
-dropped AS (SELECT DISTINCT b AS conv_id FROM pairs),
-cost AS (
-    SELECT conv_id, count(*)::BIGINT AS n_turns,
-        sum(len)::BIGINT AS total_chars,
-        sum(len * CASE role WHEN 'system' THEN 2 WHEN 'user' THEN 3
-            WHEN 'assistant' THEN 15 ELSE 1 END)::BIGINT AS cost_micros
-    FROM tr GROUP BY conv_id),
-s AS (
-    SELECT conv_id, turn_idx, role, len,
-        coalesce(sum(len) OVER (PARTITION BY conv_id ORDER BY turn_idx
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-            0)::BIGINT AS ctx_start
-    FROM tr),
-e AS (
-    SELECT conv_id, role,
-        (count(*) OVER (PARTITION BY conv_id ORDER BY ctx_start
-            RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW) - 1)::BIGINT
-            AS ctx_turns
-    FROM s),
-examples AS (
-    SELECT conv_id, count(*)::BIGINT AS n_examples
-    FROM e WHERE role = 'assistant' GROUP BY conv_id)
-SELECT c.conv_id, c.n_turns, c.total_chars, c.cost_micros,
-    coalesce(x.n_examples, 0)::BIGINT AS n_examples
-FROM cost c
-JOIN keepers k ON k.conv_id = c.conv_id
-LEFT JOIN dropped d ON d.conv_id = c.conv_id
-LEFT JOIN examples x ON x.conv_id = c.conv_id
-WHERE d.conv_id IS NULL
-  AND c.n_turns >= 3 AND c.total_chars BETWEEN 50 AND 5000
-"""
-)
-
 
 # q201: stateful streaming context budget — on a bounded in-order replay
 # the final update row per conversation equals the batch audit (q178).
 ALL["q201_streaming_context_budget"] = ALL["q178_context_budget"]
-
-
-# q202: VARIANT shredding — typed JSON extraction with NULL-on-malformed
-# semantics mirrored via json_valid + try_cast.
-ALL["q202_variant_shred"] = """
-WITH v AS (
-    SELECT event_type,
-        CASE WHEN props IS NOT NULL AND json_valid(props)
-             THEN try_cast(json_extract(props, '$.k') AS BIGINT)
-        END AS k
-    FROM events),
-g AS (
-    SELECT event_type, count(*)::BIGINT AS n_events,
-        count(k)::BIGINT AS n_with_k, sum(k)::BIGINT AS sum_k
-    FROM v GROUP BY event_type)
-SELECT event_type, n_events, n_with_k, sum_k,
-    CASE WHEN n_with_k > 0 THEN
-        round(((sum_k * 1000000) // n_with_k)::DOUBLE / 1000000.0, 6)
-    END AS avg_k
-FROM g
-"""
-
-
-# q203: ANN recall audit — composes the q25 exact, q53 IVF and q26 LSH
-# mirrors as nested-WITH CTEs (the q52/q200 pattern); ground truth is
-# crossed with a literal method list so a method that returns zero
-# candidates still reports recall 0, matching the Spark union.
-ALL["q203_ann_recall_eval"] = f"""
-WITH exact AS ({ALL["q25_ann_topk"]}),
-ivf AS ({ALL["q53_ivf_ann_topk"]}),
-lsh AS ({ALL["q26_lsh_ann_topk"]}),
-labeled AS (
-    SELECT 'ivf' AS method, query_id, neighbor_id FROM ivf
-    UNION ALL
-    SELECT 'lsh' AS method, query_id, neighbor_id FROM lsh),
-m AS (SELECT 'ivf' AS method UNION ALL SELECT 'lsh'),
-gt AS (SELECT m.method, e.query_id, e.neighbor_id FROM exact e CROSS JOIN m)
-SELECT g.method, g.query_id,
-    count(*)::BIGINT AS n_exact,
-    sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hits,
-    round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-          / least(5, count(*)), 9) AS recall_at_k
-FROM gt g
-LEFT JOIN labeled l
-    ON l.method = g.method AND l.query_id = g.query_id
-    AND l.neighbor_id = g.neighbor_id
-GROUP BY g.method, g.query_id
-"""
 
 
 # q204: preference pairs — same lead() adjacency as q179, ranking window
@@ -4453,45 +987,6 @@ FROM e WHERE role = 'assistant'
 """
 
 
-# q209: incremental IVF assignment — _ivf_sql's quantizer stages with
-# the corpus split: seeds/means from the BASE (vec_id < 400), argmax
-# assignment of the NEW batch only.
-def _ivf_assign_sql(split: int = 400, n_cells: int = 16) -> str:
-    cos5 = """
-round(list_sum(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]))
- / nullif(sqrt(list_sum(list_transform(a.e, x -> x * x)))
-  * sqrt(list_sum(list_transform(b.e, x -> x * x))), 0), 5)
-"""
-    return f"""
-WITH ev AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-base AS (SELECT * FROM ev WHERE vec_id < {split}),
-seeds AS (
-    SELECT vec_id, e,
-           row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) AS cell
-    FROM base QUALIFY cell <= {n_cells}),
-assign0 AS (
-    SELECT vec_id, e, cell FROM (
-        SELECT a.vec_id, a.e, b.cell,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {cos5} DESC, b.cell ASC) AS rn
-        FROM base a CROSS JOIN (SELECT cell, e FROM seeds) b) WHERE rn = 1),
-cent AS (
-    SELECT cell, i, round(avg(e[i]), 6) AS m
-    FROM assign0 CROSS JOIN (SELECT unnest(range(1, len((SELECT e FROM ev LIMIT 1)) + 1)) AS i)
-    GROUP BY cell, i),
-centl AS (SELECT cell, list(m ORDER BY i) AS e FROM cent GROUP BY cell)
-SELECT vec_id, cell::INT AS cell FROM (
-    SELECT a.vec_id, b.cell,
-           row_number() OVER (PARTITION BY a.vec_id
-                              ORDER BY {cos5} DESC, b.cell ASC) AS rn
-    FROM (SELECT * FROM ev WHERE vec_id >= {split}) a CROSS JOIN centl b)
-WHERE rn = 1
-"""
-
-
-ALL["q209_ivf_incremental_assign"] = _ivf_assign_sql()
-
-
 # q210: preference pipeline — q204's pair construction as a nested CTE,
 # then the same md5 gates (DuckDB md5 = lowercase hex like Spark's).
 ALL["q210_preference_pipeline"] = f"""
@@ -4530,53 +1025,6 @@ SELECT conv_id, n_requests, nocache_chars, cache_chars,
         ((nocache_chars - cache_chars) * 1000000) // nocache_chars
     ELSE 0 END::BIGINT AS saved_ppm
 FROM agg
-"""
-
-
-# q212: vector-index lifecycle — every vector (both splits) assigned to
-# the BASE-corpus centroids (the same frozen quantizer the Spark side
-# writes through the table format), profiled per cell.
-ALL["q212_vector_index_lifecycle"] = f"""
-WITH assigned AS (
-    SELECT vec_id, cell FROM ({_ivf_assign_sql(split=400)})
-    UNION ALL
-    SELECT vec_id, cell FROM (
-        {_ivf_assign_sql(split=400).replace(
-            "SELECT * FROM ev WHERE vec_id >= 400",
-            "SELECT * FROM ev WHERE vec_id < 400")}
-    )
-)
-SELECT cell::INT AS cell, count(*)::BIGINT AS n_vectors,
-    min(vec_id)::BIGINT AS min_vec, max(vec_id)::BIGINT AS max_vec,
-    sum((vec_id >= 400)::INT)::BIGINT AS n_incremental
-FROM assigned GROUP BY cell
-"""
-
-
-# q213: index staleness — the q209/q212 quantizer machinery with
-# parameterized base/assign predicates: frozen (base < 400) vs fresh
-# (base = all), both assigning ALL vectors, joined on vec_id.
-def _ivf_assign2_sql(base_where: str, assign_where: str,
-                     n_cells: int = 16) -> str:
-    return (
-        _ivf_assign_sql(split=400, n_cells=n_cells)
-        # the template has exactly one base clause and one assign clause
-        .replace("SELECT * FROM ev WHERE vec_id < 400",
-                 f"SELECT * FROM ev WHERE {base_where}")
-        .replace("SELECT * FROM ev WHERE vec_id >= 400",
-                 f"SELECT * FROM ev WHERE {assign_where}")
-    )
-
-
-ALL["q213_index_staleness"] = f"""
-WITH frozen AS ({_ivf_assign2_sql("vec_id < 400", "TRUE")}),
-fresh AS ({_ivf_assign2_sql("TRUE", "TRUE")})
-SELECT f.cell::INT AS cell, count(*)::BIGINT AS n_vectors,
-    sum((f.cell <> r.cell)::INT)::BIGINT AS n_moved,
-    ((sum((f.cell <> r.cell)::INT) * 1000000) // count(*))::BIGINT
-        AS moved_ppm
-FROM frozen f JOIN fresh r ON r.vec_id = f.vec_id
-GROUP BY f.cell
 """
 
 
@@ -4620,45 +1068,6 @@ SELECT conv_id, window_id, fingerprint, n_turns,
     (row_number() OVER (PARTITION BY fingerprint
                         ORDER BY conv_id, window_id) = 1) AS is_canonical
 FROM w
-"""
-
-
-# q216: window packing — q215's canonical windows with q214's char
-# counts, global running sum ordered by the same composite key, then
-# the pack_sequences chunk formulas (zero-char windows pinned to their
-# start pack via greatest()).
-ALL["q216_window_packing"] = f"""
-WITH {_TRANSCRIPT_CTE_TOOL},
-m AS (
-    SELECT conv_id, turn_idx, text, len,
-        unnest(range(
-            greatest(0, (turn_idx - 8 + 1 + 4 - 1) // 4),
-            (turn_idx // 4) + 1)) AS window_id
-    FROM tr),
-w AS (
-    SELECT conv_id, window_id::BIGINT AS window_id,
-        md5(string_agg(length(text)::VARCHAR || ':' || text, chr(31)
-            ORDER BY turn_idx)) AS fingerprint,
-        sum(len)::BIGINT AS n_chars
-    FROM m GROUP BY conv_id, window_id),
-keep AS (
-    SELECT conv_id, window_id, n_chars,
-        printf('%s#%06d', conv_id, window_id) AS wkey
-    FROM (SELECT *, row_number() OVER (PARTITION BY fingerprint
-              ORDER BY conv_id, window_id) AS rn FROM w)
-    WHERE rn = 1),
-c AS (
-    SELECT conv_id, window_id, n_chars,
-        sum(n_chars) OVER (ORDER BY wkey
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-    FROM keep)
-SELECT conv_id, window_id, n_chars,
-    (cum - n_chars)::BIGINT AS start_offset,
-    ((cum - n_chars) // 500)::BIGINT AS first_pack,
-    greatest((cum - n_chars) // 500, (cum - 1) // 500)::BIGINT AS last_pack,
-    (greatest((cum - n_chars) // 500, (cum - 1) // 500)
-     - (cum - n_chars) // 500 + 1)::BIGINT AS n_packs_spanned
-FROM c
 """
 
 

@@ -1,10 +1,11 @@
-"""Operator-coverage queries over the driver's testdata tables.
+"""Engine-coverage queries over the driver's testdata tables.
 
-One entry per implemented operator family from SURVEY.md §2 plus the
-training-data ops. Each function takes (spark, sf_dir) and returns a
-DataFrame whose column names/aliases EXACTLY match the DuckDB oracle in
-``oracles.py`` (the driver's compare sorts columns by name and hashes
-values).
+Every query drives engine code: the table format (``table/``), the
+maintenance and row-level operators, ETL, the source readers, streaming,
+transcript ops, sketches and metadata aggregates. Each function takes
+(spark, sf_dir) and returns a DataFrame whose column names/aliases
+EXACTLY match the DuckDB oracle in ``oracles.py`` (the driver's compare
+sorts columns by name and hashes values).
 
 Float policy: every aggregated/computed double is ``F.round``-ed (2-6 dp)
 in BOTH engines so accumulation-order ulps can't flip the value hash.
@@ -14,18 +15,15 @@ DuckDB agree on naive timestamps.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .operators import dedup as dd
 from .operators import etl
-from .operators import multimodal as mm
-from .operators import similarity as sim
-from .operators import text as tx
-from .operators.merge import dedup_keep_latest, merge_upsert_dataframes
+from .operators.merge import merge_upsert_dataframes
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -94,137 +92,6 @@ def _bucketed_bloom_table(spark, df, key_col: str, tag: str,
     return t, root
 
 
-# ------------------------------------------------------------ aggregation
-
-
-def q01_groupby_agg(spark, sf_dir):
-    """A1/A3: TPC-H Q1-shaped grouped aggregation (8 aggs, 2 keys)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.where(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "sum_disc_price"
-            ),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q02_join_agg(spark, sf_dir):
-    """J2/A5: the reference's documented analytics join
-    (README.md:229-236): per-order item count + quantity."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("o_orderkey", "o_totalprice")
-        .agg(F.count("l_linenumber").alias("n_items"), F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
-    )
-
-
-def q03_broadcast_dim_join(spark, sf_dir):
-    """J1-style star join: broadcast small dims (nation, region), revenue
-    per region — the plan Catalyst should pick at 100 TB too."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"), F.count("*").alias("n_orders"))
-    )
-
-
-def q08_group_counts(spark, sf_dir):
-    """A4: grouped counts (products-by-department analog: parts by brand)."""
-    p = _t(spark, sf_dir, "part")
-    return p.groupBy("p_brand").agg(
-        F.count("*").alias("n_parts"), F.round(F.avg("p_retailprice"), 4).alias("avg_price")
-    )
-
-
-def q18_count_distinct(spark, sf_dir):
-    """Distinct aggregation: event-type diversity per user."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy("user_id").agg(
-        F.countDistinct("event_type").alias("n_types"), F.count("*").alias("n_events")
-    )
-
-
-# ------------------------------------------------------- windows / dedup
-
-
-def q04_window_dedup_latest(spark, sf_dir):
-    """W1: keep-latest-per-key window dedup (orders_etl.py:150-160) with
-    deterministic tiebreak — latest event per user."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "event_id", "ts", "event_type")
-    )
-
-
-def q13_topk_per_group(spark, sf_dir):
-    """Top-K per group (rank window): 3 priciest orders per priority."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        o.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rnk")
-    )
-
-
-def q16_sessionize(spark, sf_dir):
-    """Sessionization: lag-gap > 30 min starts a new session; sessions per
-    user (the batch form of the streaming session_window)."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    starts = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    return (
-        e.withColumn("s", starts)
-        .groupBy("user_id")
-        .agg(F.sum("s").alias("n_sessions"), F.count("*").alias("n_events"))
-    )
-
-
-def q28_asof_join(spark, sf_dir):
-    """As-of join (Spark lacks a native one — composed from a union +
-    last(ignorenulls) running window): for each order, the latest event of
-    the same user at-or-before the order date."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("k"), F.col("o_orderdate").alias("ts"),
-        F.col("o_orderkey"), F.lit(None).cast("long").alias("event_id"),
-    ).withColumn("side", F.lit("o"))
-    e = _t(spark, sf_dir, "events").select(
-        F.col("user_id").alias("k"), F.col("ts"),
-        F.lit(None).cast("long").alias("o_orderkey"), F.col("event_id"),
-    ).withColumn("side", F.lit("e"))
-    u = e.unionByName(o)
-    w = (
-        Window.partitionBy("k")
-        .orderBy(F.col("ts").asc(), F.col("side").asc(), F.coalesce("event_id", "o_orderkey").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        u.withColumn("last_event_id", F.last("event_id", ignorenulls=True).over(w))
-        .where(F.col("side") == "o")
-        .select("o_orderkey", F.col("k").alias("o_custkey"), "last_event_id")
-    )
-
-
 # --------------------------------------------------- validation / scalars
 
 
@@ -279,57 +146,6 @@ def q11_date_parts(spark, sf_dir):
     )
 
 
-def q12_string_clean(spark, sf_dir):
-    """P2 string family (products_etl.py:54-74): trim/upper/length."""
-    c = _t(spark, sf_dir, "customer")
-    return c.where(F.length(F.trim(F.col("c_name"))) > 0).select(
-        "c_custkey",
-        F.upper(F.trim(F.col("c_name"))).alias("name_clean"),
-        F.length(F.col("c_name")).alias("name_len"),
-        F.upper(F.trim(F.col("c_mktsegment"))).alias("segment_clean"),
-    )
-
-
-def q14_json_extract(spark, sf_dir):
-    """Semi-structured scalar extraction: numeric field from the JSON props
-    string, aggregated per event type."""
-    e = _t(spark, sf_dir, "events")
-    k = F.regexp_extract(F.col("props"), r'"k": (\d+)', 1).cast("int")
-    return (
-        e.withColumn("k", k)
-        .groupBy("event_type")
-        .agg(F.round(F.avg("k"), 4).alias("avg_k"), F.count("*").alias("n"))
-    )
-
-
-def q15_windowed_time_agg(spark, sf_dir):
-    """Tumbling-window aggregation (batch form of the streaming windowed
-    count): hourly counts + sums per event type."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.date_trunc("hour", F.col("ts")).alias("window_start"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-    )
-
-
-# ----------------------------------------------------------------- set ops
-
-
-def q09_union_dedup(spark, sf_dir):
-    """O2+O4: union + distinct (reference unions multi-file inputs then
-    dedups; orders_etl.py:118-129 + order_items_etl.py:59-61)."""
-    o = _t(spark, sf_dir, "orders")
-    return o.unionByName(o).distinct()
-
-
-def q10_except(spark, sf_dir):
-    """O3: EXCEPT-DISTINCT complement, exactly the reference's
-    ``subtract`` (orders_etl.py:145)."""
-    o = _t(spark, sf_dir, "orders")
-    valid = o.where((F.col("o_totalprice") > 0) & (F.col("o_totalprice") <= 150_000.0))
-    return o.subtract(valid).select("o_orderkey", "o_totalprice")
-
-
 # -------------------------------------------------------------- MERGE/upsert
 
 
@@ -347,92 +163,6 @@ def q17_merge_upsert(spark, sf_dir):
     source = updates.unionByName(inserts)
     merged = merge_upsert_dataframes(e, source, keys=("event_id",), order_col=None)
     return merged.select("event_id", F.round(F.col("value"), 2).alias("value"))
-
-
-def q29_keep_latest_dedup(spark, sf_dir):
-    """W1 as a standalone operator over a table WITH planted duplicate keys:
-    latest row per (user_id, event_type) with deterministic tiebreak."""
-    e = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type", "value")
-    w = Window.partitionBy("user_id", "event_type").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "event_type", "event_id")
-    )
-
-
-# ------------------------------------------------------- text / dedup / ANN
-
-
-def q19_text_analysis(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return tx.analyze_documents(d)
-
-
-def q20_exact_dedup(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    doubled = d.unionByName(d)
-    return dd.exact_dedup(doubled)
-
-
-def q21_ngram_jaccard(spark, sf_dir):
-    """df-cut EXPLICIT at the call site (max_df_frac=0.5): Jaccard over
-    the cut shingle sets — the web-scale configuration, mirrored exactly
-    by the DuckDB oracle."""
-    d = _t(spark, sf_dir, "documents")
-    return dd.ngram_jaccard_pairs(d, threshold=0.12, n=3, max_df_frac=0.5)
-
-
-def q22_minhash_lsh(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return dd.minhash_lsh_pairs(d, threshold=0.25, num_hashes=12, bands=3, n=3)
-
-
-def q23_simhash(spark, sf_dir):
-    """Manku-style near-dup radius (3 of 60 bits, WWW'07 uses 3 of 64):
-    pigeonhole banding needs only max_hamming+1=4 chunk self-joins on
-    15-bit keys — at radius 10 it needed 12 joins on 5-bit keys, which is
-    near-quadratic (5-bit chunks collide constantly)."""
-    d = _t(spark, sf_dir, "documents")
-    return dd.simhash_pairs(d, max_hamming=3)
-
-
-def q24_embedding_neardup(spark, sf_dir):
-    """LSH-bucketed near-dup: candidates only from colliding sign-LSH
-    buckets (equi-join per table, never a cartesian), exact cosine
-    verify. Deterministic planes + 6-dp-rounded center make the result a
-    pure function of the input, mirrored plane-by-plane by the DuckDB
-    oracle. The exact O(n²) baseline stays available as
-    ``dd.embedding_neardup_pairs`` (opt-in, not the 100 TB path)."""
-    e = _t(spark, sf_dir, "embeddings")
-    return dd.embedding_neardup_lsh(e, threshold=0.40, n_planes=6, n_tables=4, dim=64)
-
-
-def q25_ann_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    queries = e.where(F.col("vec_id") < 8).select(F.col("vec_id").alias("query_id"), "embedding")
-    return sim.brute_force_topk(e, queries, k=5).select("query_id", "neighbor_id", "rank")
-
-
-def q26_lsh_ann_topk(spark, sf_dir):
-    """Approximate ANN over multi-table sign-LSH buckets. Approximate ≠
-    unverifiable: planes and center are deterministic, so the DuckDB
-    oracle mirrors the bucketing plane-by-plane and the result is fully
-    value-hash checked. Recall vs exact top-k (q25) asserted in pytest."""
-    e = _t(spark, sf_dir, "embeddings")
-    queries = e.where(F.col("vec_id") < 8).select(F.col("vec_id").alias("query_id"), "embedding")
-    return sim.lsh_ann_topk(e, queries, dim=64, k=5, n_planes=6, n_tables=4)
-
-
-def q53_ivf_ann_topk(spark, sf_dir):
-    """IVF ANN: deterministic md5-sampled coarse centroids + one Lloyd
-    refinement, per-query nprobe cell probe, exact re-rank within probed
-    cells. Fully value-hash oracled: seeding/means/argmax are all
-    deterministic, so DuckDB mirrors every stage (seed window →
-    per-dim avg CTE → argmax windows)."""
-    e = _t(spark, sf_dir, "embeddings")
-    queries = e.where(F.col("vec_id") < 8).select(F.col("vec_id").alias("query_id"), "embedding")
-    return sim.ivf_ann_topk(e, queries, dim=64, k=5, n_cells=16, nprobe=4)
 
 
 def q54_rowlevel_lifecycle(spark, sf_dir):
@@ -482,7 +212,6 @@ def q54_rowlevel_lifecycle(spark, sf_dir):
         return spark.createDataFrame(rows, result.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
 
 
 def q87_schema_evolution_lifecycle(spark, sf_dir):
@@ -544,20 +273,6 @@ def q87_schema_evolution_lifecycle(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-
-def q88_semdedup(spark, sf_dir):
-    """SemDeDup: embedding-cluster semantic dedup (cluster with the
-    deterministic IVF quantizer, then within-cluster pairwise cosine —
-    the O(sum cell^2) trick that makes semantic dedup feasible at corpus
-    scale). tau=0.3 is deliberately low: the synthetic embeddings are
-    near-random (max pairwise cos ~0.51), so a realistic 0.95 marks
-    nothing — the oracle proves the MACHINERY (assignment + pair marking)
-    value-for-value, not a semantic claim about synthetic vectors."""
-    e = _t(spark, sf_dir, "embeddings")
-    return sim.semdedup(e, dim=64, n_cells=8, tau=0.3)
-
-
-
 def q89_metadata_count(spark, sf_dir):
     """Metadata-only COUNT(*): predicate counts answered from manifest
     stats + boundary-file residual reads (operators/metaagg.py —
@@ -600,7 +315,6 @@ def q89_metadata_count(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-
 def q90_retention_delete(spark, sf_dir):
     """Stats-driven retention delete through the REAL table format:
     cluster (narrow ts ranges), then expire everything before a cutoff —
@@ -640,7 +354,6 @@ def q90_retention_delete(spark, sf_dir):
         return spark.createDataFrame(rows, result.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
 
 
 def q91_cdf_stream_replay(spark, sf_dir):
@@ -720,7 +433,6 @@ def q91_cdf_stream_replay(spark, sf_dir):
         shutil.rmtree(ck, ignore_errors=True)
 
 
-
 def q92_generic_cluster(spark, sf_dir):
     """Generic-key clustering (Delta ZORDER BY analog) through the real
     table format: documents clustered on (lang, n_chars) — dictionary-
@@ -760,7 +472,6 @@ def q92_generic_cluster(spark, sf_dir):
         return spark.createDataFrame(rows, result.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
 
 
 def q93_manifest_ndv_sketch(spark, sf_dir):
@@ -805,108 +516,6 @@ def q93_manifest_ndv_sketch(spark, sf_dir):
                   "est_distinct double")
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
-
-
-def q94_chunk_documents(spark, sf_dir):
-    """Sliding-window chunking (curation.chunk_documents): every document
-    split into overlapping fixed-size word windows — per-chunk rows, so
-    the hash proves offsets, overlap, tail clamping, and single-chunk
-    short docs, value for value."""
-    from .operators.curation import chunk_documents
-
-    docs = _t(spark, sf_dir, "documents")
-    return chunk_documents(docs, window_words=64, stride_words=48)
-
-
-def q55_streaming_windowed_agg(spark, sf_dir):
-    """REAL Structured Streaming in the value-hash gate (streaming was
-    pytest-only before): readStream over the events file, 1-hour
-    watermark + tumbling window, Trigger.AvailableNow, memory sink in
-    complete mode. On a bounded replay the watermark drops nothing, so
-    the streaming result must equal the batch GROUP BY — which is
-    exactly what the DuckDB oracle states (q15's SQL). At scale the same
-    plan runs unbounded with an append-mode table sink; state is
-    per-(window, event_type), pruned by the watermark."""
-    import os
-    import shutil
-    import uuid
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    d = os.path.join(base, f"spark_graft_q55_{uuid.uuid4().hex[:12]}")
-    os.makedirs(os.path.join(d, "in"))
-    qname = "q55_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        shutil.copy(src, os.path.join(d, "in", "events.parquet"))
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(os.path.join(d, "in"))
-        # watermarks require TIMESTAMP (tz); the data is NTZ — cast through
-        # session time (UTC) and cast the window start back to NTZ
-        stream = stream.withColumn("ts_evt", F.col("ts").cast("timestamp"))
-        # the window must key on the WATERMARKED column — only then can
-        # Spark evict (window, event_type) state when run unbounded in
-        # append mode; session tz is pinned UTC (session.py) so the
-        # start cast back to NTZ equals date_trunc('hour', ts)
-        agg = (
-            stream.withWatermark("ts_evt", "1 hour")
-            .groupBy(F.window(F.col("ts_evt"), "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(
-                F.col("w").getField("start")
-                .cast("timestamp_ntz")
-                .alias("window_start"),
-                "event_type", "n", "sum_value",
-            )
-        )
-        with _tmp_conf(spark, spark__sql__shuffle__partitions="8"):
-            sq = (
-                agg.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(d, "ckpt"))
-                .start()
-            )
-            sq.awaitTermination()
-        result = spark.table(qname)
-        rows = result.collect()  # materialize before sink view is dropped
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def q56_training_pipeline(spark, sf_dir):
-    """The LLM-data operators COMPOSED end-to-end, fully oracled: exact
-    dedup (min-id survivor per content hash) → quality gate
-    (deterministic score ≥ 0.7) → deterministic 50 % sample (md5 bucket,
-    q51's trick) → per-(source, lang) token budget. One shuffle for the
-    dedup groupBy, one for the survivor join (both keyed on doc-sized
-    rows, never corpus-wide pairs), one partial-aggregable final group —
-    the shape a 100 TB pre-training sweep actually runs."""
-    d = _t(spark, sf_dir, "documents")
-    survivors = dd.exact_dedup(d).select("doc_id")
-    kept = d.join(survivors, "doc_id")
-    feats = kept.select(
-        "doc_id",
-        "source",
-        tx.quality_score(F.col("text")).alias("quality"),
-        tx.lang_guess(F.col("text")).alias("lang_guess"),
-        tx.token_count(F.col("text")).alias("n_tokens"),
-    )
-    bucket = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
-    sampled = feats.where((F.col("quality") >= 0.7) & (bucket < int(0.5 * 2**32)))
-    return sampled.groupBy("source", "lang_guess").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("tokens"),
-        F.round(F.avg("quality"), 6).alias("avg_quality"),
-    )
 
 
 def q58_partitioned_scan(spark, sf_dir):
@@ -1183,70 +792,6 @@ def q62_partial_progress_compact(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q27_range_join(spark, sf_dir):
-    """Range join (reference lacks one — SURVEY §2.3): for each purchase,
-    the same user's events in the preceding 30 minutes. Equi key (user) +
-    range predicate → SortMergeJoin plus residual filter; at scale,
-    bucketize ts if the equi key alone is too hot."""
-    e = _t(spark, sf_dir, "events")
-    buys = e.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("buy_id"), F.col("user_id").alias("buyer"),
-        F.col("ts").alias("buy_ts"),
-    )
-    cond = (
-        (buys.buyer == e.user_id)
-        & (e.ts >= buys.buy_ts - F.expr("INTERVAL 30 MINUTES"))
-        & (e.ts < buys.buy_ts)
-    )
-    return buys.join(e, cond).groupBy("buy_id").agg(
-        F.count("event_id").alias("n_prior_events")
-    )
-
-
-def q32_rollup(spark, sf_dir):
-    """ROLLUP grouping sets (SURVEY §2.4 'not implemented' → implemented):
-    revenue by (priority, status) with subtotal and grand-total rows."""
-    o = _t(spark, sf_dir, "orders")
-    return o.rollup("o_orderpriority", "o_orderstatus").agg(
-        F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("revenue")
-    )
-
-
-def q33_conditional_pivot(spark, sf_dir):
-    """Pivot via conditional aggregation (portable form of .pivot())."""
-    e = _t(spark, sf_dir, "events")
-    cases = {
-        t: F.round(F.sum(F.when(F.col("event_type") == t, F.col("value"))), 2).alias(f"sum_{t}")
-        for t in ("view", "click", "purchase", "signup", "error")
-    }
-    return e.groupBy("user_id").agg(*cases.values())
-
-
-def q34_intersect(spark, sf_dir):
-    """INTERSECT set op (SURVEY §2.6 'not implemented' → implemented):
-    customers having both a click and a purchase event."""
-    e = _t(spark, sf_dir, "events")
-    clickers = e.where(F.col("event_type") == "click").select("user_id")
-    buyers = e.where(F.col("event_type") == "purchase").select("user_id")
-    return clickers.intersect(buyers)
-
-
-def q35_multimodal_decode(spark, sf_dir):
-    """Multimodal binary-column plumbing, end-to-end in the correctness
-    gate: synthesize one FakeCodec container per document id inside
-    mapInPandas (Arrow batches), decode + featurize with a second
-    mapInPandas pass, emit integer-exact features. The DuckDB oracle
-    computes the same features CLOSED-FORM from the id (the codec is a
-    deterministic toy — operators/multimodal.py), so the whole
-    binary→Arrow→decode path is value-hash verified. A real build swaps
-    FakeCodec for PIL/ffmpeg at the marked seam."""
-    d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    media = mm.media_from_ids(d, id_col="doc_id", seed=42)
-    return mm.decode_and_featurize(media).select(
-        "media_id", "kind", "width", "height", "n_bytes", "sum_value", "ok"
-    )
-
-
 def q36_skew_salted_agg(spark, sf_dir):
     """Two-phase salted aggregation (plans/skew.py): partial agg on
     (key, salt) then final on key — the non-join skew mitigation the
@@ -1256,270 +801,6 @@ def q36_skew_salted_agg(spark, sf_dir):
 
     e = _t(spark, sf_dir, "events")
     return salted_two_phase_agg(e, key="user_id", value_col="value", salt_buckets=16)
-
-
-def q37_cube(spark, sf_dir):
-    """CUBE grouping sets (completes the grouping-sets family next to
-    q32's ROLLUP): all subtotal combinations of (priority, status)."""
-    o = _t(spark, sf_dir, "orders")
-    return o.cube("o_orderpriority", "o_orderstatus").agg(
-        F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("revenue")
-    )
-
-
-def q38_exact_percentiles(spark, sf_dir):
-    """Exact percentiles per group (Spark `percentile` = linear
-    interpolation on the sorted values, the same definition DuckDB's
-    quantile_cont uses)."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.round(F.expr("percentile(o_totalprice, 0.5)"), 2).alias("p50"),
-        F.round(F.expr("percentile(o_totalprice, 0.9)"), 2).alias("p90"),
-        F.count("*").alias("n"),
-    )
-
-
-def q39_semi_anti_join(spark, sf_dir):
-    """LEFT SEMI + LEFT ANTI joins (existence predicates without
-    row duplication): per market segment, customers with vs without
-    orders."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
-    with_orders = (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_with_orders"))
-    )
-    without = (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_without_orders"))
-    )
-    return with_orders.join(without, "c_mktsegment", "full_outer").select(
-        "c_mktsegment",
-        F.coalesce("n_with_orders", F.lit(0)).alias("n_with_orders"),
-        F.coalesce("n_without_orders", F.lit(0)).alias("n_without_orders"),
-    )
-
-
-def q40_explode_token_counts(spark, sf_dir):
-    """explode/unnest: corpus token frequencies (the flatten step every
-    text pipeline needs before token-level stats)."""
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
-    )
-    return toks.groupBy("token").agg(F.count("*").alias("n")).where(F.col("n") >= 50)
-
-
-def q41_running_sum(spark, sf_dir):
-    """Cumulative window frame (running total per user over time) with a
-    deterministic tiebreak. Both engines add doubles in identical frame
-    order, so the running sum is bit-stable."""
-    e = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return e.select(
-        "event_id", "user_id", F.round(F.sum("value").over(w), 4).alias("running_value")
-    )
-
-
-def q42_collect_sorted_set(spark, sf_dir):
-    """Array aggregation: the sorted distinct event-type set per user,
-    serialized to a comparable string (collect_set order is
-    nondeterministic — sort_array makes the result a pure function)."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy("user_id").agg(
-        F.array_join(F.sort_array(F.collect_set("event_type")), ",").alias("types"),
-        F.count("*").alias("n"),
-    )
-
-
-def q43_ntile_buckets(spark, sf_dir):
-    """ntile window bucketing: quartiles of order value per priority,
-    deterministic order, avg per bucket."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    return (
-        o.withColumn("q", F.ntile(4).over(w))
-        .groupBy("o_orderpriority", "q")
-        .agg(F.count("*").alias("n"), F.round(F.avg("o_totalprice"), 2).alias("avg_price"))
-    )
-
-
-def q44_multiway_dim_join(spark, sf_dir):
-    """TPC-H Q5-shaped 6-table star join: revenue per nation within one
-    region for a one-year window. Scale path: region/nation/customer/
-    supplier are broadcast (no shuffle of the fact tables on dim keys);
-    only the orders⋈lineitem equi-join shuffles, on the order key."""
-    region = F.broadcast(_t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA"))
-    nation = F.broadcast(_t(spark, sf_dir, "nation"))
-    cust = F.broadcast(_t(spark, sf_dir, "customer"))
-    supp = F.broadcast(_t(spark, sf_dir, "supplier"))
-    orders = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1996-01-01")
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .where(cust.c_nationkey == supp.s_nationkey)
-        .join(nation, cust.c_nationkey == nation.n_nationkey)
-        .join(region, nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            ),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-def q45_grouping_sets(spark, sf_dir):
-    """Explicit GROUPING SETS (the general form next to q32 ROLLUP /
-    q37 CUBE): per-priority, per-status, and grand-total rows in one
-    pass (one shuffle; Spark expands the sets map-side)."""
-    o = _t(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("q45_orders")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, o_orderstatus, count(*) AS n,
-               round(sum(o_totalprice), 2) AS revenue
-        FROM q45_orders
-        GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
-        """
-    )
-
-
-def q46_above_customer_avg(spark, sf_dir):
-    """Correlated-scalar-subquery semantics (orders above their own
-    customer's average), expressed Spark-first as agg + equi-join so it
-    stays one shuffle on o_custkey instead of a per-row subquery. The
-    avg is rounded to 4 dp in BOTH engines so accumulation-order ulps
-    can't flip boundary rows."""
-    o = _t(spark, sf_dir, "orders")
-    cust_avg = o.groupBy("o_custkey").agg(
-        F.round(F.avg("o_totalprice"), 4).alias("cust_avg")
-    )
-    return (
-        o.join(cust_avg, "o_custkey")
-        .where(F.col("o_totalprice") > F.col("cust_avg"))
-        .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("o_totalprice"))
-    )
-
-
-def q47_argmax_per_group(spark, sf_dir):
-    """Deterministic arg-max/arg-min per group via max/min of a
-    (value, key) struct — tie-broken by key, so it is a pure function
-    (plain max_by/arg_max are indeterminate under value ties). One
-    partial-aggregable shuffle; no window sort."""
-    o = _t(spark, sf_dir, "orders")
-    hi = F.max(F.struct("o_totalprice", "o_orderkey"))
-    lo = F.min(F.struct("o_totalprice", "o_orderkey"))
-    return o.groupBy("o_orderpriority").agg(
-        hi.getField("o_orderkey").alias("max_orderkey"),
-        F.round(hi.getField("o_totalprice"), 2).alias("max_price"),
-        lo.getField("o_orderkey").alias("min_orderkey"),
-        F.round(lo.getField("o_totalprice"), 2).alias("min_price"),
-    )
-
-
-def q48_date_spine_gapfill(spark, sf_dir):
-    """Gap-filled daily counts: generate the full day spine with
-    sequence+explode (distributed, no driver loop), left-join daily
-    event counts, coalesce missing days to 0."""
-    e = _t(spark, sf_dir, "events").select(F.to_date("ts").alias("day"))
-    bounds = e.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("interval 1 day"))).alias("day")
-    )
-    daily = e.groupBy("day").agg(F.count("*").alias("cnt"))
-    return spine.join(daily, "day", "left").select(
-        "day", F.coalesce("cnt", F.lit(0)).alias("n_events")
-    )
-
-
-def q49_rank_distributions(spark, sf_dir):
-    """percent_rank + cume_dist window ranks (tie-stable: both are pure
-    functions of the sort key, so value ties rank identically in any
-    engine)."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-    )
-
-
-def q50_embedding_centroids(spark, sf_dir):
-    """Per-label embedding centroid, computed the scalable way:
-    posexplode to (label, dim, component) rows and average — a plain
-    partial-aggregable shuffle on (label, dim), never collecting whole
-    vectors to one place (an `aggregate(collect_list(...))` centroid
-    would OOM at corpus scale)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return (
-        emb.select("label", F.posexplode("embedding").alias("dim", "x"))
-        .groupBy("label", "dim")
-        .agg(F.round(F.avg("x"), 5).alias("centroid"), F.count("*").alias("n"))
-    )
-
-
-def q51_deterministic_sample(spark, sf_dir):
-    """Reproducible corpus sampling — the training-data primitive that
-    `df.sample()` can't give you (its seed is partition-layout
-    dependent): keep a document iff the first 8 hex chars of
-    md5(doc_id) fall below a fixed threshold (~25%). Bit-identical
-    across engines, cluster sizes, and re-runs; sampling decision
-    happens at the scan, so it composes with pushdown."""
-    d = _t(spark, sf_dir, "documents")
-    bucket = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
-    return (
-        d.where(bucket < int(0.25 * 2**32))
-        .groupBy("source")
-        .agg(F.count("*").alias("n_sampled"), F.sum("n_chars").alias("chars_sampled"))
-    )
-
-
-def q52_dedup_clusters(spark, sf_dir):
-    """The dedup endgame: MinHash-LSH near-dup pairs → connected
-    components (min-label propagation, operators/graph.py) → canonical
-    cluster assignment (doc_id, cluster_id = min id in component,
-    cluster_size). Oracle: the same pair SQL wrapped in a recursive CTE."""
-    from .operators.graph import dedup_clusters
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = dd.minhash_lsh_pairs(d)
-    return dedup_clusters(pairs)
-
-
-def q31_sql_over_views(spark, sf_dir):
-    """§3.3 SQL entry point: catalog-registered views + spark.sql —
-    Catalyst parse→analyze→optimize→codegen, same plan as the DataFrame
-    form (q01). Replaces the reference's Athena/Glue-Catalog surface."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               round(sum(l_extendedprice), 2) AS sum_base_price,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-               round(avg(l_quantity), 4) AS avg_qty,
-               round(avg(l_discount), 4) AS avg_disc,
-               count(*) AS count_order
-        FROM lineitem_v WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-        """
-    )
 
 
 _Q30_CACHE: dict[tuple, DataFrame] = {}
@@ -1670,146 +951,6 @@ def q57_cdc_changes(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-# ------------------------------------------------------ curation (round 4)
-
-
-def q63_decontamination(spark, sf_dir):
-    """Benchmark decontamination (GPT-3 appendix-C shape): every corpus
-    document sharing a word 3-gram with the held-out "benchmark" slice
-    (doc_id % 37 == 0) is flagged, with its distinct-overlap count. The
-    benchmark side collapses to distinct 60-bit shingle hashes and is
-    broadcast — no corpus self-join (operators/curation.py)."""
-    from .operators.curation import decontaminate
-
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.where(F.col("doc_id") % 37 == 0)
-    corpus = docs.where(F.col("doc_id") % 37 != 0)
-    return decontaminate(corpus, bench, n=3)
-
-
-def q64_sequence_packing(spark, sf_dir):
-    """Concat-and-chunk packing offsets (budget 256 tokens): each
-    document's start offset / chunk span in the virtual concatenated
-    token stream. The global running sum is a DISTRIBUTED prefix sum
-    (partition-local Arrow cumsum + broadcast partition offsets), never
-    a single-partition global window (curation.distributed_cumsum)."""
-    from .operators.curation import pack_sequences
-
-    docs = _t(spark, sf_dir, "documents")
-    return pack_sequences(docs, budget=256)
-
-
-def q65_repetition_quality(spark, sf_dir):
-    """Gopher-style repetition quality signals (Rae et al. 2021 §A1.1):
-    duplicate-word / duplicate-2-gram / duplicate-3-gram fractions as
-    pure Column expressions, top-word fraction via one (doc, token)
-    aggregation, and the combined pass flag."""
-    from .operators.curation import repetition_stats
-
-    docs = _t(spark, sf_dir, "documents")
-    return repetition_stats(docs)
-
-
-def q66_stratified_sample(spark, sf_dir):
-    """Deterministic per-stratum quota sample: the 20 smallest-md5-rank
-    documents per language. Quota companion to the corpus-wide hash-gate
-    sample (q51) — rebalances skewed strata instead of preserving their
-    natural frequencies."""
-    from .operators.curation import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return stratified_sample(docs, strata_col="lang", cap_per_stratum=20)
-
-
-def q67_tfidf_scores(spark, sf_dir):
-    """TF-IDF document scores (rare-token density quality signal): mean
-    and max token IDF per document. Document frequency shuffles on the
-    token (vocabulary-sized); the tiny DF table is broadcast back onto
-    the (doc, token) stream."""
-    from .operators.curation import tfidf_doc_scores
-
-    docs = _t(spark, sf_dir, "documents")
-    return tfidf_doc_scores(docs)
-
-
-def q68_domain_mix(spark, sf_dir):
-    """Domain-mixture resampling weights: per-source actual fraction vs
-    a uniform target, and the keep-probability multiplier a sampler
-    applies to hit the mixture. One groupBy on the domain key."""
-    from .operators.curation import domain_mix_weights
-
-    docs = _t(spark, sf_dir, "documents")
-    return domain_mix_weights(docs, domain_col="source")
-
-
-def q69_pii_redaction(spark, sf_dir):
-    """PII scrub + audit in one map stage: deterministic synthetic PII
-    (an email, an IPv4, a phone, all derived from doc_id) is appended to
-    each document, then ``pii_scrub`` counts and redacts every span with
-    chained JVM regexp_replace (no UDF). The per-source rollup checks
-    counts, redacted length, and that the residual-PII audit column is
-    zero — all recomputed independently by the DuckDB oracle."""
-    docs = _t(spark, sf_dir, "documents")
-    injected = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@mail.example.com or 10."),
-            (F.col("doc_id") % 200).cast("string"),
-            F.lit(".0.1 call +1 555-"),
-            F.lpad((F.col("doc_id") % 1000).cast("string"), 3, "0"),
-            F.lit("-0199 done"),
-        ),
-    )
-    scrubbed = tx.pii_scrub(injected)
-    return scrubbed.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_emails").alias("emails"),
-        F.sum("n_phones").alias("phones"),
-        F.sum("n_ipv4").alias("ipv4s"),
-        F.sum(F.length("text")).alias("redacted_chars"),
-        F.sum("n_pii_residual").alias("residual"),
-    )
-
-
-def q70_normalized_dedup(spark, sf_dir):
-    """Near-exact dedup on normalized content (the CCNet/RefinedWeb
-    canonicalization pass): documents unioned with case-flipped,
-    punctuation-padded twins (doc_id + 10M) collapse back to one
-    survivor per canonical form — byte-exact dedup (q20) would keep both.
-    Shuffle key is the 16-byte md5 of the canonical form, never the
-    text."""
-    docs = _t(spark, sf_dir, "documents")
-    mutated = docs.select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"),
-        F.concat(F.lit("  "), F.upper("text"), F.lit(" !!  ")).alias("text"),
-        "lang",
-        "source",
-        "n_chars",
-    )
-    return dd.normalized_exact_dedup(docs.unionByName(mutated))
-
-
-def q71_length_outlier_filter(spark, sf_dir):
-    """Per-domain length-band quality gate (C4/Gopher shape): drop each
-    source's length-distribution tails via percent_rank, keep [5%, 95%],
-    roll up survivors per (source, lang). Ties share a rank, so the cut
-    is a pure function of the values — DuckDB mirrors the window
-    definition exactly."""
-    from .operators.curation import length_outlier_filter
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = length_outlier_filter(docs, lo=0.05, hi=0.95)
-    return kept.groupBy("source", "lang").agg(
-        F.count("*").alias("n_kept"),
-        F.min("n_chars").alias("min_len"),
-        F.max("n_chars").alias("max_len"),
-        F.sum("n_chars").alias("sum_len"),
-    )
-
-
 def q72_stream_stream_join(spark, sf_dir):
     """REAL two-source stream-stream join in the value-hash gate: two
     readStream sources over the events file (clicks / purchases), joined
@@ -1881,72 +1022,6 @@ def q72_stream_stream_join(spark, sf_dir):
         except Exception:
             pass
         shutil.rmtree(d, ignore_errors=True)
-
-
-def q73_streaming_session_window(spark, sf_dir):
-    """REAL streaming sessionization in the value-hash gate: readStream
-    over events, watermark + ``F.session_window`` (30-min gap), complete
-    mode so bounded replay emits every session including the tail ones a
-    watermark wouldn't have flushed yet (probed: append mode drops
-    sessions still inside the watermark horizon — the classic bounded-
-    replay pitfall q55 also avoids). Session assignment is gap-based and
-    timezone-independent; emitted bounds are min/max of the ORIGINAL NTZ
-    timestamps, so values never depend on session tz. The DuckDB oracle
-    states the same sessions relationally: a new session starts when the
-    gap from the previous same-user event is STRICTLY > 30 min (probed:
-    Spark merges an event landing exactly at prev_ts + gap — the window
-    end is inclusive for merging; pinned by the parity pytest). At
-    scale: one shuffle by user_id, state per OPEN session pruned by the
-    watermark (with an append/update sink; complete is gate-only)."""
-    import os
-    import shutil
-    import uuid
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    d = os.path.join(base, f"spark_graft_q73_{uuid.uuid4().hex[:12]}")
-    os.makedirs(os.path.join(d, "in"))
-    qname = "q73_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        shutil.copy(src, os.path.join(d, "in", "events.parquet"))
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema).parquet(os.path.join(d, "in"))
-            .withColumn("ts_evt", F.col("ts").cast("timestamp"))
-            .withWatermark("ts_evt", "1 hour")
-        )
-        agg = stream.groupBy(
-            F.session_window("ts_evt", "30 minutes"), "user_id"
-        ).agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_last"),
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        with _tmp_conf(spark, spark__sql__shuffle__partitions="8"):
-            sq = (
-                agg.select("user_id", "session_start", "session_last",
-                           "n_events", "sum_value")
-                .writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(d, "ckpt"))
-                .start()
-            )
-            sq.awaitTermination()
-        result = spark.table(qname)
-        rows = result.collect()  # materialize before sink view is dropped
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-        shutil.rmtree(d, ignore_errors=True)
-
-
-import contextlib
 
 
 @contextlib.contextmanager
@@ -2187,91 +1262,6 @@ def q77_jsonl_reader(spark, sf_dir):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def q78_window_containment(spark, sf_dir):
-    """Substring-window containment dedup (operators/dedup.
-    window_containment_stats — the Lee et al. exact-substring shape,
-    distinct from Jaccard similarity): planted prefix-copies of five
-    documents must flag as contained duplicates while unrelated docs
-    score zero. Fully value-hash oracled — windows, md5 keys, counts and
-    the flag are all deterministic."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    copies = docs.where(F.col("doc_id") < 5).select(
-        (F.col("doc_id") + 2_000_000).alias("doc_id"),
-        F.substring("text", 1, 200).alias("text"),
-    )
-    return dd.window_containment_stats(docs.unionByName(copies))
-
-
-def q79_incremental_minhash_dedup(spark, sf_dir):
-    """Incremental MinHash dedup (operators/dedup.minhash_lsh_incremental):
-    a 'new crawl batch' (docs 400+, plus planted truncated copies of ten
-    corpus docs) is deduped AGAINST the existing corpus (docs < 400)
-    without ever self-pairing the corpus — the path a daily ingest takes
-    against a 100 TB lake. The planted copies must surface with high
-    signature-estimate Jaccard; same deterministic MinHash family as
-    q22, so DuckDB mirrors every stage."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.where(F.col("doc_id") < 400)
-    fresh = docs.where(F.col("doc_id") >= 400)
-    planted = corpus.where(F.col("doc_id") < 10).select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"),
-        F.expr("substring(text, 1, length(text) - 30)").alias("text"),
-    )
-    return dd.minhash_lsh_incremental(
-        fresh.unionByName(planted), corpus, threshold=0.25
-    )
-
-
-def q80_stream_static_join(spark, sf_dir):
-    """Stream-static enrichment join — the remaining streaming join class
-    (q72 covers stream-stream): a live event stream joined to a STATIC
-    dimension (customer) needs no watermark and no state, because the
-    static side is just re-planned per micro-batch; at scale it's a
-    broadcast of the dim to every executor. Bounded replay == the batch
-    join, which is what the DuckDB oracle states. Aggregates per
-    (mktsegment, event_type) so the compared frame is small."""
-    import os
-    import shutil
-    import uuid
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    d = os.path.join(base, f"spark_graft_q80_{uuid.uuid4().hex[:12]}")
-    os.makedirs(os.path.join(d, "in"))
-    qname = "q80_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        shutil.copy(src, os.path.join(d, "in", "events.parquet"))
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(os.path.join(d, "in"))
-        dim = _t(spark, sf_dir, "customer").select(
-            F.col("c_custkey").alias("user_id"), "c_mktsegment"
-        )
-        enriched = stream.join(F.broadcast(dim), "user_id")
-        agg = enriched.groupBy("c_mktsegment", "event_type").agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        with _tmp_conf(spark, spark__sql__shuffle__partitions="8"):
-            sq = (
-                agg.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(d, "ckpt"))
-                .start()
-            )
-            sq.awaitTermination()
-        result = spark.table(qname)
-        rows = result.collect()  # materialize before sink view is dropped
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def q81_table_stream_source(spark, sf_dir):
     """The lakehouse table as a readStream SOURCE (Python Data Source
     API, streaming/table_source.py — the Delta/Iceberg table-streaming
@@ -2438,126 +1428,6 @@ def q84_kmv_distinct_sketch(spark, sf_dir):
         "doc_key", F.col("doc_id").cast("string")
     )
     return kmv_distinct_by_group(docs, ["source"], "doc_key", k=16)
-
-
-def q85_interval_range_join(spark, sf_dir):
-    """Bucketized interval (range) join (operators/rangejoin.py): every
-    97th order opens a 14-day fulfillment window; count the lineitems
-    (ANY order's) shipping inside each window. Naively this is a
-    points-x-intervals theta join (BroadcastNestedLoopJoin); the
-    operator turns it into an exploded-bucket EQUI join with an exact
-    residual filter — each qualifying pair produced exactly once, so
-    the aggregate hashes against DuckDB's plain inequality join."""
-    from .operators.rangejoin import interval_join
-
-    epoch = F.lit("1970-01-01")
-    windows = (
-        _t(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") % 97 == 0)
-        .select(
-            F.col("o_orderkey").alias("win_id"),
-            F.datediff(F.col("o_orderdate"), epoch).alias("ws"),
-            (F.datediff(F.col("o_orderdate"), epoch) + 14).alias("we"),
-        )
-    )
-    points = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_extendedprice",
-        F.datediff(F.col("l_shipdate"), epoch).alias("sd"),
-    )
-    joined = interval_join(points, windows, "sd", "ws", "we", bucket_width=7)
-    return joined.groupBy("win_id").agg(
-        F.count(F.lit(1)).alias("n_ship"),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-    )
-
-
-def q86_weighted_sample(spark, sf_dir):
-    """Deterministic weighted sampling (curation.weighted_sample, the
-    Efraimidis-Spirakis A-ES scheme over md5 uniforms): pick the 100
-    documents with the largest ln(u)/n_chars priority — inclusion odds
-    proportional to length, outcome a pure function of the ids, so the
-    SAMPLE ITSELF (not just its size) hashes against DuckDB."""
-    from .operators.curation import weighted_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return weighted_sample(docs, weight_col="n_chars", n=100)
-
-
-def q95_sessionize(spark, sf_dir):
-    """Sessionization (operators/eventops.sessionize): each user's
-    event stream split at >30-min inactivity gaps, per-session rollups.
-    One user_id shuffle; lag + running-sum windows share the exchange."""
-    from .operators.eventops import sessionize
-
-    events = _t(spark, sf_dir, "events")
-    return sessionize(events, gap_seconds=1800)
-
-
-def q96_funnel(spark, sf_dir):
-    """Ordered funnel (operators/eventops.funnel): signup -> view ->
-    click -> purchase with earliest-arrival strictly-after semantics;
-    per-stage reach + conversion vs stage 1."""
-    from .operators.eventops import funnel
-
-    events = _t(spark, sf_dir, "events")
-    return funnel(events, ["signup", "view", "click", "purchase"])
-
-
-def q97_retention_cohorts(spark, sf_dir):
-    """Weekly retention triangle (operators/eventops.retention_cohorts):
-    cohort = week of first event, distinct active users per
-    (cohort_week, week_offset)."""
-    from .operators.eventops import retention_cohorts
-
-    events = _t(spark, sf_dir, "events")
-    return retention_cohorts(events)
-
-
-def q98_bm25_scores(spark, sf_dir):
-    """Okapi BM25 retrieval scores (curation.bm25_scores): fixed term
-    set over documents; doc length rides with the token stream so the
-    only corpus shuffle is the (doc, term) tf aggregate; the df table
-    broadcasts."""
-    from .operators.curation import bm25_scores
-
-    docs = _t(spark, sf_dir, "documents")
-    return bm25_scores(docs, ["spark", "merge", "window"])
-
-
-def q99_ngram_heavy_hitters(spark, sf_dir):
-    """C4-style boilerplate heavy hitters (text.top_ngrams): top-20 word
-    trigrams corpus-wide with occurrence + document counts. Explode is
-    map-side; distinct-doc is a two-level aggregate (never an expand
-    plan); top-k is TakeOrdered, not a global sort."""
-    from .operators.text import top_ngrams
-
-    docs = _t(spark, sf_dir, "documents")
-    return top_ngrams(docs, n=3, k=20)
-
-
-def q102_shard_shuffle(spark, sf_dir):
-    """Deterministic epoch shuffle (curation.shard_shuffle): every
-    document gets a replayable (shard, pos) — md5-derived, so the
-    permutation is identical across cluster sizes and engines, unlike
-    orderBy(rand()). One hash shuffle + per-shard window; at corpus
-    scale n_shards ≈ output-file count so each partition is one task."""
-    from .operators.curation import shard_shuffle
-
-    docs = _t(spark, sf_dir, "documents")
-    return shard_shuffle(docs, n_shards=16, seed="ep1")
-
-
-def q103_cluster_representatives(spark, sf_dir):
-    """Keep-best-per-cluster (graph.cluster_representatives): MinHash-LSH
-    pairs → connected components → elect the longest member (ties:
-    smallest id) per near-dup cluster. The 'drop every duplicate but the
-    best copy' endgame; quality join is an equi-join, election is one
-    window over cluster_id — O(members), never O(corpus)."""
-    from .operators.graph import cluster_representatives
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = dd.minhash_lsh_pairs(d)
-    return cluster_representatives(d, pairs)
 
 
 def q100_copy_into(spark, sf_dir):
@@ -2727,1100 +1597,6 @@ def q104_auto_maintain(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q105_leakage_safe_split(spark, sf_dir):
-    """Leakage-safe train/val split (curation.leakage_safe_split): the
-    split decision hashes the near-dup CLUSTER id (MinHash-LSH pairs →
-    connected components), so near-duplicates can never straddle the
-    train/val boundary — the eval-contamination failure mode of per-doc
-    hash splits. Verified relationally: per (split, source) doc counts,
-    char mass, and distinct split units; the no-straddle invariant is
-    pinned in tests/test_training_data_ops.py."""
-    from .operators.curation import leakage_safe_split
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = dd.minhash_lsh_pairs(d)
-    return (
-        leakage_safe_split(d, pairs, val_frac=0.125, seed="0")
-        .groupBy("split", "source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("n_chars"),
-            F.countDistinct("split_unit").alias("n_units"),
-        )
-    )
-
-
-def q106_cross_source_overlap(spark, sf_dir):
-    """Cross-source duplication overlap matrix (dedup.cross_source_overlap):
-    per source pair, shared first-8-word fingerprints and the duplicate
-    document pairs they imply — the dedup-order triage a multi-dump
-    corpus runs first. Aggregate-first: the corpus collapses to one row
-    per (fingerprint, source) with a count BEFORE the self-join, so a
-    million-fold duplicate costs one row, not 10^12 join outputs."""
-    d = _t(spark, sf_dir, "documents")
-    return dd.cross_source_overlap(d, prefix_k=8)
-
-
-def q107_temperature_resample(spark, sf_dir):
-    """Temperature-scaled multilingual resampling
-    (curation.temperature_resample, the XLM-R alpha-smoothing scheme):
-    per-lang quota proportional to sqrt(n_docs) — low-resource langs
-    upweighted — filled by smallest-md5(id) rank, capped at the stratum
-    population. alpha=0.5 rides IEEE-exact sqrt so the DuckDB twin
-    reproduces quotas bit-for-bit; shares 9-dp-rounded before the quota
-    multiply (same cross-engine ulp guard as q86)."""
-    from .operators.curation import temperature_resample
-
-    d = _t(spark, sf_dir, "documents")
-    return temperature_resample(d, strata_col="lang", budget=200, alpha=0.5)
-
-
-def q108_perplexity_buckets(spark, sf_dir):
-    """CCNet-style perplexity head/middle/tail bucketing
-    (curation.perplexity_buckets): self-trained add-one bigram LM,
-    per-doc cross-entropy in nats (6-dp rounded), exact global tertiles
-    computed WITHOUT a single-partition window — global rank rides
-    distributed_cumsum (range shuffle + Arrow partition-local cumsum +
-    numPartitions-row offsets), then pure ntile arithmetic."""
-    from .operators.curation import perplexity_buckets
-
-    d = _t(spark, sf_dir, "documents")
-    return perplexity_buckets(d)
-
-
-def q109_quality_funnel(spark, sf_dir):
-    """Composed quality gate with first-failed-rule attribution
-    (curation.quality_funnel): length band → lang allowlist → Gopher
-    repetition → PII, evaluated in fixed order so the attrition funnel
-    (GROUP BY first_failed_rule) is additive. One codegen'd map stage
-    plus the single (id, token) aggregate; the corpus never self-joins."""
-    from .operators.curation import quality_funnel
-
-    d = _t(spark, sf_dir, "documents")
-    return quality_funnel(d)
-
-
-def q110_exact_quantiles(spark, sf_dir):
-    """Exact distributed quantiles (curation.exact_quantiles): p50/p90/p99
-    of document length by nearest rank — global rank via
-    distributed_cumsum (range shuffle + Arrow partition-local cumsum),
-    NOT Spark's exact percentile aggregate (which buffers the whole
-    column in one reducer) and NOT approx_percentile (inexact). Ties
-    break by doc_id so the picked value is deterministic."""
-    from .operators.curation import exact_quantiles
-
-    d = _t(spark, sf_dir, "documents")
-    return exact_quantiles(d, value_col="n_chars", qs=(0.5, 0.9, 0.99))
-
-
-def q111_grouped_exact_quantiles(spark, sf_dir):
-    """Per-source exact nearest-rank length quantiles
-    (curation.grouped_exact_quantiles): one shuffle on the group key,
-    window partitioned by source (scale-safe per group — the
-    whole-corpus case is q110's distributed rank), quantile dim
-    broadcast. The per-domain data-contract companion to q71."""
-    from .operators.curation import grouped_exact_quantiles
-
-    d = _t(spark, sf_dir, "documents")
-    return grouped_exact_quantiles(
-        d, group_col="source", value_col="n_chars", qs=(0.5, 0.9)
-    )
-
-
-def q112_unpivot(spark, sf_dir):
-    """UNPIVOT / melt (the missing inverse of q33's pivot): wide part
-    attributes to long (attr, val) rows via `stack` — a zero-shuffle
-    generator expression, n_attrs output rows per input row."""
-    p = _t(spark, sf_dir, "part")
-    return p.selectExpr(
-        "p_partkey",
-        "stack(2, 'p_size', cast(p_size as double), "
-        "'p_retailprice', p_retailprice) as (attr, val)",
-    )
-
-
-def q113_scd2_build(spark, sf_dir):
-    """SCD type-2 dimension build (operators/scd.scd2_build): the events
-    log becomes a versioned user-state dimension — consecutive duplicate
-    states collapse, each version carries a half-open [valid_from,
-    valid_to) interval. One shuffle on the key; ties break on event_id."""
-    from .operators.scd import scd2_build
-
-    e = _t(spark, sf_dir, "events")
-    return scd2_build(e, "user_id", "ts", "event_id", "event_type")
-
-
-def q114_point_in_time_join(spark, sf_dir):
-    """Point-in-time (temporal validity) join (operators/scd
-    .scd2_point_in_time): each purchase is enriched with the user-state
-    version valid AT its timestamp — equi-join on user_id with an
-    interval residual, the validity-interval complement of q28's as-of
-    join. Purchases before a user's first state row keep NULL state."""
-    from .operators.scd import scd2_build, scd2_point_in_time
-
-    e = _t(spark, sf_dir, "events")
-    dim = scd2_build(
-        e.where(F.col("event_type") != "purchase"),
-        "user_id", "ts", "event_id", "event_type",
-    )
-    probes = e.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    return scd2_point_in_time(dim, probes, "user_id", "ts")
-
-
-def q115_stats_profile(spark, sf_dir):
-    """Cross-engine-exact corr/covar/regression profiling
-    (operators/stats.exact_linear_stats): per-returnflag linear stats of
-    (quantity, price-in-cents) from DECIMAL(38,0)-exact integer moments
-    — order-independent, so the value hash can't flicker the way naive
-    double corr()/covar_samp() aggregates do. One map-side-combinable
-    aggregate; closed forms share their exact expression shape with the
-    DuckDB twin."""
-    from .operators.stats import exact_linear_stats
-
-    l = _t(spark, sf_dir, "lineitem")
-    return exact_linear_stats(
-        l,
-        "l_returnflag",
-        F.col("l_quantity").cast("long"),
-        F.round(F.col("l_extendedprice") * 100).cast("long"),
-    )
-
-
-def q116_histogram(spark, sf_dir):
-    """Equi-width histogram with cumulative distribution: arithmetic
-    binning (floor(x/width) — pushdown-friendly, no CASE ladder), then
-    cumulative count/fraction via windows over the AGGREGATED histogram
-    (a dozen rows — the global window runs post-reduction, never on the
-    fact table)."""
-    o = _t(spark, sf_dir, "orders")
-    h = (
-        o.where(F.col("o_totalprice").isNotNull())  # histogram of observed values
-        .select(
-            F.floor(F.col("o_totalprice") / F.lit(50000.0))
-            .cast("long")
-            .alias("bucket")
-        )
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n"))
-    )
-    w_cum = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy(F.lit(1))
-    return h.select(
-        "bucket",
-        (F.col("bucket") * 50000).cast("double").alias("bucket_lo"),
-        "n",
-        F.sum("n").over(w_cum).cast("long").alias("cum_n"),
-        F.round(F.sum("n").over(w_cum) / F.sum("n").over(w_all), 6).alias(
-            "cum_frac"
-        ),
-    )
-
-
-def q117_fuzzy_name_pairs(spark, sf_dir):
-    """Blocked Levenshtein fuzzy matching (operators/fuzzy
-    .blocked_levenshtein_pairs): entity-resolution dedup over part
-    names — distinct values aggregated FIRST (so the fact-table row
-    count never enters the pairing), blocked on the last name token,
-    verified with the codegen'd JVM levenshtein. Never all-pairs."""
-    from .operators.fuzzy import blocked_levenshtein_pairs
-
-    p = _t(spark, sf_dir, "part")
-    return blocked_levenshtein_pairs(
-        p,
-        "p_name",
-        "p_partkey",
-        F.element_at(F.split(F.col("p_name"), " "), -1),
-        max_dist=2,
-    )
-
-
-def q118_mixture_drift(spark, sf_dir):
-    """Per-source KL divergence vs the corpus language mix
-    (curation.mixture_drift): the drift monitor a multi-source ingest
-    runs per batch. One corpus scan into a (source, lang) count table;
-    every probability is an exact integer ratio."""
-    from .operators.curation import mixture_drift
-
-    d = _t(spark, sf_dir, "documents")
-    return mixture_drift(d, group_col="source", cat_col="lang")
-
-
-def q119_scd2_incremental_apply(spark, sf_dir):
-    """Incremental SCD2 apply (operators/scd.scd2_apply): fold a
-    CDC-append batch (post-cutoff events for user_id % 7 == 0) into the
-    pre-cutoff dimension — only affected keys are re-derived from their
-    change points; untouched keys pass through an anti-join unshuffled.
-    The oracle is the FULL REBUILD over the same effective log, so the
-    hash proves incremental == batch."""
-    from .operators.scd import scd2_apply, scd2_build
-
-    e = _t(spark, sf_dir, "events")
-    cutoff = F.lit("2024-01-29 00:00:00").cast("timestamp")
-    dim = scd2_build(
-        e.where(F.col("ts") <= cutoff), "user_id", "ts", "event_id", "event_type"
-    )
-    changes = e.where((F.col("ts") > cutoff) & (F.col("user_id") % 7 == 0))
-    return scd2_apply(dim, changes, "user_id", "ts", "event_id", "event_type")
-
-
-def q120_streaming_sliding_window(spark, sf_dir):
-    """Sliding (overlapping) windows complete the streaming window
-    family next to q55's tumbling and q73's session windows: 10-minute
-    windows sliding every 5, so each event lands in exactly two windows.
-    Same harness as q55 — readStream + watermark + Trigger.AvailableNow,
-    memory sink, complete mode; on a bounded replay the result must
-    equal the batch expansion, which is what the DuckDB oracle states
-    (each event UNION ALL'd into both its windows). Windows key on the
-    WATERMARKED tz column (required for state eviction when run
-    unbounded in append mode) with starts cast back to NTZ under the
-    session's pinned-UTC timezone (session.py), so the 5-minute
-    alignment matches the NTZ oracle arithmetic."""
-    import os
-    import shutil
-    import uuid
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    d = os.path.join(base, f"spark_graft_q120_{uuid.uuid4().hex[:12]}")
-    os.makedirs(os.path.join(d, "in"))
-    qname = "q120_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        shutil.copy(src, os.path.join(d, "in", "events.parquet"))
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(os.path.join(d, "in"))
-        stream = stream.withColumn("ts_evt", F.col("ts").cast("timestamp"))
-        # window on the WATERMARKED column (state is evictable when run
-        # unbounded in append mode); session tz is pinned UTC, so the
-        # start cast back to NTZ has the same 5-minute alignment
-        agg = (
-            stream.withWatermark("ts_evt", "1 hour")
-            .groupBy(
-                F.window(F.col("ts_evt"), "10 minutes", "5 minutes").alias("w"),
-                "event_type",
-            )
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-            .select(
-                F.col("w").getField("start")
-                .cast("timestamp_ntz")
-                .alias("window_start"),
-                "event_type", "n", "sum_value",
-            )
-        )
-        with _tmp_conf(spark, spark__sql__shuffle__partitions="8"):
-            sq = (
-                agg.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(d, "ckpt"))
-                .start()
-            )
-            sq.awaitTermination()
-        result = spark.table(qname)
-        rows = result.collect()  # materialize before sink view is dropped
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def q121_state_timeline(spark, sf_dir):
-    """Temporal interval analytics over the SCD2 dimension
-    (operators/scd.state_timeline): per-state occupancy (exact
-    microsecond totals) and PEAK CONCURRENCY via a distributed sweep
-    line — +1/-1 boundary events, running sum partitioned by state,
-    departures before arrivals at equal instants (half-open
-    intervals). One shuffle on the state key; everything downstream of
-    the dim build is exact integer arithmetic."""
-    from .operators.scd import scd2_build, state_timeline
-
-    e = _t(spark, sf_dir, "events")
-    dim = scd2_build(e, "user_id", "ts", "event_id", "event_type")
-    return state_timeline(dim, "user_id")
-
-
-def q122_rolling_zscore(spark, sf_dir):
-    """Rolling z-score anomaly detection
-    (eventops.rolling_zscore_anomalies): each value scored against its
-    own trailing-10 frame (exclusive — no lookahead), flagged at
-    |z| > 2 with >= 5 trailing samples and nonzero spread. One shuffle
-    on the key; both frame aggregates share the sort."""
-    from .operators.eventops import rolling_zscore_anomalies
-
-    e = _t(spark, sf_dir, "events")
-    return rolling_zscore_anomalies(e)
-
-
-def q123_cumulative_distinct(spark, sf_dir):
-    """Daily active / new / cumulative distinct users
-    (eventops.cumulative_distinct_users): the cumulative distinct curve
-    WITHOUT a running COUNT(DISTINCT) — each user marks only their
-    first day, so the running sum of news is the distinct total; the
-    window runs over the per-day aggregate, never the event log."""
-    from .operators.eventops import cumulative_distinct_users
-
-    e = _t(spark, sf_dir, "events")
-    return cumulative_distinct_users(e)
-
-
-def q124_copurchase_pairs(spark, sf_dir):
-    """Frequent co-purchased part pairs over lineitem
-    (operators/basket.copurchase_pairs): distinct-first, A-priori
-    support pruning BEFORE the self-join, pair generation as a plain
-    equi-join on the order key (never cartesian), lift from exact
-    integer counts. The quadratic stage is bounded by frequent-item
-    basket sizes only."""
-    from .operators.basket import copurchase_pairs
-
-    li = _t(spark, sf_dir, "lineitem")
-    return copurchase_pairs(
-        li, min_item_support=2, min_pair_support=2
-    )
-
-
-def q125_order_day_streaks(spark, sf_dir):
-    """Longest consecutive-order-day streak per customer
-    (eventops.activity_streaks): gaps-and-islands via day -
-    row_number, one shuffle on the customer key, distinct-first so the
-    island table is bounded by keys x days."""
-    from .operators.eventops import activity_streaks
-
-    o = _t(spark, sf_dir, "orders")
-    return activity_streaks(o, key_col="o_custkey", ts_col="o_orderdate")
-
-
-def q126_time_weighted_avg(spark, sf_dir):
-    """Time-weighted average event value per user
-    (eventops.time_weighted_avg): step-function semantics (each value
-    holds until the next observation), weighted sum in EXACT integer
-    micro-units x seconds summed as DECIMAL(38,0) so engines cannot
-    disagree on double summation order; one shuffle on the key."""
-    from .operators.eventops import time_weighted_avg
-
-    e = _t(spark, sf_dir, "events")
-    return time_weighted_avg(e)
-
-
-def q127_prorate_order_total(spark, sf_dir):
-    """Largest-remainder proration of each order's header total across
-    its lines (operators/allocate.prorate_largest_remainder): all
-    arithmetic in BIGINT cents — floor-div base shares, leftover cents
-    to the largest remainders, linenumber tiebreak — so per-order
-    allocations sum back EXACTLY to the header total. One shuffle on
-    the order key; the windows share the exchange."""
-    from .operators.allocate import prorate_largest_remainder
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("total_c"),
-    )
-    return prorate_largest_remainder(li.join(o, "l_orderkey"))
-
-
-def q128_token_entropy(spark, sf_dir):
-    """Per-document unigram Shannon entropy (operators/text.
-    token_entropy) — the curation gibberish/boilerplate signal; exact
-    integer counts, |vocab| logs, rounded 6 dp. Two map-side-combinable
-    aggregates, no token-stream windows."""
-    from .operators.text import token_entropy
-
-    d = _t(spark, sf_dir, "documents")
-    return token_entropy(d)
-
-
-def q129_event_transitions(spark, sf_dir):
-    """First-order Markov transition matrix over user event sequences
-    (eventops.event_transitions): lag window on the repo-wide (ts,
-    event_id) determinism contract, probability normalization over the
-    aggregated |states|^2 matrix — exact integer division rounded
-    6 dp."""
-    from .operators.eventops import event_transitions
-
-    e = _t(spark, sf_dir, "events")
-    return event_transitions(e)
-
-
-def q130_set_similarity_join(spark, sf_dir):
-    """EXACT token-set Jaccard join via prefix filtering
-    (dedup.set_similarity_join, AllPairs/PPJoin family): pairs with
-    Jaccard >= 0.75 over distinct-word sets. Complements q22's
-    probabilistic MinHash with an exact answer whose candidate economy
-    comes from rarest-first prefixes, not sketches; the oracle is the
-    brute-force token-sharing join, so the hash proves the prefix
-    filter is lossless. Threshold 0.9: the synthetic corpus is
-    pathologically self-similar (tiny vocab), so lower thresholds pass
-    a third of ALL pairs — 0.9 keeps the result near-dup-shaped and
-    the prefix filter visibly selective."""
-    from .operators.dedup import set_similarity_join
-
-    d = _t(spark, sf_dir, "documents")
-    return set_similarity_join(d, threshold=0.9)
-
-
-def q131_shingle_novelty(spark, sf_dir):
-    """Per-document shingle novelty (dedup.shingle_novelty): fraction
-    of each doc's distinct 3-gram shingles first seen (min doc_id) in
-    that doc — the dedup-aware marginal-information signal for
-    curation ordering. 60-bit int shingle keys, two shuffles, never
-    quadratic."""
-    from .operators.dedup import shingle_novelty
-
-    d = _t(spark, sf_dir, "documents")
-    return shingle_novelty(d, n=3)
-
-
-def q132_interarrival_burstiness(spark, sf_dir):
-    """Per-user inter-arrival stats + Goh-Barabási burstiness
-    (eventops.interarrival_stats): exact integer-microsecond gaps,
-    DECIMAL(38,0) moments, fixed-shape closed forms — the q115 recipe
-    applied to the traffic-shape diagnostic."""
-    from .operators.eventops import interarrival_stats
-
-    e = _t(spark, sf_dir, "events")
-    return interarrival_stats(e)
-
-
-def q133_streaming_dedup(spark, sf_dir):
-    """Streaming exactly-once-style dedup: the events file is delivered
-    TWICE (two copies in the stream source dir — at-least-once
-    delivery), and dropDuplicatesWithinWatermark on the event id keeps
-    one copy while the watermark bounds the dedup state (evictable —
-    runs unbounded). The q55/q120 harness (readStream + AvailableNow +
-    memory sink, append mode); the deduped rows are then batch
-    aggregated, and the oracle is the single-delivery batch aggregate —
-    a double-count on any row flips the hash."""
-    import os
-    import shutil
-    import uuid
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    d = os.path.join(base, f"spark_graft_q133_{uuid.uuid4().hex[:12]}")
-    os.makedirs(os.path.join(d, "in"))
-    qname = "q133_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        # at-least-once delivery: the same batch arrives twice
-        shutil.copy(src, os.path.join(d, "in", "events_a.parquet"))
-        shutil.copy(src, os.path.join(d, "in", "events_b.parquet"))
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(os.path.join(d, "in"))
-        stream = stream.withColumn("ts_evt", F.col("ts").cast("timestamp"))
-        deduped = stream.withWatermark("ts_evt", "1 hour").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        with _tmp_conf(spark, spark__sql__shuffle__partitions="8"):
-            sq = (
-                deduped.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(d, "ckpt"))
-                .start()
-            )
-            sq.awaitTermination()
-        result = (
-            spark.table(qname)
-            .groupBy(
-                F.date_trunc("hour", F.col("ts")).alias("hour_start"),
-                "event_type",
-            )
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        )
-        rows = result.collect()  # materialize before sink view is dropped
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def q134_column_profile(spark, sf_dir):
-    """Deequ-style column profile of orders (stats.profile_columns):
-    exact nulls/NDV/completeness + type-bucketed min/max, ONE aggregate
-    pass (multi-distinct via Expand), 1-row explode reshape — the
-    ingest-gate data-quality summary."""
-    from .operators.stats import profile_columns
-
-    o = _t(spark, sf_dir, "orders")
-    return profile_columns(o)
-
-
-def q135_recency_decay(spark, sf_dir):
-    """Recency-decayed engagement scores
-    (eventops.recency_decay_scores): half-life bucket weights are exact
-    powers of two on integer micro-units summed as DECIMAL(38,0) — zero
-    float summation order, one final constant division."""
-    from .operators.eventops import recency_decay_scores
-
-    e = _t(spark, sf_dir, "events")
-    return recency_decay_scores(
-        e, anchor="2024-02-01", half_life_days=7, max_age_days=28
-    )
-
-
-def q136_referential_integrity(spark, sf_dir):
-    """Foreign-key orphan audit across the star schema
-    (stats.referential_integrity_audit): anti-joins against
-    DISTINCT-collapsed parent keys, NULL FKs counted separately per SQL
-    FK semantics."""
-    from .operators.stats import referential_integrity_audit
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    p = _t(spark, sf_dir, "part")
-    s = _t(spark, sf_dir, "supplier")
-    return referential_integrity_audit(
-        [
-            ("lineitem->orders", li, "l_orderkey", o, "o_orderkey"),
-            ("lineitem->part", li, "l_partkey", p, "p_partkey"),
-            ("lineitem->supplier", li, "l_suppkey", s, "s_suppkey"),
-            ("orders->customer", o, "o_custkey", c, "c_custkey"),
-        ]
-    )
-
-
-def q137_session_paths(spark, sf_dir):
-    """Clickstream path mining (eventops.session_paths): first-5 event
-    types per q95-rule session joined into a path string, counted
-    across sessions and distinct users; NULL steps are real steps."""
-    from .operators.eventops import session_paths
-
-    e = _t(spark, sf_dir, "events")
-    return session_paths(e, gap_seconds=1800, max_steps=5)
-
-
-def q138_winsorized_mean(spark, sf_dir):
-    """Winsorized robust mean of order totals per priority
-    (stats.winsorized_mean): exact nearest-rank p10/p90 clamps on
-    integer cents, DECIMAL(38,0) sum, one final division."""
-    from .operators.stats import winsorized_mean
-
-    o = _t(spark, sf_dir, "orders")
-    return winsorized_mean(
-        o, group_col="o_orderpriority", value_col="o_totalprice",
-        tiebreak_col="o_orderkey",
-    )
-
-
-def q139_cusum_changepoint(spark, sf_dir):
-    """Change-point detection per event type
-    (eventops.cusum_changepoint): cumulative-deviation statistic on the
-    daily count series with denominators cleared (D_t·N integer), so
-    the argmax day is engine-stable; one division for the reported
-    statistic."""
-    from .operators.eventops import cusum_changepoint
-
-    e = _t(spark, sf_dir, "events")
-    return cusum_changepoint(e)
-
-
-def q140_negative_sampling(spark, sf_dir):
-    """Deterministic hash-bucketed negative sampling
-    (curation.negative_sampling): per purchasing user, 3 never-bought
-    items from the user's md5 bucket of the catalog, ranked by the
-    md5 of the (user, item) pair — reproducible, engine-portable, and
-    never users × catalog (bucket equi-join)."""
-    from .operators.curation import negative_sampling
-
-    e = _t(spark, sf_dir, "events")
-    k = F.regexp_extract(F.col("props"), r'"k": (\d+)', 1).cast("int")
-    base = (
-        e.where(F.col("props").isNotNull())
-        .withColumn("item_id", k)
-        .where(F.col("item_id").isNotNull())
-    )
-    pos = (
-        base.where(
-            (F.col("event_type") == "purchase") & F.col("user_id").isNotNull()
-        )
-        .select("user_id", "item_id")
-        .distinct()
-    )
-    items = base.select("item_id").distinct()
-    return negative_sampling(pos, items, k=3, n_buckets=8)
-
-
-def q141_embedding_diversity(spark, sf_dir):
-    """Per-label embedding diversity WITHOUT the pairwise join
-    (similarity.embedding_diversity): mean pairwise dot via the
-    sum-of-vectors identity |Σv|² − Σ|v|² on exact integer micro-units
-    — O(n·d), never O(n²·d)."""
-    from .operators.similarity import embedding_diversity
-
-    em = _t(spark, sf_dir, "embeddings")
-    return embedding_diversity(em)
-
-
-def q142_quantile_transform(spark, sf_dir):
-    """Per-group quantile normalization (stats.quantile_transform):
-    exact integer ranks under a total order, one division per row —
-    the cross-source score-calibration transform."""
-    from .operators.stats import quantile_transform
-
-    o = _t(spark, sf_dir, "orders")
-    return quantile_transform(
-        o, group_col="o_orderpriority", value_col="o_totalprice",
-        tiebreak_col="o_orderkey",
-    )
-
-
-def q143_robust_outliers(spark, sf_dir):
-    """Median/MAD robust outlier summary (stats.robust_outliers):
-    exact nearest-rank median and MAD in integer cents, outlier flags
-    as pure integer comparisons |v − med| > k·MAD."""
-    from .operators.stats import robust_outliers
-
-    o = _t(spark, sf_dir, "orders")
-    return robust_outliers(
-        o, group_col="o_orderpriority", value_col="o_totalprice",
-        tiebreak_col="o_orderkey", k=3,
-    )
-
-
-def q144_gini_concentration(spark, sf_dir):
-    """Per-flag Gini coefficient of line revenue
-    (stats.gini_concentration): the exact rank formula with integer
-    cents × integer ranks summed as DECIMAL(38,0); one division per
-    group."""
-    from .operators.stats import gini_concentration
-
-    li = _t(spark, sf_dir, "lineitem").withColumn(
-        "_tb", F.col("l_orderkey") * 10 + F.col("l_linenumber")
-    )
-    return gini_concentration(
-        li, group_col="l_returnflag", value_col="l_extendedprice",
-        tiebreak_col="_tb",
-    )
-
-
-def q145_ab_welch_t(spark, sf_dir):
-    """Two-sample Welch t per event type (stats.welch_t_stats): variant
-    = even user id, values in exact integer micro-units, per-arm
-    moments as DECIMAL(38,0) conditional sums in ONE aggregate, t from
-    fixed-shape closed forms (means reported in micro-units)."""
-    from .operators.stats import welch_t_stats
-
-    e = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    return welch_t_stats(
-        e,
-        group_col="event_type",
-        variant_col=F.col("user_id") % 2 == 0,
-        value_int=F.round(F.col("value") * 1e6).cast("long"),
-    )
-
-
-def q146_rolling_distinct_users(spark, sf_dir):
-    """Exact 7-day rolling distinct users (WAU) per spine day
-    (eventops.rolling_distinct_users): each distinct user-day expands
-    into its 7 report days, so the rolling distinct is a plain
-    count-distinct — exact, no HLL, bounded 7× expansion."""
-    from .operators.eventops import rolling_distinct_users
-
-    e = _t(spark, sf_dir, "events")
-    return rolling_distinct_users(e, window_days=7)
-
-
-def q147_cohort_ltv(spark, sf_dir):
-    """Cohort LTV triangle over orders (eventops.cohort_ltv): integer
-    month offsets, integer-cent revenue, running DECIMAL(38,0)
-    cumulative over the aggregated cells."""
-    from .operators.eventops import cohort_ltv
-
-    o = _t(spark, sf_dir, "orders")
-    return cohort_ltv(
-        o, key_col="o_custkey", ts_col="o_orderdate", value_col="o_totalprice"
-    )
-
-
-def q148_conversion_lag(spark, sf_dir):
-    """Signup→purchase conversion-lag distribution
-    (eventops.conversion_lag): first-to-first lag in exact integer
-    microseconds, mean from DECIMAL(38,0) sums, median by exact
-    nearest-rank."""
-    from .operators.eventops import conversion_lag
-
-    e = _t(spark, sf_dir, "events")
-    return conversion_lag(e, from_step="signup", to_step="purchase")
-
-
-def q149_triangle_count(spark, sf_dir):
-    """Exact triangle count + transitivity of the co-purchase graph
-    (graph.triangle_stats over q124's frequent pairs): canonical a<b<c
-    wedge enumeration via two equi-joins, exact DECIMAL wedge totals,
-    one division for transitivity."""
-    from .operators.basket import copurchase_pairs
-    from .operators.graph import triangle_stats
-
-    li = _t(spark, sf_dir, "lineitem")
-    edges = copurchase_pairs(
-        li, min_item_support=2, min_pair_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-    return triangle_stats(edges)
-
-
-def q150_pareto_abc(spark, sf_dir):
-    """Pareto/ABC revenue classification per return flag
-    (basket.pareto_abc): integer-cent cumulative shares, pure integer
-    class boundaries (cum·100 ≤ total·pct), windows over the
-    aggregated item table only."""
-    from .operators.basket import pareto_abc
-
-    li = _t(spark, sf_dir, "lineitem")
-    return pareto_abc(li)
-
-
-def q151_exact_stratified_split(spark, sf_dir):
-    """Exact-total stratified split (curation.exact_stratified_split):
-    integer basis-point quotas, largest-remainder leftover allocation,
-    md5-rank row selection — Σ n_test = N·bp // 10000 exactly."""
-    from .operators.curation import exact_stratified_split
-
-    d = _t(spark, sf_dir, "documents")
-    return exact_stratified_split(d, strata_col="source", id_col="doc_id",
-                                  test_bp=2000)
-
-
-def q152_sketch_calibration(spark, sf_dir):
-    """MinHash sketch calibration vs exact Jaccard
-    (dedup.sketch_calibration): precision/recall of the q22 candidates
-    against the no-cut exact pair set at the same threshold, MAE of the
-    estimator over hits from integer-scaled diffs."""
-    from .operators.dedup import sketch_calibration
-
-    d = _t(spark, sf_dir, "documents")
-    return sketch_calibration(d, threshold=0.25)
-
-
-def q153_last_touch_attribution(spark, sf_dir):
-    """Last-touch revenue attribution per channel
-    (eventops.last_touch_attribution): last-ignore-nulls over the
-    (ts, event_id) order with an UNBOUNDED..1 PRECEDING frame;
-    '(direct)' for first-event conversions; integer-cent revenue."""
-    from .operators.eventops import last_touch_attribution
-
-    e = _t(spark, sf_dir, "events")
-    return last_touch_attribution(e)
-
-
-def q154_pmi_pairs(spark, sf_dir):
-    """Token-pair PMI at the document level (text.pmi_pairs): exact
-    doc-frequency counts, doc-keyed pair equi-join with support floor,
-    one ln on one exact ratio."""
-    from .operators.text import pmi_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return pmi_pairs(d, min_pair_docs=50)
-
-
-def q155_rfm_segments(spark, sf_dir):
-    """RFM quartile segmentation over orders (basket.rfm_segments):
-    exact ntiles on the per-customer aggregate with (metric, key)
-    tiebreaks; integer-cent monetary."""
-    from .operators.basket import rfm_segments
-
-    o = _t(spark, sf_dir, "orders")
-    return rfm_segments(o)
-
-
-def q156_linear_attribution(spark, sf_dir):
-    """Linear multi-touch attribution with exact money
-    (eventops.linear_attribution): equal split across distinct prior
-    channels, largest-remainder cents — channel revenue reconciles to
-    total conversion revenue exactly."""
-    from .operators.eventops import linear_attribution
-
-    e = _t(spark, sf_dir, "events")
-    return linear_attribution(e)
-
-
-def q157_frequent_triples(spark, sf_dir):
-    """Level-3 A-priori frequent triples (basket.frequent_triples):
-    double downward-closure prune (items, then two pair legs) before
-    the 3-way basket join; exact integer supports."""
-    from .operators.basket import frequent_triples
-
-    li = _t(spark, sf_dir, "lineitem")
-    return frequent_triples(
-        li, min_item_support=2, min_pair_support=2, min_triple_support=2
-    )
-
-
-def q158_skew_profile(spark, sf_dir):
-    """Join-key skew profiler (stats.skew_profile): exact per-key
-    counts, max-share skew factor, top-k heavy keys — the pre-join
-    broadcast/salt decision input (q36's companion)."""
-    from .operators.stats import skew_profile
-
-    e = _t(spark, sf_dir, "events")
-    return skew_profile(e, key_col="user_id", top_k=5)
-
-
-def q159_dedup_burden(spark, sf_dir):
-    """Per-source exact-duplicate burden (dedup.dedup_burden): dup rate
-    and reclaimable characters from pure content-hash aggregates — the
-    dedup-budget triage readout."""
-    from .operators.dedup import dedup_burden
-
-    d = _t(spark, sf_dir, "documents")
-    return dedup_burden(d)
-
-
-def q160_hierarchical_shares(spark, sf_dir):
-    """Hierarchical contribution analysis: nation revenue share within
-    region and region share of total, from one star join (dims
-    broadcast) and two window levels over the AGGREGATED (region,
-    nation) table — exact integer cents until the two share
-    divisions."""
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    rev = (
-        o.where(F.col("o_totalprice").isNotNull())
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100).cast("long").cast(
-                    "decimal(38,0)"
-                )
-            ).alias("rev_c"),
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-        )
-    )
-    w_r = Window.partitionBy("r_name")
-    w_all = Window.partitionBy()
-    return rev.select(
-        "r_name",
-        "n_name",
-        "n_orders",
-        F.round(F.col("rev_c").cast("double") / 100.0, 6).alias("revenue"),
-        F.round(
-            F.col("rev_c").cast("double")
-            / F.sum("rev_c").over(w_r).cast("double"),
-            6,
-        ).alias("nation_share_of_region"),
-        F.round(
-            F.sum("rev_c").over(w_r).cast("double")
-            / F.sum("rev_c").over(w_all).cast("double"),
-            6,
-        ).alias("region_share_of_total"),
-    )
-
-
-def q161_hard_negatives(spark, sf_dir):
-    """Hard-negative mining for contrastive training
-    (similarity.hard_negatives): per query (vec_id < 8), the 3 nearest
-    DIFFERENT-label neighbors by 4-dp cosine — q25's broadcast plan
-    with the label filter before ranking."""
-    from .operators.similarity import hard_negatives
-
-    em = _t(spark, sf_dir, "embeddings")
-    return hard_negatives(em, em.where(F.col("vec_id") < 8), k=3)
-
-
-def q162_privacy_audit(spark, sf_dir):
-    """k-anonymity / l-diversity audit over customer
-    (stats.privacy_audit): quasi-identifiers (nation, market segment),
-    sensitive = account balance; exact class counts, one division for
-    the exposed share."""
-    from .operators.stats import privacy_audit
-
-    c = _t(spark, sf_dir, "customer")
-    return privacy_audit(
-        c, quasi_cols=["c_nationkey", "c_mktsegment"],
-        sensitive_col="c_acctbal", k_threshold=5,
-    )
-
-
-def q163_converting_paths(spark, sf_dir):
-    """Which journeys convert (eventops.session_conversion_paths):
-    q137's first-5 paths joined with a whole-session conversion flag;
-    exact counts, one division per path."""
-    from .operators.eventops import session_conversion_paths
-
-    e = _t(spark, sf_dir, "events")
-    return session_conversion_paths(e)
-
-
-def q164_effective_tokens(spark, sf_dir):
-    """Post-dedup token budget per source (text.effective_tokens): raw
-    vs distinct-text-once token counts and the duplication factor — the
-    training-run sizing number (q159's chars analog in tokens)."""
-    from .operators.text import effective_tokens
-
-    d = _t(spark, sf_dir, "documents")
-    return effective_tokens(d)
-
-
-def q165_integer_pagerank(spark, sf_dir):
-    """Exact integer PageRank over the co-purchase graph
-    (graph.pagerank_integer): 3 iterations of floor-division mass
-    passing — no float in the loop, so an iterative rank is value-hash
-    stable across engines; oracled against an unrolled CTE chain."""
-    from .operators.basket import copurchase_pairs
-    from .operators.graph import pagerank_integer
-
-    li = _t(spark, sf_dir, "lineitem")
-    edges = copurchase_pairs(
-        li, min_item_support=2, min_pair_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-    return pagerank_integer(edges, iterations=3)
-
-
-def q166_order_reconciliation(spark, sf_dir):
-    """Header-vs-lines financial reconciliation
-    (stats.order_reconciliation): integer-cent comparison of every
-    order's header total against its line sum; matched/drifted/
-    lineless/headerless counters plus worst and total drift."""
-    from .operators.stats import order_reconciliation
-
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    return order_reconciliation(o, li)
-
-
-def q167_duplicate_payments(spark, sf_dir):
-    """Duplicate-payment sweep (stats.duplicate_payments): same
-    customer, same integer-cent amount, within 7 days — equi-join on
-    (customer, amount), day window as residual filter."""
-    from .operators.stats import duplicate_payments
-
-    o = _t(spark, sf_dir, "orders")
-    return duplicate_payments(o, window_days=7)
-
-
-def q168_shipping_sla(spark, sf_dir):
-    """Shipping-SLA percentiles per priority: exact nearest-rank
-    p50/p90/p99 of ship lag (days from order to line shipment) via
-    curation.grouped_exact_quantiles on the joined derived metric —
-    operator reuse on a computed column."""
-    from .operators.curation import grouped_exact_quantiles
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_orderdate"
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    lag = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(F.col("l_shipdate").isNotNull() & F.col("o_orderdate").isNotNull())
-        .select(
-            F.col("o_orderpriority").alias("prio"),
-            F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-            .cast("long")
-            .alias("lag_days"),
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("lid"),
-        )
-    )
-    return grouped_exact_quantiles(
-        lag, group_col="prio", value_col="lag_days", id_col="lid",
-        qs=(0.5, 0.9, 0.99),
-    )
-
-
-def q169_shard_rebalance(spark, sf_dir):
-    """Shard-count change impact, modulo vs rendezvous hashing
-    (curation.shard_rebalance_diff): 8 → 10 shards; consistent hashing
-    moves ~20% of rows where modulo moves 80% (measured 0.1984 vs
-    0.7994 at sf0.1 — both match theory)."""
-    from .operators.curation import shard_rebalance_diff
-
-    d = _t(spark, sf_dir, "documents")
-    return shard_rebalance_diff(d, n_from=8, n_to=10)
-
-
-def q170_bucketed_colocated_join(spark, sf_dir):
-    """Shuffle-free fact-fact join via writer-side bucketing
-    (bucketing.bucketed_join): both sides land bucketed+sorted on the
-    join key, so the SortMergeJoin needs NO Exchange on either side
-    (plan pinned by tests/test_bucketing.py) — the write-once,
-    join-free-forever layout a recurring 100 TB pipeline amortizes."""
-    import os
-
-    from .operators.bucketing import bucketed_join
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    j = bucketed_join(
-        spark, li, o, "l_orderkey", "o_orderkey", 8,
-        names=("q170_lineitem", "q170_orders"),
-        location=os.path.join(base, "spark_graft_bucketed_db"),
-    )
-    return j.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue"),
-    )
-
-
-def q171_watermark_lateness(spark, sf_dir):
-    """Watermark-tuning lateness profile (eventops.
-    watermark_lateness_audit): exact distributed prefix-max of event
-    time in arrival order — per-type counts by lateness bucket; reads
-    as 'which withWatermark delay keeps which share of events'."""
-    from .operators.eventops import watermark_lateness_audit
-
-    e = _t(spark, sf_dir, "events")
-    return watermark_lateness_audit(e)
-
-
-def q172_greedy_allocation(spark, sf_dir):
-    """FCFS supply allocation waterfall (allocate.greedy_allocation):
-    per-part budget = 60% of demand (integer div), lines filled in
-    (shipdate, line id) order via an exclusive running sum — per-part
-    fill stats. One shuffle on the part key."""
-    from .operators.allocate import greedy_allocation
-
-    li = _t(spark, sf_dir, "lineitem")
-    demand = li.where(
-        F.col("l_partkey").isNotNull() & F.col("l_quantity").isNotNull()
-    ).select(
-        F.col("l_partkey").alias("key"),
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.unix_micros(F.col("l_shipdate").cast("timestamp")).alias("prio"),
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("line_id"),
-    )
-    budgets = demand.groupBy("key").agg(
-        F.expr("sum(qty) * 3 div 5").cast("long").alias("budget")
-    )
-    return greedy_allocation(demand, budgets)
-
-
-def q173_benford_audit(spark, sf_dir):
-    """Benford first-digit screen over order totals (stats.
-    benford_audit): observed vs log10(1+1/d) expectation with
-    chi-square terms, digits from exact integer cents."""
-    from .operators.stats import benford_audit
-
-    o = _t(spark, sf_dir, "orders")
-    return benford_audit(o, amount_col="o_totalprice")
-
-
-def q174_seasonality_index(spark, sf_dir):
-    """Day-of-week seasonal index per event type (eventops.
-    seasonality_index): exact DECIMAL micro-unit moments, arithmetic
-    epoch-day DOW so engines can't disagree on week conventions."""
-    from .operators.eventops import seasonality_index
-
-    e = _t(spark, sf_dir, "events")
-    return seasonality_index(e)
-
-
 def q175_transcript_audit(spark, sf_dir):
     """Canonical-transcript integrity audit (transcripts.as_transcripts
     → conversation_shape_audit): the events log projected to the
@@ -3832,58 +1608,6 @@ def q175_transcript_audit(spark, sf_dir):
 
     e = _t(spark, sf_dir, "events")
     return conversation_shape_audit(as_transcripts(e))
-
-
-def q176_fifo_lot_matching(spark, sf_dir):
-    """FIFO lot consumption (fifo.fifo_match + fifo_lot_summary):
-    demand = lineitems per part in shipdate order; supply = 4 equal
-    lots per part sized ceil(demand/4). The FIFO decomposition is the
-    cumulative-interval overlap — two window cumsums + one equi-join,
-    zero iteration."""
-    from .operators.fifo import fifo_lot_summary, fifo_match
-
-    li = _t(spark, sf_dir, "lineitem")
-    demand = li.where(
-        F.col("l_partkey").isNotNull()
-        & F.col("l_quantity").isNotNull()
-        & (F.col("l_quantity") > 0)
-    ).select(
-        F.col("l_partkey").alias("key"),
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.unix_micros(F.col("l_shipdate").cast("timestamp")).alias("prio"),
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("line_id"),
-    )
-    lots = (
-        demand.groupBy("key")
-        .agg(F.expr("(sum(qty) + 3) div 4").cast("long").alias("lot_qty"))
-        .select(
-            "key",
-            F.explode(F.sequence(F.lit(0), F.lit(3))).alias("lot_id"),
-            "lot_qty",
-        )
-        .withColumn("lot_id", F.col("lot_id").cast("int"))
-    )
-    m = fifo_match(
-        demand, lots,
-        key_col="key", demand_qty_col="qty",
-        demand_order_cols=["prio", "line_id"], demand_id_col="line_id",
-        supply_qty_col="lot_qty", supply_order_cols=["lot_id"],
-        supply_id_col="lot_id",
-    )
-    return fifo_lot_summary(m, lots)
-
-
-def q177_bootstrap_ci(spark, sf_dir):
-    """Deterministic Poisson-bootstrap CI for mean order value
-    (stats.bootstrap_ci): md5-derived Poisson(1) weights, exact
-    integer-cent resample sums, nearest-rank CI over 200 resample
-    means — the web-scale bootstrap, made value-hash reproducible."""
-    from .operators.stats import bootstrap_ci
-
-    o = _t(spark, sf_dir, "orders")
-    return bootstrap_ci(
-        o, "o_totalprice", "o_orderkey", n_resamples=200, seed=42
-    )
 
 
 def q178_context_budget(spark, sf_dir):
@@ -3997,224 +1721,6 @@ def q188_context_pack_examples(spark, sf_dir):
     return context_pack_examples(as_transcripts(e), budget_chars=1000)
 
 
-def q189_dup_span_audit(spark, sf_dir):
-    """Char-level exact substring-duplication audit (dedup.
-    dup_span_audit): 20-char windows occurring >= 2 times corpus-wide,
-    merged to maximal per-document spans; exact ppm coverage."""
-    d = _t(spark, sf_dir, "documents")
-    return dd.dup_span_audit(d, gram_chars=20, min_count=2)
-
-
-def q190_inverted_index(spark, sf_dir):
-    """Inverted-index build (text.inverted_index): per term df/cf plus
-    an exact order-independent posting-list signature (sum-mod-2^61 of
-    per-doc position fingerprints) — map-side combinable, no unbounded
-    sorted collect."""
-    d = _t(spark, sf_dir, "documents")
-    return tx.inverted_index(d)
-
-
-def q191_tfidf_cosine_pairs(spark, sf_dir):
-    """Sparse lexical similarity (similarity.tfidf_cosine_pairs):
-    IDF-weighted set cosine with rare-shingle blocking — integer
-    weights make every dot product / norm an exact BIGINT sum."""
-    d = _t(spark, sf_dir, "documents")
-    return sim.tfidf_cosine_pairs(
-        d, shingle_n=2, df_cap=20, min_df=2, min_cosine=0.3
-    )
-
-
-def q192_tool_latency_quantiles(spark, sf_dir):
-    """Per-tool execution-latency exact quantiles: tool turn -> gap to
-    the next turn (integer micros), then grouped nearest-rank p50/p95
-    (curation.grouped_exact_quantiles) keyed by tool."""
-    from .operators.curation import grouped_exact_quantiles
-    from .operators.transcripts import as_transcripts
-
-    tr = as_transcripts(_t(spark, sf_dir, "events"))
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    t = tr.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-    ).withColumn("next_ts", F.lead("ts_us").over(w))
-    lat = t.where(
-        (F.col("role") == "tool")
-        & F.col("tool").isNotNull()
-        & F.col("next_ts").isNotNull()
-    ).select(
-        "tool",
-        (F.col("next_ts") - F.col("ts_us")).alias("lat_us"),
-        F.concat_ws(
-            ":", "conv_id", F.col("turn_idx").cast("string")
-        ).alias("tid"),
-    )
-    return grouped_exact_quantiles(
-        lat, group_col="tool", value_col="lat_us", id_col="tid",
-        qs=(0.5, 0.95),
-    )
-
-
-def q193_kcore(spark, sf_dir):
-    """k-core decomposition of the co-purchase graph (graph.kcore):
-    fixed-round distributed peeling, k=3 — exact integer degrees,
-    oracled against an unrolled CTE chain (the q165 pattern)."""
-    from .operators.basket import copurchase_pairs
-    from .operators.graph import kcore
-
-    li = _t(spark, sf_dir, "lineitem")
-    edges = copurchase_pairs(
-        li, min_item_support=2, min_pair_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-    return kcore(edges, k=3, rounds=6)
-
-
-def q194_target_encode_loo(spark, sf_dir):
-    """Leave-one-out target encoding (stats.target_encode_loo): the
-    leakage-safe categorical feature — per event, the mean value of
-    the OTHER events of its type; exact cents + integer DIV."""
-    from .operators.stats import target_encode_loo
-
-    e = _t(spark, sf_dir, "events")
-    return target_encode_loo(
-        e, key_col="event_type", value_col="value", id_col="event_id"
-    )
-
-
-def q195_equidepth_drift(spark, sf_dir):
-    """Distribution-drift audit (stats.equidepth_drift): equi-depth
-    deciles from the pre-median-ts half, per-bucket population shares
-    of both halves in exact ppm — PSI semantics with zero ln()."""
-    from .operators.stats import equidepth_drift
-
-    e = _t(spark, sf_dir, "events")
-    return equidepth_drift(
-        e, value_col="value", ts_col="ts", id_col="event_id", n_buckets=10
-    )
-
-
-def q196_interpolated_quantiles(spark, sf_dir):
-    """percentile_cont semantics distributed (curation.
-    interpolated_quantiles): linear interpolation between the two
-    nearest global ranks via distributed_cumsum — raw IEEE doubles,
-    bit-identical in any engine."""
-    from .operators.curation import interpolated_quantiles
-
-    d = _t(spark, sf_dir, "documents")
-    return interpolated_quantiles(
-        d, value_col="n_chars", qs=(0.25, 0.5, 0.75, 0.95)
-    )
-
-
-def q197_association_rules(spark, sf_dir):
-    """Directional association rules (basket.association_rules):
-    exact-ppm confidence over the frequent co-purchase pairs, lift
-    carried from the pair table."""
-    from .operators.basket import association_rules
-
-    li = _t(spark, sf_dir, "lineitem")
-    return association_rules(
-        li, min_confidence_ppm=100_000,
-        min_item_support=2, min_pair_support=2,
-    )
-
-
-def q198_kmeans_integer(spark, sf_dir):
-    """Exact integer Lloyd k-means (similarity.kmeans_integer): k=8,
-    2 rounds, 1e6-quantized vectors — every distance and centroid an
-    exact integer, argmin tiebreak by cluster id; oracled against an
-    unrolled CTE chain."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return sim.kmeans_integer(emb, k=8, rounds=2)
-
-
-def _conv_docs(tr):
-    """One document per conversation: turn texts in turn order joined
-    with single spaces — the shared input of q199 (near-dup) and q200
-    (curation pipeline)."""
-    return tr.groupBy("conv_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                lambda x: x["text"],
-            ),
-            " ",
-        ).alias("text")
-    )
-
-
-def q199_conversation_neardup(spark, sf_dir):
-    """Near-duplicate CONVERSATIONS: concatenate each conversation's
-    turn texts in turn order into one document, then the q22 MinHash →
-    LSH banding → signature-verify pipeline keyed by conv_id — the
-    relaxation of q180's exact conversation dedup to near-dup."""
-    from .operators.transcripts import as_transcripts
-
-    tr = as_transcripts(_t(spark, sf_dir, "events"))
-    convdoc = _conv_docs(tr)
-    return dd.minhash_lsh_pairs(
-        convdoc, threshold=0.25, num_hashes=12, bands=3, n=3,
-        id_col="conv_id",
-    )
-
-
-def q200_transcript_training_pipeline(spark, sf_dir):
-    """Composed TRANSCRIPT curation pipeline (the q56 flagship, rebased
-    onto conversations): canonical projection → conversation-level
-    exact dedup (q180 keepers) → MinHash near-dup removal (q199 pairs,
-    greedy drop of the higher conv_id) → quality gate (>= 3 turns,
-    50..5000 chars) → per-survivor serving cost (q186 pricing) and
-    context-pack example count (q188). Every stage is an equi-join or
-    bounded aggregate over the shared conv_id shuffle."""
-    from .operators.transcripts import (
-        as_transcripts,
-        context_pack_examples,
-        conversation_cost,
-        conversation_dedup,
-    )
-
-    from .operators.dedup import _finish_release
-
-    # four stages fan out from the same projection: persist it once
-    tr = as_transcripts(_t(spark, sf_dir, "events")).persist()
-    keepers = conversation_dedup(tr).where(F.col("is_canonical")).select(
-        "conv_id"
-    )
-    convdoc = _conv_docs(tr)
-    pairs = dd.minhash_lsh_pairs(
-        convdoc, threshold=0.25, num_hashes=12, bands=3, n=3,
-        id_col="conv_id",
-    )
-    dropped = pairs.select(F.col("b").alias("conv_id")).distinct()
-    cost = conversation_cost(tr).select(
-        "conv_id", "n_turns", "total_chars", "cost_micros"
-    )
-    examples = context_pack_examples(tr, budget_chars=1000).select(
-        "conv_id", "n_examples"
-    )
-    result = (
-        cost.join(keepers, "conv_id")
-        .join(dropped, "conv_id", "left_anti")
-        .where(
-            (F.col("n_turns") >= 3)
-            & F.col("total_chars").between(50, 5000)
-        )
-        .join(examples, "conv_id", "left")
-        .select(
-            "conv_id",
-            "n_turns",
-            "total_chars",
-            "cost_micros",
-            F.coalesce(F.col("n_examples"), F.lit(0).cast("long")).alias(
-                "n_examples"
-            ),
-        )
-    )
-    return _finish_release(result, tr)
-
-
 def q201_streaming_context_budget(spark, sf_dir):
     """STATEFUL streaming in the value-hash gate: per-conversation
     running char budget via applyInPandasWithState
@@ -4285,70 +1791,6 @@ def q201_streaming_context_budget(spark, sf_dir):
         except Exception:
             pass
         shutil.rmtree(d, ignore_errors=True)
-
-
-def q202_variant_shred(spark, sf_dir):
-    """Semi-structured shredding through Spark 4's VARIANT type:
-    try_parse_json(props) -> typed try_variant_get extraction (NULL on
-    malformed/missing, never an error) -> per-type aggregate with the
-    exact integer-DIV average. The open-schema ingestion path a
-    transcript lakehouse uses for tool payloads; binary VARIANT scans
-    beat per-row get_json_object at scale (shredded columnar access)."""
-    e = _t(spark, sf_dir, "events")
-    v = e.select(
-        "event_type",
-        F.try_variant_get(
-            F.try_parse_json(F.col("props")), "$.k", "long"
-        ).alias("k"),
-    )
-    g = v.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.count("k").cast("long").alias("n_with_k"),
-        F.sum("k").cast("long").alias("sum_k"),
-    )
-    return g.select(
-        "event_type",
-        "n_events",
-        "n_with_k",
-        "sum_k",
-        F.when(
-            F.col("n_with_k") > 0,
-            F.round(
-                F.expr("(sum_k * 1000000) DIV n_with_k").cast("double")
-                / F.lit(1_000_000.0),
-                6,
-            ),
-        ).alias("avg_k"),
-    )
-
-
-def q203_ann_recall_eval(spark, sf_dir):
-    """Offline ANN index-quality audit: recall@5 of BOTH approximate
-    indexes (q53's IVF, q26's multi-table sign-LSH) against q25's exact
-    brute-force ground truth, per (method, query). The missing third leg
-    of the ANN family — building an approximate index without measuring
-    its recall on a ground-truth sample is how silent retrieval
-    regressions ship. Exact ground truth is computed once and shared by
-    both method legs; the recall joins are O(|queries| * k)."""
-    e = _t(spark, sf_dir, "embeddings")
-    queries_ = e.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # eager localCheckpoint, not persist: both recall legs (and their AQE
-    # stage jobs) would re-analyze the whole brute-force plan every job
-    # and race the cold cache; the checkpoint materializes ground truth
-    # once and cuts it to a flat scan for both consumers
-    exact = sim.brute_force_topk(e, queries_, k=5).localCheckpoint(eager=True)
-    ivf = sim.ivf_ann_topk(e, queries_, dim=64, k=5, n_cells=16, nprobe=4)
-    lsh = sim.lsh_ann_topk(e, queries_, dim=64, k=5, n_planes=6, n_tables=4)
-    legs = [
-        sim.ann_recall(exact, ivf, k=5).withColumn("method", F.lit("ivf")),
-        sim.ann_recall(exact, lsh, k=5).withColumn("method", F.lit("lsh")),
-    ]
-    result = legs[0].unionByName(legs[1]).select(
-        "method", "query_id", "n_exact", "n_hits", "recall_at_k"
-    )
-    return dd._finish_release(result)
 
 
 def q205_dynamic_file_pruning(spark, sf_dir):
@@ -4430,19 +1872,6 @@ def q208_sft_examples(spark, sf_dir):
     return sft_examples(tr, budget_chars=100)
 
 
-def q209_ivf_incremental_assign(spark, sf_dir):
-    """Incremental IVF index maintenance (similarity.
-    ivf_assign_incremental): centroids frozen on the base corpus
-    (vec_id < 400), the new ingest batch (vec_id >= 400) assigned by a
-    pure projection — per-row (vec_id, cell) postings, fully value-hash
-    oracled because every stage (md5 seeds, 6-dp Lloyd means, 5-dp
-    argmax cosines) is deterministic."""
-    e = _t(spark, sf_dir, "embeddings")
-    base = e.where(F.col("vec_id") < 400)
-    new = e.where(F.col("vec_id") >= 400)
-    return sim.ivf_assign_incremental(base, new, dim=64, n_cells=16)
-
-
 def q210_preference_pipeline(spark, sf_dir):
     """Composed DPO preference-data pipeline (the q200 flagship shape
     for the preference path): q204's pairs -> quality gate (non-trivial
@@ -4488,87 +1917,6 @@ def q211_cache_economics(spark, sf_dir):
     return cache_economics(tr)
 
 
-def q212_vector_index_lifecycle(spark, sf_dir):
-    """Vector-index-as-lakehouse-table lifecycle: the base corpus's IVF
-    postings (q209's quantizer applied to the base itself) are written
-    through the REAL table format, the new ingest batch's postings land
-    as an incremental append COMMIT, and the final per-cell profile is
-    read back from the table — proving the daily index-maintenance path
-    (build -> append -> scan) end to end, not just the assignment math.
-    Postings carry cell stats so a per-cell member fetch prunes files."""
-    import shutil
-    import uuid
-
-    from .table import scan
-    from .table.meta import Table
-    from .table.writer import write_files
-
-    e = _t(spark, sf_dir, "embeddings")
-    base = e.where(F.col("vec_id") < 400)
-    # ONE quantizer build + assignment of the whole corpus, split into
-    # the two commit legs by id (review finding — two
-    # ivf_assign_incremental calls rebuilt the identical frozen
-    # centroids twice)
-    post = sim.ivf_assign_incremental(base, e, dim=64, n_cells=16).persist()
-    base_post = post.where(F.col("vec_id") < 400)
-    new_post = post.where(F.col("vec_id") >= 400)
-    broot = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(broot, f"spark_graft_q212_{uuid.uuid4().hex[:12]}")
-    try:
-        t = Table.create(root)
-        entries = write_files(spark, t, base_post, 4, "index-build",
-                              stat_columns=("cell",))
-        t.commit_append(entries, {"op": "index-build"})
-        entries = write_files(spark, t, new_post, 2, "index-append",
-                              stat_columns=("cell",))
-        t.commit_append(entries, {"op": "index-append"})
-        posted = scan(spark, Table.load(root), schema=base_post.schema)
-        result = posted.groupBy("cell").agg(
-            F.count(F.lit(1)).cast("long").alias("n_vectors"),
-            F.min("vec_id").cast("long").alias("min_vec"),
-            F.max("vec_id").cast("long").alias("max_vec"),
-            F.sum((F.col("vec_id") >= 400).cast("long"))
-            .cast("long").alias("n_incremental"),
-        )
-        rows = result.collect()  # materialize before the temp table dies
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        post.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def q213_index_staleness(spark, sf_dir):
-    """Index-staleness audit: after incremental ingest (q209), how far
-    has the FROZEN base-corpus quantizer drifted from a fresh full
-    rebuild? Every vector is assigned under both quantizers and the
-    per-frozen-cell disagreement is reported in exact integer ppm — the
-    'rebuild the index now?' signal an ANN serving stack alarms on.
-    Both assignment legs are the same deterministic pure-projection
-    machinery, so the drift itself is value-hash oracled."""
-    e = _t(spark, sf_dir, "embeddings")
-    base = e.where(F.col("vec_id") < 400)
-    frozen = sim.ivf_assign_incremental(base, e, dim=64, n_cells=16)
-    fresh = sim.ivf_assign_incremental(e, e, dim=64, n_cells=16).select(
-        "vec_id", F.col("cell").alias("cell_fresh")
-    )
-    j = frozen.join(fresh, "vec_id")
-    return (
-        j.groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_vectors"),
-            F.sum((F.col("cell") != F.col("cell_fresh")).cast("long"))
-            .cast("long").alias("n_moved"),
-        )
-        .select(
-            "cell",
-            "n_vectors",
-            "n_moved",
-            F.expr("(n_moved * 1000000) DIV n_vectors")
-            .cast("long").alias("moved_ppm"),
-        )
-    )
-
-
 def q214_turn_windows(spark, sf_dir):
     """Overlapping turn-granularity training windows per conversation
     (transcripts.turn_windows): 8-turn windows at stride 4, zero-shuffle
@@ -4587,51 +1935,6 @@ def q215_window_dedup(spark, sf_dir):
 
     tr = as_transcripts(_t(spark, sf_dir, "events"))
     return window_dedup(tr, window_turns=8, stride=4)
-
-
-def q216_window_packing(spark, sf_dir):
-    """End of the long-conversation training pipeline: q214's windows,
-    q215's canonical survivors, then concat-and-chunk packing offsets
-    into 500-char training packs via the exact distributed prefix sum
-    (curation.distributed_cumsum — no single-partition global window).
-    Output per canonical window: start offset in the virtual stream and
-    the first/last pack it lands in (windows may straddle packs, the
-    GPT pre-training shape). Zero-char windows pin to their start pack."""
-    from .operators.curation import distributed_cumsum
-    from .operators.transcripts import as_transcripts, window_dedup
-
-    budget = 500
-    tr = as_transcripts(_t(spark, sf_dir, "events"))
-    # include_chars: ONE window expansion + aggregate serves both the
-    # dedup decision and the char counts (review finding — previously a
-    # second turn_windows pass joined back per window)
-    w = (
-        window_dedup(tr, window_turns=8, stride=4, include_chars=True)
-        .where(F.col("is_canonical"))
-        .select(
-            F.format_string("%s#%06d", F.col("conv_id"), F.col("window_id"))
-            .alias("wkey"),
-            "conv_id",
-            "window_id",
-            "n_chars",
-        )
-    )
-    cum = distributed_cumsum(
-        w, order_col="wkey", value_col="n_chars", out_col="_cum"
-    )
-    start = (F.col("_cum") - F.col("n_chars")).cast("long")
-    first = F.floor(start / budget).cast("long")
-    last = F.greatest(first, F.floor((F.col("_cum") - 1) / budget).cast("long"))
-    result = cum.select(
-        "conv_id",
-        "window_id",
-        "n_chars",
-        start.alias("start_offset"),
-        first.alias("first_pack"),
-        last.alias("last_pack"),
-        (last - first + 1).alias("n_packs_spanned"),
-    )
-    return result
 
 
 def _dist_docs_table(spark, sf_dir, root, hist=None, cm=None,
@@ -4975,189 +2278,39 @@ def q223_key_overlap_estimate(spark, sf_dir):
 
 
 ALL = {
-    "q01_groupby_agg": q01_groupby_agg,
-    "q02_join_agg": q02_join_agg,
-    "q03_broadcast_dim_join": q03_broadcast_dim_join,
-    "q04_window_dedup_latest": q04_window_dedup_latest,
     "q05_validation_filter": q05_validation_filter,
     "q06_invalid_complement": q06_invalid_complement,
     "q07_value_buckets": q07_value_buckets,
-    "q08_group_counts": q08_group_counts,
-    "q09_union_dedup": q09_union_dedup,
-    "q10_except": q10_except,
     "q11_date_parts": q11_date_parts,
-    "q12_string_clean": q12_string_clean,
-    "q13_topk_per_group": q13_topk_per_group,
-    "q14_json_extract": q14_json_extract,
-    "q15_windowed_time_agg": q15_windowed_time_agg,
-    "q16_sessionize": q16_sessionize,
     "q17_merge_upsert": q17_merge_upsert,
-    "q18_count_distinct": q18_count_distinct,
-    "q19_text_analysis": q19_text_analysis,
-    "q20_exact_dedup": q20_exact_dedup,
-    "q21_ngram_jaccard": q21_ngram_jaccard,
-    "q22_minhash_lsh": q22_minhash_lsh,
-    "q23_simhash": q23_simhash,
-    "q24_embedding_neardup": q24_embedding_neardup,
-    "q25_ann_topk": q25_ann_topk,
-    "q26_lsh_ann_topk": q26_lsh_ann_topk,
-    "q28_asof_join": q28_asof_join,
-    "q29_keep_latest_dedup": q29_keep_latest_dedup,
     "q30_maintenance_lifecycle": q30_maintenance_lifecycle,
-    "q31_sql_over_views": q31_sql_over_views,
-    "q27_range_join": q27_range_join,
-    "q32_rollup": q32_rollup,
-    "q33_conditional_pivot": q33_conditional_pivot,
-    "q34_intersect": q34_intersect,
-    "q35_multimodal_decode": q35_multimodal_decode,
     "q36_skew_salted_agg": q36_skew_salted_agg,
-    "q37_cube": q37_cube,
-    "q38_exact_percentiles": q38_exact_percentiles,
-    "q39_semi_anti_join": q39_semi_anti_join,
-    "q40_explode_token_counts": q40_explode_token_counts,
-    # ordering note (round 4): the driver's CORRECTNESS gate caps at 50
-    # rows in dict order. The heavyweight table-format/streaming/pipeline
-    # queries (q51-q62) sit INSIDE or just beyond the window; everything
-    # that overflows to the judge's own oracle run (q44-q50, q63-q84) has
-    # a DuckDB twin — `python tools/check_oracles.py --bare` sweeps all
-    # 84 green (see BENCH/BASELINE.md session logs).
-    "q51_deterministic_sample": q51_deterministic_sample,
-    "q52_dedup_clusters": q52_dedup_clusters,
-    "q53_ivf_ann_topk": q53_ivf_ann_topk,
     "q54_rowlevel_lifecycle": q54_rowlevel_lifecycle,
-    "q55_streaming_windowed_agg": q55_streaming_windowed_agg,
-    "q56_training_pipeline": q56_training_pipeline,
     "q57_cdc_changes": q57_cdc_changes,
     "q58_partitioned_scan": q58_partitioned_scan,
     "q59_partition_evolution": q59_partition_evolution,
     "q60_branch_isolation": q60_branch_isolation,
     "q61_exactly_once_ingest": q61_exactly_once_ingest,
     "q62_partial_progress_compact": q62_partial_progress_compact,
-    "q41_running_sum": q41_running_sum,
-    "q42_collect_sorted_set": q42_collect_sorted_set,
-    "q43_ntile_buckets": q43_ntile_buckets,
-    "q44_multiway_dim_join": q44_multiway_dim_join,
-    "q45_grouping_sets": q45_grouping_sets,
-    "q46_above_customer_avg": q46_above_customer_avg,
-    "q47_argmax_per_group": q47_argmax_per_group,
-    "q48_date_spine_gapfill": q48_date_spine_gapfill,
-    "q49_rank_distributions": q49_rank_distributions,
-    "q50_embedding_centroids": q50_embedding_centroids,
-    "q63_decontamination": q63_decontamination,
-    "q64_sequence_packing": q64_sequence_packing,
-    "q65_repetition_quality": q65_repetition_quality,
-    "q66_stratified_sample": q66_stratified_sample,
-    "q67_tfidf_scores": q67_tfidf_scores,
-    "q68_domain_mix": q68_domain_mix,
-    "q69_pii_redaction": q69_pii_redaction,
-    "q70_normalized_dedup": q70_normalized_dedup,
-    "q71_length_outlier_filter": q71_length_outlier_filter,
     "q72_stream_stream_join": q72_stream_stream_join,
-    "q73_streaming_session_window": q73_streaming_session_window,
     "q74_csv_reader_roundtrip": q74_csv_reader_roundtrip,
     "q75_xlsx_reader": q75_xlsx_reader,
     "q76_analyze_stats": q76_analyze_stats,
     "q77_jsonl_reader": q77_jsonl_reader,
-    "q78_window_containment": q78_window_containment,
-    "q79_incremental_minhash_dedup": q79_incremental_minhash_dedup,
-    "q80_stream_static_join": q80_stream_static_join,
     "q81_table_stream_source": q81_table_stream_source,
     "q82_bloom_point_lookup": q82_bloom_point_lookup,
     "q83_matview_incremental": q83_matview_incremental,
     "q84_kmv_distinct_sketch": q84_kmv_distinct_sketch,
-    "q85_interval_range_join": q85_interval_range_join,
-    "q86_weighted_sample": q86_weighted_sample,
     "q87_schema_evolution_lifecycle": q87_schema_evolution_lifecycle,
-    "q88_semdedup": q88_semdedup,
     "q89_metadata_count": q89_metadata_count,
     "q90_retention_delete": q90_retention_delete,
     "q91_cdf_stream_replay": q91_cdf_stream_replay,
     "q92_generic_cluster": q92_generic_cluster,
     "q93_manifest_ndv_sketch": q93_manifest_ndv_sketch,
-    "q94_chunk_documents": q94_chunk_documents,
-    "q95_sessionize": q95_sessionize,
-    "q96_funnel": q96_funnel,
-    "q97_retention_cohorts": q97_retention_cohorts,
-    "q98_bm25_scores": q98_bm25_scores,
-    "q99_ngram_heavy_hitters": q99_ngram_heavy_hitters,
     "q100_copy_into": q100_copy_into,
     "q101_cdc_replication": q101_cdc_replication,
-    "q102_shard_shuffle": q102_shard_shuffle,
-    "q103_cluster_representatives": q103_cluster_representatives,
     "q104_auto_maintain": q104_auto_maintain,
-    "q105_leakage_safe_split": q105_leakage_safe_split,
-    "q106_cross_source_overlap": q106_cross_source_overlap,
-    "q107_temperature_resample": q107_temperature_resample,
-    "q108_perplexity_buckets": q108_perplexity_buckets,
-    "q109_quality_funnel": q109_quality_funnel,
-    "q110_exact_quantiles": q110_exact_quantiles,
-    "q111_grouped_exact_quantiles": q111_grouped_exact_quantiles,
-    "q112_unpivot": q112_unpivot,
-    "q113_scd2_build": q113_scd2_build,
-    "q114_point_in_time_join": q114_point_in_time_join,
-    "q115_stats_profile": q115_stats_profile,
-    "q116_histogram": q116_histogram,
-    "q117_fuzzy_name_pairs": q117_fuzzy_name_pairs,
-    "q118_mixture_drift": q118_mixture_drift,
-    "q119_scd2_incremental_apply": q119_scd2_incremental_apply,
-    "q120_streaming_sliding_window": q120_streaming_sliding_window,
-    "q121_state_timeline": q121_state_timeline,
-    "q122_rolling_zscore": q122_rolling_zscore,
-    "q123_cumulative_distinct": q123_cumulative_distinct,
-    "q124_copurchase_pairs": q124_copurchase_pairs,
-    "q125_order_day_streaks": q125_order_day_streaks,
-    "q126_time_weighted_avg": q126_time_weighted_avg,
-    "q127_prorate_order_total": q127_prorate_order_total,
-    "q128_token_entropy": q128_token_entropy,
-    "q129_event_transitions": q129_event_transitions,
-    "q130_set_similarity_join": q130_set_similarity_join,
-    "q131_shingle_novelty": q131_shingle_novelty,
-    "q132_interarrival_burstiness": q132_interarrival_burstiness,
-    "q133_streaming_dedup": q133_streaming_dedup,
-    "q134_column_profile": q134_column_profile,
-    "q135_recency_decay": q135_recency_decay,
-    "q136_referential_integrity": q136_referential_integrity,
-    "q137_session_paths": q137_session_paths,
-    "q138_winsorized_mean": q138_winsorized_mean,
-    "q139_cusum_changepoint": q139_cusum_changepoint,
-    "q140_negative_sampling": q140_negative_sampling,
-    "q141_embedding_diversity": q141_embedding_diversity,
-    "q142_quantile_transform": q142_quantile_transform,
-    "q143_robust_outliers": q143_robust_outliers,
-    "q144_gini_concentration": q144_gini_concentration,
-    "q145_ab_welch_t": q145_ab_welch_t,
-    "q146_rolling_distinct_users": q146_rolling_distinct_users,
-    "q147_cohort_ltv": q147_cohort_ltv,
-    "q148_conversion_lag": q148_conversion_lag,
-    "q149_triangle_count": q149_triangle_count,
-    "q150_pareto_abc": q150_pareto_abc,
-    "q151_exact_stratified_split": q151_exact_stratified_split,
-    "q152_sketch_calibration": q152_sketch_calibration,
-    "q153_last_touch_attribution": q153_last_touch_attribution,
-    "q154_pmi_pairs": q154_pmi_pairs,
-    "q155_rfm_segments": q155_rfm_segments,
-    "q156_linear_attribution": q156_linear_attribution,
-    "q157_frequent_triples": q157_frequent_triples,
-    "q158_skew_profile": q158_skew_profile,
-    "q159_dedup_burden": q159_dedup_burden,
-    "q160_hierarchical_shares": q160_hierarchical_shares,
-    "q161_hard_negatives": q161_hard_negatives,
-    "q162_privacy_audit": q162_privacy_audit,
-    "q163_converting_paths": q163_converting_paths,
-    "q164_effective_tokens": q164_effective_tokens,
-    "q165_integer_pagerank": q165_integer_pagerank,
-    "q166_order_reconciliation": q166_order_reconciliation,
-    "q167_duplicate_payments": q167_duplicate_payments,
-    "q168_shipping_sla": q168_shipping_sla,
-    "q169_shard_rebalance": q169_shard_rebalance,
-    "q170_bucketed_colocated_join": q170_bucketed_colocated_join,
-    "q171_watermark_lateness": q171_watermark_lateness,
-    "q172_greedy_allocation": q172_greedy_allocation,
-    "q173_benford_audit": q173_benford_audit,
-    "q174_seasonality_index": q174_seasonality_index,
     "q175_transcript_audit": q175_transcript_audit,
-    "q176_fifo_lot_matching": q176_fifo_lot_matching,
-    "q177_bootstrap_ci": q177_bootstrap_ci,
     "q178_context_budget": q178_context_budget,
     "q179_response_latency": q179_response_latency,
     "q180_conversation_dedup": q180_conversation_dedup,
@@ -5169,34 +2322,16 @@ ALL = {
     "q186_conversation_cost": q186_conversation_cost,
     "q187_boilerplate_turns": q187_boilerplate_turns,
     "q188_context_pack_examples": q188_context_pack_examples,
-    "q189_dup_span_audit": q189_dup_span_audit,
-    "q190_inverted_index": q190_inverted_index,
-    "q191_tfidf_cosine_pairs": q191_tfidf_cosine_pairs,
-    "q192_tool_latency_quantiles": q192_tool_latency_quantiles,
-    "q193_kcore": q193_kcore,
-    "q194_target_encode_loo": q194_target_encode_loo,
-    "q195_equidepth_drift": q195_equidepth_drift,
-    "q196_interpolated_quantiles": q196_interpolated_quantiles,
-    "q197_association_rules": q197_association_rules,
-    "q198_kmeans_integer": q198_kmeans_integer,
-    "q199_conversation_neardup": q199_conversation_neardup,
-    "q200_transcript_training_pipeline": q200_transcript_training_pipeline,
     "q201_streaming_context_budget": q201_streaming_context_budget,
-    "q202_variant_shred": q202_variant_shred,
-    "q203_ann_recall_eval": q203_ann_recall_eval,
     "q204_preference_pairs": q204_preference_pairs,
     "q205_dynamic_file_pruning": q205_dynamic_file_pruning,
     "q206_truncation_audit": q206_truncation_audit,
     "q207_grounding_audit": q207_grounding_audit,
     "q208_sft_examples": q208_sft_examples,
-    "q209_ivf_incremental_assign": q209_ivf_incremental_assign,
     "q210_preference_pipeline": q210_preference_pipeline,
     "q211_cache_economics": q211_cache_economics,
-    "q212_vector_index_lifecycle": q212_vector_index_lifecycle,
-    "q213_index_staleness": q213_index_staleness,
     "q214_turn_windows": q214_turn_windows,
     "q215_window_dedup": q215_window_dedup,
-    "q216_window_packing": q216_window_packing,
     "q217_manifest_histogram": q217_manifest_histogram,
     "q218_metadata_quantiles": q218_metadata_quantiles,
     "q219_cm_heavy_hitters": q219_cm_heavy_hitters,

@@ -15,7 +15,19 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+_MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def driver_memory() -> str:
+    """Driver heap size: ``$SPARK_DRIVER_MEMORY`` if set, else a quarter
+    of the host's ``MemTotal`` capped at 16g, so the JVM can always
+    reserve its heap next to the Python workers and the page cache."""
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    # physical pages x page size: the kernel's MemTotal, on any POSIX host
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(total_mb // 4, _MAX_DRIVER_MEM_MB)}m"
 
 
 def get_spark(
@@ -27,8 +39,7 @@ def get_spark(
     """Build (or reuse) a local SparkSession.
 
     ``cores`` sets ``local[N]``; default comes from $SPARK_GRAFT_CPUS or
-    ``local[*]``. In bench mode callers stop the session and rebuild with a
-    different core count to evidence N→4N scaling (BASELINE.md).
+    ``local[*]``. The driver heap comes from :func:`driver_memory`.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -56,19 +67,13 @@ def get_spark(
         # stat layer (table/stats.py) needs TIMESTAMP_MICROS for ts skipping
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", _DRIVER_MEM)
-        # Xms=Xmx: G1 never shrinks the heap below Xms, so pages fault in
-        # once and stay — under virtualization, heap grow/shrink re-faults
-        # pages through the hypervisor mid-job (measured multi-second
-        # stalls at high parallelism). Lazy faulting (no AlwaysPreTouch)
-        # avoids forcing the host to back the full heap upfront.
-        .config("spark.driver.extraJavaOptions", f"-Xms{_DRIVER_MEM}")
+        .config("spark.driver.memory", driver_memory())
         # concurrent maintenance jobs (file-group rewrites) share the cluster
         .config("spark.scheduler.mode", "FAIR")
     )
     # Shuffle spill dir: this sandbox has ONE virtio disk (~460 MB/s) shared
     # by all executor threads — a real cluster's shuffle bandwidth scales
-    # with executors. RAM-backed local dir keeps the scaling benchmark
+    # with executors. A RAM-backed local dir keeps shuffle-heavy jobs
     # measuring the engine, not the single disk.
     shm = os.environ.get("SPARK_LOCAL_SHM", "/dev/shm/spark_local")
     if os.path.isdir("/dev/shm"):
@@ -82,7 +87,7 @@ def get_spark(
 
 
 def stop_spark() -> None:
-    """Stop the active session (bench uses this to switch core counts)."""
+    """Stop the active session."""
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()

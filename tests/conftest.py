@@ -8,6 +8,7 @@ its jobs — SURVEY.md §5 'notable weakness').
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -21,7 +22,8 @@ N_TURNS = 4000
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    s = get_spark(app_name="tests", cores=cores, shuffle_partitions=8)
     yield s
 
 

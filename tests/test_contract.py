@@ -32,14 +32,6 @@ def test_entry_module_contract():
     assert set(o) <= set(q)
 
 
-def test_bench_headline_queries_exist():
-    import bench
-
-    from e_commerce_lakehouse_spark.queries import ALL as QUERIES
-
-    assert set(bench.HEADLINE) <= set(QUERIES)
-
-
 def test_oracle_sql_is_wellformed_duckdb():
     """Every oracle parses in DuckDB (no execution — views are absent)."""
     import duckdb

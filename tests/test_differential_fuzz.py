@@ -29,55 +29,7 @@ _spec.loader.exec_module(check_oracles)
 
 # documents-only queries (no other tables, no table-build lifecycle)
 FUZZ_QUERIES = [
-    "q19_text_analysis",
-    "q20_exact_dedup",
-    "q21_ngram_jaccard",
-    "q22_minhash_lsh",
-    "q23_simhash",
-    "q35_multimodal_decode",
-    "q40_explode_token_counts",
-    "q51_deterministic_sample",
-    "q52_dedup_clusters",
-    "q63_decontamination",
-    "q64_sequence_packing",
-    "q65_repetition_quality",
-    "q66_stratified_sample",
-    "q67_tfidf_scores",
-    "q68_domain_mix",
-    "q69_pii_redaction",
-    "q70_normalized_dedup",
-    "q71_length_outlier_filter",
-    "q78_window_containment",
-    "q79_incremental_minhash_dedup",
     "q84_kmv_distinct_sketch",
-    "q86_weighted_sample",
-    "q94_chunk_documents",
-    "q98_bm25_scores",
-    "q99_ngram_heavy_hitters",
-    "q102_shard_shuffle",
-    "q103_cluster_representatives",
-    "q105_leakage_safe_split",
-    "q106_cross_source_overlap",
-    "q107_temperature_resample",
-    "q108_perplexity_buckets",
-    "q109_quality_funnel",
-    "q110_exact_quantiles",
-    "q111_grouped_exact_quantiles",
-    "q118_mixture_drift",
-    "q128_token_entropy",
-    "q130_set_similarity_join",
-    "q131_shingle_novelty",
-    "q151_exact_stratified_split",
-    "q152_sketch_calibration",
-    "q154_pmi_pairs",
-    "q159_dedup_burden",
-    "q164_effective_tokens",
-    "q169_shard_rebalance",
-    # round-5 final batch (documents-based)
-    "q189_dup_span_audit",
-    "q190_inverted_index",
-    "q191_tfidf_cosine_pairs",
-    "q196_interpolated_quantiles",
 ]
 
 VOCAB = [

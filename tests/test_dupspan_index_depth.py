@@ -1,112 +1,9 @@
-"""Closed-form tests for the q189/q190 operators and the metadata-only
-clustering-depth report: char-level dup-span merging, inverted-index
-posting signatures, and overlap depth before/after clustering."""
+"""Closed-form tests for the metadata-only clustering-depth report:
+overlap depth before/after clustering, and a column without stats."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from e_commerce_lakehouse_spark.operators import cluster, clustering_depth_report
-from e_commerce_lakehouse_spark.operators.dedup import dup_span_audit
-from e_commerce_lakehouse_spark.operators.text import inverted_index
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-# ---- dup_span_audit ------------------------------------------------------
-
-
-def test_dup_span_merges_overlapping_windows(spark):
-    # Two docs share the same 30-char block: every 20-gram inside it is
-    # duplicated; merged span covers exactly the 30 shared chars.
-    shared = "0123456789abcdefghijklmnopqrs!"  # 30 chars
-    d = _docs(
-        spark,
-        [
-            (1, "XXXX" + shared + "YYYYYYYYYY"),
-            (2, "ZZZZZZZZ" + shared + "WWWW"),
-        ],
-    )
-    out = {r.doc_id: r for r in dup_span_audit(d, gram_chars=20).collect()}
-    assert set(out) == {1, 2}
-    for r in out.values():
-        assert r.n_dup_spans == 1
-        assert r.dup_chars == 30
-
-
-def test_dup_span_self_repetition_counts(spark):
-    # One doc repeating its own 20-gram twice: both occurrences marked.
-    blk = "a" * 20
-    d = _docs(spark, [(1, blk + "X" * 5 + blk)])
-    r = dup_span_audit(d, gram_chars=20).collect()[0]
-    # 'aaaa...' windows overlap heavily; the marked region is both
-    # blocks (and nothing from the X spacer beyond window bleed).
-    assert r.n_dup_spans >= 1
-    assert r.dup_chars >= 40
-    assert r.dup_frac_ppm == r.dup_chars * 1_000_000 // 45
-
-
-def test_dup_span_unique_corpus_empty(spark):
-    d = _docs(
-        spark,
-        [(1, "完全unique text one with no repeats at all here"),
-         (2, "another entirely different string, nothing shared")],
-    )
-    assert dup_span_audit(d, gram_chars=20).count() == 0
-
-
-def test_dup_span_short_docs_skipped(spark):
-    d = _docs(spark, [(1, "short"), (2, "short")])
-    assert dup_span_audit(d, gram_chars=20).count() == 0
-
-
-# ---- inverted_index ------------------------------------------------------
-
-
-def test_inverted_index_df_cf(spark):
-    d = _docs(
-        spark,
-        [(1, "the cat and the hat"), (2, "the cat"), (3, "hat trick")],
-    )
-    out = {r.term: r for r in inverted_index(d).collect()}
-    assert out["the"].df == 2 and out["the"].cf == 3
-    assert out["cat"].df == 2 and out["cat"].cf == 2
-    assert out["hat"].df == 2 and out["hat"].cf == 2
-    assert out["trick"].df == 1 and out["trick"].cf == 1
-    assert all(0 <= r.postings_sig < 2**61 for r in out.values())
-
-
-def test_inverted_index_signature_is_position_sensitive(spark):
-    # same df/cf but different positions -> different signature
-    a = inverted_index(_docs(spark, [(1, "x y")])).where("term = 'x'")
-    b = inverted_index(_docs(spark, [(1, "y x")])).where("term = 'x'")
-    sa = a.collect()[0]
-    sb = b.collect()[0]
-    assert (sa.df, sa.cf) == (sb.df, sb.cf) == (1, 1)
-    assert sa.postings_sig != sb.postings_sig
-
-
-def test_inverted_index_signature_order_independent(spark):
-    # the per-term combine is commutative: doc order can't matter
-    d1 = _docs(spark, [(1, "w"), (2, "q w")])
-    d2 = _docs(spark, [(2, "q w"), (1, "w")])
-    s1 = inverted_index(d1).where("term = 'w'").collect()[0].postings_sig
-    s2 = inverted_index(d2).where("term = 'w'").collect()[0].postings_sig
-    assert s1 == s2
-
-
-def test_inverted_index_case_and_whitespace_normalized(spark):
-    out = {
-        r.term: r
-        for r in inverted_index(
-            _docs(spark, [(1, "  The   THE the ")])
-        ).collect()
-    }
-    assert list(out) == ["the"]
-    assert out["the"].cf == 3 and out["the"].df == 1
 
 
 # ---- clustering_depth_report --------------------------------------------
@@ -131,29 +28,3 @@ def test_depth_report_missing_column_all_missing(spark, tiny_table):
     rep = clustering_depth_report(tiny_table, "nope")
     assert rep["n_with_stats"] == 0 and rep["n_missing_stats"] == rep["n_files"]
     assert rep["max_depth"] == 0 and rep["total_overlap_pairs"] == 0
-
-
-def test_dup_span_plan_has_no_cartesian(spark, monkeypatch):
-    # patch out the localCheckpoint so the assertion sees the REAL plan
-    # (post-checkpoint plans are just an RDD scan — vacuously clean)
-    import e_commerce_lakehouse_spark.operators.dedup as ddmod
-
-    monkeypatch.setattr(
-        ddmod, "_finish_release", lambda result, *cached: result
-    )
-    d = _docs(spark, [(1, "x" * 40), (2, "y" * 40)])
-    plan = (
-        dup_span_audit(d, gram_chars=20)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # r6 shape: hot-gram detection is a count-over-window on the digest
-    # shuffle (ONE wide exchange) — no join-back, and still no pairwise
-    # stage anywhere
-    assert "Window" in plan  # the real plan, not a checkpoint scan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # exactly the per-doc island pass and the corpus-wide digest pass
-    # shuffle the gram table; a reintroduced join-back would add a third
-    assert plan.count("Exchange hashpartitioning") <= 2

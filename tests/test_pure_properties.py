@@ -7,7 +7,6 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from e_commerce_lakehouse_spark.operators.multimodal import FakeCodec
 from e_commerce_lakehouse_spark.plans.binpack import plan_bin_packing
 from e_commerce_lakehouse_spark.sources.readers import _col_index
 from e_commerce_lakehouse_spark.table.meta import DataFileEntry
@@ -98,14 +97,35 @@ def test_col_index_roundtrip(col, row):
     assert _col_index(f"{letters}{row}") == col
 
 
-# -------------------------------------------------------------- fake codec
+# ------------------------------------------------------------ driver heap
 
 
-@settings(max_examples=100, deadline=None)
-@given(w=st.integers(1, 64), h=st.integers(1, 64), seed=st.integers(0, 2**31 - 1))
-def test_fakecodec_roundtrip(w, h, seed):
-    payload = FakeCodec.encode(w, h, seed)
-    w2, h2, body = FakeCodec.decode(payload)
-    assert (w2, h2) == (w, h)
-    assert len(body) == w * h
-    assert body[0] == seed % 251  # cell (0,0)
+def _mem_total_bytes() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    raise AssertionError("no MemTotal in /proc/meminfo")
+
+
+def _heap_bytes(spec: str) -> int:
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
+    return int(spec[:-1]) * units[spec[-1].lower()]
+
+
+def test_default_driver_heap_fits_host_memory(monkeypatch):
+    from e_commerce_lakehouse_spark.session import driver_memory
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    heap = _heap_bytes(driver_memory())
+    # the JVM must be able to reserve the heap with room left for the
+    # Python workers: at most half of MemTotal, never above the 16g cap
+    assert 0 < heap <= _mem_total_bytes() // 2
+    assert heap <= 16 << 30
+
+
+def test_driver_heap_env_override(monkeypatch):
+    from e_commerce_lakehouse_spark.session import driver_memory
+
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert driver_memory() == "3g"

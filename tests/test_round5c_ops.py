@@ -1,20 +1,11 @@
-"""Unit invariants for the round-5c operator batch (q170-q175 family):
-distributed running max, watermark lateness, greedy allocation,
-Benford audit, seasonality index, transcript audit."""
+"""Unit invariants for the transcript projection and its integrity audit
+(q175) over an event log with out-of-order event times."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from e_commerce_lakehouse_spark.operators.allocate import greedy_allocation
-from e_commerce_lakehouse_spark.operators.curation import distributed_running_max
-from e_commerce_lakehouse_spark.operators.eventops import (
-    seasonality_index,
-    watermark_lateness_audit,
-)
-from e_commerce_lakehouse_spark.operators.stats import benford_audit
 from e_commerce_lakehouse_spark.operators.transcripts import (
     as_transcripts,
     conversation_shape_audit,
@@ -44,105 +35,6 @@ def events(spark):
     return df.cache()
 
 
-def test_distributed_running_max_matches_naive_window(spark, events):
-    base = events.select(
-        F.col("event_id").alias("aid"),
-        F.unix_micros("ts").alias("v"),
-    )
-    got = distributed_running_max(
-        base, order_col="aid", value_col="v", out_col="rm", num_partitions=8
-    )
-    naive = base.withColumn(
-        "rm",
-        F.max("v").over(
-            Window.orderBy("aid").rowsBetween(Window.unboundedPreceding, -1)
-        ),
-    )
-    assert got.exceptAll(naive).count() == 0
-    assert naive.exceptAll(got).count() == 0
-    # exactly one NULL: the first arrival has no predecessor
-    assert got.where(F.col("rm").isNull()).count() == 1
-
-
-def test_distributed_running_max_partition_invariance(spark, events):
-    base = events.select(
-        F.col("event_id").alias("aid"), F.unix_micros("ts").alias("v")
-    )
-    a = distributed_running_max(
-        base, order_col="aid", value_col="v", num_partitions=3
-    )
-    b = distributed_running_max(
-        base, order_col="aid", value_col="v", num_partitions=16
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_watermark_lateness_buckets_partition_events(spark, events):
-    out = watermark_lateness_audit(events).collect()
-    total = sum(r.n_events for r in out)
-    assert total == events.count()
-    by_bucket = {}
-    for r in out:
-        by_bucket[r.bucket] = by_bucket.get(r.bucket, 0) + r.n_events
-    # the planted 2-day backward jitter on id%7==3 rows must show up
-    assert by_bucket.get("le_24h", 0) + by_bucket.get("gt_24h", 0) > 0
-    # on-time majority (6/7 of rows arrive in order)
-    assert by_bucket["on_time"] > total // 2
-    for r in out:
-        assert r.max_late_sec >= 0
-
-
-def test_greedy_allocation_invariants(spark):
-    demand = spark.range(0, 600).select(
-        (F.col("id") % 20).alias("key"),
-        (F.col("id") % 9 + 1).alias("qty"),
-        F.col("id").alias("prio"),
-        F.col("id").alias("line_id"),
-    )
-    budgets = demand.groupBy("key").agg(
-        (F.sum("qty") / 2).cast("long").alias("budget")
-    )
-    out = greedy_allocation(demand, budgets).collect()
-    assert len(out) == 20
-    for r in out:
-        assert r.filled_qty <= r.budget
-        assert r.filled_qty <= r.demand_qty
-        assert r.n_filled_full + r.n_partial + r.n_starved == r.n_lines
-        assert r.n_partial <= 1  # FCFS: at most one straddling line
-        assert 0.0 <= r.fill_rate <= 1.0
-    # budget >= demand => everything filled
-    fat = demand.groupBy("key").agg(F.sum("qty").cast("long").alias("budget"))
-    for r in greedy_allocation(demand, fat).collect():
-        assert r.filled_qty == r.demand_qty and r.n_starved == 0
-
-
-def test_benford_audit_shape(spark):
-    df = spark.range(1, 4000).select(
-        (F.col("id").cast("double") * 1.37 + 0.5).alias("amt")
-    )
-    out = benford_audit(df, amount_col="amt").collect()
-    digits = sorted(r.digit for r in out)
-    assert digits == sorted(set(digits)) and set(digits) <= set(range(1, 10))
-    assert sum(r.n_obs for r in out) == 3999
-    exp_total = sum(r.expected_n for r in out)
-    assert abs(exp_total - 3999) < 0.01  # Benford shares sum to 1
-    assert all(r.chi2_term >= 0 for r in out)
-
-
-def test_seasonality_index_weighted_mean_is_one(spark, events):
-    out = seasonality_index(events).collect()
-    # per type: sum(n * index) / total_n == 1 (weighted mean of the
-    # per-dow means IS the overall mean)
-    by_type = {}
-    for r in out:
-        agg = by_type.setdefault(r.event_type, [0.0, 0])
-        agg[0] += r.n * r.seasonal_index
-        agg[1] += r.n
-    for t, (s, n) in by_type.items():
-        assert abs(s / n - 1.0) < 1e-4, t
-    assert all(0 <= r.dow <= 6 for r in out)
-
-
 def test_transcript_audit_integrity_on_clean_log(spark, events):
     tr = as_transcripts(events)
     assert tr.columns == ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -170,93 +62,3 @@ def test_transcript_audit_flags_planted_corruption(spark, events):
     rows = {r.conv_id: r for r in conversation_shape_audit(broken).collect()}
     assert not rows["conv-000000005"].idx_contiguous
     assert rows["conv-000000012"].idx_contiguous
-
-
-def test_fifo_match_conservation_and_order(spark):
-    from e_commerce_lakehouse_spark.operators.fifo import (
-        fifo_lot_summary,
-        fifo_match,
-    )
-
-    demand = spark.createDataFrame(
-        [("p1", 5, 1, 10), ("p1", 7, 2, 11), ("p1", 4, 3, 12),
-         ("p2", 3, 1, 20)],
-        "key string, qty long, prio int, line_id long",
-    )
-    lots = spark.createDataFrame(
-        [("p1", 0, 6), ("p1", 1, 6), ("p1", 2, 6), ("p2", 0, 10)],
-        "key string, lot_id int, lot_qty long",
-    )
-    m = fifo_match(
-        demand, lots, key_col="key",
-        demand_order_cols=["prio", "line_id"], supply_order_cols=["lot_id"],
-    ).collect()
-    got = {(r.key, r.lot_id, r.line_id): r.matched_qty for r in m}
-    # p1: demand 5,7,4 against lots of 6,6,6 (FIFO):
-    # line10 -> lot0:5; line11 -> lot0:1 + lot1:6; line12 -> lot2:4
-    assert got == {
-        ("p1", 0, 10): 5, ("p1", 0, 11): 1, ("p1", 1, 11): 6,
-        ("p1", 2, 12): 4, ("p2", 0, 20): 3,
-    }
-    m_df = fifo_match(
-        demand, lots, key_col="key",
-        demand_order_cols=["prio", "line_id"], supply_order_cols=["lot_id"],
-    )
-    summary = {
-        (r.key, r.lot_id): r for r in fifo_lot_summary(m_df, lots).collect()
-    }
-    assert summary[("p1", 0)].exhausted and summary[("p1", 1)].exhausted
-    assert summary[("p1", 2)].leftover_qty == 2
-    assert summary[("p2", 0)].leftover_qty == 7
-    # conservation: total matched == min(total demand, total supply) per key
-    assert sum(r.matched_qty for r in m if r.key == "p1") == 16
-    # plan shape: equi-join only
-    plan = m_df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-
-
-def test_fifo_supply_shortage_leaves_tail_unmatched(spark):
-    from e_commerce_lakehouse_spark.operators.fifo import fifo_match
-
-    demand = spark.createDataFrame(
-        [("p", 10, 0, 1), ("p", 10, 1, 2)],
-        "key string, qty long, prio int, line_id long",
-    )
-    lots = spark.createDataFrame(
-        [("p", 0, 12)], "key string, lot_id int, lot_qty long"
-    )
-    m = {r.line_id: r.matched_qty for r in fifo_match(
-        demand, lots, key_col="key",
-        demand_order_cols=["prio", "line_id"], supply_order_cols=["lot_id"],
-    ).collect()}
-    assert m == {1: 10, 2: 2}  # second line only partially served
-
-
-def test_bootstrap_ci_brackets_mean_and_is_deterministic(spark):
-    from e_commerce_lakehouse_spark.operators.stats import bootstrap_ci
-
-    df = spark.range(1, 2001).select(
-        F.col("id").alias("k"),
-        (F.col("id").cast("double") % 97 + 10.0).alias("amt"),
-    )
-    r1 = bootstrap_ci(df, "amt", "k", n_resamples=100, seed=7).collect()[0]
-    r2 = bootstrap_ci(df, "amt", "k", n_resamples=100, seed=7).collect()[0]
-    assert r1 == r2  # derived weights: bit-identical across invocations
-    assert r1.n == 2000 and r1.n_resamples == 100
-    assert r1.ci_lo <= r1.mean <= r1.ci_hi
-    # CI width sane: a 2000-row mean of a bounded variable is tight
-    assert (r1.ci_hi - r1.ci_lo) < 10.0
-    # different seed -> different resamples, overlapping CI
-    r3 = bootstrap_ci(df, "amt", "k", n_resamples=100, seed=8).collect()[0]
-    assert (r3.ci_lo, r3.ci_hi) != (r1.ci_lo, r1.ci_hi)
-    assert r3.mean == r1.mean  # point estimate independent of resampling
-
-
-def test_bootstrap_ci_validates_args(spark):
-    from e_commerce_lakehouse_spark.operators.stats import bootstrap_ci
-
-    df = spark.range(10).select(F.col("id").alias("k"), F.lit(1.0).alias("v"))
-    with pytest.raises(ValueError):
-        bootstrap_ci(df, "v", "k", alpha=0.0)
-    with pytest.raises(ValueError):
-        bootstrap_ci(df, "v", "k", n_resamples=1)

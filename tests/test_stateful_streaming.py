@@ -10,9 +10,9 @@ from e_commerce_lakehouse_spark.synth import transcripts_df
 def test_conversation_stats_stateful(spark, tmp_path):
     df = transcripts_df(spark, 600, seed=11).cache()
     pq_dir = str(tmp_path / "turns_pq")
-    # two separate files → at least the data arrives in multiple splits
-    df.where(F.col("turn_idx") % 2 == 0).write.parquet(pq_dir + "/b1")
-    df.where(F.col("turn_idx") % 2 == 1).write.parquet(pq_dir + "/b2")
+    # two separate files → two micro-batches under maxFilesPerTrigger=1
+    df.where(F.col("turn_idx") % 2 == 0).coalesce(1).write.parquet(pq_dir + "/b1")
+    df.where(F.col("turn_idx") % 2 == 1).coalesce(1).write.parquet(pq_dir + "/b2")
 
     stream = (
         spark.readStream.schema(df.schema)
@@ -28,6 +28,8 @@ def test_conversation_stats_stateful(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
+    # the state must really be carried: rows arrive in at least two batches
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) >= 2
 
     # last update per conv must equal the batch ground truth
     got = spark.sql(

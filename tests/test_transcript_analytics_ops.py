@@ -267,91 +267,3 @@ def test_context_pack_zero_length_ties_are_peers(spark):
     r = context_pack_examples(tr, budget_chars=10).collect()[0]
     assert r.n_examples == 2
     assert r.max_ctx_turns == 2 and r.total_ctx_turns == 4
-
-
-def test_conversation_neardup_identical_and_disjoint(spark):
-    # c1/c2 identical multi-turn conversations -> jaccard_est 1.0;
-    # c3 disjoint vocabulary -> no pair with c1/c2.
-    from e_commerce_lakehouse_spark.operators.dedup import minhash_lsh_pairs
-    from pyspark.sql import functions as F
-
-    rows = []
-    for conv in ["c1", "c2"]:
-        rows += [
-            (conv, 0, "system", "alpha beta gamma delta epsilon", None, 0),
-            (conv, 1, "assistant", "zeta eta theta iota kappa", None, 1),
-        ]
-    rows += [("c3", 0, "system", "one two three four five six", None, 0)]
-    tr = _tr(spark, rows)
-    convdoc = tr.groupBy("conv_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                lambda x: x["text"],
-            ),
-            " ",
-        ).alias("text")
-    )
-    pairs = minhash_lsh_pairs(
-        convdoc, threshold=0.25, num_hashes=12, bands=3, n=3,
-        id_col="conv_id",
-    ).collect()
-    got = {(r.a, r.b): r.jaccard_est for r in pairs}
-    assert got == {("c1", "c2"): 1.0}
-
-
-def test_transcript_pipeline_composition_gates(spark):
-    # q200's gates on a fabricated corpus: c1/c2 exact dups (c2 dropped),
-    # c4 near-dup of c3 (c4 dropped), c5 too short (< 3 turns), c6
-    # survives; every text is >= 50 chars total per conversation.
-    import e_commerce_lakehouse_spark.queries as Q
-
-    base = ["alpha beta gamma delta epsilon zeta eta theta"] * 3
-    rows = []
-    for conv, texts in [
-        ("c1", base),
-        ("c2", base),  # exact dup of c1
-        ("c3", ["one two three four five six seven eight nine ten"] * 3),
-        ("c4", ["one two three four five six seven eight nine ten"] * 2
-               + ["one two three four five six seven eight nine END"]),
-        ("c5", ["x" * 60]),  # 1 turn: fails n_turns gate
-        ("c6", ["unique words here entirely different from the rest",
-                "second turn of the surviving conversation right here",
-                "third turn closing out this conversation cleanly now"]),
-    ]:
-        for i, t in enumerate(texts):
-            rows.append((conv, i, "user" if i % 2 == 0 else "assistant",
-                         t, None, i * 60))
-    tr = _tr(spark, rows)
-
-    # run the pipeline body over the fabricated transcript directly
-    from e_commerce_lakehouse_spark.operators.dedup import minhash_lsh_pairs
-    from e_commerce_lakehouse_spark.operators.transcripts import (
-        context_pack_examples, conversation_cost, conversation_dedup)
-
-    keepers = conversation_dedup(tr).where(F.col("is_canonical")).select("conv_id")
-    convdoc = tr.groupBy("conv_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                lambda x: x["text"],
-            ),
-            " ",
-        ).alias("text")
-    )
-    pairs = minhash_lsh_pairs(
-        convdoc, threshold=0.25, num_hashes=12, bands=3, n=3, id_col="conv_id"
-    )
-    dropped = pairs.select(F.col("b").alias("conv_id")).distinct()
-    cost = conversation_cost(tr).select(
-        "conv_id", "n_turns", "total_chars", "cost_micros")
-    out = (
-        cost.join(keepers, "conv_id")
-        .join(dropped, "conv_id", "left_anti")
-        .where((F.col("n_turns") >= 3) & F.col("total_chars").between(50, 5000))
-    )
-    survivors = {r.conv_id for r in out.collect()}
-    assert "c1" in survivors and "c2" not in survivors  # exact dedup
-    assert "c3" in survivors and "c4" not in survivors  # near-dup drop
-    assert "c5" not in survivors  # n_turns gate
-    assert "c6" in survivors

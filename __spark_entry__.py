@@ -4,8 +4,8 @@
 compact → Z-order cluster → MERGE corrections → scan) and returns a
 verification DataFrame. ``queries``/``oracle_sql`` cover the engine:
 the table format, the maintenance and row-level operators, ETL, the
-source readers, streaming, transcript ops, sketches and metadata
-aggregates. Implementations live in ``e_commerce_lakehouse_spark/queries.py``
+source readers, streaming, transcript ops and metadata aggregates.
+Implementations live in ``e_commerce_lakehouse_spark/queries.py``
 with DuckDB twins in ``e_commerce_lakehouse_spark/oracles.py``.
 """
 

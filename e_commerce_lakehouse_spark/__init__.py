@@ -12,8 +12,8 @@ format implemented here from scratch:
                   Hilbert clustering, manifest rewrite, snapshot expire +
                   GC, MERGE INTO), row-level DELETE/UPDATE, schema
                   evolution, the reference's ETL dataflow operators
-                  (validate / dedup / transform), transcript
-                  training-data ops and manifest-level sketches
+                  (validate / dedup / transform) and the transcript
+                  training-data ops
 - ``functions/``  vectorized key functions (Z-order & Hilbert interleave)
 - ``plans/``      driver-side planning: bin-packing, skew/salting helpers
 - ``sources/``    CSV/Excel/parquet ingestion (reference §2.1 parity)

@@ -32,140 +32,11 @@ def norm_stat(v):
     return v
 
 
-def kmv_mins(values, k: int) -> list[int]:
-    """The k smallest 60-bit md5 hashes of ``values`` (None excluded) —
-    the per-file KMV sketch. Hashing mirrors Spark's md5(CAST(col AS
-    STRING)) exactly (15-hex prefix as int), so merged estimates
-    value-hash oracle against a SQL twin (operators/sketch.py)."""
-    import hashlib
-    import heapq
-
-    hs = {
-        int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16)
-        for v in values
-        if v is not None
-    }
-    return heapq.nsmallest(k, hs)  # already ascending-sorted
-
-
-def hist_counts(values, counts, lo: float, hi: float, bins: int) -> list[int]:
-    """Equi-width histogram bin counts from a (uniques, multiplicities)
-    pair — the per-file distribution sketch. Layout: [underflow,
-    b0..b(bins-1), overflow]; bin index = floor((x - lo) * bins /
-    (hi - lo)) clamped to bins-1 at the float edge, the exact expression
-    a SQL twin states (LEAST(bins-1, CAST(floor(...) AS INT))), so
-    merged table-level histograms value-hash oracle. NULLs excluded by
-    the caller. Counts are exact integers, so per-file sketches merge by
-    elementwise SUM into the histogram of the whole table."""
-    out = [0] * (bins + 2)
-    width = hi - lo
-    for v, c in zip(values, counts):
-        try:
-            x = float(v)
-        except (TypeError, ValueError):
-            raise ValueError(
-                f"histogram sketch declared on a non-numeric column "
-                f"(value {v!r}); histograms need int/float/decimal"
-            ) from None
-        if x != x:
-            continue  # NaN: excluded like NULL (no bin is meaningful)
-        if x < lo:
-            out[0] += c
-        elif x >= hi:
-            out[bins + 1] += c
-        else:
-            idx = int((x - lo) * bins / width)
-            if idx >= bins:  # float-edge guard (x*bins/width == bins)
-                idx = bins - 1
-            out[idx + 1] += c
-    return out
-
-
-def cm_slot(j: int, s: str, w: int) -> int:
-    """Row-``j`` count-min slot of value string ``s``: the 60-bit md5
-    prefix of ``'j|' || s`` mod ``w`` — THE one hash both the per-file
-    sketch builder and the table-level merger (operators/sketch.py) use;
-    SQL twin: ('0x' || substr(md5(j || '|' || v::VARCHAR), 1, 15))::BIGINT
-    % w, so merged estimates oracle bit-for-bit."""
-    import hashlib
-
-    return int(hashlib.md5(f"{j}|{s}".encode()).hexdigest()[:15], 16) % w
-
-
-def cm_rows(values, counts, w: int, d: int) -> list[list[int]]:
-    """Count-min counter matrix (d rows × w counters) from a (uniques,
-    multiplicities) pair, hashed by ``cm_slot``. Per-file matrices merge
-    by elementwise SUM; estimate(v) = min over rows of the merged
-    counter — a guaranteed OVERestimate of v's true count (never
-    under)."""
-    rows = [[0] * w for _ in range(d)]
-    for v, c in zip(values, counts):
-        s = str(v)
-        for j in range(d):
-            rows[j][cm_slot(j, s, w)] += c
-    return rows
-
-
-def topk_counts(values, counts, t: int) -> list[list]:
-    """The file's t most frequent values as [str(value), count] pairs,
-    ties broken by value string ascending — the candidate pool for
-    table-level heavy-hitter queries (union of per-file top-t provably
-    contains every value that is top-t BY COUNT in at least one file)."""
-    pairs = sorted(
-        ((int(c), str(v)) for v, c in zip(values, counts)),
-        key=lambda p: (-p[0], p[1]),
-    )[:t]
-    return [[v, c] for c, v in pairs]
-
-
-def _dist_one(values, counts, params: dict) -> dict:
-    """One column's distribution sketch dict from its value counts."""
-    out = {}
-    h = params.get("hist")
-    if h:
-        out["hist"] = {
-            "lo": float(h["lo"]), "hi": float(h["hi"]),
-            "bins": int(h["bins"]),
-            "counts": hist_counts(values, counts, float(h["lo"]),
-                                  float(h["hi"]), int(h["bins"])),
-        }
-    c = params.get("cm")
-    if c:
-        w, d, t = int(c["w"]), int(c["d"]), int(c.get("topk", 16))
-        out["cm"] = {"w": w, "d": d,
-                     "rows": cm_rows(values, counts, w, d),
-                     "topk": topk_counts(values, counts, t)}
-    return out
-
-
-def dist_from_arrow(t, dist_spec: dict) -> dict:
-    """Per-column distribution sketches (equi-width histogram and/or
-    count-min, per ``Table.dist_spec()``) from an IN-MEMORY arrow table —
-    shared by the footer pass and compact's rewrite tasks, like
-    ndv_from_arrow."""
-    import pyarrow.compute as pc
-
-    out = {}
-    for col, params in (dist_spec or {}).items():
-        if col not in t.column_names:
-            continue
-        vc = pc.value_counts(t.column(col).combine_chunks())
-        values = vc.field("values").to_pylist()
-        counts = vc.field("counts").to_pylist()
-        pairs = [(v, c) for v, c in zip(values, counts) if v is not None]
-        sk = _dist_one([p[0] for p in pairs], [p[1] for p in pairs], params)
-        if sk:
-            out[col] = sk
-    return out
-
-
 def file_stats_dict(
     abs_path: str,
     root: str,
     stat_columns: Iterable[str],
     bloom_spec: dict | None = None,
-    ndv_spec: dict | None = None,
-    dist_spec: dict | None = None,
 ) -> dict:
     """DataFileEntry-shaped dict from one parquet footer (no data pages).
 
@@ -212,57 +83,18 @@ def file_stats_dict(
     }
     if nulls:
         out["nulls"] = nulls
-    if bloom_spec or ndv_spec:
-        # ONE data-page read + unique per column, shared by bloom and ndv
-        # (declaring both on the same point-lookup column is the natural
-        # pairing; reading it twice doubled the write-path cost — review
-        # finding)
+    if bloom_spec:
         import pyarrow.compute as pc
 
-        need = set(bloom_spec or ()) | set(ndv_spec or ())
-        uniq = {
-            col: pc.unique(pf.read(columns=[col]).column(col)).to_pylist()
-            for col in need
+        from ._bloom import build_bloom_from_values
+
+        blooms = {
+            col: build_bloom_from_values(
+                pc.unique(pf.read(columns=[col]).column(col)).to_pylist(),
+                params)
+            for col, params in bloom_spec.items()
             if col in name_to_idx
         }
-        blooms = {}
-        for col, params in (bloom_spec or {}).items():
-            if col in uniq:
-                from ._bloom import build_bloom_from_values
-
-                blooms[col] = build_bloom_from_values(uniq[col], params)
         if blooms:
             out["blooms"] = blooms
-        ndv = {
-            col: {"k": int(params.get("k", 256)),
-                  "mins": kmv_mins(uniq[col], int(params.get("k", 256)))}
-            for col, params in (ndv_spec or {}).items()
-            if col in uniq
-        }
-        if ndv:
-            out["ndv"] = ndv
-    if dist_spec:
-        # distribution sketches need multiplicities, not uniques — one
-        # value_counts per declared column (one column read each)
-        name_set = set(name_to_idx)
-        cols = [c for c in dist_spec if c in name_set]
-        if cols:
-            dist = dist_from_arrow(pf.read(columns=cols), dist_spec)
-            if dist:
-                out["dist"] = dist
-    return out
-
-
-def ndv_from_arrow(t, ndv_spec: dict) -> dict:
-    """Per-column KMV sketches from an IN-MEMORY arrow table — the one
-    construction shared by the footer pass and compact's rewrite tasks
-    (review finding: two copies could drift)."""
-    import pyarrow.compute as pc
-
-    out = {}
-    for col, params in (ndv_spec or {}).items():
-        if col in t.column_names:
-            k = int(params.get("k", 256))
-            out[col] = {"k": k,
-                        "mins": kmv_mins(pc.unique(t.column(col)).to_pylist(), k)}
     return out

@@ -6,7 +6,6 @@ from .clone import shallow_clone
 from .expire import expire_snapshots
 from .maintain import maintain, plan_maintenance, table_health
 from .manifest_rewrite import rewrite_manifests
-from .matview import create_matview, read_matview, refresh_matview
 from .merge import merge_into, merge_upsert_dataframes
 from .rollback import rollback_to
 from .rowlevel import delete_by_keys, delete_where, materialize_deletes, update_where
@@ -28,9 +27,6 @@ __all__ = [
     "table_health",
     "expire_snapshots",
     "shallow_clone",
-    "create_matview",
-    "refresh_matview",
-    "read_matview",
     "merge_into",
     "merge_upsert_dataframes",
     "rollback_to",

@@ -45,7 +45,7 @@ def shallow_clone(src: Table | str, dst_root: str) -> dict:
     """Clone ``src`` (Table or root path) to ``dst_root`` without
     copying data bytes. The clone carries the full retained snapshot
     history, tags, branches, and every declared spec (schema versions,
-    partition spec, blooms, NDV + distribution sketches, constraints),
+    partition spec, blooms, constraints),
     so time travel and maintenance work on it exactly as on the source.
 
     Returns {"files_linked", "files_copied", "bytes_shared", "root"}.

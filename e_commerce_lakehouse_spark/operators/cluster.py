@@ -466,7 +466,7 @@ def cluster(
             )
             added = collect_entries(
                 list_parquet_files(out_dir), table.root, stat_columns, spark=spark,
-                bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec(),
+                bloom_spec=table.bloom_spec(),
             )
             for e in added:
                 e.partition = partition_from_path(e.path, part_spec)
@@ -487,7 +487,7 @@ def cluster(
             )
             added = collect_entries(
                 list_parquet_files(out_dir), table.root, stat_columns, spark=spark,
-                bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec(),
+                bloom_spec=table.bloom_spec(),
             )
         else:
             added = _cluster_sharded(
@@ -730,7 +730,7 @@ def _cluster_sharded(
                 .parquet(out_dir)
             )
         outs = collect_entries(list_parquet_files(out_dir), table.root, stat_columns,
-                               bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec())
+                               bloom_spec=table.bloom_spec())
         if part_spec:
             for e in outs:
                 e.partition = partition_from_path(e.path, part_spec)

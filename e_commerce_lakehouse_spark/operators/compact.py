@@ -7,9 +7,9 @@ a first-class, resumable maintenance operator:
 
 1. PLAN driver-side from manifest stats only (plans/binpack.py) — no data
    read to decide what to rewrite;
-2. REWRITE each file group as its own Spark job (`coalesce`, shuffle-free:
-   inputs are whole small files), groups run concurrently on the FAIR
-   scheduler so a 1000-executor cluster stays saturated;
+2. REWRITE a wave of file groups as the tasks of one Spark job: each task
+   concatenates its group's whole small files with pyarrow (shuffle-free)
+   and writes one output, so a 1000-executor cluster stays saturated;
 3. CHECKPOINT one JSONL line per finished group (checkpoint.py) — a killed
    run resumes at file-group granularity, already-rewritten groups are
    skipped and their outputs reused;
@@ -23,18 +23,15 @@ from __future__ import annotations
 import contextlib
 import math
 import os
-import threading
 import uuid
-from concurrent.futures import ThreadPoolExecutor, as_completed
 from time import monotonic
 
 from pyspark.sql import SparkSession
 
 from ..checkpoint import Checkpoint
-from ..plans.binpack import FileGroup, plan_bin_packing
+from ..plans.binpack import plan_bin_packing
 from ..schema import TRANSCRIPTS_STAT_COLUMNS
 from ..table.meta import DataFileEntry, Table
-from ..table.stats import collect_entries, list_parquet_files
 from ..table.writer import DEFAULT_TARGET_FILE_BYTES
 
 
@@ -53,8 +50,6 @@ def _rewrite_wave_arrow(
     run_token: str = "",
     bloom_spec: dict | None = None,
     sv_plan: int | None = None,
-    ndv_spec: dict | None = None,
-    dist_spec: dict | None = None,
 ) -> list[dict]:
     """Rewrite a wave of file groups in ONE Spark job: each task
     concatenates its group's parquet files with pyarrow and writes one
@@ -153,22 +148,6 @@ def _rewrite_wave_arrow(
             )
             t_write = _mono()
             e = file_stats_dict(out_path, table_root, cols)
-            if ndv_spec:
-                # KMV sketch from the IN-MEMORY merged table — no second
-                # read of the file just written (same rule as blooms)
-                from e_commerce_lakehouse_spark._footer_stats import ndv_from_arrow
-
-                nd = ndv_from_arrow(merged, ndv_spec)
-                if nd:
-                    e["ndv"] = nd
-            if dist_spec:
-                # distribution sketches from the IN-MEMORY merged table —
-                # no second read of the file just written (same rule)
-                from e_commerce_lakehouse_spark._footer_stats import dist_from_arrow
-
-                ds = dist_from_arrow(merged, dist_spec)
-                if ds:
-                    e["dist"] = ds
             if sv_plan:
                 # write-schema version RECORDED AT WRITE TIME: stays
                 # correct across resume even if an evolution lands
@@ -209,66 +188,13 @@ def _rewrite_wave_arrow(
     return sc.parallelize(specs, n_slices).mapPartitions(run).collect()
 
 
-def _rewrite_group(
-    spark: SparkSession,
-    table: Table,
-    group: FileGroup,
-    base_snapshot: int,
-    target_bytes: int,
-    schema,
-    stat_columns,
-    run_token: str = "",
-    out_seq: int | None = None,
-    out_partition: dict | None = None,
-    sv_plan: int | None = None,
-) -> dict:
-    t0 = monotonic()
-    # run token = collision-free per attempt: a prior crashed attempt's
-    # partial dir is left for orphan GC instead of rmtree'd (a rmtree on a
-    # deterministic name could delete a concurrent winner's committed
-    # files — review finding); resume reuses finished groups via their
-    # checkpointed output paths
-    subdir = f"compact-{base_snapshot:08d}-g{group.group_id:05d}-{run_token}"
-    out_dir = os.path.join(table.data_dir, subdir)
-    n_out = max(1, math.ceil(group.bytes / target_bytes))
-    from ..table.scan import read_entries
-
-    # vintage-aware read (rename/widen resolve by field id); entries(sid)
-    # is cached on the Table, so per-group lookups stay O(1) amortized
-    ents = {e.path: e for e in table.entries(base_snapshot)}
-    df = read_entries(spark, table,
-                      [ents[p] for p in group.paths], schema)
-    # coalesce: no shuffle — small whole files concatenate into n_out files
-    df.coalesce(n_out).write.mode("error").parquet(out_dir)
-    outs = collect_entries(list_parquet_files(out_dir), table.root, stat_columns,
-                           bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec())
-    for e in outs:
-        e.seq = out_seq
-        e.partition = out_partition
-        # PLAN-time write version, not re-read per group: outputs are
-        # written under the schema compact() resolved at plan time, and a
-        # mid-run evolution must not relabel later groups (review
-        # finding — arrow mode already worked this way via sv_plan)
-        e.sv = sv_plan
-    return {
-        "group_id": group.group_id,
-        "status": "done",
-        "input_files": group.paths,
-        "output_files": [e.path for e in outs],
-        "outputs": [e.to_dict() for e in outs],
-        "rows": sum(e.rows for e in outs),
-        "bytes": sum(e.bytes for e in outs),
-        "wall_ms": int((monotonic() - t0) * 1000),
-    }
-
-
 def _run_arrow(
     spark, table, todo, base_snapshot, stat_columns, ckpt, wave_size, fail_after_groups,
     codec: str = "zstd", field_spec: list | None = None, run_token: str = "",
     group_seq: dict | None = None, group_part: dict | None = None,
     on_wave=None, ren_by_path: dict | None = None, sv_plan: int | None = None,
 ) -> None:
-    """Arrow mode: one Spark job per WAVE of groups; a checkpoint line per
+    """One Spark job per WAVE of groups; a checkpoint line per
     group lands after its wave completes (resume granularity = group, job
     overhead amortized over the wave). Returns phase metrics.
     ``on_wave(records)`` fires after each wave's records are checkpointed
@@ -286,8 +212,7 @@ def _run_arrow(
         results = _rewrite_wave_arrow(
             spark, table.root, specs, base_snapshot, stat_columns, codec=codec,
             field_spec=field_spec, run_token=run_token,
-            bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec(),
-            sv_plan=sv_plan,
+            bloom_spec=table.bloom_spec(), sv_plan=sv_plan,
         )
         for r in results:  # outputs carry the group's preserved seq
             r["entry"]["seq"] = group_seq[r["group_id"]]
@@ -324,49 +249,15 @@ def _run_arrow(
     return phase
 
 
-def _run_jobs(
-    spark, table, todo, base_snapshot, target_bytes, schema, stat_columns, ckpt,
-    max_concurrent_groups, fail_after_groups, run_token: str = "",
-    group_seq: dict | None = None, group_part: dict | None = None,
-    sv_plan: int | None = None,
-) -> None:
-    """Jobs mode: one Spark SQL job per group, FAIR-scheduled from a
-    thread pool (the generic path — works for any schema/transform)."""
-    completed = 0
-    lock = threading.Lock()
-
-    def run_group(g: FileGroup) -> dict:
-        rec = _rewrite_group(spark, table, g, base_snapshot, target_bytes, schema,
-                             stat_columns, run_token=run_token,
-                             out_seq=(group_seq or {}).get(g.group_id),
-                             out_partition=(group_part or {}).get(g.group_id),
-                             sv_plan=sv_plan)
-        nonlocal completed
-        with lock:
-            ckpt.record(rec)
-            completed += 1
-            if fail_after_groups is not None and completed >= fail_after_groups:
-                raise SimulatedCrash(f"simulated crash after {completed} groups")
-        return rec
-
-    if todo:
-        with ThreadPoolExecutor(max_workers=max(1, max_concurrent_groups)) as ex:
-            futs = [ex.submit(run_group, g) for g in todo]
-            for f in as_completed(futs):
-                f.result()  # propagate SimulatedCrash / real failures
-
-
 def compact(
     spark: SparkSession,
     table: Table,
     target_bytes: int = DEFAULT_TARGET_FILE_BYTES,
     small_file_ratio: float = 0.75,
     checkpoint_path: str | None = None,
-    max_concurrent_groups: int = 16,
     fail_after_groups: int | None = None,
     schema=None,
     stat_columns=TRANSCRIPTS_STAT_COLUMNS,
-    mode: str = "arrow",
     codec: str = "zstd",
     conv_id_range: tuple | None = None,
     ts_range: tuple | None = None,
@@ -378,7 +269,7 @@ def compact(
     """Compact small files; returns metrics. Resumable: re-running with the
     same checkpoint path after a crash skips finished groups and commits.
 
-    ``partial_progress=True`` (arrow mode only — the scale path) commits
+    ``partial_progress=True`` commits
     finished waves incrementally instead of one all-or-nothing commit at
     the end, capped at ``partial_max_commits`` snapshots per run —
     Iceberg rewrite_data_files ``partial-progress.enabled`` semantics.
@@ -400,11 +291,8 @@ def compact(
     on a 100 TB table a hot-partition cleanup touches only that slice's
     files — everything else stays byte-identical and uncommitted.
 
-    mode="arrow" (default, scale path): group rewrites are TASKS of one
-    Spark job per checkpoint wave — per-group overhead is a task launch.
-    mode="jobs": one Spark SQL job per group on the FAIR scheduler from a
-    thread pool — kept for engine-parity and because it exercises the
-    generic read-rewrite path any schema can use."""
+    Group rewrites are TASKS of one Spark job per checkpoint wave
+    (_rewrite_wave_arrow) — per-group overhead is a task launch."""
     base_snapshot = table.current_snapshot_id()
     if base_snapshot is None:
         raise ValueError("cannot compact an empty table")
@@ -525,9 +413,6 @@ def compact(
     # collision-free output dirs per attempt (see _rewrite_wave_arrow)
     run_token = uuid.uuid4().hex[:12]
 
-    if partial_progress and mode != "arrow":
-        raise ValueError("partial_progress requires mode='arrow'")
-
     committed_gids: set[int] = set()
     dropped_gids: set[int] = set()
     partial_sids: list[int] = []
@@ -598,55 +483,47 @@ def compact(
             return
 
     t_plan_done = monotonic()
-    if mode == "arrow":
-        # Wave sizing: the rdd runner bundles ~5 slices per core slot, so a
-        # wave must hold >= 5*parallelism groups for dispatch amortization
-        # to bite on a WIDE pool too — with a fixed small wave, the wide
-        # side ran one group per task while the narrow side got 3-4
-        # groups/task, an asymmetry that showed up directly as compact-
-        # phase scaling loss (0.50 measured; wave barriers also idle more
-        # cores the wider the pool). Checkpoint granularity is still per
-        # group; a crash loses at most one (bigger) wave's progress.
-        par = spark.sparkContext.defaultParallelism
-        if wave_size is None:
-            # interleaved A/B (min-of-3, 68 groups, 12 M turns): 80-group
-            # waves beat 32-group waves at BOTH 2 cores (14.35 vs 15.43 s)
-            # and 8 cores (4.72 vs 5.74 s) — fewer barriers, and the rdd
-            # runner's 5-slices-per-core bundling needs a big enough wave
-            # to amortize the ~150 ms/task dispatch floor on wide pools
-            wave_size = max(80, max(8, max_concurrent_groups) * 4, par * 10)
-        on_wave = None
-        if partial_progress:
-            n_waves = max(1, math.ceil(len(todo) / wave_size))
-            # leave room for the final commit inside the cap
-            commit_every = max(1, math.ceil(n_waves / max(1, partial_max_commits - 1)))
-            waves_seen = 0
-            recs_acc: dict[int, dict] = {}
+    # Wave sizing: the rdd runner bundles ~5 slices per core slot, so a
+    # wave must hold >= 5*parallelism groups for dispatch amortization
+    # to bite on a WIDE pool too — with a fixed small wave, the wide
+    # side ran one group per task while the narrow side got 3-4
+    # groups/task, an asymmetry that showed up directly as compact-
+    # phase scaling loss (0.50 measured; wave barriers also idle more
+    # cores the wider the pool). Checkpoint granularity is still per
+    # group; a crash loses at most one (bigger) wave's progress.
+    par = spark.sparkContext.defaultParallelism
+    if wave_size is None:
+        # interleaved A/B (min-of-3, 68 groups, 12 M turns): 80-group
+        # waves beat 32-group waves at BOTH 2 cores (14.35 vs 15.43 s)
+        # and 8 cores (4.72 vs 5.74 s) — fewer barriers, and the rdd
+        # runner's 5-slices-per-core bundling needs a big enough wave
+        # to amortize the ~150 ms/task dispatch floor on wide pools
+        wave_size = max(80, par * 10)
+    on_wave = None
+    if partial_progress:
+        n_waves = max(1, math.ceil(len(todo) / wave_size))
+        # leave room for the final commit inside the cap
+        commit_every = max(1, math.ceil(n_waves / max(1, partial_max_commits - 1)))
+        waves_seen = 0
+        recs_acc: dict[int, dict] = {}
 
-            def on_wave(wave_recs):
-                nonlocal waves_seen
-                waves_seen += 1
-                for r in wave_recs:
-                    recs_acc[r["group_id"]] = r
-                if (waves_seen % commit_every == 0
-                        and len(partial_sids) < partial_max_commits - 1):
-                    _commit_pending(recs_acc, partial=True)
+        def on_wave(wave_recs):
+            nonlocal waves_seen
+            waves_seen += 1
+            for r in wave_recs:
+                recs_acc[r["group_id"]] = r
+            if (waves_seen % commit_every == 0
+                    and len(partial_sids) < partial_max_commits - 1):
+                _commit_pending(recs_acc, partial=True)
 
-        phase = _run_arrow(spark, table, todo, base_snapshot, stat_columns, ckpt,
-                           wave_size=wave_size,
-                           fail_after_groups=fail_after_groups, codec=codec,
-                           field_spec=field_spec, run_token=run_token,
-                           group_seq=group_seq, group_part=group_part,
-                           on_wave=on_wave, ren_by_path=ren_by_path,
-                           sv_plan=sv_plan)
-        metrics["phase"] = phase
-    elif mode == "jobs":
-        _run_jobs(spark, table, todo, base_snapshot, target_bytes, schema,
-                  stat_columns, ckpt, max_concurrent_groups, fail_after_groups,
-                  run_token=run_token, group_seq=group_seq,
-                  group_part=group_part, sv_plan=sv_plan)
-    else:
-        raise ValueError(f"unknown compaction mode: {mode}")
+    phase = _run_arrow(spark, table, todo, base_snapshot, stat_columns, ckpt,
+                       wave_size=wave_size,
+                       fail_after_groups=fail_after_groups, codec=codec,
+                       field_spec=field_spec, run_token=run_token,
+                       group_seq=group_seq, group_part=group_part,
+                       on_wave=on_wave, ren_by_path=ren_by_path,
+                       sv_plan=sv_plan)
+    metrics["phase"] = phase
     t_rewrite_done = monotonic()
 
     done = ckpt.done()

@@ -550,7 +550,7 @@ def _update_merge_on_read(
     post.coalesce(1).write.mode("error").parquet(data_dir)
     all_out = collect_entries(list_parquet_files(data_dir), table.root,
                               stat_columns, spark=spark,
-                              bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec())
+                              bloom_spec=table.bloom_spec())
     added = [e for e in all_out if e.rows > 0]
     n_rows = sum(e.rows for e in added)
     if n_rows == 0:

@@ -254,21 +254,6 @@ def rename_column(table: Table, old: str, new: str) -> dict:
             f"cannot rename column {old!r}: it has a bloom-index spec; "
             f"re-declare the spec first"
         )
-    if old in table.ndv_spec():
-        # without this, sketch collection for new files silently stops
-        # (file stats skip spec names absent from the file) and table_ndv
-        # on the new name degrades to files_missing
-        raise ValueError(
-            f"cannot rename column {old!r}: it has an NDV-sketch spec; "
-            f"re-declare the spec first"
-        )
-    if old in table.dist_spec():
-        # same rule as NDV: new files would silently stop carrying the
-        # histogram/count-min sketch under the old spec name
-        raise ValueError(
-            f"cannot rename column {old!r}: it has a distribution-sketch "
-            f"spec; re-declare the spec first"
-        )
     from ..table.fieldids import version_field_maps
 
     if not table.schema_versions():

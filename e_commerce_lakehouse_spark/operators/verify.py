@@ -129,78 +129,6 @@ def verify_table(
                                    "manifest_ndv": b.get("ndv"),
                                    "file_ndv": len(vals)})
 
-    # ndv-sketch audit (OPT-IN, same cost class as the bloom audit):
-    # recompute each sketched column's KMV from the file's distinct
-    # values — manifest mins must match exactly (the sketch is
-    # deterministic), or table_ndv silently mis-estimates
-    ndv_bad = []
-    if check_blooms:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        from .._footer_stats import kmv_mins
-
-        for e in present:
-            for col, sk in (e.ndv or {}).items():
-                try:
-                    pf = pq.ParquetFile(os.path.join(table.root, e.path))
-                    raw = pc.unique(pf.read(columns=[col]).column(col)).to_pylist()
-                except Exception:
-                    continue  # missing column: schema evolution, not a fault
-                want = kmv_mins(raw, int(sk["k"]))
-                if list(sk.get("mins", [])) != want:
-                    ndv_bad.append(e.path)
-                    issues.append({"kind": "ndv-sketch-mismatch",
-                                   "path": e.path, "column": col,
-                                   "manifest_n": len(sk.get("mins", [])),
-                                   "recomputed_n": len(want)})
-
-    # distribution sketches (hist/cm) recompute bit-for-bit from the file
-    dist_bad = []
-    if check_blooms:
-        import pyarrow.parquet as pq
-
-        from .._footer_stats import dist_from_arrow
-
-        for e in present:
-            if not e.dist:
-                continue
-            # reconstruct the DECLARATION each stored sketch was built
-            # under (hist: the pinned bin edges; cm: w/d plus the stored
-            # pool length — a file with fewer distincts than the declared
-            # top-k stores a shorter pool, and recomputing with that
-            # length reproduces it exactly)
-            spec: dict = {}
-            for col, sk in e.dist.items():
-                s: dict = {}
-                if "hist" in sk:
-                    h = sk["hist"]
-                    s["hist"] = {"lo": h["lo"], "hi": h["hi"],
-                                 "bins": h["bins"]}
-                if "cm" in sk:
-                    c = sk["cm"]
-                    s["cm"] = {"w": c["w"], "d": c["d"],
-                               "topk": len(c.get("topk", []))}
-                spec[col] = s
-            try:
-                pf = pq.ParquetFile(os.path.join(table.root, e.path))
-            except Exception:
-                continue  # unreadable file: the footer audit reports it
-            for col in spec:
-                # per-column read, mirroring the bloom/ndv audits: a
-                # column missing from the file (schema evolution) skips
-                # only ITSELF, never a sibling's corrupted sketch
-                try:
-                    want = dist_from_arrow(pf.read(columns=[col]),
-                                           {col: spec[col]})
-                except Exception:
-                    continue
-                if e.dist.get(col) != want.get(col):
-                    dist_bad.append(e.path)
-                    issues.append({"kind": "dist-sketch-mismatch",
-                                   "path": e.path, "column": col})
-                    break
-
     # live MoR tombstones must exist
     for tpath in table.tombstones(sid):
         if not os.path.exists(os.path.join(table.root, tpath)):
@@ -247,8 +175,6 @@ def verify_table(
         "stat_mismatches": len(stat_mismatch),
         "unresolvable_constraints": len(bad_constraints),
         "bloom_mismatches": len(bloom_bad),
-        "ndv_mismatches": len(ndv_bad),
-        "dist_mismatches": len(dist_bad),
         "orphan_files": len(orphans),  # informational: GC's job, not an error
         "issues": issues[:100],
     }

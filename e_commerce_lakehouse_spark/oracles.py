@@ -255,26 +255,6 @@ FROM changes GROUP BY change_type, lang
 """
 
 
-# q72: the bounded stream-stream join must equal the plain batch join —
-# purchases attributed to same-user clicks within the preceding 6 hours.
-ALL["q72_stream_stream_join"] = """
-SELECT c.user_id,
-       c.event_id AS click_id,
-       p.event_id AS purchase_id,
-       c.ts AS click_ts,
-       p.ts AS purchase_ts,
-       floor(date_diff('microsecond', c.ts, p.ts) / 1000000)::BIGINT AS lag_sec,
-       round(p.value, 2) AS purchase_value
-FROM events c
-JOIN events p
-  ON c.user_id = p.user_id
- AND c.event_type = 'click'
- AND p.event_type = 'purchase'
- AND p.ts > c.ts
- AND p.ts <= c.ts + INTERVAL 6 HOUR
-"""
-
-
 # q74/q75: reader round-trips — the oracle states the truth about the
 # ORIGINAL rows (documents + the literal stress rows); the Spark side
 # must reproduce it through a CSV / xlsx serialize-parse cycle, so any
@@ -336,37 +316,6 @@ SELECT source, lang, count(*)::BIGINT AS n, sum(n_chars)::BIGINT AS sum_chars
 FROM documents GROUP BY source, lang
 """
 
-# q83: the incrementally-maintained rollup == a relational recompute of
-# the same mutation chain. Chain order matters: cow delete -> cow update
-# (zh) -> MoR delete (src0) -> MoR update (fr) -> MERGE upsert of
-# doc_id<40 (re-inserting previously deleted keys with the corr values,
-# which derive from the ORIGINAL documents rows).
-ALL["q83_matview_incremental"] = """
-WITH s1 AS (
-    SELECT doc_id, source, lang, n_chars FROM documents
-    WHERE NOT (lang = 'de' OR n_chars < 150)
-), s2 AS (
-    SELECT doc_id, source, lang,
-           CASE WHEN lang = 'zh' THEN n_chars + 1000 ELSE n_chars END AS n_chars
-    FROM s1
-), s3 AS (
-    SELECT * FROM s2 WHERE source <> 'src0'
-), s4 AS (
-    SELECT doc_id, source, lang,
-           CASE WHEN lang = 'fr' THEN n_chars * 2 ELSE n_chars END AS n_chars
-    FROM s3
-), corr AS (
-    SELECT doc_id, source, lang, n_chars + 500 AS n_chars
-    FROM documents WHERE doc_id < 40
-), fin AS (
-    SELECT * FROM s4 WHERE doc_id >= 40
-    UNION ALL
-    SELECT * FROM corr
-)
-SELECT source, lang, count(*)::BIGINT AS n, sum(n_chars)::BIGINT AS sum_chars
-FROM fin GROUP BY source, lang
-"""
-
 # q82: bloom-index point lookups == plain key-IN filter (a bloom false
 # NEGATIVE would drop rows and break the hash; false positives only cost
 # an extra file read and change nothing relationally).
@@ -377,27 +326,6 @@ WHERE printf('doc-%09d', doc_id) IN
     ('doc-000000003', 'doc-000000057', 'doc-000000123',
      'doc-000000250', 'doc-000000411')
 """
-
-# q84: KMV sketch — the deterministic md5 hash makes the ESTIMATE itself
-# reproducible across engines (same k-th minimum, same arithmetic).
-ALL["q84_kmv_distinct_sketch"] = """
-WITH h AS (
-    SELECT DISTINCT source,
-           ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT AS _h
-    FROM documents
-    WHERE doc_id IS NOT NULL
-), ranked AS (
-    SELECT source, _h,
-           row_number() OVER (PARTITION BY source ORDER BY _h) AS rn
-    FROM h
-)
-SELECT source, count(*)::BIGINT AS n_min, max(_h) AS kth_hash,
-       CASE WHEN count(*) < 16 THEN count(*)::DOUBLE
-            ELSE round(15.0 * 1152921504606846976.0 / max(_h), 2)
-       END AS est_distinct
-FROM ranked WHERE rn <= 16 GROUP BY source
-"""
-
 
 # q87: the schema-evolution lifecycle's final state, purely relationally —
 # the rename is an alias, the widen a cast, the vintage split a CASE on
@@ -500,30 +428,6 @@ SELECT lang,
 FROM documents
 GROUP BY lang
 """
-
-
-# q93: merged per-file KMV sketches == the global k-minimum estimate,
-# stated directly over the whole column (q84's expression, k=64, per
-# column). If any file's sketch dropped or fabricated a hash, or the
-# merge lost one, n_min/kth_hash/estimate diverge.
-def _ndv_one(col: str, k: int = 64) -> str:
-    return f"""
-SELECT '{col}' AS "column", count(*)::BIGINT AS n_min,
-       max(_h) AS kth_hash,
-       CASE WHEN count(*) < {k} THEN count(*)::DOUBLE
-            ELSE round({k - 1}.0 * 1152921504606846976.0 / max(_h), 2)
-       END AS est_distinct
-FROM (
-    SELECT _h, row_number() OVER (ORDER BY _h) AS rn FROM (
-        SELECT DISTINCT ('0x' || substr(md5({col}::VARCHAR), 1, 15))::BIGINT AS _h
-        FROM documents WHERE {col} IS NOT NULL)
-) WHERE rn <= {k}
-"""
-
-
-ALL["q93_manifest_ndv_sketch"] = (
-    _ndv_one("lang") + " UNION ALL " + _ndv_one("text")
-)
 
 
 # q100: idempotent COPY INTO relationally — the 'initial' slice (two of
@@ -806,7 +710,7 @@ FROM p WHERE tool_b IS NOT NULL GROUP BY tool_a, tool_b
 """
 
 ALL["q186_conversation_cost"] = f"""
-WITH {_TRANSCRIPT_CTE_TOOL},
+WITH {_TRANSCRIPT_CTE},
 c AS (
     SELECT conv_id, count(*)::BIGINT AS n_turns,
         sum(len)::BIGINT AS total_chars,
@@ -851,11 +755,6 @@ SELECT conv_id, count(*)::BIGINT AS n_examples,
     max(ctx_turns)::BIGINT AS max_ctx_turns
 FROM e WHERE role = 'assistant' GROUP BY conv_id
 """
-
-
-# q201: stateful streaming context budget — on a bounded in-order replay
-# the final update row per conversation equals the batch audit (q178).
-ALL["q201_streaming_context_budget"] = ALL["q178_context_budget"]
 
 
 # q204: preference pairs — same lead() adjacency as q179, ranking window
@@ -961,7 +860,7 @@ FROM g GROUP BY conv_id
 # training context: the peer window subtracts them, exactly like the
 # Spark side.
 ALL["q208_sft_examples"] = f"""
-WITH {_TRANSCRIPT_CTE_TOOL},
+WITH {_TRANSCRIPT_CTE},
 c AS (
     SELECT conv_id, turn_idx, role, len,
         coalesce(sum(len) OVER (PARTITION BY conv_id ORDER BY turn_idx
@@ -1071,111 +970,6 @@ FROM w
 """
 
 
-# q217: the merged per-file histogram == the whole-column histogram —
-# per-file bin counts are exact and merge by SUM, so the oracle bins
-# documents.n_chars directly with the IDENTICAL expression (underflow
-# bin -1, overflow bin 25, float-edge clamp via LEAST).
-ALL["q217_manifest_histogram"] = """
-WITH x AS (
-    SELECT n_chars::DOUBLE AS x FROM documents WHERE n_chars IS NOT NULL
-), binned AS (
-    SELECT CASE WHEN x < 0.0 THEN -1
-                WHEN x >= 500.0 THEN 25
-                ELSE LEAST(24, CAST(floor((x - 0.0) * 25 / 500.0) AS INT))
-           END AS bin
-    FROM x
-), c AS (
-    SELECT bin, count(*) AS n FROM binned GROUP BY bin
-), grid AS (
-    SELECT unnest(range(-1, 26))::INT AS bin
-)
-SELECT grid.bin AS bin, COALESCE(c.n, 0)::BIGINT AS n
-FROM grid LEFT JOIN c ON c.bin = grid.bin
-"""
-
-
-# q218: metadata-only quantile estimates — same binning as q217, then
-# the first bin whose cumulative count reaches q * total, interpolated
-# with the IDENTICAL op order as sketch.table_quantiles:
-# lo + (width / bins) * (b + (target - cum_before) / c), clamped to
-# lo/hi in the under/overflow slots, rounded to 9 dp on both sides.
-ALL["q218_metadata_quantiles"] = """
-WITH x AS (
-    SELECT n_chars::DOUBLE AS x FROM documents WHERE n_chars IS NOT NULL
-), binned AS (
-    SELECT CASE WHEN x < 0.0 THEN -1
-                WHEN x >= 500.0 THEN 25
-                ELSE LEAST(24, CAST(floor((x - 0.0) * 25 / 500.0) AS INT))
-           END AS bin
-    FROM x
-), c AS (
-    SELECT bin, count(*) AS n FROM binned GROUP BY bin
-), grid AS (
-    SELECT unnest(range(-1, 26))::INT AS bin
-), f AS (
-    SELECT grid.bin, COALESCE(c.n, 0)::BIGINT AS n,
-           SUM(COALESCE(c.n, 0)) OVER (ORDER BY grid.bin)::BIGINT AS cum
-    FROM grid LEFT JOIN c ON c.bin = grid.bin
-), tot AS (
-    SELECT SUM(n)::BIGINT AS t FROM f
-), qs AS (
-    SELECT unnest([0.25, 0.5, 0.75, 0.9, 0.99, 1.0]::DOUBLE[]) AS q
-), pick AS (
-    SELECT qs.q, min(f.bin) AS bin
-    FROM qs, f, tot
-    WHERE f.n > 0 AND f.cum >= qs.q * tot.t
-    GROUP BY qs.q
-)
-SELECT pick.q AS q,
-       round(CASE WHEN pick.bin = -1 THEN 0.0
-                  WHEN pick.bin = 25 THEN 500.0
-                  ELSE 0.0 + (500.0 / 25) * (pick.bin
-                       + (pick.q * tot.t - (f.cum - f.n)) / f.n)
-             END, 9) AS est
-FROM pick JOIN f ON f.bin = pick.bin, tot
-"""
-
-
-# q219: count-min heavy hitters — candidate pool = union of the two
-# parity halves' top-3 (count desc, value asc: topk_counts' tiebreak),
-# counters = the whole-column d=3 x w=32 matrix (per-file matrices sum,
-# split-independent), estimate = min over hash rows (md5('j|' || v)
-# 60-bit prefix mod 32 — _footer_stats.cm_rows verbatim), threshold =
-# max(1, rows // 20), exact counts from a full group-by.
-ALL["q219_cm_heavy_hitters"] = """
-WITH sides AS (
-    SELECT lang AS v, doc_id % 2 AS f FROM documents WHERE lang IS NOT NULL
-), pool AS (
-    SELECT DISTINCT v FROM (
-        SELECT v, row_number() OVER (
-            PARTITION BY f ORDER BY c DESC, v ASC) AS rn
-        FROM (SELECT f, v, count(*) AS c FROM sides GROUP BY f, v)
-    ) WHERE rn <= 3
-), vc AS (
-    SELECT v, count(*) AS c FROM sides GROUP BY v
-), hashes AS (
-    SELECT j.j, vc.v, vc.c,
-           ('0x' || substr(md5(j.j::VARCHAR || '|' || vc.v), 1, 15))::BIGINT
-               % 32 AS slot
-    FROM vc, (SELECT unnest(range(0, 3)) AS j) j
-), counters AS (
-    SELECT j, slot, SUM(c)::BIGINT AS cnt FROM hashes GROUP BY j, slot
-), est AS (
-    SELECT pool.v, min(counters.cnt)::BIGINT AS est_count
-    FROM pool
-    JOIN hashes ON hashes.v = pool.v
-    JOIN counters ON counters.j = hashes.j AND counters.slot = hashes.slot
-    GROUP BY pool.v
-), tot AS (
-    SELECT count(*) AS t FROM sides
-)
-SELECT est.v AS value, est.est_count,
-       COALESCE(vc.c, 0)::BIGINT AS exact_n
-FROM est JOIN vc ON vc.v = est.v, tot
-WHERE est.est_count >= GREATEST(1, tot.t // 20)
-"""
-
-
 # q220: multi-table atomic transaction — both tables hold exactly the
 # union of their even and odd halves iff the txn committed on BOTH and
 # the aborted duplicate txn leaked on NEITHER; the twin is the plain
@@ -1188,37 +982,6 @@ SELECT o.o_orderpriority,
        count(DISTINCT o.o_orderkey)::BIGINT AS n_orders
 FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
 GROUP BY o.o_orderpriority
-"""
-
-
-# q221: metadata-only histogram drift between the even-half snapshot and
-# the full snapshot — same q217 binning, n_from over the even doc_id
-# half, n_to over everything; delta is their difference. If either
-# snapshot's merged sketch gained/lost a row, some bin diverges.
-ALL["q221_histogram_drift"] = """
-WITH x AS (
-    SELECT doc_id, n_chars::DOUBLE AS x FROM documents
-    WHERE n_chars IS NOT NULL
-), binned AS (
-    SELECT doc_id,
-           CASE WHEN x < 0.0 THEN -1
-                WHEN x >= 500.0 THEN 25
-                ELSE LEAST(24, CAST(floor((x - 0.0) * 25 / 500.0) AS INT))
-           END AS bin
-    FROM x
-), cf AS (
-    SELECT bin, count(*) AS n FROM binned WHERE doc_id % 2 = 0 GROUP BY bin
-), ct AS (
-    SELECT bin, count(*) AS n FROM binned GROUP BY bin
-), grid AS (
-    SELECT unnest(range(-1, 26))::INT AS bin
-)
-SELECT grid.bin AS bin,
-       COALESCE(cf.n, 0)::BIGINT AS n_from,
-       COALESCE(ct.n, 0)::BIGINT AS n_to,
-       (COALESCE(ct.n, 0) - COALESCE(cf.n, 0))::BIGINT AS delta
-FROM grid LEFT JOIN cf ON cf.bin = grid.bin
-          LEFT JOIN ct ON ct.bin = grid.bin
 """
 
 
@@ -1240,44 +1003,3 @@ FROM documents WHERE lang <> 'fr' OR lang IS NULL
 GROUP BY lang
 """
 
-
-# q223: KMV key-overlap algebra stated directly over the raw inputs —
-# per side: the 64 smallest distinct 60-bit md5 hashes of the key; the
-# union sketch is the 64 smallest of their union; intersection counts
-# hashes present in BOTH min-sets; estimates use q84/q93's exact KMV
-# expression. Any drift in the per-file sketches or the merge diverges
-# n_min/n_inter/est_*.
-ALL["q223_key_overlap_estimate"] = """
-WITH ma AS (
-    SELECT h FROM (
-        SELECT DISTINCT
-            ('0x' || substr(md5(o_custkey::VARCHAR), 1, 15))::BIGINT AS h
-        FROM orders WHERE o_custkey IS NOT NULL)
-    ORDER BY h LIMIT 64
-), mb AS (
-    SELECT h FROM (
-        SELECT DISTINCT
-            ('0x' || substr(md5(c_custkey::VARCHAR), 1, 15))::BIGINT AS h
-        FROM customer WHERE c_custkey IS NOT NULL)
-    ORDER BY h LIMIT 64
-), u AS (
-    SELECT h FROM (SELECT h FROM ma UNION SELECT h FROM mb)
-    ORDER BY h LIMIT 64
-), s AS (
-    SELECT count(*) AS n_min, max(h) AS kth FROM u
-), i AS (
-    SELECT count(*) AS n_inter FROM u
-    WHERE h IN (SELECT h FROM ma) AND h IN (SELECT h FROM mb)
-), e AS (
-    SELECT s.n_min, i.n_inter,
-           CASE WHEN s.n_min < 64 THEN s.n_min::DOUBLE
-                ELSE round(63.0 * 1152921504606846976.0 / s.kth, 2)
-           END AS est_union
-    FROM s, i
-)
-SELECT 64 AS k, n_min::BIGINT AS n_min, n_inter::BIGINT AS n_inter,
-       est_union,
-       round(n_inter::DOUBLE / n_min, 9) AS jaccard,
-       round((n_inter::DOUBLE / n_min) * est_union, 2) AS est_common
-FROM e
-"""

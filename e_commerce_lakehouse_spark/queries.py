@@ -2,7 +2,7 @@
 
 Every query drives engine code: the table format (``table/``), the
 maintenance and row-level operators, ETL, the source readers, streaming,
-transcript ops, sketches and metadata aggregates. Each function takes
+transcript ops and metadata aggregates. Each function takes
 (spark, sf_dir) and returns a DataFrame whose column names/aliases
 EXACTLY match the DuckDB oracle in ``oracles.py`` (the driver's compare
 sorts columns by name and hashes values).
@@ -18,7 +18,7 @@ from __future__ import annotations
 import contextlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -474,50 +474,6 @@ def q92_generic_cluster(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q93_manifest_ndv_sketch(spark, sf_dir):
-    """Per-file KMV NDV sketches merged from MANIFESTS (Iceberg puffin
-    theta-sketch analog, deterministic md5 KMV): declare the spec, write
-    two batches, compact (rewrites re-sketch from the in-memory merged
-    table), then estimate distinct counts with ZERO data reads
-    (sketch.table_ndv). The merge is exact sketch algebra — k smallest
-    of the union of per-file k-minimums IS the global k-minimum set —
-    so the oracle states the same estimate computed over the whole
-    column in SQL."""
-    import os
-    import shutil
-    import uuid
-
-    from .operators.compact import compact as compact_op
-    from .operators.sketch import table_ndv
-    from .table.meta import Table
-    from .table.writer import append_dataframe, write_files
-
-    docs = _t(spark, sf_dir, "documents")
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(base, f"spark_graft_q93_{uuid.uuid4().hex[:12]}")
-    try:
-        t = Table.create(root)
-        t.append_schema_version(docs.schema.jsonValue(), as_of_snapshot=0)
-        t.set_ndv_columns(["lang", "text"], k=64)
-        entries = write_files(spark, t, docs.where(F.col("doc_id") % 2 == 0),
-                              4, "ingest-00000001-0000",
-                              stat_columns=("doc_id",))
-        t.commit_append(entries, {"op": "ingest"})
-        append_dataframe(spark, t, docs.where(F.col("doc_id") % 2 == 1))
-        compact_op(spark, t, target_bytes=1 << 20, stat_columns=("doc_id",))
-        rows = []
-        for col in ("lang", "text"):
-            r = table_ndv(t, col)
-            assert r["files_missing"] == 0, r
-            rows.append((col, int(r["n_min"]), int(r["kth_hash"]),
-                         float(r["est_distinct"])))
-        return spark.createDataFrame(
-            rows, "column string, n_min bigint, kth_hash bigint, "
-                  "est_distinct double")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def q58_partitioned_scan(spark, sf_dir):
     """Hidden partitioning through the REAL table format, value-hash
     oracled: sf_dir-derived transcripts (q30's derivation) ingested under
@@ -951,87 +907,15 @@ def q57_cdc_changes(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q72_stream_stream_join(spark, sf_dir):
-    """REAL two-source stream-stream join in the value-hash gate: two
-    readStream sources over the events file (clicks / purchases), joined
-    on user_id with purchase time in (click_ts, click_ts + 6h], both
-    sides watermarked — the canonical Structured Streaming attribution
-    join with bounded state (streaming/join.py). On a bounded replay
-    nothing is late, so the streaming result must equal the plain batch
-    join, which is exactly what the DuckDB oracle states. At scale the
-    same plan runs unbounded: one shuffle by user_id per side, state
-    capped by the 6h horizon + watermark."""
-    import os
-    import shutil
-    import uuid
-
-    from .streaming.join import stream_stream_join
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    d = os.path.join(base, f"spark_graft_q72_{uuid.uuid4().hex[:12]}")
-    os.makedirs(os.path.join(d, "in"))
-    qname = "q72_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        shutil.copy(src, os.path.join(d, "in", "events.parquet"))
-        schema = spark.read.parquet(src).schema
-
-        def _evt(kind):
-            return (
-                spark.readStream.schema(schema).parquet(os.path.join(d, "in"))
-                .filter(F.col("event_type") == kind)
-                .select("user_id", "ts", "event_id", "value")
-            )
-
-        joined = stream_stream_join(
-            _evt("click"), _evt("purchase"), key="user_id",
-            within="6 hours", watermark="6 hours",
-            left_prefix="click_", right_prefix="purchase_",
-        )
-        out = joined.select(
-            "user_id",
-            F.col("click_event_id").alias("click_id"),
-            F.col("purchase_event_id").alias("purchase_id"),
-            "click_ts",
-            "purchase_ts",
-            # floor of exact elapsed micros: engine-neutral, unlike
-            # SECOND-granularity diffs (Spark floors elapsed time, DuckDB
-            # counts second-boundary crossings — off by one on sub-second
-            # components)
-            F.floor(
-                F.expr("timestampdiff(MICROSECOND, click_ts, purchase_ts)") / 1_000_000
-            ).alias("lag_sec"),
-            F.round("purchase_value", 2).alias("purchase_value"),
-        )
-        with _tmp_conf(spark, spark__sql__shuffle__partitions="8"):
-            sq = (
-                out.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(d, "ckpt"))
-                .start()
-            )
-            sq.awaitTermination()
-        result = spark.table(qname)
-        rows = result.collect()  # materialize before sink view is dropped
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-        shutil.rmtree(d, ignore_errors=True)
-
-
 @contextlib.contextmanager
 def _tmp_conf(spark, **kv):
     """Temporarily set session confs (restored after). Used by the
     streaming gate queries: a bare driver session defaults to 200
     shuffle partitions, and each becomes a state-store instance — 200
-    stores × per-store overhead dominated q72's gate cost (86.7 s bare
-    vs 47.8 s under the repo session). The streams here checkpoint to a
-    fresh dir every call, so re-planning with fewer partitions is safe."""
+    stores × per-store overhead dominated a stream-join gate query's cost
+    (86.7 s bare vs 47.8 s under the repo session). The streams here
+    checkpoint to a fresh dir every call, so re-planning with fewer
+    partitions is safe."""
     keys = {k.replace("__", "."): v for k, v in kv.items()}
     old = {k: spark.conf.get(k, None) for k in keys}
     try:
@@ -1355,81 +1239,6 @@ def q82_bloom_point_lookup(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q83_matview_incremental(spark, sf_dir):
-    """Incrementally-maintained materialized aggregate
-    (operators/matview.py): a (source, lang) COUNT/SUM rollup is created
-    over a real table, the source then takes a cow DELETE, cow UPDATE,
-    MoR DELETE, MoR UPDATE and a MERGE upsert, and ONE refresh applies
-    the whole exact change-feed chain (balanced delete+insert deltas,
-    cdc poll_changes(exact=True)) — never recomputing from the source.
-    The oracle recomputes the same mutation chain relationally, so the
-    value hash proves the incremental path equals a full recompute."""
-    import os
-    import shutil
-    import uuid
-
-    from .operators.matview import create_matview, read_matview, refresh_matview
-    from .operators.merge import merge_into
-    from .operators.rowlevel import delete_where, update_where
-    from .table.meta import Table
-    from .table.writer import write_files
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", "lang", "n_chars"
-    )
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(base, f"spark_graft_q83_{uuid.uuid4().hex[:12]}")
-    vroot = root + "-view"
-    try:
-        src = Table.create(root)
-        entries = write_files(spark, src, docs, 4, "ingest",
-                              stat_columns=("doc_id",))
-        src.commit_append(entries, {"op": "initial-ingest"})
-        view = create_matview(
-            spark, src, vroot, ["source", "lang"],
-            {"n": ("count", "*"), "sum_chars": ("sum", "n_chars")},
-            source_schema=docs.schema,
-        )
-        delete_where(spark, src, "lang = 'de' OR n_chars < 150",
-                     schema=docs.schema, stat_columns=("doc_id",))
-        update_where(spark, src, "lang = 'zh'", {"n_chars": "n_chars + 1000"},
-                     schema=docs.schema, stat_columns=("doc_id",))
-        delete_where(spark, src, "source = 'src0'", schema=docs.schema,
-                     mode="merge-on-read", keys=["doc_id"])
-        update_where(spark, src, "lang = 'fr'", {"n_chars": "n_chars * 2"},
-                     schema=docs.schema, stat_columns=("doc_id",),
-                     mode="merge-on-read", keys=["doc_id"])
-        corr = docs.where("doc_id < 40").withColumn(
-            "n_chars", F.col("n_chars") + 500
-        )
-        merge_into(spark, src, corr, keys=["doc_id"], order_col=None,
-                   schema=docs.schema, stat_columns=("doc_id",))
-        refresh_matview(spark, src, view, source_schema=docs.schema)
-        result = read_matview(spark, view).select(
-            "source", "lang", "n", "sum_chars"
-        )
-        rows = result.collect()  # materialize before the temp tables die
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(vroot, ignore_errors=True)
-
-
-def q84_kmv_distinct_sketch(spark, sf_dir):
-    """KMV distinct-count sketch (operators/sketch.py): per-source
-    estimated distinct doc ids with k=16 minimum md5-hash slots. Unlike
-    HLL (approx_count_distinct), the deterministic hash makes even the
-    ESTIMATE value-hash oracle-able — DuckDB computes the identical
-    k-th minimum and the identical (k-1)*2^60/h_k estimate. Groups with
-    fewer than k distinct values report exactly."""
-    from .operators.sketch import kmv_distinct_by_group
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "doc_key", F.col("doc_id").cast("string")
-    )
-    return kmv_distinct_by_group(docs, ["source"], "doc_key", k=16)
-
-
 def q100_copy_into(spark, sf_dir):
     """Idempotent COPY INTO (operators/copy_into): two landing files
     load once; a full RE-RUN over the same glob is ledger-skipped (a
@@ -1721,78 +1530,6 @@ def q188_context_pack_examples(spark, sf_dir):
     return context_pack_examples(as_transcripts(e), budget_chars=1000)
 
 
-def q201_streaming_context_budget(spark, sf_dir):
-    """STATEFUL streaming in the value-hash gate: per-conversation
-    running char budget via applyInPandasWithState
-    (streaming.stateful.context_budget_stream), Trigger.AvailableNow,
-    memory sink in update mode. On a single-batch bounded replay the
-    last update row per conversation equals the batch operator, so the
-    oracle is exactly q178's SQL. State is Arrow-batched pandas with a
-    numpy cumsum — no per-row Python; unbounded, the same query runs
-    with an idle timeout finalizing cold conversations."""
-    import os
-    import shutil
-    import uuid
-
-    from .streaming.stateful import context_budget_stream
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    d = os.path.join(base, f"spark_graft_q201_{uuid.uuid4().hex[:12]}")
-    os.makedirs(os.path.join(d, "in"))
-    qname = "q201_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        shutil.copy(src, os.path.join(d, "in", "events.parquet"))
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(
-            os.path.join(d, "in")
-        )
-        tr = stream.where(
-            F.col("user_id").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.col("event_id").isNotNull()
-        ).select(
-            F.format_string("conv-%09d", F.col("user_id")).alias("conv_id"),
-            "ts",
-            "event_id",
-            F.coalesce(F.col("props").cast("string"), F.lit("")).alias(
-                "text"
-            ),
-        )
-        out = context_budget_stream(tr, budget_chars=2000)
-        with _tmp_conf(spark, spark__sql__shuffle__partitions="8"):
-            sq = (
-                out.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(d, "ckpt"))
-                .start()
-            )
-            sq.awaitTermination()
-        # update mode appends one row per key per batch; AvailableNow on
-        # one input file is a single batch, so the table IS the final
-        # state — but keep only the last row per conv for robustness
-        # against multi-batch splits of the same in-order file set
-        w = Window.partitionBy("conv_id").orderBy(
-            F.col("n_turns").desc(), F.col("total_chars").desc()
-        )
-        result = (
-            spark.table(qname)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def q205_dynamic_file_pruning(spark, sf_dir):
     """Join-driven dynamic file pruning (table.scan.scan_semi_join —
     Delta dynamic-file-pruning / Iceberg runtime-filter analog). Build
@@ -1937,137 +1674,6 @@ def q215_window_dedup(spark, sf_dir):
     return window_dedup(tr, window_turns=8, stride=4)
 
 
-def _dist_docs_table(spark, sf_dir, root, hist=None, cm=None,
-                     compact_after=False):
-    """Shared q217-q219 lifecycle: documents ingested as two
-    DETERMINISTIC halves (doc_id parity — the split the SQL twins can
-    restate), under the given distribution-sketch specs."""
-    from .operators.compact import compact as compact_op
-    from .table.meta import Table
-    from .table.writer import write_files
-
-    docs = _t(spark, sf_dir, "documents")
-    t = Table.create(root)
-    t.append_schema_version(docs.schema.jsonValue(), as_of_snapshot=0)
-    if hist:
-        t.set_histogram_columns(hist)
-    if cm:
-        t.set_cm_columns(cm, w=32, d=3, topk=3)
-    for parity in (0, 1):
-        # EXACTLY one file per parity half at ANY scale factor
-        # (n_files=1, not a rows_per_file heuristic): q219's oracle
-        # restates the per-file top-k pools as per-HALF pools, which is
-        # only the same thing if half == file (review finding)
-        entries = write_files(spark, t,
-                              docs.where(F.col("doc_id") % 2 == parity),
-                              1, f"half-{parity}", stat_columns=("doc_id",))
-        t.commit_append(entries, {"op": f"ingest-half-{parity}"})
-    if compact_after:
-        compact_op(spark, t, target_bytes=1 << 30, stat_columns=("doc_id",))
-    return t
-
-
-def q217_manifest_histogram(spark, sf_dir):
-    """Per-file equi-width histogram sketches merged from MANIFESTS
-    (operators/sketch.table_histogram): declare hist(n_chars, [0, 500),
-    25 bins) on a documents table, write two batches, compact (rewrites
-    re-sketch from the in-memory merged table), then read the table
-    histogram with ZERO data reads. Per-file bin counts are exact and
-    the merge is an elementwise sum, so the merged histogram IS the
-    whole-column histogram — which the oracle states directly over
-    documents with the identical binning expression (underflow slot
-    bin=-1, overflow slot bin=25)."""
-    import os
-    import shutil
-    import uuid
-
-    from .operators.sketch import table_histogram
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(base, f"spark_graft_q217_{uuid.uuid4().hex[:12]}")
-    try:
-        t = _dist_docs_table(spark, sf_dir, root,
-                             hist={"n_chars": (0.0, 500.0, 25)},
-                             compact_after=True)
-        h = table_histogram(t, "n_chars")
-        assert h["files_missing"] == 0, h
-        rows = [(b, int(n)) for b, n in zip(range(-1, 26), h["counts"])]
-        return spark.createDataFrame(rows, "bin int, n bigint")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def q218_metadata_quantiles(spark, sf_dir):
-    """Metadata-only quantile ESTIMATES from the merged histogram
-    (operators/sketch.table_quantiles): linear interpolation inside the
-    first bin whose cumulative count reaches q * total — identical
-    arithmetic (op order and all) to the SQL twin, so even the
-    INTERPOLATED estimates value-hash oracle. Answers percentile
-    questions over a 100 TB column from kilobytes of manifest sketch."""
-    import os
-    import shutil
-    import uuid
-
-    from .operators.sketch import table_quantiles
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(base, f"spark_graft_q218_{uuid.uuid4().hex[:12]}")
-    try:
-        t = _dist_docs_table(spark, sf_dir, root,
-                             hist={"n_chars": (0.0, 500.0, 25)},
-                             compact_after=True)
-        qs = [0.25, 0.5, 0.75, 0.9, 0.99, 1.0]
-        rows = [(float(q), float(est)) for q, est in
-                table_quantiles(t, "n_chars", qs)]
-        return spark.createDataFrame(rows, "q double, est double")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def q219_cm_heavy_hitters(spark, sf_dir):
-    """Count-min heavy hitters from MANIFESTS (operators/sketch.
-    heavy_hitters) + an exact verify leg: two deterministic file halves
-    each carry a d=3 x w=32 count-min matrix and a top-3 candidate
-    pool; matrices merge by sum (split-independent — the merged matrix
-    IS the whole-column matrix), candidates are the pool union, and the
-    estimate (min over hash rows) is a GUARANTEED upper bound on each
-    true count. The verify leg scans the TABLE (not the input) for the
-    candidates' exact counts, proving est >= exact always. The oracle
-    restates pools, counters, estimates, and exact counts relationally
-    over the same parity split."""
-    import os
-    import shutil
-    import uuid
-
-    from .operators.sketch import heavy_hitters
-    from .table import scan as _scan
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(base, f"spark_graft_q219_{uuid.uuid4().hex[:12]}")
-    try:
-        t = _dist_docs_table(spark, sf_dir, root, cm=["lang"])
-        table_df = _scan(spark, t)
-        n_lang = table_df.where(F.col("lang").isNotNull()).count()
-        min_count = max(1, n_lang // 20)
-        hh = heavy_hitters(t, "lang", min_count)
-        cand = spark.createDataFrame(
-            [(v, int(est)) for v, est in hh], "value string, est_count bigint"
-        )
-        exact = (
-            table_df.where(F.col("lang").isNotNull())
-            .groupBy(F.col("lang").alias("value"))
-            .agg(F.count(F.lit(1)).alias("exact_n"))
-        )
-        result = cand.join(exact, "value", "left").select(
-            "value", "est_count",
-            F.coalesce("exact_n", F.lit(0)).alias("exact_n"),
-        )
-        # collected before the table dir is removed (lifecycle query)
-        return spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def q220_multitable_txn(spark, sf_dir):
     """Multi-table ATOMIC transaction (table/txn.py, the reference's
     Parallel multi-table ETL fan-out made all-or-nothing, reference
@@ -2158,34 +1764,6 @@ def q220_multitable_txn(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q221_histogram_drift(spark, sf_dir):
-    """Metadata-only data-drift monitor (sketch.histogram_drift): the
-    per-bin count delta between the snapshot holding only the even
-    doc_id half and the snapshot holding both halves — computed purely
-    from manifest histogram sketches at the two snapshot ids (zero data
-    reads; time travel over SKETCHES). The oracle restates both
-    binnings relationally: n_from = even half, n_to = everything."""
-    import os
-    import shutil
-    import uuid
-
-    from .operators.sketch import histogram_drift
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(base, f"spark_graft_q221_{uuid.uuid4().hex[:12]}")
-    try:
-        t = _dist_docs_table(spark, sf_dir, root,
-                             hist={"n_chars": (0.0, 500.0, 25)})
-        sids = [s for s in t.snapshot_ids()]
-        rows = histogram_drift(t, "n_chars", from_snapshot=sids[0],
-                               to_snapshot=sids[1])
-        return spark.createDataFrame(
-            [(b, int(na), int(nb), int(d)) for b, na, nb, d in rows],
-            "bin int, n_from bigint, n_to bigint, delta bigint")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def q222_shallow_clone(spark, sf_dir):
     """Zero-copy SHALLOW CLONE (operators/clone.shallow_clone, Delta
     SHALLOW CLONE / Snowflake zero-copy analog): clone the documents
@@ -2204,11 +1782,20 @@ def q222_shallow_clone(spark, sf_dir):
     from .operators.rowlevel import delete_where
     from .table.meta import Table
     from .table.scan import scan as scan_table
+    from .table.writer import write_files
 
     base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     root = os.path.join(base, f"spark_graft_q222_{uuid.uuid4().hex[:12]}")
     try:
-        t = _dist_docs_table(spark, sf_dir, os.path.join(root, "src"))
+        docs = _t(spark, sf_dir, "documents")
+        t = Table.create(os.path.join(root, "src"))
+        t.append_schema_version(docs.schema.jsonValue(), as_of_snapshot=0)
+        for parity in (0, 1):
+            # documents ingested as two deterministic halves, one file each
+            entries = write_files(spark, t,
+                                  docs.where(F.col("doc_id") % 2 == parity),
+                                  1, f"half-{parity}", stat_columns=("doc_id",))
+            t.commit_append(entries, {"op": f"ingest-half-{parity}"})
         shallow_clone(t, os.path.join(root, "dst"))
         c = Table.load(os.path.join(root, "dst"))
         delete_where(spark, c, "lang = 'fr'", stat_columns=("doc_id",),
@@ -2228,55 +1815,6 @@ def q222_shallow_clone(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q223_key_overlap_estimate(spark, sf_dir):
-    """Metadata-only JOIN-KEY overlap between two tables from their
-    manifest KMV sketches (sketch.key_overlap_estimate, Beyer et al.
-    k-min-value set algebra): how many distinct customer keys do orders
-    and customer share, what's the key Jaccard — the broadcast-vs-
-    shuffle planner question answered with ZERO data reads. Each table
-    ingests two deterministic halves (merge is exact sketch algebra,
-    split-independent); the oracle restates the identical min-set
-    union/intersection arithmetic over the raw inputs in SQL."""
-    import os
-    import shutil
-    import uuid
-
-    from .operators.sketch import key_overlap_estimate
-    from .table.meta import Table
-    from .table.writer import write_files
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(base, f"spark_graft_q223_{uuid.uuid4().hex[:12]}")
-    try:
-        specs = [
-            ("orders", _t(spark, sf_dir, "orders"), "o_orderkey", "o_custkey"),
-            ("customer", _t(spark, sf_dir, "customer"), "c_custkey",
-             "c_custkey"),
-        ]
-        tables = {}
-        for name, df, split_col, key_col in specs:
-            t = Table.create(os.path.join(root, name))
-            t.append_schema_version(df.schema.jsonValue(), as_of_snapshot=0)
-            t.set_ndv_columns([key_col], k=64)
-            for parity in (0, 1):
-                entries = write_files(
-                    spark, t, df.where(F.col(split_col) % 2 == parity),
-                    1, f"half-{parity}", stat_columns=(split_col,))
-                t.commit_append(entries, {"op": f"ingest-{parity}"})
-            tables[name] = t
-        r = key_overlap_estimate(tables["orders"], "o_custkey",
-                                 tables["customer"], "c_custkey")
-        assert r["files_missing_a"] == 0 and r["files_missing_b"] == 0, r
-        return spark.createDataFrame(
-            [(int(r["k"]), int(r["n_min"]), int(r["n_inter"]),
-              float(r["est_union"]), float(r["jaccard"]),
-              float(r["est_common"]))],
-            "k int, n_min bigint, n_inter bigint, est_union double, "
-            "jaccard double, est_common double")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 ALL = {
     "q05_validation_filter": q05_validation_filter,
     "q06_invalid_complement": q06_invalid_complement,
@@ -2292,21 +1830,17 @@ ALL = {
     "q60_branch_isolation": q60_branch_isolation,
     "q61_exactly_once_ingest": q61_exactly_once_ingest,
     "q62_partial_progress_compact": q62_partial_progress_compact,
-    "q72_stream_stream_join": q72_stream_stream_join,
     "q74_csv_reader_roundtrip": q74_csv_reader_roundtrip,
     "q75_xlsx_reader": q75_xlsx_reader,
     "q76_analyze_stats": q76_analyze_stats,
     "q77_jsonl_reader": q77_jsonl_reader,
     "q81_table_stream_source": q81_table_stream_source,
     "q82_bloom_point_lookup": q82_bloom_point_lookup,
-    "q83_matview_incremental": q83_matview_incremental,
-    "q84_kmv_distinct_sketch": q84_kmv_distinct_sketch,
     "q87_schema_evolution_lifecycle": q87_schema_evolution_lifecycle,
     "q89_metadata_count": q89_metadata_count,
     "q90_retention_delete": q90_retention_delete,
     "q91_cdf_stream_replay": q91_cdf_stream_replay,
     "q92_generic_cluster": q92_generic_cluster,
-    "q93_manifest_ndv_sketch": q93_manifest_ndv_sketch,
     "q100_copy_into": q100_copy_into,
     "q101_cdc_replication": q101_cdc_replication,
     "q104_auto_maintain": q104_auto_maintain,
@@ -2322,7 +1856,6 @@ ALL = {
     "q186_conversation_cost": q186_conversation_cost,
     "q187_boilerplate_turns": q187_boilerplate_turns,
     "q188_context_pack_examples": q188_context_pack_examples,
-    "q201_streaming_context_budget": q201_streaming_context_budget,
     "q204_preference_pairs": q204_preference_pairs,
     "q205_dynamic_file_pruning": q205_dynamic_file_pruning,
     "q206_truncation_audit": q206_truncation_audit,
@@ -2332,11 +1865,6 @@ ALL = {
     "q211_cache_economics": q211_cache_economics,
     "q214_turn_windows": q214_turn_windows,
     "q215_window_dedup": q215_window_dedup,
-    "q217_manifest_histogram": q217_manifest_histogram,
-    "q218_metadata_quantiles": q218_metadata_quantiles,
-    "q219_cm_heavy_hitters": q219_cm_heavy_hitters,
     "q220_multitable_txn": q220_multitable_txn,
-    "q221_histogram_drift": q221_histogram_drift,
     "q222_shallow_clone": q222_shallow_clone,
-    "q223_key_overlap_estimate": q223_key_overlap_estimate,
 }

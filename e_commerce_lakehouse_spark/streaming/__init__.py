@@ -5,7 +5,6 @@ from .ingest import (
     txn_last_epoch,
     windowed_counts,
 )
-from .join import stream_stream_join
 from .table_sink import LakehouseSinkDataSource
 from .table_source import LakehouseStreamDataSource
 
@@ -15,7 +14,6 @@ __all__ = [
     "ingest_append_stream",
     "ingest_available_now",
     "stream_dedup",
-    "stream_stream_join",
     "txn_last_epoch",
     "windowed_counts",
 ]

@@ -49,8 +49,6 @@ class _FileMessage(WriterCommitMessage):
     stats: dict = field(default_factory=dict)
     blooms: dict | None = None
     nulls: dict | None = None
-    ndv: dict | None = None
-    dist: dict | None = None
 
 
 class LakehouseStreamWriter(DataSourceStreamWriter):
@@ -70,8 +68,6 @@ class LakehouseStreamWriter(DataSourceStreamWriter):
 
         t = Table.load(self._root)
         self._bloom_spec = t.bloom_spec()
-        self._ndv_spec = t.ndv_spec()
-        self._dist_spec = t.dist_spec()
         # write-schema version captured at STREAM START: entries commit
         # with this sv, so files written here bind their column names
         # correctly even if an evolution lands mid-stream
@@ -136,13 +132,10 @@ class LakehouseStreamWriter(DataSourceStreamWriter):
         pq.write_table(tbl, abs_path, compression="zstd",
                        coerce_timestamps="us", allow_truncated_timestamps=True)
         d = file_stats_dict(abs_path, self._root, self._stat_columns,
-                            bloom_spec=self._bloom_spec,
-                            ndv_spec=self._ndv_spec,
-                            dist_spec=self._dist_spec)
+                            bloom_spec=self._bloom_spec)
         return _FileMessage(path=d["path"], rows=d["rows"],
                             bytes=d["bytes"], stats=d["stats"],
-                            blooms=d.get("blooms"), nulls=d.get("nulls"),
-                            ndv=d.get("ndv"), dist=d.get("dist"))
+                            blooms=d.get("blooms"), nulls=d.get("nulls"))
 
     # ---- driver side ----
 
@@ -153,9 +146,7 @@ class LakehouseStreamWriter(DataSourceStreamWriter):
         entries = [
             DataFileEntry(path=m.path, rows=m.rows, bytes=m.bytes, stats=m.stats,
                           blooms=getattr(m, "blooms", None), sv=self._sv,
-                          nulls=getattr(m, "nulls", None),
-                          ndv=getattr(m, "ndv", None),
-                          dist=getattr(m, "dist", None))
+                          nulls=getattr(m, "nulls", None))
             for m in messages
             if m is not None and m.rows > 0
         ]

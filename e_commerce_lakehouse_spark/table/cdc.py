@@ -241,7 +241,7 @@ class ChangeFeedConsumer(IncrementalConsumer):
     def poll_changes(self, spark: SparkSession, exact: bool = False) -> dict | None:
         """``exact=True`` upgrades the feed to a BALANCED delta (delete +
         insert pairs that cancel additively — what incremental aggregate
-        maintenance needs, operators/matview.py):
+        maintenance needs):
 
         - merge / cow-UPDATE / overwrite additionally emit the parent
           snapshot's VISIBLE rows of each removed file as 'delete', so a

@@ -130,21 +130,6 @@ class DataFileEntry:
     #: inside a predicate; files without it fall to the boundary-read
     #: path (conservative, never wrong).
     nulls: dict | None = None
-    #: per-column KMV NDV sketch {col: {"k": int, "mins": [int...]}} —
-    #: the k smallest 60-bit md5 hashes of the file's distinct values;
-    #: mergeable (union + re-min = the global sketch), deterministic, so
-    #: table-level estimates oracle (operators/sketch.table_ndv). None
-    #: for files written before/without a spec.
-    ndv: dict | None = None
-    #: per-column distribution sketches {col: {"hist": {"lo","hi","bins",
-    #: "counts"}, "cm": {"w","d","rows","topk"}}} — exact-count equi-width
-    #: histograms (mergeable by elementwise sum → metadata-only quantile
-    #: estimates, operators/sketch.table_histogram) and count-min matrices
-    #: (mergeable by sum → metadata-only frequency over-estimates +
-    #: heavy-hitter candidates). Deterministic md5 hashing, so table-level
-    #: answers oracle against SQL twins. None for files written
-    #: before/without a spec (counted as files_missing by the mergers).
-    dist: dict | None = None
     #: SCHEMA VERSION the file's bytes were WRITTEN under (Iceberg binds
     #: columns by field-id in the file footer; plain parquet can't, so the
     #: version number recorded here binds each file's WRITTEN column names
@@ -165,10 +150,6 @@ class DataFileEntry:
             d["sv"] = self.sv
         if self.nulls is not None:
             d["nulls"] = self.nulls
-        if self.ndv is not None:
-            d["ndv"] = self.ndv
-        if self.dist is not None:
-            d["dist"] = self.dist
         return d
 
     @classmethod
@@ -176,8 +157,7 @@ class DataFileEntry:
         return cls(path=d["path"], rows=d["rows"], bytes=d["bytes"],
                    stats=d.get("stats", {}), seq=d.get("seq", 0),
                    partition=d.get("partition"), blooms=d.get("blooms"),
-                   sv=d.get("sv"), nulls=d.get("nulls"), ndv=d.get("ndv"),
-                   dist=d.get("dist"))
+                   sv=d.get("sv"), nulls=d.get("nulls"))
 
 
 @dataclass
@@ -1024,108 +1004,6 @@ class Table:
             json.dump({"blooms": spec}, f)
         os.replace(tmp, self._bloom_spec_path())
 
-    def _ndv_spec_path(self) -> str:
-        return os.path.join(self.metadata_dir, "ndv.json")
-
-    def ndv_spec(self) -> dict[str, dict]:
-        """Declared per-file KMV NDV-sketch columns: {col: {"k": int}}.
-        Iceberg puffin's apache-datasketches-theta analog, but with a
-        deterministic md5 KMV so merged estimates value-hash oracle
-        (operators/sketch.table_ndv). Consulted by every write path;
-        files written before the declaration carry no sketch and are
-        reported in the merge's files_missing."""
-        try:
-            with open(self._ndv_spec_path()) as f:
-                return json.load(f)["ndv"]
-        except FileNotFoundError:
-            return {}
-
-    def set_ndv_columns(self, columns: list[str], k: int = 256) -> None:
-        """Declare NDV-sketch columns (string/int; ``columns=[]`` drops
-        the sketch for future writes)."""
-        if self.branch is not None:
-            raise ValueError("ndv sketch declaration on a branch is not "
-                             "supported; declare on main")
-        if k < 2:
-            raise ValueError("k must be >= 2 (the estimator divides by h_k)")
-        spec = {c: {"k": int(k)} for c in columns}
-        tmp = self._ndv_spec_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"ndv": spec}, f)
-        os.replace(tmp, self._ndv_spec_path())
-
-    def _dist_spec_path(self) -> str:
-        return os.path.join(self.metadata_dir, "dist.json")
-
-    def dist_spec(self) -> dict[str, dict]:
-        """Declared per-file DISTRIBUTION-sketch columns:
-        {col: {"hist": {"lo","hi","bins"}, "cm": {"w","d","topk"}}}.
-        Equi-width histograms merge by elementwise sum into the exact
-        table histogram (→ metadata-only quantile estimates,
-        operators/sketch.table_histogram); count-min matrices merge by
-        sum into guaranteed frequency over-estimates + heavy-hitter
-        candidates (operators/sketch.cm_estimate / heavy_hitters). Both
-        use deterministic arithmetic/md5 so table-level answers oracle
-        against SQL twins. Consulted by every write path; files written
-        before the declaration carry no sketch (files_missing)."""
-        try:
-            with open(self._dist_spec_path()) as f:
-                return json.load(f)["dist"]
-        except FileNotFoundError:
-            return {}
-
-    def _write_dist_spec(self, spec: dict) -> None:
-        """Shared declaration tail: branch guard happened in the caller;
-        drop emptied columns and persist atomically."""
-        spec = {c: p for c, p in spec.items() if p}
-        tmp = self._dist_spec_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"dist": spec}, f)
-        os.replace(tmp, self._dist_spec_path())
-
-    def set_histogram_columns(self, columns: dict[str, tuple],
-                              bins: int = 64) -> None:
-        """Declare equi-width histogram sketch columns:
-        ``{col: (lo, hi)}`` or ``{col: (lo, hi, bins)}``. Bin edges are
-        FIXED at declaration (that is what makes per-file counts exactly
-        mergeable); values outside [lo, hi) land in the underflow/
-        overflow slots, so no row is ever lost from the merged total.
-        Re-declaring replaces only the hist half of each column's spec."""
-        if self.branch is not None:
-            raise ValueError("distribution sketch declaration on a branch "
-                             "is not supported; declare on main")
-        spec = self.dist_spec()
-        for c in list(spec):
-            spec[c].pop("hist", None)
-        for c, params in columns.items():
-            lo, hi = float(params[0]), float(params[1])
-            b = int(params[2]) if len(params) > 2 else int(bins)
-            if not (hi > lo):
-                raise ValueError(f"hist spec for {c}: hi must be > lo")
-            if b < 1:
-                raise ValueError(f"hist spec for {c}: bins must be >= 1")
-            spec.setdefault(c, {})["hist"] = {"lo": lo, "hi": hi, "bins": b}
-        self._write_dist_spec(spec)
-
-    def set_cm_columns(self, columns: list[str], w: int = 128, d: int = 4,
-                       topk: int = 16) -> None:
-        """Declare count-min sketch columns (string/int; ``columns=[]``
-        drops the cm half for future writes). ``w`` counters × ``d``
-        hash rows per file; ``topk`` most-frequent values per file kept
-        as the heavy-hitter candidate pool."""
-        if self.branch is not None:
-            raise ValueError("distribution sketch declaration on a branch "
-                             "is not supported; declare on main")
-        if w < 2 or d < 1:
-            raise ValueError("count-min needs w >= 2 and d >= 1")
-        spec = self.dist_spec()
-        for c in list(spec):
-            spec[c].pop("cm", None)
-        for c in columns:
-            spec.setdefault(c, {})["cm"] = {"w": int(w), "d": int(d),
-                                            "topk": int(topk)}
-        self._write_dist_spec(spec)
-
     # ---------- hidden partitioning ----------
 
     def partition_spec(self) -> list:
@@ -1377,11 +1255,20 @@ class Table:
 
 _STAT_MIN = "stat_min_"
 _NULLC = "nullc_"
-_NDV = "ndv_"
-_DIST = "dist_"
 _STAT_MAX = "stat_max_"
 _PART = "part_"
 _BLOOM = "bloom_"
+_ENTRY_SCALARS = ("path", "rows", "bytes", "seq", "sv")
+
+
+def manifest_columns(names, blooms: bool = True) -> list[str]:
+    """The parquet-manifest columns that decode into DataFileEntry fields:
+    the scalars plus the stat_/nullc_/part_ prefixes (and bloom_ when
+    ``blooms``). Selected positively, so a blob column the codec does not
+    know — e.g. ndv_/dist_ sketches in manifests from older writers — is
+    never read."""
+    prefixes = (_STAT_MIN, _STAT_MAX, _NULLC, _PART) + ((_BLOOM,) if blooms else ())
+    return [c for c in names if c in _ENTRY_SCALARS or c.startswith(prefixes)]
 
 
 def _arrow_stat_type(values):
@@ -1438,40 +1325,6 @@ def _write_manifest_parquet(path: str, entries: list[DataFileEntry]) -> None:
         arrays[_NULLC + k] = pa.array(
             [(e.nulls or {}).get(k) for e in entries], pa.int64()
         )
-    ndv_keys: list[str] = []
-    kseen: set[str] = set()
-    for e in entries:
-        for k in (e.ndv or {}):
-            if k not in kseen:
-                kseen.add(k)
-                ndv_keys.append(k)
-    for k in ndv_keys:
-        # compact-JSON per file, excluded from planning reads like blooms
-        arrays[_NDV + k] = pa.array(
-            [
-                json.dumps(e.ndv[k], separators=(",", ":")).encode()
-                if e.ndv and k in e.ndv else None
-                for e in entries
-            ],
-            pa.binary(),
-        )
-    dist_keys: list[str] = []
-    dseen: set[str] = set()
-    for e in entries:
-        for k in (e.dist or {}):
-            if k not in dseen:
-                dseen.add(k)
-                dist_keys.append(k)
-    for k in dist_keys:
-        # compact-JSON per file, excluded from planning reads like blooms
-        arrays[_DIST + k] = pa.array(
-            [
-                json.dumps(e.dist[k], separators=(",", ":")).encode()
-                if e.dist and k in e.dist else None
-                for e in entries
-            ],
-            pa.binary(),
-        )
     for k in stat_keys:
         mins = [e.stats[k][0] if k in e.stats else None for e in entries]
         maxs = [e.stats[k][1] if k in e.stats else None for e in entries]
@@ -1521,8 +1374,6 @@ def arrow_manifest_to_entries(t) -> list[DataFileEntry]:
     part_keys = [c[len(_PART):] for c in t.column_names if c.startswith(_PART)]
     bloom_keys = [c[len(_BLOOM):] for c in t.column_names if c.startswith(_BLOOM)]
     null_keys = [c[len(_NULLC):] for c in t.column_names if c.startswith(_NULLC)]
-    ndv_keys = [c[len(_NDV):] for c in t.column_names if c.startswith(_NDV)]
-    dist_keys = [c[len(_DIST):] for c in t.column_names if c.startswith(_DIST)]
     cols = {c: t.column(c).to_pylist() for c in t.column_names}
     seqs = cols.get("seq")  # pre-seq manifests: default 0 (legacy)
     svs = cols.get("sv")  # pre-evolution manifests: None (legacy vintage)
@@ -1551,25 +1402,13 @@ def arrow_manifest_to_entries(t) -> list[DataFileEntry]:
             if n is not None:
                 nulls = nulls or {}
                 nulls[k] = int(n)
-        ndv = None
-        for k in ndv_keys:
-            b = cols[_NDV + k][i]
-            if b is not None:
-                ndv = ndv or {}
-                ndv[k] = json.loads(b)
-        dist = None
-        for k in dist_keys:
-            b = cols[_DIST + k][i]
-            if b is not None:
-                dist = dist or {}
-                dist[k] = json.loads(b)
         out.append(
             DataFileEntry(path=cols["path"][i], rows=cols["rows"][i],
                           bytes=cols["bytes"][i], stats=stats,
                           seq=seqs[i] if seqs is not None else 0,
                           partition=part, blooms=blooms,
                           sv=svs[i] if svs is not None else None,
-                          nulls=nulls, ndv=ndv, dist=dist)
+                          nulls=nulls)
         )
     return out
 
@@ -1577,7 +1416,9 @@ def arrow_manifest_to_entries(t) -> list[DataFileEntry]:
 def _read_manifest_parquet(path: str) -> list[DataFileEntry]:
     import pyarrow.parquet as pq
 
-    return arrow_manifest_to_entries(pq.read_table(path))
+    pf = pq.ParquetFile(path)
+    return arrow_manifest_to_entries(
+        pf.read(columns=manifest_columns(pf.schema_arrow.names)))
 
 
 def _stamp_seq(added: list[DataFileEntry], sid: int,

@@ -117,17 +117,16 @@ def _arrow_pruned_entries(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from .meta import _BLOOM, _NDV, arrow_manifest_to_entries
+    from .meta import arrow_manifest_to_entries, manifest_columns
 
-    # bloom/ndv blobs are NEVER read here — range pruning needs stats only;
+    # per-file blobs are NEVER read here — range pruning needs stats only;
     # point-lookup bloom refinement re-reads (path, bloom_<col>) filtered
     # to the survivors (_bloom_refine_arrow), so the planning scan stays
     # O(stat columns) however large the bloom index is
-    schema_names = pq.read_schema(manifest_path).names
     t = pq.read_table(
         manifest_path,
-        columns=[c for c in schema_names
-                 if not c.startswith(_BLOOM) and not c.startswith(_NDV)],
+        columns=manifest_columns(pq.read_schema(manifest_path).names,
+                                 blooms=False),
     )
     cols = set(t.column_names)
 

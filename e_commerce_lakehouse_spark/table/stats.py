@@ -30,8 +30,6 @@ def file_entry(
     root: str,
     stat_columns: Iterable[str],
     bloom_spec: dict | None = None,
-    ndv_spec: dict | None = None,
-    dist_spec: dict | None = None,
 ) -> DataFileEntry:
     """Build a DataFileEntry from one file's footer. Freshly collected
     entries are seq-UNSTAMPED (None): the commit that adds them assigns
@@ -39,8 +37,7 @@ def file_entry(
     set it explicitly afterwards (from_dict's 0-default is for reading
     pre-seq manifests, not for new files)."""
     e = DataFileEntry.from_dict(
-        file_stats_dict(abs_path, root, stat_columns, bloom_spec=bloom_spec,
-                        ndv_spec=ndv_spec, dist_spec=dist_spec)
+        file_stats_dict(abs_path, root, stat_columns, bloom_spec=bloom_spec)
     )
     e.seq = None
     return e
@@ -52,8 +49,6 @@ def collect_entries(
     stat_columns: Iterable[str],
     spark=None,
     bloom_spec: dict | None = None,
-    ndv_spec: dict | None = None,
-    dist_spec: dict | None = None,
 ) -> list[DataFileEntry]:
     """Footer-stat collection; distributed over executors when the file
     count is large and a SparkSession is provided. ``bloom_spec``
@@ -70,8 +65,7 @@ def collect_entries(
             from e_commerce_lakehouse_spark._footer_stats import file_stats_dict
 
             return [
-                file_stats_dict(p, root, stat_columns, bloom_spec=bloom_spec,
-                                ndv_spec=ndv_spec, dist_spec=dist_spec)
+                file_stats_dict(p, root, stat_columns, bloom_spec=bloom_spec)
                 for p in paths
             ]
 
@@ -83,8 +77,7 @@ def collect_entries(
             by_path[d["path"]] = e
         # preserve caller ordering
         return [by_path[os.path.relpath(p, root)] for p in abs_paths]
-    return [file_entry(p, root, stat_columns, bloom_spec=bloom_spec,
-                       ndv_spec=ndv_spec, dist_spec=dist_spec)
+    return [file_entry(p, root, stat_columns, bloom_spec=bloom_spec)
             for p in abs_paths]
 
 

@@ -69,7 +69,7 @@ def write_files(
         shaped.write.mode("error").partitionBy(*names).parquet(out_dir)
         paths = list_parquet_files(out_dir)
         entries = collect_entries(paths, table.root, stat_columns, spark=spark,
-                                  bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec())
+                                  bloom_spec=table.bloom_spec())
         for e in entries:
             e.partition = partition_from_path(e.path, partition_spec)
         return entries
@@ -79,7 +79,7 @@ def write_files(
     shaped.write.mode("error").parquet(out_dir)
     paths = list_parquet_files(out_dir)
     return collect_entries(paths, table.root, stat_columns, spark=spark,
-                           bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec())
+                           bloom_spec=table.bloom_spec())
 
 
 def write_rewrite_files(
@@ -113,7 +113,7 @@ def write_rewrite_files(
         )
         entries = collect_entries(
             list_parquet_files(out_dir), table.root, stat_columns, spark=spark,
-            bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec(),
+            bloom_spec=table.bloom_spec(),
         )
         for e in entries:
             e.partition = partition_from_path(e.path, spec)
@@ -121,7 +121,7 @@ def write_rewrite_files(
     df.repartition(max(1, n_out)).write.mode("error").parquet(out_dir)
     return collect_entries(
         list_parquet_files(out_dir), table.root, stat_columns, spark=spark,
-        bloom_spec=table.bloom_spec(), ndv_spec=table.ndv_spec(), dist_spec=table.dist_spec(),
+        bloom_spec=table.bloom_spec(),
     )
 
 

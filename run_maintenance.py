@@ -67,10 +67,8 @@ def main(argv=None) -> int:
             "consume-changes", "register", "unregister", "catalog-sql",
             "evolve-partition", "create-branch", "delete-branch",
             "branches", "fast-forward", "replicate", "set-bloom",
-            "matview-create", "matview-refresh", "retention", "count",
-            "set-ndv", "ndv", "depth-report", "semi-scan",
-            "set-hist", "set-cm", "histogram", "quantiles", "heavy-hitters",
-            "txn-heal", "txn-vacuum", "txn-ingest", "hist-drift", "clone",
+            "retention", "count", "depth-report", "semi-scan",
+            "txn-heal", "txn-vacuum", "txn-ingest", "clone",
         ],
     )
     p.add_argument("--target-mb", type=int, default=128, help="target data-file MB")
@@ -112,9 +110,6 @@ def main(argv=None) -> int:
                    help="clone: destination root for the zero-copy clone")
     p.add_argument("--txn-dir", default=None,
                    help="txn-vacuum: the shared transaction-log directory")
-    p.add_argument("--min-count", type=int, default=1,
-                   help="heavy-hitters: report candidates whose count-min "
-                        "estimate is at least this")
     p.add_argument("--snapshot", type=int, default=None,
                    help="inspect: pin a snapshot id; diff: the FROM snapshot; "
                         "rollback: the snapshot to restore")
@@ -163,13 +158,6 @@ def main(argv=None) -> int:
                         "(empty string drops the index for future writes)")
     p.add_argument("--bloom-fpp", type=float, default=0.01,
                    help="set-bloom: target false-positive probability")
-    p.add_argument("--view", default=None,
-                   help="matview-create/refresh: view table root")
-    p.add_argument("--group-by", default=None,
-                   help="matview-create: comma-separated group columns")
-    p.add_argument("--aggs", default=None,
-                   help="matview-create: semicolon list out=fn:col "
-                        "(fn: count|sum), e.g. 'n=count:*;sum_chars=sum:n_chars'")
     p.add_argument("--tables", default=None,
                    help="pipeline: comma-separated EXTRA table roots to fan out "
                         "with --table in parallel (per-branch catch)")
@@ -299,80 +287,6 @@ def main(argv=None) -> int:
             spark, Table.load(args.table, branch=args.branch),
             ts_range=ts_range, eq=eq, snapshot_id=args.snapshot,
         )
-    elif args.op == "set-ndv":  # metadata-only spec declaration
-        if args.columns is None:
-            p.error("--op set-ndv requires --columns col[,col...] ('' drops)")
-        cols = [c.strip() for c in args.columns.split(",") if c.strip()]
-        Table.load(args.table, branch=args.branch).set_ndv_columns(cols)
-        result = {"ndv_columns": cols}
-    elif args.op == "ndv":  # metadata-only estimate
-        from e_commerce_lakehouse_spark.operators.sketch import table_ndv
-
-        if not args.columns:
-            p.error("--op ndv requires --columns col[,col...]")
-        t = Table.load(args.table, branch=args.branch)
-        result = {c.strip(): table_ndv(t, c.strip(), snapshot_id=args.snapshot)
-                  for c in args.columns.split(",") if c.strip()}
-    elif args.op == "set-hist":  # metadata-only spec declaration
-        # --columns col=lo:hi[:bins][,col=...] ('' drops all hist specs)
-        if args.columns is None:
-            p.error("--op set-hist requires --columns col=lo:hi[:bins],...")
-        spec = {}
-        for item in args.columns.split(","):
-            item = item.strip()
-            if not item:
-                continue
-            c, _, rng = item.partition("=")
-            parts = rng.split(":")
-            if len(parts) < 2:
-                p.error(f"bad hist spec {item!r}: want col=lo:hi[:bins]")
-            spec[c] = tuple(float(x) if i < 2 else int(x)
-                            for i, x in enumerate(parts))
-        Table.load(args.table, branch=args.branch).set_histogram_columns(spec)
-        result = {"hist_columns": sorted(spec)}
-    elif args.op == "set-cm":  # metadata-only spec declaration
-        if args.columns is None:
-            p.error("--op set-cm requires --columns col[,col...] ('' drops)")
-        cols = [c.strip() for c in args.columns.split(",") if c.strip()]
-        Table.load(args.table, branch=args.branch).set_cm_columns(cols)
-        result = {"cm_columns": cols}
-    elif args.op == "histogram":  # metadata-only merged histogram
-        from e_commerce_lakehouse_spark.operators.sketch import table_histogram
-
-        if not args.columns:
-            p.error("--op histogram requires --columns col[,col...]")
-        t = Table.load(args.table, branch=args.branch)
-        result = {c.strip(): table_histogram(t, c.strip(),
-                                             snapshot_id=args.snapshot)
-                  for c in args.columns.split(",") if c.strip()}
-    elif args.op == "quantiles":  # metadata-only quantile estimates
-        from e_commerce_lakehouse_spark.operators.sketch import table_quantiles
-
-        if not args.columns:
-            p.error("--op quantiles requires --columns <one column>")
-        col = args.columns.split(",")[0].strip()
-        t = Table.load(args.table, branch=args.branch)
-        result = {col: table_quantiles(t, col, [0.25, 0.5, 0.75, 0.9, 0.99],
-                                       snapshot_id=args.snapshot)}
-    elif args.op == "heavy-hitters":  # metadata-only candidates + cm bounds
-        from e_commerce_lakehouse_spark.operators.sketch import heavy_hitters
-
-        if not args.columns:
-            p.error("--op heavy-hitters requires --columns <one column>")
-        col = args.columns.split(",")[0].strip()
-        t = Table.load(args.table, branch=args.branch)
-        result = {col: heavy_hitters(t, col, max(1, args.min_count),
-                                     snapshot_id=args.snapshot)}
-    elif args.op == "hist-drift":  # metadata-only distribution drift
-        from e_commerce_lakehouse_spark.operators.sketch import histogram_drift
-
-        if not args.columns or args.snapshot is None or args.to_snapshot is None:
-            p.error("--op hist-drift requires --columns <col> --snapshot "
-                    "FROM --to-snapshot TO")
-        col = args.columns.split(",")[0].strip()
-        t = Table.load(args.table, branch=args.branch)
-        result = {col: histogram_drift(t, col, from_snapshot=args.snapshot,
-                                       to_snapshot=args.to_snapshot)}
     elif args.op == "clone":  # zero-copy shallow clone (metadata-only)
         from e_commerce_lakehouse_spark.operators.clone import shallow_clone
 
@@ -626,30 +540,6 @@ def main(argv=None) -> int:
                 spark, t, args.source, args.checkpoint,
                 source_format=args.ingest_format,
             )
-        elif args.op == "matview-create":
-            from e_commerce_lakehouse_spark.operators.matview import create_matview
-
-            if not (args.view and args.group_by and args.aggs):
-                p.error("--op matview-create requires --view, --group-by, --aggs")
-            aggs = {}
-            for part in args.aggs.split(";"):
-                out, _, spec = part.partition("=")
-                fn, _, col = spec.partition(":")
-                aggs[out.strip()] = (fn.strip(), col.strip() or "*")
-            v = create_matview(spark, Table.load(args.table), args.view,
-                               [c for c in args.group_by.split(",") if c], aggs)
-            result = {"view": args.view, "view_snapshot": v.current_snapshot_id(),
-                      "rows": v.total_rows(),
-                      "at_source_sid": v.snapshot().summary["matview_to_sid"]}
-        elif args.op == "matview-refresh":
-            from e_commerce_lakehouse_spark.operators.matview import refresh_matview
-
-            if not args.view:
-                p.error("--op matview-refresh requires --view")
-            result = with_retries(
-                lambda: refresh_matview(spark, Table.load(args.table),
-                                        Table.load(args.view)),
-                attempts=args.retries, backoff_s=args.retry_backoff)
         elif args.op == "replicate":
             # incremental table->table replication entirely through the
             # native streaming surfaces: source offsets = snapshot ids,

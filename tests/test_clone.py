@@ -19,7 +19,7 @@ def src_table(spark, tmp_path):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     t = Table.create(str(tmp_path / "src"))
     t.append_schema_version(docs.schema.jsonValue(), as_of_snapshot=0)
-    t.set_ndv_columns(["lang"], k=16)
+    t.set_bloom_columns(["lang"])
     append_dataframe(spark, t, docs.limit(30))
     append_dataframe(spark, t, docs.exceptAll(docs.limit(30)))
     t.create_tag("v1")
@@ -36,7 +36,8 @@ def test_clone_is_zero_copy_and_complete(spark, tmp_path, src_table):
     assert scan(spark, c).count() == docs.count()
     assert c.snapshot_ids() == t.snapshot_ids()
     assert c.resolve_ref("v1") == t.resolve_ref("v1")
-    assert c.ndv_spec() == t.ndv_spec()
+    assert "lang" in t.bloom_spec()
+    assert c.bloom_spec() == t.bloom_spec()
     # data bytes are SHARED (hardlink: st_nlink == 2)
     e = c.entries()[0]
     assert os.stat(os.path.join(c.root, e.path)).st_nlink == 2

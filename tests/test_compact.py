@@ -41,7 +41,6 @@ def test_compact_crash_resume(spark, tiny_table, tmp_path):
             tiny_table,
             target_bytes=TARGET,
             checkpoint_path=ckpt,
-            max_concurrent_groups=1,
             fail_after_groups=1,
         )
     # no commit happened
@@ -50,15 +49,6 @@ def test_compact_crash_resume(spark, tiny_table, tmp_path):
     m = compact(spark, tiny_table, target_bytes=TARGET, checkpoint_path=ckpt)
     assert m["resumed_groups"] >= 1
     assert tiny_table.current_snapshot_id() == 4
-    assert_same_rows(before, scan(spark, tiny_table).select("conv_id", "turn_idx", "text"))
-
-
-def test_compact_jobs_mode_parity(spark, tiny_table):
-    before = scan(spark, tiny_table).select("conv_id", "turn_idx", "text")
-    n_before = len(tiny_table.entries())
-    m = compact(spark, tiny_table, target_bytes=TARGET, mode="jobs", max_concurrent_groups=4)
-    assert len(tiny_table.entries()) < n_before
-    assert m["committed_snapshot"] == 4
     assert_same_rows(before, scan(spark, tiny_table).select("conv_id", "turn_idx", "text"))
 
 

@@ -1,6 +1,5 @@
-"""Events-shaped differential fuzz gate — the companion of
-test_differential_fuzz.py for the transcript ops and the salted
-aggregation.
+"""Events-shaped differential fuzz gate for the transcript ops and the
+salted aggregation.
 
 A seeded adversarial events log runs through every events-only BATCH
 query on Spark AND its DuckDB oracle, compared with the driver's

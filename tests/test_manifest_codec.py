@@ -81,3 +81,64 @@ def test_mixed_codec_table_plans_correctly(tmp_path):
     assert {e.path for e in entries} == {f"data/f{i}.parquet" for i in range(3)} | {
         "data/px.parquet"
     }
+
+
+def test_legacy_sketch_columns_never_read(tmp_path, monkeypatch):
+    """Manifests written before the sketch columns were retired still
+    carry per-file ndv_<col>/dist_<col> JSON blobs. Decoding and planning
+    must return exactly what the same manifest gives without them, and a
+    point lookup must never ask parquet for one of those columns."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from e_commerce_lakehouse_spark._bloom import DEFAULT_MAX_BITS, build_bloom_from_values
+    from e_commerce_lakehouse_spark.table.scan import planned_entries
+
+    entries = _entries()
+    bloom = {"fpp": 0.01, "max_bits": DEFAULT_MAX_BITS}
+    for i, e in enumerate(entries):
+        if e.stats:
+            e.blooms = {"conv_id": build_bloom_from_values(
+                [f"conv-{j:04d}" for j in range(i, i + 8)], bloom)}
+    t = Table.create(str(tmp_path / "tbl-legacy"))
+    t.commit_append(entries)
+    (name,) = t.snapshot().manifests
+    assert name.endswith(".parquet")
+
+    def _view(tbl):
+        return (
+            [(e.path, e.rows, e.stats, e.blooms) for e in tbl.manifest_entries(name)],
+            [(e.path, e.stats) for e in planned_entries(tbl, conv_id="conv-0005")],
+            [e.path for e in planned_entries(tbl, conv_id_range=("conv-0002", "conv-0004"))],
+        )
+
+    want = _view(Table.load(t.root))
+    assert want[1], "precondition: the point lookup keeps some files"
+
+    full = f"{t.metadata_dir}/{name}"
+    m = pq.read_table(full)
+    blob = pa.array([json.dumps({"k": 64, "mins": [1, 2]}).encode()] * m.num_rows,
+                    pa.binary())
+    m = m.append_column("ndv_conv_id", blob).append_column(
+        "dist_turn_idx", pa.array([b'{"hist":{"lo":0,"hi":1}}'] * m.num_rows, pa.binary()))
+    pq.write_table(m, full)
+
+    requested = []
+    real_read_table, real_pf_read = pq.read_table, pq.ParquetFile.read
+
+    def read_table(*a, columns=None, **kw):
+        requested.append(columns)
+        return real_read_table(*a, columns=columns, **kw)
+
+    def pf_read(self, columns=None, **kw):
+        requested.append(columns)
+        return real_pf_read(self, columns=columns, **kw)
+
+    monkeypatch.setattr(pq, "read_table", read_table)
+    monkeypatch.setattr(pq.ParquetFile, "read", pf_read)
+    assert _view(Table.load(t.root)) == want
+    assert requested and all(cols is not None for cols in requested)
+    assert not [c for cols in requested for c in cols
+                if c.startswith(("ndv_", "dist_"))]

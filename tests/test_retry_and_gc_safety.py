@@ -40,7 +40,7 @@ def test_with_retries_recovers_and_resumes(spark, tiny_table):
         calls["n"] += 1
         # crash after 2 newly-completed groups; resume leaves fewer each time
         return compact(spark, tiny_table, target_bytes=TARGET,
-                       fail_after_groups=2, max_concurrent_groups=4)
+                       fail_after_groups=2)
 
     m = with_retries(crashy, attempts=10, backoff_s=0.01)
     assert m["planned_groups"] > 2, "precondition: multiple groups"
@@ -62,8 +62,7 @@ def test_expire_protects_checkpointed_outputs(spark, tiny_table):
     before = scan(spark, tiny_table).cache()
     before.count()
     with pytest.raises(SimulatedCrash):
-        compact(spark, tiny_table, target_bytes=TARGET, fail_after_groups=2,
-                max_concurrent_groups=4)
+        compact(spark, tiny_table, target_bytes=TARGET, fail_after_groups=2)
     ckpts = [f for f in os.listdir(tiny_table.metadata_dir) if f.endswith(".ckpt.jsonl")]
     assert ckpts, "crash must leave a live checkpoint"
     from e_commerce_lakehouse_spark.checkpoint import Checkpoint
@@ -78,7 +77,7 @@ def test_expire_protects_checkpointed_outputs(spark, tiny_table):
         assert os.path.exists(os.path.join(tiny_table.root, p)), p
 
     # resume completes and the table is byte-equal
-    m = compact(spark, tiny_table, target_bytes=TARGET, max_concurrent_groups=4)
+    m = compact(spark, tiny_table, target_bytes=TARGET)
     assert m["resumed_groups"] >= 2
     assert_same_rows(scan(spark, tiny_table), before)
 
@@ -87,8 +86,7 @@ def test_resume_reverifies_missing_outputs(spark, tiny_table):
     before = scan(spark, tiny_table).cache()
     before.count()
     with pytest.raises(SimulatedCrash):
-        compact(spark, tiny_table, target_bytes=TARGET, fail_after_groups=2,
-                max_concurrent_groups=4)
+        compact(spark, tiny_table, target_bytes=TARGET, fail_after_groups=2)
     ckpts = [f for f in os.listdir(tiny_table.metadata_dir) if f.endswith(".ckpt.jsonl")]
     from e_commerce_lakehouse_spark.checkpoint import Checkpoint
 
@@ -96,7 +94,7 @@ def test_resume_reverifies_missing_outputs(spark, tiny_table):
     victim = recs[0]["output_files"][0]
     os.remove(os.path.join(tiny_table.root, victim))  # simulate rogue GC
 
-    m = compact(spark, tiny_table, target_bytes=TARGET, max_concurrent_groups=4)
+    m = compact(spark, tiny_table, target_bytes=TARGET)
     # the group with the deleted output was re-run, not re-committed blind
     assert os.path.exists(os.path.join(tiny_table.root, victim)) or all(
         os.path.exists(os.path.join(tiny_table.root, e.path)) for e in tiny_table.entries()
@@ -112,8 +110,7 @@ def test_expire_prunes_stale_abandoned_checkpoints(spark, tiny_table):
     before = scan(spark, tiny_table).cache()
     before.count()
     with pytest.raises(SimulatedCrash):
-        compact(spark, tiny_table, target_bytes=TARGET, fail_after_groups=2,
-                max_concurrent_groups=4)
+        compact(spark, tiny_table, target_bytes=TARGET, fail_after_groups=2)
     ckpts = [f for f in os.listdir(tiny_table.metadata_dir) if f.endswith(".ckpt.jsonl")]
     assert ckpts
     ck_path = os.path.join(tiny_table.metadata_dir, ckpts[0])
@@ -138,6 +135,6 @@ def test_expire_prunes_stale_abandoned_checkpoints(spark, tiny_table):
         assert not os.path.exists(os.path.join(tiny_table.root, p)), p
 
     # resume-after-prune is still correct: compact re-runs from scratch
-    m2 = compact(spark, tiny_table, target_bytes=TARGET, max_concurrent_groups=4)
+    m2 = compact(spark, tiny_table, target_bytes=TARGET)
     assert m2["committed_snapshot"] > m2["base_snapshot"]
     assert_same_rows(scan(spark, tiny_table), before)

@@ -194,7 +194,7 @@ def test_rename_mixed_vintages_append_compact_roundtrip(spark, tiny_table, tiny_
     before = scan(spark, t).collect()
     assert len(before) == N_TURNS + 150
 
-    compact(spark, t, target_bytes=1 << 20)  # arrow mode
+    compact(spark, t, target_bytes=1 << 20)
     after = scan(spark, t).collect()
     assert sorted(map(tuple, after)) == sorted(map(tuple, before))
     # post-compact files are uniform current-schema: every entry now
@@ -307,18 +307,6 @@ def test_rename_refuses_constraint_and_spec_bindings(spark, tiny_table):
     t = tiny_table
     add_constraint(spark, t, "tool_known", "tool IS NOT NULL OR role != 'tool'")
     with pytest.raises(ValueError, match="CHECK"):
-        rename_column(t, "tool", "tool_name")
-
-
-def test_rename_refuses_ndv_spec_binding(tiny_table):
-    """Renaming an NDV-sketched column would silently stop sketch
-    collection for new files (stats skip spec names absent from the
-    file) — refuse with a re-declare hint, like bloom."""
-    from e_commerce_lakehouse_spark.operators.schema_evolution import rename_column
-
-    t = tiny_table
-    t.set_ndv_columns(["tool"])
-    with pytest.raises(ValueError, match="NDV-sketch"):
         rename_column(t, "tool", "tool_name")
 
 

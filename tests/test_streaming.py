@@ -199,67 +199,6 @@ def test_append_stream_exactly_once_txn_markers(spark, tmp_path):
     seed_df.unpersist()
 
 
-def test_stream_stream_join_batch_parity(spark, tmp_path):
-    """The bounded-replay contract behind q72: the watermarked
-    stream-stream join must emit exactly the rows the identical batch
-    join produces — same key, same (left_ts, left_ts + within] range."""
-    from e_commerce_lakehouse_spark.streaming.join import stream_stream_join
-
-    rows = []
-    # user 1: click at t0, purchases at +1h (in), +7h (out of 6h window)
-    rows += [(1, "click", "2024-01-01 08:00:00", 10),
-             (1, "purchase", "2024-01-01 09:00:00", 11),
-             (1, "purchase", "2024-01-01 15:00:01", 12)]
-    # user 2: purchase BEFORE the click — strict ">" keeps it out
-    rows += [(2, "click", "2024-01-01 08:00:00", 20),
-             (2, "purchase", "2024-01-01 07:59:59", 21)]
-    # user 3: two clicks share one purchase (fan-out is real join output)
-    rows += [(3, "click", "2024-01-01 08:00:00", 30),
-             (3, "click", "2024-01-01 09:30:00", 31),
-             (3, "purchase", "2024-01-01 10:00:00", 32)]
-    df = spark.createDataFrame(
-        rows, "user_id int, event_type string, ts string, event_id int"
-    ).withColumn("ts", F.to_timestamp("ts"))
-
-    src = str(tmp_path / "events")
-    df.coalesce(1).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def _sides(frame_fn):
-        c = frame_fn().where(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id")
-        p = frame_fn().where(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id")
-        return c, p
-
-    batch = stream_stream_join(
-        *_sides(lambda: spark.read.parquet(src)),
-        key="user_id", within="6 hours",
-        left_prefix="c_", right_prefix="p_",
-    )
-    expected = {(r.user_id, r.c_event_id, r.p_event_id) for r in batch.collect()}
-    assert expected == {(1, 10, 11), (3, 30, 32), (3, 31, 32)}
-    # prefixes applied, key kept bare, helper columns dropped
-    assert set(batch.columns) == {"user_id", "c_ts", "c_event_id", "p_ts", "p_event_id"}
-
-    stream = stream_stream_join(
-        *_sides(lambda: spark.readStream.schema(schema).parquet(src)),
-        key="user_id", within="6 hours", watermark="1 hour",
-        left_prefix="c_", right_prefix="p_",
-    )
-    assert stream.isStreaming
-    sq = (
-        stream.writeStream.format("memory").queryName("ssj_parity")
-        .outputMode("append").trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt")).start()
-    )
-    sq.awaitTermination()
-    got = {(r.user_id, r.c_event_id, r.p_event_id)
-           for r in spark.table("ssj_parity").collect()}
-    spark.catalog.dropTempView("ssj_parity")
-    assert got == expected
-
-
 def test_streaming_session_window_parity_and_boundary(spark, tmp_path):
     """q73's contract: streaming session_window on a bounded replay ==
     gap-based relational sessionization, with the boundary convention
@@ -297,61 +236,6 @@ def test_streaming_session_window_parity_and_boundary(spark, tmp_path):
     # user1: 08:00 + 08:30 merge (exact boundary), 09:00.000001 is new;
     # user2: one session; user3's tail session must be emitted too
     assert got == [(1, 1, 4.0), (1, 2, 3.0), (2, 2, 24.0), (3, 1, 32.0)]
-
-
-def test_stream_stream_join_left_outer_emits_after_watermark(spark, tmp_path):
-    """leftOuter stream-stream join: unmatched left rows emit with NULL
-    right columns only once the watermark closes their match window —
-    the test plants a late sentinel event that pushes the watermark past
-    (left_ts + within + delay) so the unmatched row must flush during
-    the bounded replay."""
-    from e_commerce_lakehouse_spark.streaming.join import stream_stream_join
-
-    rows = [
-        (1, "click", "2024-01-01 08:00:00", 10),      # matched
-        (1, "purchase", "2024-01-01 09:00:00", 11),
-        (2, "click", "2024-01-01 08:00:00", 20),      # never matched
-        # sentinels far in the future ON BOTH SIDES: the query's global
-        # watermark is the MIN across all watermarked inputs, so the
-        # right stream needs one too. Same ts on both: strict ">" in the
-        # join keeps them from matching each other. Watermark = 23:00
-        # - 1h = 22:00, well past 08:00 + 6h for user 2's click.
-        (9, "click", "2024-01-01 23:00:00", 90),
-        (9, "purchase", "2024-01-01 23:00:00", 91),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id int, event_type string, ts string, event_id int"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    src = str(tmp_path / "events")
-    df.coalesce(1).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def _s(kind):
-        return (
-            spark.readStream.schema(schema).parquet(src)
-            .where(F.col("event_type") == kind)
-            .select("user_id", "ts", "event_id")
-        )
-
-    joined = stream_stream_join(
-        _s("click"), _s("purchase"), key="user_id",
-        within="6 hours", watermark="1 hour",
-        left_prefix="c_", right_prefix="p_", how="leftOuter",
-    )
-    sq = (
-        joined.writeStream.format("memory").queryName("ssj_outer")
-        .outputMode("append").trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt")).start()
-    )
-    sq.awaitTermination()
-    got = {(r.user_id, r.c_event_id, r.p_event_id)
-           for r in spark.table("ssj_outer").collect()}
-    spark.catalog.dropTempView("ssj_outer")
-    assert (1, 10, 11) in got          # matched pair
-    assert (2, 20, None) in got        # unmatched left flushed with NULLs
-    # user 9's click is NOT expected: its match window (23:00 + 6h) is
-    # still open when the bounded replay ends, so the outer result for
-    # it correctly remains unflushed state
 
 
 def test_table_as_streaming_source_drain_resume_and_rewrite_silence(spark, tmp_path):
@@ -422,9 +306,8 @@ def test_table_as_native_streaming_sink(spark, tmp_path):
     root, ck, land = str(tmp_path / "tbl"), str(tmp_path / "ck"), str(tmp_path / "land")
     tbl = Table.create(root)
     # declared BEFORE the stream: sink-written files must carry the
-    # distribution sketches like every other write path
-    tbl.set_histogram_columns({"turn_idx": (0.0, 50.0, 10)})
-    tbl.set_cm_columns(["role"], w=16, d=2, topk=2)
+    # bloom index like every other write path
+    tbl.set_bloom_columns(["conv_id"])
     df = transcripts_df(spark, 800, seed=3).cache()
     df.coalesce(2).write.parquet(land)
 
@@ -445,12 +328,8 @@ def test_table_as_native_streaming_sink(spark, tmp_path):
     # without them metadata_count/retention demote every sink file to
     # the read path (review finding)
     assert all(e.nulls is not None for e in tbl.entries())
-    # ...and the distribution sketches (hist + cm) for the declared cols
-    from e_commerce_lakehouse_spark.operators.sketch import table_histogram
-
-    assert all("turn_idx" in (e.dist or {}) and "role" in (e.dist or {})
-               for e in tbl.entries())
-    assert table_histogram(tbl, "turn_idx")["total"] == 800
+    # ...and the declared per-file index
+    assert all("conv_id" in (e.blooms or {}) for e in tbl.entries())
 
     # checkpoint loss after the table commit: redelivery must SKIP
     shutil.rmtree(ck)

@@ -5,9 +5,10 @@ strings).
 
 The reference's only layout control is static partitionBy
 (`/root/reference/src/glue_jobs/orders_etl.py:191-194`). Clustering
-re-sorts the whole table along a space-filling curve over
-(hash(conv_id), minmax-scaled ts) so point/range queries on EITHER
-dimension skip most files via the manifest min/max stats.
+re-sorts the whole table along a space-filling curve over an
+order-preserving conv_id projection and minmax-scaled ts, so point/range
+queries on EITHER dimension skip most files via the manifest min/max
+stats.
 
 Key computation is JVM-expression Z-order by default (whole-stage
 codegen) or an Arrow-vectorized Hilbert pandas UDF (functions/zorder.py).
@@ -15,10 +16,9 @@ codegen) or an Arrow-vectorized Hilbert pandas UDF (functions/zorder.py).
 
 Two execution modes:
 
-- single-pass (default): ``repartitionByRange(n, key)`` (one shuffle,
-  Spark range-sampling balances partitions even under hot-conv skew since
-  the key mixes hash(conv_id) bits) + ``sortWithinPartitions`` + write.
-  Best throughput.
+- single-pass (default): one ``write_files(order_by=key)`` — a range
+  exchange on (partition tuple, key), a sort within each file, one
+  write. Best throughput.
 - sharded (``shards=K``): stage 1 spills a keyed temp copy hash-bucketed
   by key-quantile shard; stage 2 sorts/writes each shard as its own
   checkpointed file group. Twice the I/O, but a killed run resumes at
@@ -53,29 +53,9 @@ from ..functions.zorder import (
 from ..schema import TRANSCRIPTS_STAT_COLUMNS
 from ..table.meta import DataFileEntry, Table
 from ..table.scan import scan
-from ..table.stats import collect_entries, list_parquet_files
-from ..table.writer import DEFAULT_TARGET_FILE_BYTES
+from ..table.writer import DEFAULT_TARGET_FILE_BYTES, write_files
 
 _KEY = "__ckey"
-
-def _zstd_level() -> str:
-    """Cluster-output zstd level (default 1, env-overridable). parquet-mr
-    defaults zstd to level 3; the compact path's pyarrow writes use
-    Arrow's zstd default (1). Level 1 costs ~10% size for ~2x less encode
-    CPU (rewrite throughput over density; measured ~4% cycle win at 12 M
-    turns) — the knob stays parameterised for deployments that prefer
-    density.
-
-    NOTE (r6, negative result, kept for the record): replacing the range
-    exchange with sample-derived literal cut points + a hash repartition
-    on a file id was tried and REVERTED — a ~95-term comparison chain
-    blows whole-stage codegen's method budget and drops the entire map
-    stage to interpreted evaluation (28 s vs 4 s for the same scan), an
-    aggregate() HOF form still costs +4 s, and the range exchange's
-    reservoir sample pass is far cheaper than event-log profiling under
-    host noise suggested (guarded A/B: two-pass 12.7-15.1 s vs
-    single-pass-with-cuts 35-40 s end-to-end)."""
-    return os.environ.get("SPARK_GRAFT_CLUSTER_ZSTD_LEVEL", "1")
 
 
 #: spark.sql.files.maxPartitionBytes is SESSION-GLOBAL; two cluster()
@@ -434,70 +414,24 @@ def cluster(
     old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
-        part_spec = table.partition_spec()
-        if shards <= 1 and part_spec and not scoped:
-            # PARTITION-PURE clustering: rows are range-ordered by
-            # (partition tuple, curve key) and the hive-style partitionBy
-            # write splits each task's rows per partition value — every
-            # output file belongs to exactly one partition, keyed-sorted
-            # within, so the planner's exact pruning survives clustering.
-            # (Scoped runs read raw file slices and write flat; their
-            # outputs carry no partition tuple — conservative, never
-            # wrong.)
-            from ..table.partition import partition_from_path, spark_partition_column
-
-            names = [f.name for f in part_spec]
-            shaped = keyed
-            for f in part_spec:
-                shaped = shaped.withColumn(f.name, spark_partition_column(f))
+        if shards <= 1:
             subdir = f"cluster-{base_snapshot:08d}-{curve}{_scope_tag}-{run_token}"
-            out_dir = os.path.join(table.data_dir, subdir)
-            (
-                shaped.repartitionByRange(
-                    n_files, *[F.col(n) for n in names], F.col(_KEY)
-                )
-                .sortWithinPartitions(*names, _KEY)
-                .drop(_KEY)
-                .write.mode("error")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", _zstd_level())
-                .partitionBy(*names)
-                .parquet(out_dir)
-            )
-            added = collect_entries(
-                list_parquet_files(out_dir), table.root, stat_columns, spark=spark,
-                bloom_spec=table.bloom_spec(),
-            )
-            for e in added:
-                e.partition = partition_from_path(e.path, part_spec)
-        elif shards <= 1:
-            subdir = f"cluster-{base_snapshot:08d}-{curve}{_scope_tag}-{run_token}"
-            out_dir = os.path.join(table.data_dir, subdir)
-            (
-                keyed.repartitionByRange(n_files, F.col(_KEY))
-                .sortWithinPartitions(_KEY)
-                .drop(_KEY)
-                .write.mode("error")
-                # zstd: clustered files are the cold, read-many end state —
-                # ~30% smaller than snappy and the extra compress CPU
-                # parallelizes where tmpfs page allocation does not
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", _zstd_level())
-                .parquet(out_dir)
-            )
-            added = collect_entries(
-                list_parquet_files(out_dir), table.root, stat_columns, spark=spark,
-                bloom_spec=table.bloom_spec(),
-            )
+            # order_by=_KEY is a range exchange, not literal cut points: r6
+            # tried sample-derived cut points + a hash repartition on a file
+            # id and REVERTED it — a ~95-term comparison chain blows
+            # whole-stage codegen's method budget and drops the map stage
+            # to interpreted evaluation (28 s vs 4 s for the same scan), an
+            # aggregate() HOF form still costs +4 s, and the range
+            # exchange's reservoir sample pass is far cheaper than it looks
+            # (guarded A/B: two-pass 12.7-15.1 s vs single-pass-with-cuts
+            # 35-40 s end-to-end)
+            added = write_files(spark, table, keyed, n_files, subdir,
+                                stat_columns, order_by=_KEY)
         else:
             added = _cluster_sharded(
                 spark, table, keyed, base_snapshot, curve, shards, n_files,
                 checkpoint_path, stat_columns, fail_after_shards,
                 scope_tag=_scope_tag, run_token=run_token,
-                # partition-pure sharded writes for full-table runs; scoped
-                # runs read raw file slices and stay flat/tuple-less (same
-                # conservative rule as scoped single-pass)
-                part_spec=(part_spec if (part_spec and not scoped) else None),
             )
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
@@ -600,30 +534,17 @@ def cluster(
 def _cluster_sharded(
     spark, table, keyed, base_snapshot, curve, shards, n_files, checkpoint_path,
     stat_columns, fail_after_shards=None, scope_tag="", run_token="",
-    part_spec=None,
 ) -> list[DataFileEntry]:
     """Stage temp copy bucketed by key-quantile shard, then sort/write each
     shard as a checkpointed, resumable file group. Scoped plans get their
     own checkpoint/temp namespace (shard ids from a scoped plan must never
     resume against a full plan's).
 
-    With ``part_spec`` (hidden-partitioned table, full-table run) every
-    shard derives the partition columns, sorts by (partition tuple, key)
-    and writes hive-style ``partitionBy`` — each output file belongs to
-    exactly one partition, so exact planner pruning survives a RESUMABLE
-    clustering run (the 100 TB partition-evolution migration path). Shard
-    cuts stay global on the curve key; two shards writing the same
-    partition value just yields multiple keyed-sorted files there."""
-    part_names: list[str] = []
-    if part_spec:
-        from ..table.partition import partition_from_path, spark_partition_column
-
-        part_names = [f.name for f in part_spec]
-        for f in part_spec:
-            # derived cols ride through the stage-1 temp copy as ordinary
-            # columns; the stage-2 partitionBy write removes them from the
-            # final data files (data schema unchanged)
-            keyed = keyed.withColumn(f.name, spark_partition_column(f))
+    Each shard's write is partition-pure like single-pass (write_files
+    derives the partition tuple), so exact planner pruning survives a
+    RESUMABLE clustering run. Shard cuts stay global on the curve key;
+    two shards writing the same partition value just yields multiple
+    keyed-sorted files there."""
     ckpt = Checkpoint(
         checkpoint_path
         or os.path.join(table.metadata_dir,
@@ -698,42 +619,12 @@ def _cluster_sharded(
         # paths; a redone shard just writes a fresh dir, the dead partial
         # is orphan-GC'd). No rmtree: deterministic names + rmtree could
         # delete a concurrent winner's committed files (review finding).
-        out_dir = os.path.join(
-            table.data_dir,
-            f"cluster-{base_snapshot:08d}-{curve}{scope_tag}-s{s:04d}-{run_token}",
-        )
+        subdir = f"cluster-{base_snapshot:08d}-{curve}{scope_tag}-s{s:04d}-{run_token}"
         if not os.path.exists(shard_dir):  # empty shard
             ckpt.record({"group_id": s, "status": "done", "outputs": [], "rows": 0})
             continue
-        sdf = spark.read.parquet(shard_dir)
-        if part_names:
-            (
-                sdf.repartitionByRange(
-                    files_per_shard, *[F.col(n) for n in part_names], F.col(_KEY)
-                )
-                .sortWithinPartitions(*part_names, _KEY)
-                .drop(_KEY)
-                .write.mode("error")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", _zstd_level())
-                .partitionBy(*part_names)
-                .parquet(out_dir)
-            )
-        else:
-            (
-                sdf.repartitionByRange(files_per_shard, F.col(_KEY))
-                .sortWithinPartitions(_KEY)
-                .drop(_KEY)
-                .write.mode("error")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", _zstd_level())
-                .parquet(out_dir)
-            )
-        outs = collect_entries(list_parquet_files(out_dir), table.root, stat_columns,
-                               bloom_spec=table.bloom_spec())
-        if part_spec:
-            for e in outs:
-                e.partition = partition_from_path(e.path, part_spec)
+        outs = write_files(spark, table, spark.read.parquet(shard_dir),
+                           files_per_shard, subdir, stat_columns, order_by=_KEY)
         ckpt.record(
             {
                 "group_id": s,

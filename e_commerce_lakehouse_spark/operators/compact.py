@@ -32,7 +32,7 @@ from ..checkpoint import Checkpoint
 from ..plans.binpack import plan_bin_packing
 from ..schema import TRANSCRIPTS_STAT_COLUMNS
 from ..table.meta import DataFileEntry, Table
-from ..table.writer import DEFAULT_TARGET_FILE_BYTES
+from ..table.writer import CODEC, CODEC_LEVEL, DEFAULT_TARGET_FILE_BYTES
 
 
 class SimulatedCrash(RuntimeError):
@@ -45,7 +45,6 @@ def _rewrite_wave_arrow(
     specs: list[dict],
     base_snapshot: int,
     stat_columns,
-    codec: str = "zstd",
     field_spec: list | None = None,
     run_token: str = "",
     bloom_spec: dict | None = None,
@@ -125,11 +124,10 @@ def _rewrite_wave_arrow(
             t_read = _mono()
             merged = pa.concat_tables(parts, promote_options="none")
             out_path = os.path.join(out_dir, "part-00000.parquet")
-            # zstd, not snappy: compacted files are cold, read-many data, and
-            # zstd both shrinks them ~30% and keeps the rewrite CPU-bound —
-            # measured FASTER than snappy here and scales 0.85 vs 0.72 from
-            # 4→16 workers (snappy's larger write buffers hit the host's
-            # contended fresh-page allocation path; see BENCH/BASELINE.md)
+            # the writer's codec (zstd): measured FASTER than snappy here and
+            # scales 0.85 vs 0.72 from 4→16 workers (snappy's larger write
+            # buffers hit the host's contended fresh-page allocation path;
+            # see BENCH/BASELINE.md)
             #
             # coerce_timestamps="us": the rewrite's output annotation must be
             # independent of whatever the upstream writer produced. A default
@@ -142,7 +140,8 @@ def _rewrite_wave_arrow(
             pq.write_table(
                 merged,
                 out_path,
-                compression=codec,
+                compression=CODEC,
+                compression_level=CODEC_LEVEL,
                 coerce_timestamps="us",
                 allow_truncated_timestamps=True,
             )
@@ -190,7 +189,7 @@ def _rewrite_wave_arrow(
 
 def _run_arrow(
     spark, table, todo, base_snapshot, stat_columns, ckpt, wave_size, fail_after_groups,
-    codec: str = "zstd", field_spec: list | None = None, run_token: str = "",
+    field_spec: list | None = None, run_token: str = "",
     group_seq: dict | None = None, group_part: dict | None = None,
     on_wave=None, ren_by_path: dict | None = None, sv_plan: int | None = None,
 ) -> None:
@@ -210,7 +209,7 @@ def _run_arrow(
                 s["renames"] = [ren_by_path.get(p) for p in s["paths"]]
         t0 = monotonic()
         results = _rewrite_wave_arrow(
-            spark, table.root, specs, base_snapshot, stat_columns, codec=codec,
+            spark, table.root, specs, base_snapshot, stat_columns,
             field_spec=field_spec, run_token=run_token,
             bloom_spec=table.bloom_spec(), sv_plan=sv_plan,
         )
@@ -258,7 +257,6 @@ def compact(
     fail_after_groups: int | None = None,
     schema=None,
     stat_columns=TRANSCRIPTS_STAT_COLUMNS,
-    codec: str = "zstd",
     conv_id_range: tuple | None = None,
     ts_range: tuple | None = None,
     order_preserving: bool = False,
@@ -518,7 +516,7 @@ def compact(
 
     phase = _run_arrow(spark, table, todo, base_snapshot, stat_columns, ckpt,
                        wave_size=wave_size,
-                       fail_after_groups=fail_after_groups, codec=codec,
+                       fail_after_groups=fail_after_groups,
                        field_spec=field_spec, run_token=run_token,
                        group_seq=group_seq, group_part=group_part,
                        on_wave=on_wave, ren_by_path=ren_by_path,

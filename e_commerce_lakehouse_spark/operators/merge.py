@@ -24,7 +24,6 @@ Physical plan, Spark-first:
 from __future__ import annotations
 
 import math
-import os
 import uuid
 from time import monotonic
 
@@ -33,8 +32,7 @@ from pyspark.sql import functions as F
 
 from ..schema import TRANSCRIPTS_STAT_COLUMNS
 from ..table.meta import Table
-from ..table.stats import collect_entries, list_parquet_files
-from ..table.writer import DEFAULT_TARGET_FILE_BYTES
+from ..table.writer import DEFAULT_TARGET_FILE_BYTES, write_files
 
 DEFAULT_KEYS = ("conv_id", "turn_idx")
 
@@ -179,11 +177,8 @@ def merge_into(
     # planned from the same snapshot must lose at COMMIT time, not by
     # rmtree'ing the winner's committed files (review finding)
     subdir = f"merge-{base_snapshot:08d}-{uuid.uuid4().hex[:12]}"
-    out_dir = os.path.join(table.data_dir, subdir)
-    n_out = max(1, math.ceil(touched_bytes / target_bytes) or 1)
-    from ..table.writer import write_rewrite_files
-
-    added = write_rewrite_files(spark, table, merged, n_out, out_dir, stat_columns)
+    n_out = math.ceil(touched_bytes / target_bytes)
+    added = write_files(spark, table, merged, n_out, subdir, stat_columns)
     for e in added:  # written under the PLAN-time schema version
         e.sv = sv_plan
 

@@ -219,17 +219,16 @@ def retention_delete(
     kept). MoR tombstones are materialized first (same rule as every
     rewrite). One atomic snapshot; conflicts surface as
     CommitConflictError like any rewrite."""
-    import os
+    import math
     import uuid
     from time import monotonic
 
-    from pyspark.sql import functions as F
-
     from .rowlevel import materialize_deletes
-    from ..table.writer import write_rewrite_files
+    from ..table.writer import write_files
 
     t0 = monotonic()
     schema = resolve_schema(table)
+    sv_plan = table.schema_version_count() or None  # outputs' write version
     materialize_deletes(spark, table, target_bytes=target_bytes,
                         schema=schema, stat_columns=stat_columns)
     cutoff = _ts_to_micros(before_ts)
@@ -255,24 +254,13 @@ def retention_delete(
                        wall_ms=int((monotonic() - t0) * 1000))
         return metrics
     added = []
-    sv_plan = table.schema_version_count() or None
     if boundary:
         kept = read_entries(spark, table, boundary, schema).where(
             ~F.coalesce(F.col("ts") < F.lit(before_ts), F.lit(False))
         )
-        out_dir = os.path.join(
-            table.data_dir,
-            f"retention-{table.current_snapshot_id():08d}-{uuid.uuid4().hex[:12]}",
-        )
-        import math
-
-        n_out = max(1, math.ceil(sum(e.bytes for e in boundary) / target_bytes))
-        added = write_rewrite_files(spark, table, kept, n_out, out_dir,
-                                    stat_columns)
-        for e in added:
-            if e.rows == 0:  # same rule as rowlevel's rewrite path
-                os.remove(os.path.join(table.root, e.path))
-        added = [e for e in added if e.rows > 0]
+        subdir = f"retention-{table.current_snapshot_id():08d}-{uuid.uuid4().hex[:12]}"
+        n_out = math.ceil(sum(e.bytes for e in boundary) / target_bytes)
+        added = write_files(spark, table, kept, n_out, subdir, stat_columns)
         for e in added:
             e.sv = sv_plan
     snap = table.commit_rewrite(

@@ -36,8 +36,7 @@ from pyspark.sql import functions as F
 
 from ..schema import TRANSCRIPTS_STAT_COLUMNS
 from ..table.meta import Table
-from ..table.stats import collect_entries, list_parquet_files
-from ..table.writer import DEFAULT_TARGET_FILE_BYTES
+from ..table.writer import DEFAULT_TARGET_FILE_BYTES, write_files
 
 
 def _as_column(predicate) -> Column:
@@ -90,13 +89,17 @@ def _rewrite_and_commit(
     stat_columns,
     extra_summary: dict,
     t0: float,
+    sv_plan: int | None,
     clear_tombstones: bool = False,
     expected_tombstones: list[str] | None = None,
     extra_removed: list[str] | None = None,
 ) -> dict:
     """``extra_removed``: paths removed WITHOUT contributing rewrite input
     (whole-file drops) — excluded from output sizing, included in the
-    commit's removed set (and its snapshot-isolation guard)."""
+    commit's removed set (and its snapshot-isolation guard). ``sv_plan``:
+    the schema version the caller resolved its read schema at, stamped
+    on every output (a rename committing before this commit must not
+    relabel the outputs' written names)."""
     entries_by_path = {e.path: e for e in table.entries()}
     touched_bytes = sum(entries_by_path[p].bytes for p in touched)
     # collision-free like append-{uuid}: two writers planning from the same
@@ -105,21 +108,15 @@ def _rewrite_and_commit(
     # before its own commit was (correctly) rejected (review finding).
     # A crashed attempt's dir becomes an orphan for expire's GC.
     subdir = f"{operation}-{table.current_snapshot_id():08d}-{uuid.uuid4().hex[:12]}"
-    out_dir = os.path.join(table.data_dir, subdir)
-    n_out = max(1, math.ceil(touched_bytes / target_bytes))
-    from ..table.writer import write_rewrite_files
-
-    added = write_rewrite_files(spark, table, rewritten_df, n_out, out_dir,
-                                stat_columns)
-    live = [e for e in added if e.rows > 0]
+    n_out = math.ceil(touched_bytes / target_bytes)
+    added = write_files(spark, table, rewritten_df, n_out, subdir, stat_columns)
     for e in added:
-        if e.rows == 0:
-            os.remove(os.path.join(table.root, e.path))
+        e.sv = sv_plan
     snap = table.commit_rewrite(
         list(touched) + list(extra_removed or []),
-        live,
+        added,
         operation=operation,
-        summary={"op": operation, "touched_files": len(touched), "added_files": len(live),
+        summary={"op": operation, "touched_files": len(touched), "added_files": len(added),
                  **extra_summary},
         clear_tombstones=clear_tombstones,
         expected_tombstones=expected_tombstones,
@@ -128,7 +125,7 @@ def _rewrite_and_commit(
         "committed_snapshot": snap.snapshot_id,
         "touched_files": len(touched) + len(extra_removed or []),
         "total_files": len(entries_by_path),
-        "added_files": len(live),
+        "added_files": len(added),
         "wall_ms": int((monotonic() - t0) * 1000),
     }
 
@@ -166,6 +163,7 @@ def delete_where(
     if table.current_snapshot_id() is None:
         raise ValueError("cannot delete from an empty table")
     schema = resolve_schema(table, schema=schema)
+    sv_plan = table.schema_version_count() or None  # outputs' write version
     pred = _as_column(predicate)
 
     if mode == "merge-on-read":
@@ -218,7 +216,7 @@ def delete_where(
     # exempt from it and resurrect its rows (review finding)
     out = _rewrite_and_commit(
         spark, table, partial, kept, "delete", target_bytes, stat_columns,
-        {"dropped_files": len(full)}, t0,
+        {"dropped_files": len(full)}, t0, sv_plan,
         expected_tombstones=[], extra_removed=full,
     )
     out["dropped_files"] = len(full)
@@ -355,6 +353,7 @@ def materialize_deletes(
     if not tombs:
         return {"committed_snapshot": None, "noop": True, "wall_ms": 0}
     schema = resolve_schema(table, schema=schema)
+    sv_plan = table.schema_version_count() or None  # outputs' write version
     classes = tombstone_classes(table.entries(), tomb_entries)
     touched_all: list[str] = []
     kept_parts = []
@@ -390,7 +389,7 @@ def materialize_deletes(
         kept = kept.unionByName(p)
     out = _rewrite_and_commit(
         spark, table, touched_all, kept, "materialize-deletes", target_bytes,
-        stat_columns, {"applied_tombstone_files": len(tombs)}, t0,
+        stat_columns, {"applied_tombstone_files": len(tombs)}, t0, sv_plan,
         clear_tombstones=True, expected_tombstones=tombs,
     )
     out["applied_tombstone_files"] = len(tombs)
@@ -436,6 +435,7 @@ def update_where(
     if table.current_snapshot_id() is None:
         raise ValueError("cannot update an empty table")
     schema = resolve_schema(table, schema=schema)
+    sv_plan = table.schema_version_count() or None  # outputs' write version
     names = [f.name for f in schema.fields]
     unknown = sorted(set(assignments) - set(names))
     if unknown:
@@ -443,7 +443,8 @@ def update_where(
     pred = _as_column(predicate)
     if mode == "merge-on-read":
         return _update_merge_on_read(
-            spark, table, pred, assignments, schema, names, keys, stat_columns, t0
+            spark, table, pred, assignments, schema, names, keys, stat_columns,
+            t0, sv_plan,
         )
     if mode != "copy-on-write":
         raise ValueError(f"unknown update mode: {mode!r}")
@@ -481,12 +482,13 @@ def update_where(
     # expected_tombstones=[]: same race guard as cow delete (see above)
     return _rewrite_and_commit(
         spark, table, touched, projected, "update", target_bytes, stat_columns,
-        {"set_columns": sorted(assignments)}, t0, expected_tombstones=[],
+        {"set_columns": sorted(assignments)}, t0, sv_plan, expected_tombstones=[],
     )
 
 
 def _update_merge_on_read(
-    spark, table, pred, assignments, schema, names, keys, stat_columns, t0
+    spark, table, pred, assignments, schema, names, keys, stat_columns, t0,
+    sv_plan,
 ) -> dict:
     """See update_where(mode="merge-on-read"). One atomic snapshot:
     key tombstone (kills every older copy of the matched keys) + the
@@ -545,21 +547,16 @@ def _update_merge_on_read(
     post = enforce_constraints(post, table, context="update")
     sid = table.current_snapshot_id()
     token = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(table.data_dir, f"updatemor-{sid:08d}-{token}")
+    data_subdir = f"updatemor-{sid:08d}-{token}"
     tomb_dir = os.path.join(table.data_dir, f"tombstone-{sid:08d}-{token}")
-    post.coalesce(1).write.mode("error").parquet(data_dir)
-    all_out = collect_entries(list_parquet_files(data_dir), table.root,
-                              stat_columns, spark=spark,
-                              bloom_spec=table.bloom_spec())
-    added = [e for e in all_out if e.rows > 0]
+    added = write_files(spark, table, post, 1, data_subdir, stat_columns)
     n_rows = sum(e.rows for e in added)
     if n_rows == 0:
-        shutil.rmtree(data_dir, ignore_errors=True)
+        shutil.rmtree(os.path.join(table.data_dir, data_subdir), ignore_errors=True)
         return {"committed_snapshot": None, "mode": "merge-on-read",
                 "updated_rows": 0, "wall_ms": int((monotonic() - t0) * 1000)}
-    for e in all_out:
-        if e.rows == 0:
-            os.remove(os.path.join(table.root, e.path))
+    for e in added:
+        e.sv = sv_plan
     if key_rewrites:
         # tombstone = PRE-image keys (from the logical matched set, which
         # is deterministic: read_entries pins explicit file paths and cow

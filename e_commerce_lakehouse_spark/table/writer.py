@@ -6,6 +6,15 @@ Spark writes immutable Parquet part files into a fresh subdirectory of
 ``data/``, we footer-scan them for stats (table/stats.py), then commit a
 snapshot referencing them. Data files are never mutated — only commits
 change what is live (copy-on-write, like Iceberg/Delta).
+
+``write_files`` is the ONE function that writes Spark data files: append,
+MERGE, the row-level rewrites (cow and merge-on-read), retention deletes
+and both cluster modes all call it, so hidden-partition shaping, row
+distribution and order, the codec, footer stats and blooms, partition
+tuples and zero-row cleanup are decided in one place. Two pyarrow paths
+write data files from inside tasks with the same codec: compact's rewrite
+wave (``CODEC``/``CODEC_LEVEL``) and the streaming sink (zstd at Arrow's
+default level, which is 1).
 """
 
 from __future__ import annotations
@@ -14,14 +23,23 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..schema import TRANSCRIPTS_STAT_COLUMNS
 from .meta import DataFileEntry, Snapshot, Table
+from .partition import partition_from_path, spark_partition_column
 from .stats import collect_entries, list_parquet_files
 
 # default target data-file size for writes/compaction; small in the sandbox
 # so the file-count dynamics of a 100 TB table are reproduced at SF scale
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+#: the codec of every engine data file: zstd at level 1 (Arrow's default;
+#: parquet-mr's is 3). Level 1 costs ~10% size for ~2x less encode CPU
+#: than level 3. Set per write, not as the session default, so frames a
+#: caller stages through the same session keep the session's codec.
+CODEC = "zstd"
+CODEC_LEVEL = 1
 
 
 def write_files(
@@ -31,98 +49,58 @@ def write_files(
     n_files: int,
     subdir: str,
     stat_columns=TRANSCRIPTS_STAT_COLUMNS,
-    sort_within: list[str] | None = None,
-    partition_spec=None,
+    order_by: str | None = None,
 ) -> list[DataFileEntry]:
     """Write ``df`` as ~n_files parquet files under data/<subdir>; return
     stat-bearing entries (NOT yet committed).
 
-    ``partition_spec=None`` derives it from the table (hidden
-    partitioning, table/partition.py): derived partition columns are
-    computed, the write splits hive-style (``name=value/`` dirs, derived
-    columns NOT stored in the files — the data schema is unchanged), and
-    each entry carries its partition tuple for exact planner pruning.
-    Pass ``[]`` to force an unpartitioned write."""
-    if partition_spec is None:
-        partition_spec = table.partition_spec()
+    Hidden partitioning (table/partition.py): the table's derived
+    partition columns are computed, the write splits hive-style
+    (``name=value/`` dirs, derived columns NOT stored in the files — the
+    data schema is unchanged), and each entry carries its partition tuple
+    for exact planner pruning.
+
+    Distribution: round-robin by default. ``order_by=<column>`` instead
+    range-partitions on (partition cols, column), sorts each file by the
+    same, and drops the column before writing (cluster's curve key).
+    Zero-row outputs are deleted and never returned."""
     out_dir = os.path.join(table.data_dir, subdir)
     if os.path.exists(out_dir):
         raise FileExistsError(f"data subdir already exists: {out_dir}")
-    if partition_spec:
-        from pyspark.sql import functions as F
-
-        from .partition import partition_from_path, spark_partition_column
-
-        names = [f.name for f in partition_spec]
-        shaped = df
-        for f in partition_spec:
-            shaped = shaped.withColumn(f.name, spark_partition_column(f))
+    spec = table.partition_spec()
+    names = [f.name for f in spec]
+    for f in spec:
+        df = df.withColumn(f.name, spark_partition_column(f))
+    n = max(1, n_files)
+    if order_by is not None:
+        keys = [*names, order_by]
+        df = df.repartitionByRange(n, *keys).sortWithinPartitions(*keys).drop(order_by)
+    elif names:
         # cluster rows by partition tuple, SALTED by the source split so
         # a hot partition parallelizes across tasks instead of funneling
         # through one (each task writes one file per value it holds;
         # compaction owns final file sizing)
-        shaped = shaped.repartition(
-            max(1, n_files), *names, F.spark_partition_id()
-        )
-        if sort_within:
-            shaped = shaped.sortWithinPartitions(*sort_within)
-        shaped.write.mode("error").partitionBy(*names).parquet(out_dir)
-        paths = list_parquet_files(out_dir)
-        entries = collect_entries(paths, table.root, stat_columns, spark=spark,
-                                  bloom_spec=table.bloom_spec())
-        for e in entries:
-            e.partition = partition_from_path(e.path, partition_spec)
-        return entries
-    shaped = df.repartition(max(1, n_files))
-    if sort_within:
-        shaped = shaped.sortWithinPartitions(*sort_within)
-    shaped.write.mode("error").parquet(out_dir)
-    paths = list_parquet_files(out_dir)
-    return collect_entries(paths, table.root, stat_columns, spark=spark,
-                           bloom_spec=table.bloom_spec())
-
-
-def write_rewrite_files(
-    spark: SparkSession,
-    table: Table,
-    df: DataFrame,
-    n_out: int,
-    out_dir: str,
-    stat_columns=TRANSCRIPTS_STAT_COLUMNS,
-) -> list[DataFileEntry]:
-    """Rewrite-output writer shared by MERGE / row-level DELETE / UPDATE:
-    honors the table's hidden-partition spec so row-level ops never
-    degrade the partition layout — outputs stay partition-pure (and
-    exactly prunable) instead of falling back to the conservative
-    no-partition class until the next full clustering."""
-    spec = table.partition_spec()
-    if spec:
-        from pyspark.sql import functions as F
-
-        from .partition import partition_from_path, spark_partition_column
-
-        names = [f.name for f in spec]
-        shaped = df
-        for f in spec:
-            shaped = shaped.withColumn(f.name, spark_partition_column(f))
-        (
-            shaped.repartition(max(1, n_out), *names, F.spark_partition_id())
-            .write.mode("error")
-            .partitionBy(*names)
-            .parquet(out_dir)
-        )
-        entries = collect_entries(
-            list_parquet_files(out_dir), table.root, stat_columns, spark=spark,
-            bloom_spec=table.bloom_spec(),
-        )
-        for e in entries:
-            e.partition = partition_from_path(e.path, spec)
-        return entries
-    df.repartition(max(1, n_out)).write.mode("error").parquet(out_dir)
-    return collect_entries(
-        list_parquet_files(out_dir), table.root, stat_columns, spark=spark,
-        bloom_spec=table.bloom_spec(),
+        df = df.repartition(n, *names, F.spark_partition_id())
+    else:
+        df = df.repartition(n)
+    (
+        df.write.mode("error")
+        .option("compression", CODEC)
+        .option("parquet.compression.codec.zstd.level", str(CODEC_LEVEL))
+        .partitionBy(*names)
+        .parquet(out_dir)
     )
+    entries = collect_entries(list_parquet_files(out_dir), table.root, stat_columns,
+                              spark=spark, bloom_spec=table.bloom_spec())
+    live = []
+    for e in entries:
+        if e.rows == 0:
+            os.remove(os.path.join(table.root, e.path))
+            continue
+        if spec:
+            e.partition = partition_from_path(e.path, spec)
+        live.append(e)
+    return live
 
 
 def align_to_schema(df: DataFrame, schema) -> DataFrame:
@@ -131,8 +109,6 @@ def align_to_schema(df: DataFrame, schema) -> DataFrame:
     yet updated after add_columns) fill with NULL, and every column is
     cast to the schema's type. Shared by append and MERGE so both write
     paths tolerate schema-lagged producers identically."""
-    from pyspark.sql import functions as F
-
     expected = {f.name for f in schema.fields}
     extra = set(df.columns) - expected
     if extra:
@@ -285,8 +261,6 @@ def create_transcripts_table(
         table.commit_append(entries, {"op": "initial-ingest"})
         return table
     # split deterministically by conv_id hash into batches → k append commits
-    from pyspark.sql import functions as F
-
     bucket = F.pmod(F.xxhash64("conv_id"), n_append_commits)
     files_per_batch = max(1, n_files // n_append_commits)
     for b in range(n_append_commits):

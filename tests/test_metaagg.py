@@ -113,9 +113,11 @@ def test_retention_delete_drops_cold_files_without_reading(spark, tiny_df, tmp_p
     t = Table.create(root)
     entries = write_files(spark, t, tiny_df, 6, "ingest-00000001-0000")
     t.commit_append(entries, {"op": "ingest"})
-    # order ts into narrow per-file ranges so the stats classification
-    # has cold interior files to drop
-    cluster(spark, t, curve="hilbert", target_bytes=64 * 1024)
+    # order ts into narrow per-file ranges (~6 clustered files, whatever
+    # the codec's ratio) so the stats classification has cold interior
+    # files to drop
+    cluster(spark, t, curve="hilbert",
+            target_bytes=sum(e.bytes for e in t.entries()) // 6)
 
     lo = tiny_df.selectExpr("min(ts)").first()[0]
     hi = tiny_df.selectExpr("max(ts)").first()[0]

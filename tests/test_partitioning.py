@@ -10,7 +10,9 @@ and the planner prunes EXACTLY from ordinary column predicates.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -140,6 +142,78 @@ def test_append_derives_partition_and_mor_delete_reads_right(spark, bucket_table
     pred = "turn_idx = 0 AND conv_id <= 'conv-0000000000zz'"
     delete_where(spark, t, pred, mode="merge-on-read")
     expected = df.unionByName(extra).where(f"NOT ({pred})")
+    assert_same_rows(scan(spark, t), expected)
+
+
+def _assert_zstd_and_partitioned(t, step):
+    """Every live data file is zstd-coded and carries a bucket tuple."""
+    entries = t.entries()
+    assert entries, step
+    for e in entries:
+        assert e.partition is not None and "conv_bucket" in e.partition, (step, e.path)
+        md = pq.ParquetFile(os.path.join(t.root, e.path)).metadata
+        codecs = {md.row_group(i).column(j).compression
+                  for i in range(md.num_row_groups)
+                  for j in range(md.num_columns)}
+        assert codecs == {"ZSTD"}, (step, e.path, codecs)
+
+
+def test_every_write_path_is_zstd_and_partition_pure(spark, bucket_table):
+    """One writer, one policy: after each write path on one bucket-
+    partitioned table, every live file is zstd and partition-pure —
+    including update-MoR post-images and scoped-cluster outputs."""
+    from e_commerce_lakehouse_spark.operators.merge import merge_into
+    from e_commerce_lakehouse_spark.operators.metaagg import retention_delete
+    from e_commerce_lakehouse_spark.operators.rowlevel import update_where
+
+    t, df = bucket_table
+    _assert_zstd_and_partitioned(t, "create")
+
+    extra = (
+        transcripts_df(spark, 300, seed=11)
+        .withColumn("conv_id", F.concat(F.lit("zz-"), F.col("conv_id")))
+        .cache()
+    )
+    append_dataframe(spark, t, extra, rows_per_file=100)
+    expected = df.unionByName(extra)
+    _assert_zstd_and_partitioned(t, "append")
+
+    src = (df.orderBy("conv_id", "turn_idx").limit(30)
+           .withColumn("text", F.lit("merged"))
+           .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR")))
+    merge_into(spark, t, src)
+    expected = expected.join(src.select("conv_id", "turn_idx"),
+                             ["conv_id", "turn_idx"], "left_anti").unionByName(src)
+    _assert_zstd_and_partitioned(t, "merge")
+
+    delete_where(spark, t, "turn_idx = 1")
+    expected = expected.where("turn_idx != 1")
+    _assert_zstd_and_partitioned(t, "cow delete")
+
+    m = update_where(spark, t, "turn_idx = 2", {"text": F.lit("upd")},
+                     mode="merge-on-read")
+    assert m["updated_rows"] > 0
+    expected = expected.withColumn(
+        "text", F.when(F.col("turn_idx") == 2, F.lit("upd")).otherwise(F.col("text")))
+    _assert_zstd_and_partitioned(t, "update-mor")
+
+    cutoff = expected.agg(F.min("ts")).first()[0] + dt.timedelta(days=10)
+    m = retention_delete(spark, t, cutoff)
+    assert m["files_rewritten"] > 0
+    expected = expected.where(F.col("ts") >= F.lit(cutoff))
+    _assert_zstd_and_partitioned(t, "retention_delete")
+
+    m = compact(spark, t, target_bytes=256 << 20)
+    assert not m.get("noop")
+    _assert_zstd_and_partitioned(t, "compact")
+
+    m = cluster(spark, t, curve="zorder", target_bytes=1 << 20,
+                conv_id_range=("conv-", "conv-000000000050"))
+    assert not m.get("noop")
+    _assert_zstd_and_partitioned(t, "scoped single-pass cluster")
+
+    cluster(spark, t, curve="hilbert", shards=2, target_bytes=1 << 20)
+    _assert_zstd_and_partitioned(t, "sharded cluster")
     assert_same_rows(scan(spark, t), expected)
 
 

@@ -28,7 +28,10 @@ from e_commerce_lakehouse_spark.table.scan import scan  # noqa: E402
 from tests.conftest import assert_same_rows  # noqa: E402
 
 
-TARGET = 96 * 1024  # small target so the tiny table forms several groups
+def _target(table) -> int:
+    """A compaction target a fifth of the table's bytes, so the tiny table
+    forms several groups whatever its files' compression ratio."""
+    return sum(e.bytes for e in table.entries()) // 5
 
 
 def test_with_retries_recovers_and_resumes(spark, tiny_table):
@@ -39,7 +42,7 @@ def test_with_retries_recovers_and_resumes(spark, tiny_table):
     def crashy():
         calls["n"] += 1
         # crash after 2 newly-completed groups; resume leaves fewer each time
-        return compact(spark, tiny_table, target_bytes=TARGET,
+        return compact(spark, tiny_table, target_bytes=_target(tiny_table),
                        fail_after_groups=2)
 
     m = with_retries(crashy, attempts=10, backoff_s=0.01)
@@ -62,7 +65,7 @@ def test_expire_protects_checkpointed_outputs(spark, tiny_table):
     before = scan(spark, tiny_table).cache()
     before.count()
     with pytest.raises(SimulatedCrash):
-        compact(spark, tiny_table, target_bytes=TARGET, fail_after_groups=2)
+        compact(spark, tiny_table, target_bytes=_target(tiny_table), fail_after_groups=2)
     ckpts = [f for f in os.listdir(tiny_table.metadata_dir) if f.endswith(".ckpt.jsonl")]
     assert ckpts, "crash must leave a live checkpoint"
     from e_commerce_lakehouse_spark.checkpoint import Checkpoint
@@ -77,7 +80,7 @@ def test_expire_protects_checkpointed_outputs(spark, tiny_table):
         assert os.path.exists(os.path.join(tiny_table.root, p)), p
 
     # resume completes and the table is byte-equal
-    m = compact(spark, tiny_table, target_bytes=TARGET)
+    m = compact(spark, tiny_table, target_bytes=_target(tiny_table))
     assert m["resumed_groups"] >= 2
     assert_same_rows(scan(spark, tiny_table), before)
 
@@ -86,7 +89,7 @@ def test_resume_reverifies_missing_outputs(spark, tiny_table):
     before = scan(spark, tiny_table).cache()
     before.count()
     with pytest.raises(SimulatedCrash):
-        compact(spark, tiny_table, target_bytes=TARGET, fail_after_groups=2)
+        compact(spark, tiny_table, target_bytes=_target(tiny_table), fail_after_groups=2)
     ckpts = [f for f in os.listdir(tiny_table.metadata_dir) if f.endswith(".ckpt.jsonl")]
     from e_commerce_lakehouse_spark.checkpoint import Checkpoint
 
@@ -94,7 +97,7 @@ def test_resume_reverifies_missing_outputs(spark, tiny_table):
     victim = recs[0]["output_files"][0]
     os.remove(os.path.join(tiny_table.root, victim))  # simulate rogue GC
 
-    m = compact(spark, tiny_table, target_bytes=TARGET)
+    m = compact(spark, tiny_table, target_bytes=_target(tiny_table))
     # the group with the deleted output was re-run, not re-committed blind
     assert os.path.exists(os.path.join(tiny_table.root, victim)) or all(
         os.path.exists(os.path.join(tiny_table.root, e.path)) for e in tiny_table.entries()
@@ -110,7 +113,7 @@ def test_expire_prunes_stale_abandoned_checkpoints(spark, tiny_table):
     before = scan(spark, tiny_table).cache()
     before.count()
     with pytest.raises(SimulatedCrash):
-        compact(spark, tiny_table, target_bytes=TARGET, fail_after_groups=2)
+        compact(spark, tiny_table, target_bytes=_target(tiny_table), fail_after_groups=2)
     ckpts = [f for f in os.listdir(tiny_table.metadata_dir) if f.endswith(".ckpt.jsonl")]
     assert ckpts
     ck_path = os.path.join(tiny_table.metadata_dir, ckpts[0])
@@ -135,6 +138,6 @@ def test_expire_prunes_stale_abandoned_checkpoints(spark, tiny_table):
         assert not os.path.exists(os.path.join(tiny_table.root, p)), p
 
     # resume-after-prune is still correct: compact re-runs from scratch
-    m2 = compact(spark, tiny_table, target_bytes=TARGET)
+    m2 = compact(spark, tiny_table, target_bytes=_target(tiny_table))
     assert m2["committed_snapshot"] > m2["base_snapshot"]
     assert_same_rows(scan(spark, tiny_table), before)

@@ -255,11 +255,10 @@ def test_semi_join_identity_partition_int_key_not_lost(spark, tmp_path):
         [(i, i % 3, f"t{i}") for i in range(30)], "rid long, grp long, txt string"
     )
     t = Table.create(str(tmp_path / "ident"))
-    spec = [PartitionField("g", "grp", "identity")]
+    t.set_partition_spec([PartitionField("g", "grp", "identity")], df.columns)
     for g in range(3):
         part = df.where(F.col("grp") == g)
-        entries = write_files(spark, t, part, 1, f"g{g}",
-                              stat_columns=("grp",), partition_spec=spec)
+        entries = write_files(spark, t, part, 1, f"g{g}", stat_columns=("grp",))
         t.commit_append(entries, {"op": f"ingest-{g}"})
     m: dict = {}
     got = scan_semi_join(spark, t, [1], key_col="grp",

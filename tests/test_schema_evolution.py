@@ -430,3 +430,34 @@ def test_sink_schema_guard_allows_order_and_lag(spark, tiny_table):
     ).add("tool", T.StringType())  # pre-rename producer
     with pytest.raises(ValueError, match="tool"):
         LakehouseStreamWriter({"path": t.root}, stale)
+
+
+def test_cow_delete_stamps_plan_time_schema_version(spark, tiny_table, monkeypatch):
+    """A rename committing between a cow DELETE's plan and its commit must
+    not relabel the rewrite's outputs: they hold the plan-time column
+    names, so stamping the commit-time schema version would read the
+    renamed column back as NULL for every rewritten row."""
+    from e_commerce_lakehouse_spark.operators.rowlevel import delete_where
+    from e_commerce_lakehouse_spark.operators.schema_evolution import rename_column
+    from e_commerce_lakehouse_spark.table.meta import Table
+
+    t = tiny_table
+    add_columns(t, [("quality", "double")])  # plan under a recorded version
+    victim = scan(spark, t).select("conv_id").orderBy("conv_id").first()[0]
+    n_victim = scan(spark, t).where(F.col("conv_id") == victim).count()
+
+    orig = Table.commit_rewrite
+    raced = {"fired": False}
+
+    def hooked(self, removed_paths, added, **kw):
+        if not raced["fired"]:
+            raced["fired"] = True
+            rename_column(Table.load(self.root), "role", "speaker")
+        return orig(self, removed_paths, added, **kw)
+
+    monkeypatch.setattr(Table, "commit_rewrite", hooked)
+    m = delete_where(spark, t, F.col("conv_id") == victim)
+    assert raced["fired"] and m["added_files"] >= 1
+    got = scan(spark, Table.load(t.root))
+    assert got.count() == N_TURNS - n_victim
+    assert got.where(F.col("speaker").isNull()).count() == 0

@@ -299,7 +299,7 @@ def cluster(
     base_snapshot = table.current_snapshot_id()
     if base_snapshot is None:
         raise ValueError("cannot cluster an empty table")
-    sv_plan = table.schema_version_count() or None  # outputs' write version
+    sv_plan = table.write_schema_version()  # outputs' write version
     entries = table.entries()
     scoped = conv_id_range is not None or ts_range is not None
     scoped_seq = None

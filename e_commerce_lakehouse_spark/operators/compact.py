@@ -300,7 +300,7 @@ def compact(
     # plain-string (name, spark simple type) pairs: picklable, and the
     # executor-side align stays pyspark-free (_arrow_align)
     field_spec = [(f.name, f.dataType.simpleString()) for f in schema.fields]
-    sv_plan = table.schema_version_count() or None  # outputs' write version
+    sv_plan = table.write_schema_version()  # outputs' write version
     entries = table.entries()
     # per-file written-name -> current-name maps for the arrow rewrite
     # tasks (empty until a rename exists; see table/fieldids.py)

@@ -11,11 +11,12 @@ ties nondeterministically — SURVEY.md §2.5 W1).
 
 Physical plan, Spark-first:
 
-1. TOUCHED-FILE PRUNING: join the source's distinct keys against the
-   manifest's per-file [conv_id_min, conv_id_max] (a broadcast range
-   join — the file-stats side is manifest-sized, always broadcastable).
-   Only overlapping files are rewritten; a 0.01% correction batch on a
-   100 TB table rewrites ~0.01% of file groups, not the table.
+1. TOUCHED-FILE PRUNING on the driver: the batch's distinct first-key
+   values plan the files through scan's key planner
+   (``table.scan.key_planned_entries``: partition, [min, max] and bloom
+   pruning). Only files that can hold a source key are rewritten; a
+   0.01% correction batch on a 100 TB table rewrites ~0.01% of file
+   groups, not the table.
 2. REWRITE: anti-join the touched rows against source keys (drops stale
    versions), union the deduped source, write new files.
 3. COMMIT one atomic snapshot (removed = touched files, added = new).
@@ -71,55 +72,6 @@ def merge_upsert_dataframes(
     )
 
 
-def _touched_paths(
-    spark: SparkSession, table: Table, source: DataFrame, key: str,
-    entries=None,
-) -> list[str]:
-    """Manifest-stat pruning: files whose [min,max] range of ``key``
-    overlaps any source key. Files lacking stats are conservatively touched.
-    ``entries`` restricts the candidate set (seq-aware materialize prunes
-    per tombstone-applicability class); default = the whole current
-    snapshot.
-
-    The range compare runs in the stat values' NATIVE type (schema inferred
-    from the manifest values): casting a numeric key to string would order
-    lexicographically ('10' < '9') and silently miss touched files.
-    Timestamp keys are compared as epoch micros (the manifest's normalized
-    stat form, table/stats.py)."""
-    from pyspark.sql import types as T
-
-    if entries is None:
-        entries = table.entries()
-    stat_rows, no_stats = [], []
-    for e in entries:
-        rng = e.stats.get(key)
-        if rng is None:
-            no_stats.append(e.path)
-        else:
-            stat_rows.append((e.path, rng[0], rng[1]))
-    if not stat_rows:
-        return no_stats
-    files_df = spark.createDataFrame(stat_rows, ["path", "lo", "hi"])  # native types
-    k = F.col(key)
-    if isinstance(source.schema[key].dataType, T.TimestampType) and isinstance(
-        files_df.schema["lo"].dataType, (T.LongType, T.IntegerType)
-    ):
-        k = F.unix_micros(k)
-    touched = (
-        source.select(k.alias("k"))
-        .distinct()
-        .join(
-            F.broadcast(files_df),
-            (F.col("k") >= F.col("lo")) & (F.col("k") <= F.col("hi")),
-            "inner",
-        )
-        .select("path")
-        .distinct()
-        .collect()
-    )
-    return no_stats + [r["path"] for r in touched]
-
-
 def merge_into(
     spark: SparkSession,
     table: Table,
@@ -130,13 +82,16 @@ def merge_into(
     schema=None,
     stat_columns=TRANSCRIPTS_STAT_COLUMNS,
 ) -> dict:
+    """Upsert ``source`` into ``table`` (plan: module docstring). The
+    driver holds the batch's distinct first-key values while planning,
+    as ``scan_semi_join`` holds its build side."""
     base_snapshot = table.current_snapshot_id()
     if base_snapshot is None:
         raise ValueError("cannot merge into an empty table")
     from ..table.scan import resolve_schema
 
     schema = resolve_schema(table, schema=schema)
-    sv_plan = table.schema_version_count() or None  # outputs' write version
+    sv_plan = table.write_schema_version()  # outputs' write version
     # apply pending merge-on-read tombstones first: an upsert of a
     # tombstoned key must RESURRECT it — with the tombstone still live,
     # the scan-side anti-join would silently kill the fresh row
@@ -151,24 +106,26 @@ def merge_into(
     from ..table.writer import align_to_schema
 
     source = align_to_schema(source, schema)
+    # keys come from the batch BEFORE dedup (same key set): one small
+    # aggregate, not the dedup window's shuffle
+    from ..table.scan import distinct_keys, key_planned_entries, read_entries
+
+    source_keys = distinct_keys(source, keys[0])
     if order_col is not None:  # None: caller guarantees unique keys
         source = dedup_keep_latest(source, keys, order_col)
     from .constraints import enforce_constraints
 
     source = enforce_constraints(source, table, context="merge")  # O(batch), no-op w/o constraints
 
-    touched = _touched_paths(spark, table, source, keys[0])
-    entries_by_path = {e.path: e for e in table.entries()}
-    touched_bytes = sum(entries_by_path[p].bytes for p in touched)
+    entries = table.entries()
+    touched_entries = key_planned_entries(table, entries, source_keys, keys[0])
+    touched = [e.path for e in touched_entries]
+    touched_bytes = sum(e.bytes for e in touched_entries)
 
     if touched:
         # vintage-aware read: pre-rename files resolve their written
         # column names onto the current schema by field id
-        from ..table.scan import read_entries
-
-        target_df = read_entries(
-            spark, table, [entries_by_path[p] for p in touched], schema
-        )
+        target_df = read_entries(spark, table, touched_entries, schema)
     else:
         target_df = spark.createDataFrame([], schema)
     merged = merge_upsert_dataframes(target_df, source, keys, order_col=None)
@@ -186,7 +143,9 @@ def merge_into(
         touched,
         added,
         operation="merge",
-        summary={"op": "merge", "touched_files": len(touched), "added_files": len(added)},
+        summary={"op": "merge", "touched_files": len(touched),
+                 "added_files": len(added), "source_keys": len(source_keys),
+                 "touched_bytes": touched_bytes},
         # planned right after materialize (empty tombstone list): a
         # concurrent MoR delete must conflict — this rewrite's freshly
         # stamped outputs would be exempt from it (review finding)
@@ -196,7 +155,9 @@ def merge_into(
         "base_snapshot": base_snapshot,
         "committed_snapshot": snap.snapshot_id,
         "touched_files": len(touched),
-        "total_files": len(entries_by_path),
+        "total_files": len(entries),
         "added_files": len(added),
+        "source_keys": len(source_keys),
+        "touched_bytes": touched_bytes,
         "wall_ms": int((monotonic() - t0) * 1000),
     }

@@ -228,7 +228,7 @@ def retention_delete(
 
     t0 = monotonic()
     schema = resolve_schema(table)
-    sv_plan = table.schema_version_count() or None  # outputs' write version
+    sv_plan = table.write_schema_version()  # outputs' write version
     materialize_deletes(spark, table, target_bytes=target_bytes,
                         schema=schema, stat_columns=stat_columns)
     cutoff = _ts_to_micros(before_ts)

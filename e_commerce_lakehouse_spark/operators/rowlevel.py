@@ -163,7 +163,7 @@ def delete_where(
     if table.current_snapshot_id() is None:
         raise ValueError("cannot delete from an empty table")
     schema = resolve_schema(table, schema=schema)
-    sv_plan = table.schema_version_count() or None  # outputs' write version
+    sv_plan = table.write_schema_version()  # outputs' write version
     pred = _as_column(predicate)
 
     if mode == "merge-on-read":
@@ -336,16 +336,21 @@ def materialize_deletes(
     stat_columns=TRANSCRIPTS_STAT_COLUMNS,
 ) -> dict:
     """Fold accumulated merge-on-read tombstones into the data files: one
-    copy-on-write rewrite of the STAT-OVERLAPPING files only (manifest
-    range pruning on the first key, like MERGE), committed with the
+    copy-on-write rewrite of the files scan's key planner keeps for the
+    tombstones' distinct first-key values (like MERGE), committed with the
     tombstone list cleared. SEQ-AWARE: each tombstone is applied only to
     files with a smaller data sequence number (so an update-mor's
     post-image files are rewritten only by LATER tombstones, never their
     own). The cleared tombstone files stay on disk for older pinned
     snapshots and fall to orphan GC once those expire.
     No-op (no commit) when no tombstones are live."""
-    from ..table.scan import resolve_schema, tombstone_classes
-    from .merge import _touched_paths
+    from ..table.scan import (
+        distinct_keys,
+        key_planned_entries,
+        read_entries,
+        resolve_schema,
+        tombstone_classes,
+    )
 
     t0 = monotonic()
     tomb_entries = table.tombstone_entries()
@@ -353,7 +358,7 @@ def materialize_deletes(
     if not tombs:
         return {"committed_snapshot": None, "noop": True, "wall_ms": 0}
     schema = resolve_schema(table, schema=schema)
-    sv_plan = table.schema_version_count() or None  # outputs' write version
+    sv_plan = table.write_schema_version()  # outputs' write version
     classes = tombstone_classes(table.entries(), tomb_entries)
     touched_all: list[str] = []
     kept_parts = []
@@ -365,17 +370,15 @@ def materialize_deletes(
             *[os.path.join(table.root, p) for p in ap]
         ).dropDuplicates()
         keys = list(tomb_df.columns)
-        touched = _touched_paths(spark, table, tomb_df, keys[0], entries=ents)
+        touched = key_planned_entries(
+            table, ents, distinct_keys(tomb_df, keys[0]), keys[0])
         if not touched:
             continue
-        from ..table.scan import read_entries
-
-        by_path = {e.path: e for e in ents}
         kept_parts.append(
-            read_entries(spark, table, [by_path[p] for p in touched], schema)
+            read_entries(spark, table, touched, schema)
             .join(tomb_df, on=keys, how="left_anti")
         )
-        touched_all.extend(touched)
+        touched_all.extend(e.path for e in touched)
     if not touched_all:
         snap = table.commit_rewrite([], [], operation="materialize-deletes",
                                     summary={"applied_tombstone_files": len(tombs)},
@@ -435,7 +438,7 @@ def update_where(
     if table.current_snapshot_id() is None:
         raise ValueError("cannot update an empty table")
     schema = resolve_schema(table, schema=schema)
-    sv_plan = table.schema_version_count() or None  # outputs' write version
+    sv_plan = table.write_schema_version()  # outputs' write version
     names = [f.name for f in schema.fields]
     unknown = sorted(set(assignments) - set(names))
     if unknown:

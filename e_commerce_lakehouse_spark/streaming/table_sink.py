@@ -71,7 +71,7 @@ class LakehouseStreamWriter(DataSourceStreamWriter):
         # write-schema version captured at STREAM START: entries commit
         # with this sv, so files written here bind their column names
         # correctly even if an evolution lands mid-stream
-        self._sv = t.schema_version_count() or None
+        self._sv = t.write_schema_version()
         from ..table.scan import resolve_schema
 
         expected = {f.name for f in resolve_schema(t).fields}

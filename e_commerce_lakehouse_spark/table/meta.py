@@ -1105,12 +1105,15 @@ class Table:
         return best["schema"] if best else None
 
     def schema_version_count(self) -> int:
-        """Number of recorded schema versions (0 = never evolved).
-        Writers capture this WHEN they resolve their write schema and
-        stamp it onto the entries they produce (DataFileEntry.sv), so a
-        rename landing between plan and commit can never mis-label a
-        file's written column names."""
+        """Number of recorded schema versions (0 = never evolved)."""
         return len(self.schema_versions())
+
+    def write_schema_version(self) -> int:
+        """The version every writer stamps on its files (DataFileEntry.sv)
+        when it resolves its write schema, so an evolution committing
+        before the writer does cannot relabel them. Never evolved: 1, the
+        number the first evolution gives the original shape."""
+        return self.schema_version_count() or 1
 
     def schema_version_at(self, snapshot_id: int | None = None) -> int | None:
         """The schema VERSION NUMBER current at ``snapshot_id`` (default
@@ -1427,11 +1430,9 @@ def _stamp_seq(added: list[DataFileEntry], sid: int,
     carrying an explicit seq (rewrites preserving old rows) keep it.
     ``sv`` (the table's CURRENT schema version at commit) backfills
     entries whose writer didn't stamp their write-schema version — a
-    safety net only: long-running or race-exposed writers (append,
-    compact, cluster, merge, the streaming sink) capture the version
-    WHEN they resolve their write schema and stamp entries themselves,
-    which stays correct even if an evolution lands between plan and
-    commit."""
+    safety net only: every engine writer stamps
+    ``Table.write_schema_version()`` from its plan time, which stays
+    correct even if an evolution lands between plan and commit."""
     for e in added:
         if e.seq is None:
             e.seq = sid

@@ -96,12 +96,12 @@ def apply_transform(field: PartitionField, value):
     datetime or epoch-micros int — the same convention as file stats."""
     if value is None:
         return None
+    if isinstance(value, _dt.datetime) and value.tzinfo is not None:
+        value = value.astimezone(_dt.timezone.utc).replace(tzinfo=None)
     if field.transform == "identity":
         return value
     if field.transform == "day":
         if isinstance(value, _dt.datetime):
-            if value.tzinfo is not None:
-                value = value.astimezone(_dt.timezone.utc).replace(tzinfo=None)
             micros = (value - _EPOCH) // _dt.timedelta(microseconds=1)
         else:
             micros = int(value)

@@ -482,11 +482,102 @@ def scan(
 #: bloom refinement probes at most this many in-range keys per file —
 #: beyond it the range check alone decides (probe cost would exceed the
 #: read it might save)
-_SEMI_BLOOM_PROBE_CAP = 2048
+_BLOOM_PROBE_CAP = 2048
 #: key sets up to this size filter rows via an isin literal; larger sets
 #: become a broadcast left-semi join (an isin list that size bloats the
 #: plan and recompiles per file)
 _SEMI_ISIN_MAX = 1000
+
+
+def distinct_keys(df: DataFrame, key_col: str, limit: int | None = None) -> list:
+    """The sorted distinct non-null values of ``df[key_col]``, collected
+    to the driver (at most ``limit``) for ``key_planned_entries``.
+    Timestamps come back UTC-aware: ``collect()`` yields naive LOCAL
+    time, which the planner's micros conversion would read as UTC."""
+    from pyspark.sql.types import TimestampType
+
+    k = F.col(key_col)
+    kdf = df.select(k).where(k.isNotNull()).distinct()
+    if limit is not None:
+        kdf = kdf.limit(limit)
+    vals = [r[0] for r in kdf.collect()]
+    if isinstance(df.schema[key_col].dataType, TimestampType):
+        vals = [v.astimezone(_dt.timezone.utc) for v in vals]
+    return sorted(vals)
+
+
+def key_planned_entries(
+    table: Table,
+    entries: list[DataFileEntry],
+    keys: list,
+    key_col: str,
+) -> list[DataFileEntry]:
+    """The ``entries`` that can hold one of ``keys`` (sorted, distinct,
+    non-null values of ``key_col``): the driver-side file planner of
+    ``scan_semi_join``, MERGE INTO and tombstone materialization, O(F log K).
+    Prunes by the key set's partition transform values, then bisects the
+    keys against each file's [min, max] in their native type (timestamps
+    as epoch micros, the manifest's stat form), then drops a file whose
+    bloom misses every in-range key (at most ``_BLOOM_PROBE_CAP``). A file
+    without stats, or whose stats do not order against the keys, is kept."""
+    import bisect
+
+    rkeys = keys  # range-compare form
+    if keys and isinstance(keys[0], _dt.datetime):
+        rkeys = [_ts_to_micros(v) for v in keys]  # order-preserving
+    for f in table.partition_fields_for_pruning() or []:
+        if f.source != key_col:
+            continue
+        from .partition import apply_transform
+
+        try:
+            # identity partition values round-trip through the hive path
+            # as raw STRINGS (partition_from_path) while apply_transform
+            # returns the key's native type — compare canonical strings
+            # there, native values (int bucket/day) otherwise (a native
+            # compare made an int identity key prune every file)
+            if f.transform == "identity":
+                allowed = {str(apply_transform(f, k)) for k in keys}
+                matches = lambda pv: str(pv) in allowed  # noqa: E731
+            else:
+                allowed = {apply_transform(f, k) for k in keys}
+                matches = lambda pv: pv in allowed  # noqa: E731
+        except Exception:
+            continue  # transform/key type mismatch: no pruning from f
+        entries = [
+            e for e in entries
+            if not getattr(e, "partition", None)
+            or f.name not in e.partition
+            or e.partition[f.name] is None
+            or matches(e.partition[f.name])
+        ]
+    survivors: list[DataFileEntry] = []
+    for e in entries:
+        rng = e.stats.get(key_col) if e.stats else None
+        if rng is None:
+            lo, hi = 0, len(keys)  # no stats: every key is plausibly in-range
+        else:
+            try:
+                lo = bisect.bisect_left(rkeys, rng[0])
+                hi = bisect.bisect_right(rkeys, rng[1])
+            except TypeError:
+                survivors.append(e)  # stat/key type mismatch: conservative
+                continue
+            if lo >= hi:
+                continue
+        # bloom-set refinement runs with OR without stats (matching
+        # prune_entries' point-lookup path — a stats-less file with a
+        # bloom is still provably skippable)
+        if e.blooms and key_col in e.blooms and hi - lo <= _BLOOM_PROBE_CAP:
+            from .._bloom import bloom_contains
+
+            probes = [_bloom_probe_value(v) for v in keys[lo:hi]]
+            if all(p is not None for p in probes) and not any(
+                bloom_contains(e.blooms[key_col], p) for p in probes
+            ):
+                continue  # in range, provably absent from the file's SET
+        survivors.append(e)
+    return survivors
 
 
 def scan_semi_join(
@@ -509,12 +600,10 @@ def scan_semi_join(
     ``key_col``), or a plain iterable of values. Distinct non-null keys
     are collected to the driver, BOUNDED by ``max_keys`` — past that the
     join is not selective enough for file skipping to pay and the caller
-    should scan + shuffle-join instead (ValueError says so). Planning is
-    O(F log K): keys are sorted once and each file's [min, max] stat
-    range bisects out its in-range key subset; a file whose range holds
-    no key is skipped, and a file that carries a bloom for ``key_col``
-    is additionally skipped when every in-range key (capped at
-    ``_SEMI_BLOOM_PROBE_CAP``) misses the bloom. Survivors are read
+    should scan + shuffle-join instead (ValueError says so). The sorted
+    keys plan the files through ``key_planned_entries`` — partition,
+    [min, max] and bloom pruning, the same planner MERGE INTO and
+    tombstone materialization use. Survivors are read
     through the normal MoR-tombstone path, then row-filtered by set
     membership (isin for small sets, broadcast left-semi above
     ``_SEMI_ISIN_MAX``), so the result EQUALS full-scan ∘ semi-join.
@@ -529,8 +618,6 @@ def scan_semi_join(
     to full scan + shuffle semi-join, i.e. graceful degradation when
     the build side turns out not to be selective (files_kept ==
     files_total in metrics, n_keys = -1 for 'unbounded')."""
-    import bisect
-
     if on_overflow not in ("raise", "scan"):
         raise ValueError(f"on_overflow must be 'raise' or 'scan', got {on_overflow!r}")
     build_df = None
@@ -541,8 +628,7 @@ def scan_semi_join(
                 f"keys DataFrame must have a {key_col!r} column or exactly one column"
             )
         build_df = kdf.toDF(key_col).where(F.col(key_col).isNotNull())
-        rows = build_df.distinct().limit(max_keys + 1).collect()
-        vals = [r[0] for r in rows]
+        vals = distinct_keys(build_df, key_col, limit=max_keys + 1)
     else:
         vals = list({v for v in keys if v is not None})
     schema = resolve_schema(table, snapshot_id, schema)
@@ -574,71 +660,10 @@ def scan_semi_join(
         raise TypeError(f"build-side keys are not mutually orderable: {exc}")
 
     entries = planned_entries(table, snapshot_id)
-    n_live_files = len(entries)  # metrics: total BEFORE any pruning
-    # hidden-partition pruning for the KEY SET (exact, like scan's point
-    # path): for every spec field sourced from key_col, a file whose
-    # partition tuple carries a transform value outside
-    # {transform(k) for k in keys} cannot contain any key. On a
-    # bucket(key_col, N)-partitioned 100 TB table this alone drops the
-    # scan to the |{bucket(k)}| touched buckets before any stats work.
-    spec = table.partition_fields_for_pruning()
-    for f in spec or []:
-        if f.source != key_col:
-            continue
-        from .partition import apply_transform
-
-        try:
-            # identity partition values round-trip through the hive path
-            # as raw STRINGS (partition_from_path) while apply_transform
-            # returns the key's native type — compare canonical strings
-            # there, native values (int bucket/day) otherwise (review
-            # finding: an int identity key pruned every file)
-            if f.transform == "identity":
-                allowed = {str(apply_transform(f, k)) for k in svals}
-                matches = lambda pv: str(pv) in allowed  # noqa: E731
-            else:
-                allowed = {apply_transform(f, k) for k in svals}
-                matches = lambda pv: pv in allowed  # noqa: E731
-        except Exception:
-            continue  # transform/key type mismatch: no pruning from f
-        entries = [
-            e for e in entries
-            if not getattr(e, "partition", None)
-            or f.name not in e.partition
-            or e.partition[f.name] is None
-            or matches(e.partition[f.name])
-        ]
-    survivors: list[DataFileEntry] = []
-    for e in entries:
-        rng = e.stats.get(key_col) if e.stats else None
-        if rng is None:
-            in_range = svals  # no stats: every key is plausibly in-range
-        else:
-            mn, mx = rng
-            try:
-                lo = bisect.bisect_left(svals, mn)
-                hi = bisect.bisect_right(svals, mx)
-            except TypeError:
-                survivors.append(e)  # stat/key type mismatch: conservative
-                continue
-            in_range = svals[lo:hi]
-            if not in_range:
-                continue
-        # bloom-set refinement runs with OR without stats (matching
-        # prune_entries' point-lookup path — a stats-less file with a
-        # bloom is still provably skippable)
-        if e.blooms and key_col in e.blooms and len(in_range) <= _SEMI_BLOOM_PROBE_CAP:
-            from .._bloom import bloom_contains
-
-            probes = [_bloom_probe_value(v) for v in in_range]
-            if all(p is not None for p in probes) and not any(
-                bloom_contains(e.blooms[key_col], p) for p in probes
-            ):
-                continue  # in range, provably absent from the file's SET
-        survivors.append(e)
+    survivors = key_planned_entries(table, entries, svals, key_col)
     if metrics is not None:
         metrics.update(
-            files_total=n_live_files, files_kept=len(survivors), n_keys=len(vals)
+            files_total=len(entries), files_kept=len(survivors), n_keys=len(vals)
         )
 
     df = read_with_tombstones(spark, table, survivors, schema, snapshot_id)

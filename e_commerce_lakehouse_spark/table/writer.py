@@ -157,7 +157,7 @@ def append_dataframe(
     # rename committed by another process between here and commit_append
     # must not relabel these files' written names (review finding; the
     # commit-time backfill only covers legacy callers)
-    sv_plan = table.schema_version_count() or None
+    sv_plan = table.write_schema_version()
     df = align_to_schema(df, schema)
     from ..operators.constraints import enforce_constraints  # deferred: avoids import cycle
 

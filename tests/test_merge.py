@@ -48,12 +48,96 @@ def test_merge_prunes_files_after_clustering(spark, tiny_df, tiny_table):
     src = one_conv.withColumn("text", F.lit("patched"))
     m = merge_into(spark, tiny_table, src)
     assert m["touched_files"] < m["total_files"]
+    # the commit explains itself: what the plan saw and what it rewrote
+    summary = tiny_table.snapshot().summary
+    assert {"op", "touched_files", "added_files", "source_keys",
+            "touched_bytes"} <= set(summary)
+    assert summary["source_keys"] == m["source_keys"] == 1
+    assert summary["touched_bytes"] == m["touched_bytes"] > 0
     got = (
         scan(spark, tiny_table, conv_id="conv-000000000007")
         .where(F.col("text") == "patched")
         .count()
     )
     assert got == 3
+
+
+def test_merge_prunes_by_bloom(spark, tiny_df, tmp_path):
+    """A file whose [min, max] spans a source key that its conv_id bloom
+    says it lacks is not rewritten; the key still lands as an insert."""
+    from e_commerce_lakehouse_spark.table.meta import Table
+    from e_commerce_lakehouse_spark.table.writer import write_files
+
+    def convs(*ns):
+        return tiny_df.where(F.col("conv_id").isin(["conv-%012d" % n for n in ns]))
+
+    t = Table.create(str(tmp_path / "bloom_tbl"))
+    t.set_bloom_columns(["conv_id"])
+    for i, part in enumerate((convs(0, 2, 4), convs(10, 11))):
+        t.commit_append(write_files(spark, t, part, 1, f"b{i}"), {"op": f"ingest-{i}"})
+    gap = [e for e in t.entries() if e.stats["conv_id"][1] == "conv-%012d" % 4]
+    assert len(gap) == 1 and "conv_id" in gap[0].blooms
+    src = convs(3).withColumn("text", F.lit("inserted"))
+    assert src.count() > 0
+
+    m = merge_into(spark, t, src)
+    assert m["touched_files"] == 0 and m["total_files"] == 2
+    assert gap[0].path in {e.path for e in t.entries()}
+    cols = scan(spark, t).columns
+    assert_same_rows(scan(spark, t),
+                     convs(0, 2, 4, 10, 11).unionByName(src).select(*cols))
+
+
+def test_key_planner_aware_timestamps_prune_partitions_as_utc():
+    """Collected timestamp keys arrive UTC-aware; day and bucket partition
+    pruning must transform them as the naive-UTC values the writer saw."""
+    import datetime as dt
+
+    from e_commerce_lakehouse_spark.table.meta import DataFileEntry
+    from e_commerce_lakehouse_spark.table.partition import PartitionField, apply_transform
+    from e_commerce_lakehouse_spark.table.scan import key_planned_entries
+
+    naive = dt.datetime(2023, 11, 14, 22, 30)
+    spec = [PartitionField("ts_day", "ts", "day"),
+            PartitionField("ts_bucket", "ts", "bucket[16]")]
+
+    class StubTable:
+        def partition_fields_for_pruning(self):
+            return spec
+
+    def entry(path, when):
+        return DataFileEntry(path=path, rows=1, bytes=1,
+                             partition={f.name: apply_transform(f, when) for f in spec})
+
+    ents = [entry("data/hit.parquet", naive),
+            entry("data/other_day.parquet", naive + dt.timedelta(days=1))]
+    key = naive.replace(tzinfo=dt.timezone.utc)
+    got = [e.path for e in key_planned_entries(StubTable(), ents, [key], "ts")]
+    assert got == ["data/hit.parquet"]
+
+
+def test_distinct_keys_timestamps_plan_as_utc_micros(spark):
+    """collect() hands back naive LOCAL datetimes: planned as if UTC they
+    would shift by the host's offset and miss the files holding them."""
+    import os
+    import time
+
+    from e_commerce_lakehouse_spark.table.scan import _ts_to_micros, distinct_keys
+
+    df = spark.createDataFrame([(1_700_001_000,)], "s long").select(
+        F.timestamp_seconds("s").alias("ts"))
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        keys = distinct_keys(df, "ts")
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert [_ts_to_micros(k) for k in keys] == [1_700_001_000 * 1_000_000]
 
 
 def test_merge_dataflow_keep_latest_tiebreak(spark):
@@ -90,12 +174,12 @@ def test_merge_upsert_dataframes_pure(spark):
     assert got == {("c1", 0): "t0", ("c1", 1): "t1-fixed", ("c2", 0): "new"}
 
 
-def test_touched_paths_numeric_key_native_compare(spark):
+def test_key_planner_numeric_key_native_compare():
     """ADVICE r1: a lexicographic string compare would order '10' < '9'
-    and miss the touched file for numeric keys; the range join must run
-    in the stat values' native type."""
-    from e_commerce_lakehouse_spark.operators.merge import _touched_paths
+    and miss the touched file for numeric keys; the key planner must
+    compare in the stat values' native type."""
     from e_commerce_lakehouse_spark.table.meta import DataFileEntry
+    from e_commerce_lakehouse_spark.table.scan import key_planned_entries
 
     class StubTable:
         def entries(self):
@@ -107,16 +191,21 @@ def test_touched_paths_numeric_key_native_compare(spark):
                 DataFileEntry(path="data/f3.parquet", rows=10, bytes=1, stats={}),
             ]
 
-    source = spark.createDataFrame([(10,)], "k long")
-    touched = sorted(_touched_paths(spark, StubTable(), source, "k"))
+        def partition_fields_for_pruning(self):
+            return []
+
+    t = StubTable()
+    touched = sorted(e.path for e in key_planned_entries(t, t.entries(), [10], "k"))
     # f1 overlaps 10 (9<=10<=20); f2 does not; f3 has no stats -> touched
     assert touched == ["data/f1.parquet", "data/f3.parquet"]
 
 
-def test_touched_paths_timestamp_key_micros(spark):
+def test_key_planner_timestamp_key_micros():
     """Timestamp keys compare as epoch micros (the manifest stat form)."""
-    from e_commerce_lakehouse_spark.operators.merge import _touched_paths
+    import datetime as dt
+
     from e_commerce_lakehouse_spark.table.meta import DataFileEntry
+    from e_commerce_lakehouse_spark.table.scan import key_planned_entries
 
     lo = 1_700_000_000 * 1_000_000
     hi = lo + 3_600 * 1_000_000
@@ -130,8 +219,10 @@ def test_touched_paths_timestamp_key_micros(spark):
                               stats={"ts": [hi + 1, hi + 10]}),
             ]
 
-    source = spark.createDataFrame(
-        [("2023-11-14 22:30:00",)], "ts string"
-    ).withColumn("ts", F.to_timestamp("ts"))  # 1700001000 epoch — inside [lo, hi]
-    touched = _touched_paths(spark, StubTable(), source, "ts")
+        def partition_fields_for_pruning(self):
+            return []
+
+    t = StubTable()
+    key = dt.datetime(2023, 11, 14, 22, 30)  # 1700001000 epoch — inside [lo, hi]
+    touched = [e.path for e in key_planned_entries(t, t.entries(), [key], "ts")]
     assert touched == ["data/t1.parquet"]

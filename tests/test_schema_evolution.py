@@ -432,17 +432,13 @@ def test_sink_schema_guard_allows_order_and_lag(spark, tiny_table):
         LakehouseStreamWriter({"path": t.root}, stale)
 
 
-def test_cow_delete_stamps_plan_time_schema_version(spark, tiny_table, monkeypatch):
-    """A rename committing between a cow DELETE's plan and its commit must
-    not relabel the rewrite's outputs: they hold the plan-time column
-    names, so stamping the commit-time schema version would read the
-    renamed column back as NULL for every rewritten row."""
+def _cow_delete_raced_by_rename(spark, t, monkeypatch):
+    """Run a cow DELETE whose commit is preceded by a rename of ``role``;
+    no rewritten row may read the renamed column back as NULL."""
     from e_commerce_lakehouse_spark.operators.rowlevel import delete_where
     from e_commerce_lakehouse_spark.operators.schema_evolution import rename_column
     from e_commerce_lakehouse_spark.table.meta import Table
 
-    t = tiny_table
-    add_columns(t, [("quality", "double")])  # plan under a recorded version
     victim = scan(spark, t).select("conv_id").orderBy("conv_id").first()[0]
     n_victim = scan(spark, t).where(F.col("conv_id") == victim).count()
 
@@ -461,3 +457,21 @@ def test_cow_delete_stamps_plan_time_schema_version(spark, tiny_table, monkeypat
     got = scan(spark, Table.load(t.root))
     assert got.count() == N_TURNS - n_victim
     assert got.where(F.col("speaker").isNull()).count() == 0
+
+
+def test_cow_delete_stamps_plan_time_schema_version(spark, tiny_table, monkeypatch):
+    """A rename committing between a cow DELETE's plan and its commit must
+    not relabel the rewrite's outputs: they hold the plan-time column
+    names, so stamping the commit-time schema version would read the
+    renamed column back as NULL for every rewritten row."""
+    add_columns(tiny_table, [("quality", "double")])  # plan under a recorded version
+    _cow_delete_raced_by_rename(spark, tiny_table, monkeypatch)
+
+
+def test_never_evolved_cow_delete_stamps_plan_time_schema_version(
+        spark, tiny_table, monkeypatch):
+    """The same race on a table that never evolved: the first rename pins
+    the original shape as version 1, so the rewrite's outputs must carry
+    version 1 rather than be backfilled with the rename's version."""
+    assert tiny_table.schema_version_count() == 0
+    _cow_delete_raced_by_rename(spark, tiny_table, monkeypatch)

@@ -18,13 +18,13 @@ Physical plan, Spark-first:
    0.01% correction batch on a 100 TB table rewrites ~0.01% of file
    groups, not the table.
 2. REWRITE: anti-join the touched rows against source keys (drops stale
-   versions), union the deduped source, write new files.
+   versions), union the deduped source, write new files: coalesced (no
+   exchange) to ⌈touched bytes / target⌉ tasks, rolled by rows.
 3. COMMIT one atomic snapshot (removed = touched files, added = new).
 """
 
 from __future__ import annotations
 
-import math
 import uuid
 from time import monotonic
 
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..schema import TRANSCRIPTS_STAT_COLUMNS
 from ..table.meta import Table
-from ..table.writer import DEFAULT_TARGET_FILE_BYTES, write_files
+from ..table.writer import DEFAULT_TARGET_FILE_BYTES, rewrite_sizing, write_files
 
 DEFAULT_KEYS = ("conv_id", "turn_idx")
 
@@ -134,8 +134,9 @@ def merge_into(
     # planned from the same snapshot must lose at COMMIT time, not by
     # rmtree'ing the winner's committed files (review finding)
     subdir = f"merge-{base_snapshot:08d}-{uuid.uuid4().hex[:12]}"
-    n_out = math.ceil(touched_bytes / target_bytes)
-    added = write_files(spark, table, merged, n_out, subdir, stat_columns)
+    n_out, per_file = rewrite_sizing(touched_entries, target_bytes)
+    added = write_files(spark, table, merged.coalesce(n_out), None, subdir, stat_columns,
+                        rows_per_file=per_file)
     for e in added:  # written under the PLAN-time schema version
         e.sv = sv_plan
 

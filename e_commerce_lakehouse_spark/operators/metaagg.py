@@ -219,12 +219,11 @@ def retention_delete(
     kept). MoR tombstones are materialized first (same rule as every
     rewrite). One atomic snapshot; conflicts surface as
     CommitConflictError like any rewrite."""
-    import math
     import uuid
     from time import monotonic
 
     from .rowlevel import materialize_deletes
-    from ..table.writer import write_files
+    from ..table.writer import rewrite_sizing, write_files
 
     t0 = monotonic()
     schema = resolve_schema(table)
@@ -259,8 +258,9 @@ def retention_delete(
             ~F.coalesce(F.col("ts") < F.lit(before_ts), F.lit(False))
         )
         subdir = f"retention-{table.current_snapshot_id():08d}-{uuid.uuid4().hex[:12]}"
-        n_out = math.ceil(sum(e.bytes for e in boundary) / target_bytes)
-        added = write_files(spark, table, kept, n_out, subdir, stat_columns)
+        n_out, per_file = rewrite_sizing(boundary, target_bytes)
+        added = write_files(spark, table, kept.coalesce(n_out), None, subdir, stat_columns,
+                            rows_per_file=per_file)
         for e in added:
             e.sv = sv_plan
     snap = table.commit_rewrite(

@@ -25,7 +25,6 @@ manifest stats — a 0.01 % deletion on a 100 TB table is a ~0.01 % job.
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 import uuid
@@ -36,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..schema import TRANSCRIPTS_STAT_COLUMNS
 from ..table.meta import Table
-from ..table.writer import DEFAULT_TARGET_FILE_BYTES, write_files
+from ..table.writer import DEFAULT_TARGET_FILE_BYTES, rewrite_sizing, write_files
 
 
 def _as_column(predicate) -> Column:
@@ -101,15 +100,16 @@ def _rewrite_and_commit(
     on every output (a rename committing before this commit must not
     relabel the outputs' written names)."""
     entries_by_path = {e.path: e for e in table.entries()}
-    touched_bytes = sum(entries_by_path[p].bytes for p in touched)
     # collision-free like append-{uuid}: two writers planning from the same
     # snapshot must never share an output dir — a deterministic name plus
     # rmtree let the loser delete the winner's already-COMMITTED files
     # before its own commit was (correctly) rejected (review finding).
     # A crashed attempt's dir becomes an orphan for expire's GC.
     subdir = f"{operation}-{table.current_snapshot_id():08d}-{uuid.uuid4().hex[:12]}"
-    n_out = math.ceil(touched_bytes / target_bytes)
-    added = write_files(spark, table, rewritten_df, n_out, subdir, stat_columns)
+    touched_entries = [entries_by_path[p] for p in touched]
+    n_out, per_file = rewrite_sizing(touched_entries, target_bytes)
+    added = write_files(spark, table, rewritten_df.coalesce(n_out), None, subdir, stat_columns,
+                        rows_per_file=per_file)
     for e in added:
         e.sv = sv_plan
     snap = table.commit_rewrite(

@@ -64,10 +64,7 @@ def ingest_available_now(
             from ..table.writer import write_files
 
             batch_df = enforce_constraints(batch_df, table, context="stream-bootstrap")
-            entries = write_files(
-                spark, table, batch_df, n_files=max(1, batch_df.rdd.getNumPartitions()),
-                subdir=f"stream-{epoch_id:08d}",
-            )
+            entries = write_files(spark, table, batch_df, None, f"stream-{epoch_id:08d}")
             table.commit_append(entries, {"op": "stream-bootstrap", "epoch": epoch_id})
             batches.append({"epoch": epoch_id, "op": "bootstrap"})
             return
@@ -182,11 +179,8 @@ def ingest_append_stream(
         # uuid suffix: a crash between write and commit leaves an orphan
         # dir (grace-bounded GC), and the retry of the same epoch never
         # collides with it
-        entries = write_files(
-            spark, table, df,
-            n_files=max(1, df.rdd.getNumPartitions()),
-            subdir=f"stream-{epoch_id:08d}-{uuid.uuid4().hex[:12]}",
-        )
+        entries = write_files(spark, table, df, None,
+                              f"stream-{epoch_id:08d}-{uuid.uuid4().hex[:12]}")
         snap = table.commit_append(
             entries,
             {"op": "stream-append", "txn_app": app_id, "txn_epoch": epoch_id},

@@ -19,6 +19,7 @@ default level, which is 1).
 
 from __future__ import annotations
 
+import math
 import os
 import uuid
 
@@ -46,12 +47,13 @@ def write_files(
     spark: SparkSession,
     table: Table,
     df: DataFrame,
-    n_files: int,
+    n_files: int | None,
     subdir: str,
     stat_columns=TRANSCRIPTS_STAT_COLUMNS,
     order_by: str | None = None,
+    rows_per_file: int = 0,
 ) -> list[DataFileEntry]:
-    """Write ``df`` as ~n_files parquet files under data/<subdir>; return
+    """Write ``df`` as parquet files under data/<subdir>; return
     stat-bearing entries (NOT yet committed).
 
     Hidden partitioning (table/partition.py): the table's derived
@@ -60,10 +62,12 @@ def write_files(
     data schema is unchanged), and each entry carries its partition tuple
     for exact planner pruning.
 
-    Distribution: round-robin by default. ``order_by=<column>`` instead
-    range-partitions on (partition cols, column), sorts each file by the
-    same, and drops the column before writing (cluster's curve key).
-    Zero-row outputs are deleted and never returned."""
+    Distribution: ``n_files=None`` adds no exchange; each of ``df``'s
+    partitions (callers bound them with ``coalesce``) writes its rows in
+    order, starting a new file every ``rows_per_file`` rows (0: no cap).
+    An int ``n_files`` shuffles into that many files: round-robin, or with
+    ``order_by=<column>`` range-partitioned on (partition cols, column),
+    sorted by the same, the column dropped. Zero-row outputs are deleted."""
     out_dir = os.path.join(table.data_dir, subdir)
     if os.path.exists(out_dir):
         raise FileExistsError(f"data subdir already exists: {out_dir}")
@@ -71,22 +75,26 @@ def write_files(
     names = [f.name for f in spec]
     for f in spec:
         df = df.withColumn(f.name, spark_partition_column(f))
-    n = max(1, n_files)
-    if order_by is not None:
-        keys = [*names, order_by]
-        df = df.repartitionByRange(n, *keys).sortWithinPartitions(*keys).drop(order_by)
-    elif names:
-        # cluster rows by partition tuple, SALTED by the source split so
-        # a hot partition parallelizes across tasks instead of funneling
-        # through one (each task writes one file per value it holds;
-        # compaction owns final file sizing)
-        df = df.repartition(n, *names, F.spark_partition_id())
-    else:
-        df = df.repartition(n)
+    if order_by is not None and n_files is None:
+        raise ValueError("order_by needs n_files: the range exchange's file count")
+    if n_files is not None:
+        n = max(1, n_files)
+        if order_by is not None:
+            keys = [*names, order_by]
+            df = df.repartitionByRange(n, *keys).sortWithinPartitions(*keys).drop(order_by)
+        elif names:
+            # cluster rows by partition tuple, SALTED by the source split
+            # so a hot partition parallelizes across tasks instead of
+            # funneling through one (each task writes one file per value
+            # it holds; compaction owns final file sizing)
+            df = df.repartition(n, *names, F.spark_partition_id())
+        else:
+            df = df.repartition(n)
     (
         df.write.mode("error")
         .option("compression", CODEC)
         .option("parquet.compression.codec.zstd.level", str(CODEC_LEVEL))
+        .option("maxRecordsPerFile", str(max(0, rows_per_file)))
         .partitionBy(*names)
         .parquet(out_dir)
     )
@@ -103,19 +111,31 @@ def write_files(
     return live
 
 
+def rewrite_sizing(entries: list[DataFileEntry], target_bytes: int) -> tuple[int, int]:
+    """``(tasks, rows_per_file)`` to rewrite ``entries`` into files of about
+    ``target_bytes``, from the manifest: the caller coalesces to ``tasks``,
+    so a large file's scan splits are written back as one file."""
+    n_bytes = sum(e.bytes for e in entries) or 1
+    return (math.ceil(n_bytes / target_bytes),
+            math.ceil(target_bytes * sum(e.rows for e in entries) / n_bytes))
+
+
 def align_to_schema(df: DataFrame, schema) -> DataFrame:
     """Align a writer's frame to the table's schema: extra columns are
     REJECTED (typo protection), missing nullable columns (a producer not
-    yet updated after add_columns) fill with NULL, and every column is
-    cast to the schema's type. Shared by append and MERGE so both write
+    yet updated after add_columns) fill with NULL, and only a column
+    whose type differs is cast. Shared by append and MERGE so both write
     paths tolerate schema-lagged producers identically."""
     expected = {f.name for f in schema.fields}
     extra = set(df.columns) - expected
     if extra:
         raise ValueError(f"columns not in table schema: {sorted(extra)}")
+    have = {f.name: f.dataType for f in df.schema.fields}
     cols = []
     for f in schema.fields:
-        if f.name in df.columns:
+        if have.get(f.name) == f.dataType:
+            cols.append(F.col(f.name))
+        elif f.name in have:
             cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
         elif f.nullable:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
@@ -139,17 +159,13 @@ def append_dataframe(
     ledger) — there is no window where the rows are visible but the
     marker is not.
 
-    The public single-batch append next to streaming/ingest.py's
-    foreachBatch path: write new immutable files under a unique subdir,
-    collect footer stats distributed, commit parent-manifests + one new
-    manifest. The frame is aligned to the table's CURRENT schema: extra
-    columns are rejected (typo protection), missing nullable columns
-    (e.g. a producer not yet updated after add_columns) fill with NULL.
-
-    The aligned frame is persisted for the duration of the append: the
-    constraint pass, shadow-key guard, row count, and the write itself
-    would otherwise each recompute an expensive upstream plan (review
-    finding); unpersisted in a finally."""
+    The frame is aligned to the table's CURRENT schema (``align_to_schema``)
+    and written as one Spark job without an exchange: its partitions,
+    coalesced to at most one per core, are the write tasks, each starting
+    a new file every ``rows_per_file`` rows. Nothing counts the batch
+    (``appended-rows`` sums the written files); each task leaves one tail
+    file. With CHECK constraints the aligned frame is persisted for the
+    append, so the constraint pass and the write see one computation."""
     from .scan import resolve_schema
 
     schema = resolve_schema(table)
@@ -161,25 +177,20 @@ def append_dataframe(
     df = align_to_schema(df, schema)
     from ..operators.constraints import enforce_constraints  # deferred: avoids import cycle
 
-    df = df.persist()
+    # no MoR-tombstone guard: an appended file's seq is above every live
+    # tombstone, so INSERT after DELETE re-inserts the key (SQL semantics)
+    cached = df.persist() if table.constraints() else None
     try:
         df = enforce_constraints(df, table, context="append")
-        # No MoR-tombstone shadow guard anymore (round 4): data files carry
-        # sequence numbers, and a tombstone applies only to files with a
-        # SMALLER seq — an appended file is stamped with its own commit's
-        # seq, above every live tombstone, so INSERT after DELETE simply
-        # re-inserts the key (standard SQL semantics). The pre-seq guard
-        # refused such appends because the global anti-join really would
-        # have hidden them; that hazard no longer exists (review finding).
-        n_rows = df.count()
-        n_files = max(1, -(-n_rows // max(1, rows_per_file)))
         subdir = f"append-{uuid.uuid4().hex[:12]}"
-        entries = write_files(spark, table, df, n_files, subdir)
-        for e in entries:
-            e.sv = sv_plan
+        entries = write_files(spark, table, df.coalesce(spark.sparkContext.defaultParallelism),
+                              None, subdir, rows_per_file=rows_per_file)
     finally:
-        df.unpersist()
-    summary = {"appended-rows": n_rows}
+        if cached is not None:
+            cached.unpersist()
+    for e in entries:
+        e.sv = sv_plan
+    summary = {"appended-rows": sum(e.rows for e in entries)}
     if extra_summary:
         summary.update(extra_summary)
     return table.commit_append(entries, summary=summary, publish=publish)
@@ -254,20 +265,14 @@ def create_transcripts_table(
     table = Table.create(root)
     if partition_spec:
         table.set_partition_spec(partition_spec, df.columns)
-    total = df.count()
-    n_files = max(1, -(-total // rows_per_file))
-    if n_append_commits <= 1:
-        entries = write_files(spark, table, df, n_files, "ingest-00000001-0000")
-        table.commit_append(entries, {"op": "initial-ingest"})
-        return table
-    # split deterministically by conv_id hash into batches → k append commits
-    bucket = F.pmod(F.xxhash64("conv_id"), n_append_commits)
-    files_per_batch = max(1, n_files // n_append_commits)
-    for b in range(n_append_commits):
-        part = df.where(bucket == b)
-        sid = table._next_id()
-        entries = write_files(
-            spark, table, part, files_per_batch, f"ingest-{sid:08d}-0000"
-        )
-        table.commit_append(entries, {"op": "initial-ingest", "batch": b})
+    # k commits split by conv_id hash, each of at most n files merged from
+    # neighbouring input partitions (fewer partitions than n roll by rows)
+    k = max(1, n_append_commits)
+    n = max(1, -(-df.count() // rows_per_file) // k)
+    per_file = rows_per_file if df.rdd.getNumPartitions() < n else 0
+    for b in range(k):
+        part = df.where(F.pmod(F.xxhash64("conv_id"), k) == b) if k > 1 else df
+        entries = write_files(spark, table, part.coalesce(n), None,
+                              f"ingest-{table._next_id():08d}-0000", rows_per_file=per_file)
+        table.commit_append(entries, {"op": "initial-ingest", **({"batch": b} if k > 1 else {})})
     return table

@@ -1,0 +1,52 @@
+"""Spark jobs per public write, pinned on a tiny table.
+
+At perfbench's size the number of Spark jobs decides most timings, so a
+job-count regression fails here instead of hiding in benchmark noise.
+Each call runs under its own job group and its jobs are counted through
+the status tracker. A change that moves a count updates its pin and says
+why.
+"""
+
+from contextlib import contextmanager
+
+from pyspark.sql import functions as F
+
+from e_commerce_lakehouse_spark.operators.merge import merge_into
+from e_commerce_lakehouse_spark.table import scan
+from e_commerce_lakehouse_spark.table.meta import Table
+from e_commerce_lakehouse_spark.table.writer import append_dataframe
+
+
+@contextmanager
+def _job_group(spark, name: str, counts: dict):
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    counts[name] = len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_append_and_merge_job_counts(spark, tiny_df, tmp_path):
+    """append: the write alone (no count, no exchange). merge: 2 jobs
+    collect the batch's keys; the source's dedup shuffle runs twice (the
+    anti-join's broadcast branch and the union branch do not share the
+    exchange); then the broadcast and the write."""
+    src_dir, fix_dir = str(tmp_path / "src"), str(tmp_path / "fix")
+    tiny_df.write.parquet(src_dir)
+    src = spark.read.parquet(src_dir)
+    src.where(F.col("conv_id") == "conv-000000000007") \
+        .withColumn("text", F.lit("patched")).write.parquet(fix_dir)
+    t = Table.create(str(tmp_path / "tbl"))
+    bucket = F.pmod(F.xxhash64("conv_id", "turn_idx"), 2)
+    counts: dict[str, int] = {}
+    for b in range(2):
+        with _job_group(spark, f"append-{b}", counts):
+            append_dataframe(spark, t, src.where(bucket == b), rows_per_file=300)
+    fix = spark.read.parquet(fix_dir)  # schema inference is a job of its own
+    with _job_group(spark, "merge", counts):
+        merge_into(spark, t, fix)
+    assert counts == {"append-0": 1, "append-1": 1, "merge": 6}
+    assert scan(spark, t).count() == tiny_df.count()

@@ -62,6 +62,66 @@ def test_merge_prunes_files_after_clustering(spark, tiny_df, tiny_table):
     assert got == 3
 
 
+def test_merge_keeps_clustered_order(spark, tiny_df, tmp_path):
+    """A merge that touches every file keeps each file's conv_id range:
+    its outputs roll from the touched files' own row order instead of a
+    round-robin shuffle, so a point lookup of an untouched conversation
+    still plans fewer files than are live."""
+    from e_commerce_lakehouse_spark.table.meta import Table
+    from e_commerce_lakehouse_spark.table.scan import planned_entries
+    from e_commerce_lakehouse_spark.table.writer import write_files
+
+    convs = sorted(r.conv_id for r in tiny_df.select("conv_id").distinct().collect())
+    groups = [convs[i * len(convs) // 4:(i + 1) * len(convs) // 4] for i in range(4)]
+    t = Table.create(str(tmp_path / "ranged_tbl"))
+    for i, g in enumerate(groups):
+        part = tiny_df.where(F.col("conv_id").isin(g))
+        t.commit_append(write_files(spark, t, part, 1, f"r{i}"), {"op": f"ingest-{i}"})
+    heads = [g[0] for g in groups]
+    src = tiny_df.where(F.col("conv_id").isin(heads)).withColumn("text", F.lit("patched"))
+
+    m = merge_into(spark, t, src, target_bytes=max(e.bytes for e in t.entries()))
+    assert m["touched_files"] == m["total_files"] == 4
+    untouched = groups[1][len(groups[1]) // 2]
+    assert len(planned_entries(t, conv_id=untouched)) < len(t.entries())
+    cols = scan(spark, t).columns
+    assert_same_rows(scan(spark, t),
+                     tiny_df.where(~F.col("conv_id").isin(heads)).unionByName(src).select(*cols))
+
+
+def test_merge_writes_a_file_read_in_splits_back_as_one(spark, tiny_df, tmp_path):
+    """A touched file that the scan reads as several splits (row groups
+    under a small maxPartitionBytes) is written back as one file when the
+    target holds it: a rewrite's task count comes from the manifest's
+    bytes, not from the scan's splits."""
+    import os
+
+    from e_commerce_lakehouse_spark.table.meta import Table
+    from e_commerce_lakehouse_spark.table.writer import write_files
+
+    t = Table.create(str(tmp_path / "split_tbl"))
+    spark.conf.set("parquet.block.size", str(16 * 1024))  # several row groups
+    try:
+        t.commit_append(write_files(spark, t, tiny_df, 1, "one"), {"op": "ingest"})
+    finally:
+        spark.conf.unset("parquet.block.size")
+    (entry,) = t.entries()
+    conv = tiny_df.first().conv_id
+    src = tiny_df.where(F.col("conv_id") == conv).withColumn("text", F.lit("patched"))
+    mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(entry.bytes // 4))
+    try:
+        splits = spark.read.parquet(os.path.join(t.root, entry.path)).rdd.getNumPartitions()
+        m = merge_into(spark, t, src, target_bytes=2 * entry.bytes)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+    assert splits >= 3
+    assert (m["touched_files"], m["added_files"]) == (1, 1)
+    cols = scan(spark, t).columns
+    assert_same_rows(scan(spark, t),
+                     tiny_df.where(F.col("conv_id") != conv).unionByName(src).select(*cols))
+
+
 def test_merge_prunes_by_bloom(spark, tiny_df, tmp_path):
     """A file whose [min, max] spans a source key that its conv_id bloom
     says it lacks is not rewritten; the key still lands as an insert."""

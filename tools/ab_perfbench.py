@@ -2,19 +2,28 @@
 
     python3 tools/ab_perfbench.py BASE_DIR CHANGE_DIR [--pairs 10] \
         [--workload late_corrections,read_mix] [--seed 1] [--seconds 12] \
-        [--trace 0] [--out runs.jsonl]
+        [--trace 0] [--scale 1] [--out runs.jsonl]
     python3 tools/ab_perfbench.py --report runs.jsonl
 
 Each pair runs ``perfbench/run.py`` once in each checkout, one run at a
 time; the base goes first in odd pairs and the change in even ones, so
 drift over the runs does not favour one side. Neither checkout is
 edited (perfbench itself keeps its scratch under ``.perfbench_run/``
-there while it runs). For every metric the report prints each side's
-median and quartiles, the pairs each side won, the relative change of
-the median and, where BENCHMARK.json (read from CHANGE_DIR) gives one,
-the check against its bound. A gain counts as shown when the change
+there while it runs). The report prints each side's mean wall per run
+and, for every metric, each side's median and quartiles, the pairs each
+side won, the relative change of the median and, where BENCHMARK.json
+(read from CHANGE_DIR) gives one, the check against its bound. A gain counts as shown when the change
 wins at least 9 of every 10 pairs and its median beats the base's by
 more than the base's interquartile range. Standard library only.
+
+``--scale K`` runs perfbench's own lifecycle at K times its turns: it
+imports ``perfbench/lifecycle.py``, multiplies ``N_TURNS`` by K and
+re-derives ``ROWS_PER_FILE`` (16 files per micro-batch) before calling
+``run.main``, so phases, seeds, checks and work units stay as they are
+and nothing under ``perfbench/`` changes. Scaled numbers explain a
+change or warn of a regression at a size where pruning and locality
+show; gains are claimed on the unscaled ``BENCHMARK.json`` metrics only.
+One scaled run at K=10 takes about 2.5 minutes on 4 cores.
 """
 
 from __future__ import annotations
@@ -25,12 +34,29 @@ import os
 import statistics
 import subprocess
 import sys
+import time
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: int, trace: int) -> dict:
+# perfbench's run.py with its lifecycle scaled K times from outside
+_SCALED = """import os, sys
+sys.path.insert(0, os.path.abspath("perfbench"))
+import lifecycle
+lifecycle.N_TURNS *= {scale}
+lifecycle.ROWS_PER_FILE = lifecycle.N_TURNS // lifecycle.N_BATCHES // 16
+import run
+sys.exit(run.main(sys.argv[1:]))
+"""
+
+
+def run_once(checkout: str, workload: str, seed: int, seconds: int, trace: int,
+             scale: int = 1) -> dict:
     """One perfbench run in ``checkout``; its final JSON line."""
-    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+    args = ["--workload", workload, "--seed", str(seed), "--seconds", str(seconds),
+            "--trace", str(trace)]
+    if scale == 1:
+        cmd = [sys.executable, "perfbench/run.py", *args]
+    else:
+        cmd = [sys.executable, "-c", _SCALED.format(scale=scale), *args]
     out = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
                          stderr=subprocess.DEVNULL, text=True, check=False).stdout
     try:
@@ -59,16 +85,22 @@ def metric_specs(checkout: str) -> dict[str, dict]:
 
 def report(records: list[dict], specs: dict[str, dict]) -> None:
     by_key: dict[tuple, dict[str, dict[int, dict]]] = {}
+    walls: dict[tuple, list[float]] = {}
     for r in records:
-        by_key.setdefault((r["workload"], r["seed"], r["trace"]), {}) \
+        if "wall_s" in r:
+            walls.setdefault((r["workload"], r["seed"], r["trace"], r.get("scale", 1),
+                              r["side"]), []).append(r["wall_s"])
+        by_key.setdefault((r["workload"], r["seed"], r["trace"], r.get("scale", 1)), {}) \
             .setdefault(r["side"], {})[r["pair"]] = r["result"]
-    for (workload, seed, trace), sides in sorted(by_key.items()):
+    for (workload, seed, trace, scale), sides in sorted(by_key.items()):
         base, chg = sides.get("base", {}), sides.get("change", {})
         pairs = sorted(set(base) & set(chg))
-        print(f"== {workload} seed={seed} trace={trace}: {len(pairs)} pairs")
+        print(f"== {workload} seed={seed} trace={trace} scale={scale}: {len(pairs)} pairs")
         for side, runs in (("base", base), ("change", chg)):
             errs = [f"{runs[p]['failed']}/{runs[p]['attempted']}" for p in pairs]
-            print(f"   {side:6s} failed/attempted per run: {' '.join(errs)}")
+            wall = walls.get((workload, seed, trace, scale, side))
+            mean_wall = f"  mean wall {statistics.mean(wall):.1f} s" if wall else ""
+            print(f"   {side:6s} failed/attempted per run: {' '.join(errs)}{mean_wall}")
         names = sorted({n for p in pairs for n in base[p]["metrics"]}
                        & {n for p in pairs for n in chg[p]["metrics"]})
         for name in names:
@@ -107,6 +139,8 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--scale", type=int, default=1,
+                    help="run perfbench's lifecycle at this many times its turns")
     ap.add_argument("--out", help="append every run's record to this JSON-lines file")
     ap.add_argument("--report", help="only print the report for a JSON-lines file")
     args = ap.parse_args(argv)
@@ -133,9 +167,12 @@ def main(argv=None) -> int:
         order = ("base", "change") if pair % 2 else ("change", "base")
         for workload in workloads:
             for side in order:
-                result = run_once(dirs[side], workload, args.seed, args.seconds, args.trace)
+                t0 = time.perf_counter()
+                result = run_once(dirs[side], workload, args.seed, args.seconds, args.trace,
+                                  args.scale)
                 rec = {"pair": pair, "side": side, "workload": workload,
-                       "seed": args.seed, "trace": args.trace, "result": result}
+                       "seed": args.seed, "trace": args.trace, "scale": args.scale,
+                       "wall_s": round(time.perf_counter() - t0, 1), "result": result}
                 records.append(rec)
                 if args.out:
                     with open(args.out, "a") as f:

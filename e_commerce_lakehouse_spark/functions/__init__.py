@@ -1,17 +1,15 @@
 from .zorder import (
     hilbert_key_py,
     hilbert_key_udf,
-    norm31_hash,
-    norm31_scale,
-    zorder_key_col,
+    scale31_sql,
     zorder_key_py,
+    zorder_key_sql,
 )
 
 __all__ = [
-    "zorder_key_col",
+    "zorder_key_sql",
     "zorder_key_py",
     "hilbert_key_udf",
     "hilbert_key_py",
-    "norm31_hash",
-    "norm31_scale",
+    "scale31_sql",
 ]

@@ -6,22 +6,24 @@ the north rule adds Z-order/Hilbert clustering on (conv_id, ts).
 
 Two implementations, per the UDF guidance (SURVEY.md §2.9):
 
-- **Z-order**: pure JVM Column expressions — the classic 5-step
-  bit-spreading ("Morton code") runs inside whole-stage codegen; no Python
-  in the hot path at all.
+- **Z-order**: one Spark SQL expression — the classic 5-step
+  bit-spreading ("Morton code") over two named dimension columns, parsed
+  once and run inside whole-stage codegen; no Python in the hot path.
 - **Hilbert**: genuinely iterative (31 rotation rounds), implemented as a
   numpy-vectorized ``pandas_udf`` over Arrow batches — never per-row
   Python.
 
-Both take two 31-bit inputs and emit a 62-bit non-negative int64 key, so
-nothing ever touches the sign bit. ``*_py`` twins are tiny pure-Python
-oracles used by the tests.
+The dimensions are SQL text too (``str31_sql``, ``scale31_sql``): a key
+costs a few py4j calls however deep its expression, where a Column tree
+costs one per node. Both curves take two 31-bit inputs and emit a 62-bit
+non-negative int64 key, so nothing ever touches the sign bit. ``*_py``
+twins are tiny pure-Python oracles: ``str31_py`` also projects the
+driver-side bounds, the rest are used by the tests.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,47 +39,36 @@ _SPREAD = (
 )
 
 
-def _spread_bits(c: Column) -> Column:
+def _spread_sql(c: str) -> str:
     for shift, mask in _SPREAD:
-        c = c.bitwiseOR(F.shiftleft(c, shift)).bitwiseAND(F.lit(mask))
+        c = f"(({c} | shiftleft({c}, {shift})) & {mask})"
     return c
 
 
-def zorder_key_col(x: Column, y: Column) -> Column:
-    """Morton interleave of two 31-bit ints — all JVM expressions."""
-    zx = _spread_bits(x.cast("long").bitwiseAND(F.lit(MASK31)))
-    zy = _spread_bits(y.cast("long").bitwiseAND(F.lit(MASK31)))
-    return zx.bitwiseOR(F.shiftleft(zy, 1))
+def zorder_key_sql(x: str, y: str) -> str:
+    """Morton interleave of two SQL int expressions in [0, 2^31) — pass
+    column names: each is repeated 32 times in the text."""
+    return f"({_spread_sql(x)} | shiftleft({_spread_sql(y)}, 1))"
 
 
-def norm31_hash(col: Column) -> Column:
-    """Stable 31-bit hash of any column (xxhash64, JVM-side).
-
-    NOTE: hashing destroys order-correlation with the column's natural
-    min/max file stats — use only for keys whose pruning also goes through
-    the same hash. For cluster keys that must prune on the column's OWN
-    stats, use ``order_preserving_str31``."""
-    return F.abs(F.xxhash64(col)).bitwiseAND(F.lit(MASK31))
-
-
-def order_preserving_str31(col: Column, skip_prefix_len: int = 0) -> Column:
+def str31_sql(col: str, skip_prefix_len: int = 0) -> str:
     """Monotone 31-bit projection of a string column: the 4 bytes after a
     known common prefix, big-endian (what Iceberg's z-order does with
-    truncated value bytes). Order-preserving (non-strict), so files sorted
-    by the derived key have NARROW min/max on the original string column —
-    that is what makes manifest-stat pruning fire."""
-    padded = F.rpad(F.substring(col, skip_prefix_len + 1, 4), 4, "\x00")
-    b = [F.ascii(F.substring(padded, i + 1, 1)) for i in range(4)]
-    v = (((b[0] * 256 + b[1]) * 256 + b[2]) * 256 + b[3]).cast("long")
-    return F.shiftright(v, 1).bitwiseAND(F.lit(MASK31))
+    truncated value bytes), NUL-padded (``ascii('')`` is 0). Order-preserving
+    (non-strict), so files sorted by the derived key have NARROW min/max on
+    the original string column — that is what makes manifest-stat pruning
+    fire. NULL stays NULL."""
+    b = [f"(ascii(substr({col}, {skip_prefix_len + 1 + i}, 1)) & 255)" for i in range(4)]
+    v = f"((CAST({b[0]} AS BIGINT) * 256 + {b[1]}) * 256 + {b[2]}) * 256 + {b[3]}"
+    return f"(shiftright({v}, 1) & {MASK31})"
 
 
 def str31_py(s: str, skip_prefix_len: int = 0) -> int:
-    """Pure-Python twin of ``order_preserving_str31`` — used driver-side to
-    project the table-wide min/max strings so the dimension can be min-max
-    scaled to the FULL 31-bit domain (otherwise e.g. all-digit suffixes
-    occupy a narrow ASCII sliver and the interleave degenerates to
-    single-dimension ordering)."""
+    """Pure-Python twin of ``str31_sql`` — used driver-side to project the
+    table-wide min/max strings so the dimension can be min-max scaled to
+    the FULL 31-bit domain (otherwise e.g. all-digit suffixes occupy a
+    narrow ASCII sliver and the interleave degenerates to single-dimension
+    ordering)."""
     tail = s[skip_prefix_len : skip_prefix_len + 4]
     tail = tail + "\x00" * (4 - len(tail))
     v = 0
@@ -86,11 +77,12 @@ def str31_py(s: str, skip_prefix_len: int = 0) -> int:
     return (v >> 1) & MASK31
 
 
-def norm31_scale(col: Column, lo: float, hi: float) -> Column:
-    """Min-max scale a numeric column into [0, 2^31-1]."""
+def scale31_sql(expr: str, lo: float, hi: float) -> str:
+    """Min-max scale a numeric SQL expression into [0, 2^31-1], clamped;
+    NULL maps to 0."""
     rng = max(1.0, float(hi) - float(lo))
-    scaled = (col.cast("double") - F.lit(float(lo))) * F.lit(MASK31 / rng)
-    return F.least(F.greatest(scaled.cast("long"), F.lit(0)), F.lit(MASK31))
+    scaled = f"CAST((CAST({expr} AS DOUBLE) - {float(lo)!r}D) * {MASK31 / rng!r}D AS BIGINT)"
+    return f"least(greatest({scaled}, 0), {MASK31})"
 
 
 # ---------------- Hilbert (vectorized Arrow UDF) ----------------

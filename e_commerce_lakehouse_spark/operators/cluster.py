@@ -10,20 +10,25 @@ order-preserving conv_id projection and minmax-scaled ts, so point/range
 queries on EITHER dimension skip most files via the manifest min/max
 stats.
 
-Key computation is JVM-expression Z-order by default (whole-stage
-codegen) or an Arrow-vectorized Hilbert pandas UDF (functions/zorder.py).
-``ts`` bounds come from MANIFEST stats — planning reads no data.
+The key is built from SQL text (functions/zorder.py): one ``select``
+projects the two scaled 31-bit dimensions as named columns, then one
+expression interleaves them — Z-order in whole-stage codegen, or an
+Arrow-vectorized Hilbert pandas UDF over the same columns. ``ts`` bounds
+come from MANIFEST stats — planning reads no data.
 
 Two execution modes:
 
 - single-pass (default): one ``write_files(order_by=key)`` — a range
-  exchange on (partition tuple, key), a sort within each file, one
-  write. Best throughput.
+  exchange on (partition tuple, key) into about one task per core
+  (``cluster_sizing``), a sort within each task, and one write that
+  rolls a new file every ``rows_per_file`` rows, so each file is one
+  contiguous run of the sorted curve. Per-task cost is paid per core,
+  not per output file.
 - sharded (``shards=K``): stage 1 spills a keyed temp copy hash-bucketed
   by key-quantile shard; stage 2 sorts/writes each shard as its own
-  checkpointed file group. Twice the I/O, but a killed run resumes at
-  shard granularity — the trade the north rule asks for on week-long
-  100 TB runs.
+  checkpointed file group, sized the same way. Twice the I/O, but a
+  killed run resumes at shard granularity — the trade the north rule
+  asks for on week-long 100 TB runs.
 
 Commit is one atomic REPLACE snapshot; pre-clustering snapshot remains
 readable (snapshot isolation) and content is byte-identical.
@@ -45,10 +50,10 @@ from ..checkpoint import Checkpoint
 from ..functions.zorder import (
     MASK31,
     hilbert_key_udf,
-    norm31_scale,
-    order_preserving_str31,
+    scale31_sql,
     str31_py,
-    zorder_key_col,
+    str31_sql,
+    zorder_key_sql,
 )
 from ..schema import TRANSCRIPTS_STAT_COLUMNS
 from ..table.meta import DataFileEntry, Table
@@ -56,6 +61,32 @@ from ..table.scan import scan
 from ..table.writer import DEFAULT_TARGET_FILE_BYTES, write_files
 
 _KEY = "__ckey"
+_DIMS = ("__ckey0", "__ckey1")
+
+
+def cluster_sizing(n_bytes: float, n_rows: float, target_bytes: int,
+                   parallelism: int) -> tuple[int, int]:
+    """``(tasks, rows_per_file)`` for a range-partitioned write of about
+    ``n_bytes`` / ``n_rows`` (manifest figures) into files of about
+    ``target_bytes``. The range exchange gets one task per core — more
+    only where ``DEFAULT_TARGET_FILE_BYTES`` files need them, never more
+    than the file count — and each task rolls a file every
+    ``rows_per_file`` rows. At one task per file nothing rolls (0): each
+    range partition is one file, as the exchange alone would write it."""
+    n_bytes = max(1, n_bytes)
+    n_files = max(1, math.ceil(n_bytes / target_bytes))
+    tasks = min(n_files, max(parallelism, math.ceil(n_bytes / DEFAULT_TARGET_FILE_BYTES)))
+    if tasks == n_files:
+        return tasks, 0
+    return tasks, math.ceil(target_bytes * n_rows / n_bytes)
+
+
+def _sql_name(c: str) -> str:
+    return "`" + c.replace("`", "``") + "`"
+
+
+def _sql_str(v: str) -> str:
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 #: spark.sql.files.maxPartitionBytes is SESSION-GLOBAL; two cluster()
@@ -102,7 +133,7 @@ def _generic_projections(df, entries, key_cols, schema):
     columns — the generalization of the (conv_id, ts) fast path. Bounds
     come from manifest stats when EVERY entry tracks the column; else one
     min/max agg over the data (same fallback the ts path has). Returns
-    [(Column31, lo, hi)], ready for min-max scaling."""
+    [(SQL expression, lo, hi)], ready for min-max scaling."""
     by_name = {f.name: f.dataType.simpleString() for f in schema.fields}
     specs = []
     need_agg = []
@@ -127,7 +158,7 @@ def _generic_projections(df, entries, key_cols, schema):
                 s[2], s[3] = row[f"lo_{s[0]}"], row[f"hi_{s[0]}"]
     out = []
     for c, typ, lo, hi in specs:
-        col = F.col(c)
+        col = _sql_name(c)
         if typ == "string":
             # LOW-CARDINALITY strings (lang/source/category keys) get a
             # DICTIONARY-RANK projection: min-max over raw char packs
@@ -141,42 +172,33 @@ def _generic_projections(df, entries, key_cols, schema):
             if len(distinct) <= _DICT_MAX:
                 vals = sorted(v for v in distinct if v is not None)
                 n = max(1, len(vals) - 1)
-                pairs = []
-                for i, v in enumerate(vals):
-                    pairs += [F.lit(v), F.lit(i * MASK31 // n)]
-                m = F.create_map(*pairs) if pairs else None
-                proj = (F.coalesce(m[col], F.lit(0)) if m is not None
-                        else F.lit(0))
-                out.append((proj, 0, MASK31))
+                pairs = ", ".join(f"{_sql_str(v)}, {i * MASK31 // n}"
+                                  for i, v in enumerate(vals))
+                out.append((f"coalesce(map({pairs})[{col}], 0)" if pairs else "0",
+                            0, MASK31))
             else:
                 import os.path as _p
 
                 lo_s = "" if lo is None else str(lo)
                 hi_s = "" if hi is None else str(hi)
                 pl = len(_p.commonprefix([lo_s, hi_s]))
-                out.append((order_preserving_str31(col, pl),
+                out.append((str31_sql(col, pl),
                             str31_py(lo_s, pl), str31_py(hi_s, pl)))
         elif typ == "timestamp":
-            v = F.unix_micros(col)
-            lo_i = _ts_micros_any(lo)
-            hi_i = _ts_micros_any(hi)
-            out.append((v, lo_i, hi_i))
+            out.append((f"unix_micros({col})", _ts_micros_any(lo), _ts_micros_any(hi)))
         elif typ == "date":
             # DATE doesn't cast to BIGINT (DATATYPE_MISMATCH); project to
             # days-since-epoch, matching _long_any's datetime.date handling
             # for the manifest-stat bounds.
-            v = F.unix_date(col)
-            out.append((v, _long_any(lo), _long_any(hi)))
+            out.append((f"unix_date({col})", _long_any(lo), _long_any(hi)))
         elif typ in ("int", "bigint"):
-            v = col.cast("long")
-            out.append((v, _long_any(lo), _long_any(hi)))
+            out.append((f"CAST({col} AS BIGINT)", _long_any(lo), _long_any(hi)))
         elif typ in ("float", "double"):
             # min-max scale doubles straight onto the 31-bit domain
             lo_f, hi_f = float(lo or 0.0), float(hi or 0.0)
             span = (hi_f - lo_f) or 1.0
-            v = ((col.cast("double") - F.lit(lo_f)) / F.lit(span)
-                 * F.lit(float(MASK31))).cast("long")
-            out.append((v, 0, MASK31))
+            out.append((f"CAST((CAST({col} AS DOUBLE) - {lo_f!r}D) / {span!r}D"
+                        f" * {float(MASK31)!r}D AS BIGINT)", 0, MASK31))
         else:
             raise ValueError(f"unsupported cluster key type {typ} for {c}")
     return out
@@ -208,44 +230,28 @@ def _long_any(v):
         raise
 
 
-def _with_generic_key(df, curve: str, projections):
-    """Interleave 1 or 2 projected dimensions into the cluster key —
-    same scaling/interleave rules as the (conv_id, ts) path. One column
-    degenerates to a plain range sort on its scaled value."""
-    dims = [norm31_scale(v, lo, hi) for v, lo, hi in projections]
-    if len(dims) == 1:
-        key = dims[0]
-    elif len(dims) == 2:
-        if curve == "zorder":
-            key = zorder_key_col(dims[0], dims[1])
-        elif curve == "hilbert":
-            key = hilbert_key_udf()(dims[0].cast("long"), dims[1].cast("long"))
-        else:
-            raise ValueError(f"unknown curve: {curve}")
-    else:
+def _with_cluster_key(df, curve: str, dims):
+    """Add the cluster key column to ``df``. ``dims`` holds one or two
+    (SQL projection, lo, hi) dimensions: the (conv_id, ts) pair or
+    ``_generic_projections``. One ``select`` min-max scales each onto the
+    full 31-bit domain as a named column, so neither dominates the
+    interleave; one expression over those names then interleaves them
+    (Z-order) or feeds them to the Hilbert UDF. One dimension degenerates
+    to a plain range sort on its scaled value."""
+    if len(dims) not in (1, 2):
         raise ValueError("cluster key_cols supports 1 or 2 columns "
                          "(like the built-in (conv_id, ts) pair); more "
                          "dimensions dilute every dimension's locality")
-    return df.withColumn(_KEY, key)
-
-
-def _with_cluster_key(
-    df, curve: str, ts_lo: int, ts_hi: int, conv_proj: tuple[int, int, int] = (0, 0, MASK31)
-):
-    # ORDER-PRESERVING conv_id projection (not a hash): file min/max stats
-    # on conv_id stay narrow after the sort, so point queries prune files.
-    # Both dimensions are min-max scaled to the full 31-bit domain so
-    # neither dominates the interleave.
-    pl, xlo, xhi = conv_proj
-    x = norm31_scale(order_preserving_str31(F.col("conv_id"), pl), xlo, xhi)
-    y = norm31_scale(F.unix_micros(F.col("ts")), ts_lo, ts_hi)
-    if curve == "zorder":
-        key = zorder_key_col(x, y)
-    elif curve == "hilbert":
-        key = hilbert_key_udf()(x.cast("long"), y.cast("long"))
-    else:
+    if curve not in ("zorder", "hilbert"):
         raise ValueError(f"unknown curve: {curve}")
-    return df.withColumn(_KEY, key)
+    names = _DIMS[:len(dims)]
+    cols = [_sql_name(c) for c in df.columns]
+    df = df.selectExpr(*cols, *(f"{scale31_sql(e, lo, hi)} AS {n}"
+                                for (e, lo, hi), n in zip(dims, names)))
+    if len(names) == 2 and curve == "hilbert":
+        return df.select(*cols, hilbert_key_udf()(*names).alias(_KEY))
+    key = zorder_key_sql(*names) if len(names) == 2 else names[0]
+    return df.selectExpr(*cols, f"{key} AS {_KEY}")
 
 
 class SimulatedCrash(RuntimeError):
@@ -353,7 +359,11 @@ def cluster(
                 )
             scoped_seq = max((e.seq or 0) for e in entries)
     total_bytes = sum(e.bytes for e in entries)
-    n_files = max(1, math.ceil(total_bytes / target_bytes))
+    # sharded: each shard's write is sized as an even share of the table
+    par = spark.sparkContext.defaultParallelism
+    k = max(1, shards)
+    tasks, rows_per_file = cluster_sizing(total_bytes / k, sum(e.rows for e in entries) / k,
+                                          target_bytes, par)
 
     if scoped:
         from ..table.scan import resolve_schema
@@ -373,11 +383,8 @@ def cluster(
         # engages on them.
         from ..table.scan import resolve_schema as _rs
 
-        keyed = _with_generic_key(
-            df, curve,
-            _generic_projections(df, entries, list(key_cols),
-                                 _rs(table, base_snapshot, schema)),
-        )
+        dims = _generic_projections(df, entries, list(key_cols),
+                                    _rs(table, base_snapshot, schema))
     else:
         bounds = _ts_bounds_from_manifest(entries)
         if bounds is None:  # fall back to a data-scan agg (min/max only)
@@ -385,15 +392,18 @@ def cluster(
                 F.min(F.unix_micros("ts")).alias("lo"), F.max(F.unix_micros("ts")).alias("hi")
             ).collect()[0]
             bounds = (row["lo"], row["hi"])
-        keyed = _with_cluster_key(df, curve, *bounds,
-                                  conv_proj=_conv_projection(entries))
+        # ORDER-PRESERVING conv_id projection (not a hash): file min/max
+        # stats on conv_id stay narrow after the sort, so point queries
+        # prune files
+        pl, xlo, xhi = _conv_projection(entries)
+        dims = [(str31_sql("conv_id", pl), xlo, xhi), ("unix_micros(ts)", *bounds)]
+    keyed = _with_cluster_key(df, curve, dims)
 
     # Scan parallelism: a freshly-compacted table may have only ~total/32MB
     # file-split partitions — fewer than the executor pool, so the map stage
     # underutilizes a wide cluster. Size maxPartitionBytes so the scan yields
     # ≥3 map tasks per core slot. Set INSIDE the try (the conf applies at
     # action time, the plans above are lazy) so any failure restores it.
-    par = spark.sparkContext.defaultParallelism
     mpb = max(4 << 20, min(128 << 20, total_bytes // max(1, par * 3)))
 
     _scope_tag = ""
@@ -425,12 +435,12 @@ def cluster(
             # exchange's reservoir sample pass is far cheaper than it looks
             # (guarded A/B: two-pass 12.7-15.1 s vs single-pass-with-cuts
             # 35-40 s end-to-end)
-            added = write_files(spark, table, keyed, n_files, subdir,
-                                stat_columns, order_by=_KEY)
+            added = write_files(spark, table, keyed, tasks, subdir,
+                                stat_columns, order_by=_KEY, rows_per_file=rows_per_file)
         else:
             added = _cluster_sharded(
-                spark, table, keyed, base_snapshot, curve, shards, n_files,
-                checkpoint_path, stat_columns, fail_after_shards,
+                spark, table, keyed, base_snapshot, curve, shards, tasks,
+                rows_per_file, checkpoint_path, stat_columns, fail_after_shards,
                 scope_tag=_scope_tag, run_token=run_token,
             )
     finally:
@@ -532,13 +542,14 @@ def cluster(
 
 
 def _cluster_sharded(
-    spark, table, keyed, base_snapshot, curve, shards, n_files, checkpoint_path,
-    stat_columns, fail_after_shards=None, scope_tag="", run_token="",
+    spark, table, keyed, base_snapshot, curve, shards, tasks, rows_per_file,
+    checkpoint_path, stat_columns, fail_after_shards=None, scope_tag="", run_token="",
 ) -> list[DataFileEntry]:
     """Stage temp copy bucketed by key-quantile shard, then sort/write each
-    shard as a checkpointed, resumable file group. Scoped plans get their
-    own checkpoint/temp namespace (shard ids from a scoped plan must never
-    resume against a full plan's).
+    shard as a checkpointed, resumable file group: ``tasks`` range
+    partitions, each rolling a file every ``rows_per_file`` rows. Scoped
+    plans get their own checkpoint/temp namespace (shard ids from a
+    scoped plan must never resume against a full plan's).
 
     Each shard's write is partition-pure like single-pass (write_files
     derives the partition tuple), so exact planner pruning survives a
@@ -605,7 +616,6 @@ def _cluster_sharded(
                      "shard_dirs": shard_dirs})
         done = ckpt.done()
 
-    files_per_shard = max(1, math.ceil(n_files / shards))
     added: list[DataFileEntry] = []
     completed_this_run = 0
     for s in range(shards):
@@ -623,8 +633,8 @@ def _cluster_sharded(
         if not os.path.exists(shard_dir):  # empty shard
             ckpt.record({"group_id": s, "status": "done", "outputs": [], "rows": 0})
             continue
-        outs = write_files(spark, table, spark.read.parquet(shard_dir),
-                           files_per_shard, subdir, stat_columns, order_by=_KEY)
+        outs = write_files(spark, table, spark.read.parquet(shard_dir), tasks, subdir,
+                           stat_columns, order_by=_KEY, rows_per_file=rows_per_file)
         ckpt.record(
             {
                 "group_id": s,

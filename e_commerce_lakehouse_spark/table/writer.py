@@ -64,10 +64,12 @@ def write_files(
 
     Distribution: ``n_files=None`` adds no exchange; each of ``df``'s
     partitions (callers bound them with ``coalesce``) writes its rows in
-    order, starting a new file every ``rows_per_file`` rows (0: no cap).
-    An int ``n_files`` shuffles into that many files: round-robin, or with
-    ``order_by=<column>`` range-partitioned on (partition cols, column),
-    sorted by the same, the column dropped. Zero-row outputs are deleted."""
+    order. An int ``n_files`` shuffles into that many write tasks:
+    round-robin, or with ``order_by=<column>`` range-partitioned on
+    (partition cols, column), sorted by the same, the column dropped.
+    Either way each task starts a new file every ``rows_per_file`` rows
+    (0: no cap), so with ``order_by=`` a task's files are consecutive runs
+    of its sorted range. Zero-row outputs are deleted."""
     out_dir = os.path.join(table.data_dir, subdir)
     if os.path.exists(out_dir):
         raise FileExistsError(f"data subdir already exists: {out_dir}")

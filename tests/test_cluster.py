@@ -1,9 +1,29 @@
 """Op-2 clustering: byte-equality, file-skipping improvement, sharded
 resume path, Hilbert parity (SURVEY.md §7.3 step 4)."""
 
-import pytest
+import math
+import os
 
-from e_commerce_lakehouse_spark.operators.cluster import cluster
+import pytest
+from pyspark.sql import functions as F
+
+from e_commerce_lakehouse_spark.functions.zorder import (
+    MASK31,
+    hilbert_key_py,
+    str31_py,
+    str31_sql,
+    zorder_key_py,
+)
+from e_commerce_lakehouse_spark.operators.cluster import (
+    _KEY,
+    _conv_projection,
+    _generic_projections,
+    _ts_bounds_from_manifest,
+    _with_cluster_key,
+    cluster,
+    cluster_sizing,
+)
+from e_commerce_lakehouse_spark.table.writer import DEFAULT_TARGET_FILE_BYTES
 from e_commerce_lakehouse_spark.table import prune_entries, scan
 from tests.conftest import assert_same_rows
 
@@ -243,3 +263,95 @@ def test_generic_cluster_date_key(spark, tmp_path):
             key_cols=["ingest_date", "lang"],
             stat_columns=("doc_id", "ingest_date", "lang"))
     assert sorted(map(tuple, scan(spark, t).collect())) == sorted(map(tuple, before))
+
+
+def test_cluster_sizing():
+    """One range partition per core, files rolled by rows inside each;
+    at the default 128 MB target one partition per file, nothing rolled."""
+    T = DEFAULT_TARGET_FILE_BYTES
+    for n_bytes in (1, T, 10 * T + 1, 1000 * T):
+        for par in (1, 4, 64):
+            assert cluster_sizing(n_bytes, 10**6, T, par) == (math.ceil(n_bytes / T), 0)
+    # perfbench-like: 1.47 MB at a 64 KB target on 4 cores
+    assert cluster_sizing(1_470_000, 40_000, 64 * 1024, 4) == (
+        4, math.ceil(64 * 1024 * 40_000 / 1_470_000))
+    # fewer files than cores: one task per file
+    assert cluster_sizing(100_000, 1_000, 64 * 1024, 4) == (2, 0)
+    # more DEFAULT_TARGET_FILE_BYTES files than cores: one task per such file
+    assert cluster_sizing(10 * T, 10**6, T // 4, 4)[0] == 10
+
+
+def test_cluster_writes_one_sorted_range_per_task(spark, tiny_table):
+    """At a target that asks for several files per core, the write stage
+    runs at most one task per core, and the output files, re-keyed on
+    read, hold ordered key ranges that do not overlap (each is one
+    contiguous run of the sorted curve)."""
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    entries = tiny_table.entries()
+    target = sum(e.bytes for e in entries) // (3 * par)
+    sc.setJobGroup("cluster-tasks", "cluster-tasks")
+    try:
+        cluster(spark, tiny_table, curve="zorder", target_bytes=target)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup("cluster-tasks")))
+    assert tracker.getStageInfo(max(write_job.stageIds)).numTasks <= par
+
+    pl, xlo, xhi = _conv_projection(entries)
+    dims = [(str31_sql("conv_id", pl), xlo, xhi),
+            ("unix_micros(ts)", *_ts_bounds_from_manifest(entries))]
+    paths = [os.path.join(tiny_table.root, e.path) for e in tiny_table.entries()]
+    files = spark.read.parquet(*paths).withColumn("f", F.input_file_name())
+    rngs = sorted((r[1], r[2]) for r in _with_cluster_key(files, "zorder", dims)
+                  .groupBy("f").agg(F.min(_KEY), F.max(_KEY)).collect())
+    assert len(rngs) == len(paths) > par
+    assert all(a[1] <= b[0] for a, b in zip(rngs, rngs[1:]))
+
+
+def _scale_py(v, lo, hi):
+    if v is None:
+        return 0
+    rng = max(1.0, float(hi) - float(lo))
+    return min(max(int((float(v) - float(lo)) * (MASK31 / rng)), 0), MASK31)
+
+
+def test_cluster_key_matches_python_oracle(spark):
+    """The SQL key equals str31_py -> min-max scale -> zorder_key_py (and
+    hilbert_key_py): NUL-padded short conv_ids, ts at and beyond the
+    bounds (clamped), NULL ts, and one generic key_cols pair."""
+    import datetime as dt
+
+    lo_s, hi_s = "conv-000000000000", "conv-000000009999"
+    pl = len(os.path.commonprefix([lo_s, hi_s]))
+    xlo, xhi = str31_py(lo_s, pl), str31_py(hi_s, pl)
+    t0 = dt.datetime(2024, 1, 1)
+    tlo = int((t0 - dt.datetime(1970, 1, 1)).total_seconds()) * 10**6
+    thi = tlo + 60_000_000
+    offsets = [-5_000_000, 0, 1_234_567, 60_000_000, 90_000_000, None]
+    convs = [lo_s, hi_s, "conv-000000001234", "conv-00", "conv-0000000", "conv-"]
+    rows = [(c, i, None if u is None else t0 + dt.timedelta(microseconds=u))
+            for c in convs for i, u in enumerate(offsets)]
+    df = spark.createDataFrame(rows, "conv_id string, i int, ts timestamp")
+    dims = [(str31_sql("conv_id", pl), xlo, xhi), ("unix_micros(ts)", tlo, thi)]
+    for curve, oracle in (("zorder", zorder_key_py), ("hilbert", hilbert_key_py)):
+        got = _with_cluster_key(df, curve, dims).collect()
+        assert len(got) == len(rows)
+        for r in got:
+            u = offsets[r["i"]]
+            x = _scale_py(str31_py(r["conv_id"], pl), xlo, xhi)
+            y = _scale_py(None if u is None else tlo + u, tlo, thi)
+            assert r[_KEY] == oracle(x, y), (curve, r)
+
+    # key_cols=: a dictionary-ranked string (quotes and backslashes in
+    # its values, a NULL) and an int, bounds from the data
+    langs = ["de", "it's", "a\\b", None, "zh"]
+    gen = spark.createDataFrame([(la, n) for la in langs for n in (-3, 0, 41)],
+                                "lang string, n int")
+    dims = _generic_projections(gen, [], ["lang", "n"], gen.schema)
+    vals = sorted(v for v in langs if v is not None)
+    for r in _with_cluster_key(gen, "zorder", dims).collect():
+        x = 0 if r["lang"] is None else vals.index(r["lang"]) * MASK31 // (len(vals) - 1)
+        assert r[_KEY] == zorder_key_py(x, _scale_py(r["n"], -3, 41)), r

@@ -1,4 +1,4 @@
-"""Spark jobs per public write, pinned on a tiny table.
+"""Spark jobs per public operation, pinned on a tiny table.
 
 At perfbench's size the number of Spark jobs decides most timings, so a
 job-count regression fails here instead of hiding in benchmark noise.
@@ -11,6 +11,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
+from e_commerce_lakehouse_spark.operators.cluster import cluster
+from e_commerce_lakehouse_spark.operators.compact import compact
 from e_commerce_lakehouse_spark.operators.merge import merge_into
 from e_commerce_lakehouse_spark.table import scan
 from e_commerce_lakehouse_spark.table.meta import Table
@@ -50,3 +52,17 @@ def test_append_and_merge_job_counts(spark, tiny_df, tmp_path):
         merge_into(spark, t, fix)
     assert counts == {"append-0": 1, "append-1": 1, "merge": 6}
     assert scan(spark, t).count() == tiny_df.count()
+
+
+def test_compact_cluster_and_lookup_job_counts(spark, tiny_table):
+    """compact: one job (its pyarrow rewrite wave). cluster: the range
+    exchange's bounds sample, its map stage and the write. lookup: one
+    scan of the planned files."""
+    counts: dict[str, int] = {}
+    with _job_group(spark, "compact", counts):
+        compact(spark, tiny_table, target_bytes=256 * 1024)
+    with _job_group(spark, "cluster", counts):
+        cluster(spark, tiny_table, curve="zorder", target_bytes=16 * 1024)
+    with _job_group(spark, "lookup", counts):
+        scan(spark, tiny_table, conv_id="conv-000000000007").collect()
+    assert counts == {"compact": 1, "cluster": 3, "lookup": 1}

@@ -7,9 +7,9 @@ from e_commerce_lakehouse_spark.functions.zorder import (
     MASK31,
     hilbert_key_py,
     hilbert_key_udf,
-    norm31_scale,
-    zorder_key_col,
+    scale31_sql,
     zorder_key_py,
+    zorder_key_sql,
 )
 
 SAMPLE = [
@@ -29,7 +29,7 @@ def test_zorder_expression_matches_oracle(spark):
     df = spark.createDataFrame(SAMPLE, "x long, y long")
     got = {
         (r["x"], r["y"]): r["z"]
-        for r in df.withColumn("z", zorder_key_col(F.col("x"), F.col("y"))).collect()
+        for r in df.withColumn("z", F.expr(zorder_key_sql("x", "y"))).collect()
     }
     for x, y in SAMPLE:
         assert got[(x, y)] == zorder_key_py(x, y), (x, y)
@@ -51,7 +51,7 @@ def test_keys_are_nonnegative_int64(spark):
         (F.abs(F.xxhash64("id", F.lit("y"))) % (MASK31 + 1)).alias("y"),
     )
     z = df.select(
-        zorder_key_col(F.col("x"), F.col("y")).alias("z"),
+        F.expr(zorder_key_sql("x", "y")).alias("z"),
         hilbert_key_udf()(F.col("x"), F.col("y")).alias("h"),
     ).agg(F.min("z"), F.min("h"), F.max("z"), F.max("h")).collect()[0]
     assert z[0] >= 0 and z[1] >= 0
@@ -60,7 +60,7 @@ def test_keys_are_nonnegative_int64(spark):
 
 def test_norm31_scale_bounds(spark):
     df = spark.createDataFrame([(0,), (50,), (100,)], "v long")
-    vals = [r[0] for r in df.select(norm31_scale(F.col("v"), 0, 100).alias("s")).collect()]
+    vals = [r[0] for r in df.select(F.expr(scale31_sql("v", 0, 100)).alias("s")).collect()]
     assert vals[0] == 0
     assert vals[2] == MASK31
     assert 0 < vals[1] < MASK31

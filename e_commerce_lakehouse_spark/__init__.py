@@ -33,10 +33,10 @@ format implemented here from scratch:
 - ``operators/metaagg`` metadata-only COUNT/MIN/MAX and the
                   stats-driven retention delete (boundary files only)
 
-Refs: immutable tags, write-audit-publish staging, and mutable BRANCHES
-with fast-forward publish (``Table.create_branch`` — every operator
-works against a branch-loaded table). Partition specs are declared
-transforms with exact planner pruning and Iceberg-style spec EVOLUTION.
+Refs: one mutable head (``VERSION``, flipped last by every commit) and
+immutable tags (``Table.create_tag``, pinned against expiry). Partition
+specs are declared transforms with exact planner pruning and
+Iceberg-style spec EVOLUTION.
 
 Everything here derives from public knowledge only: the Apache Spark /
 PySpark API and the reference repo's observable behavior.

@@ -14,18 +14,17 @@ copied, and the two tables diverge independently from that instant:
 - snapshot expiration + orphan GC unlink only the caller's own link —
   the inode survives until BOTH tables release it.
 
-What is deliberately NOT cloned: the commit lock, in-flight multi-table
-transaction markers (``metadata/txns/`` — a clone is not a participant
-of the source's transactions), and resume checkpoints (``*.ckpt.jsonl``
-— a clone cannot resume the source's half-done maintenance runs).
+What is deliberately NOT cloned: the commit lock and resume checkpoints
+(``*.ckpt.jsonl`` — a clone cannot resume the source's half-done
+maintenance runs).
 
 Cross-filesystem fallback: when ``os.link`` fails (EXDEV), the file is
 byte-copied — same semantics, not zero-copy; reported in the metrics.
 
 Reference analog: none (the reference has one live zone per table;
 environment cloning is done by re-running the ETL). This is the
-test/dev-branching story a real deployment expects: clone prod, run the
-risky migration on the clone, diff, throw it away.
+test/dev story a real deployment expects: clone prod, run the risky
+migration on the clone, diff, throw it away.
 """
 
 from __future__ import annotations
@@ -37,23 +36,19 @@ from ..table.meta import Table
 
 #: metadata entries never copied into a clone (see module docstring)
 _SKIP_META = ("COMMIT.lock",)
-_SKIP_META_DIRS = ("txns",)
 _SKIP_META_SUFFIXES = (".ckpt.jsonl", ".tmp")
 
 
 def shallow_clone(src: Table | str, dst_root: str) -> dict:
     """Clone ``src`` (Table or root path) to ``dst_root`` without
     copying data bytes. The clone carries the full retained snapshot
-    history, tags, branches, and every declared spec (schema versions,
+    history, tags, and every declared spec (schema versions,
     partition spec, blooms, constraints),
     so time travel and maintenance work on it exactly as on the source.
 
     Returns {"files_linked", "files_copied", "bytes_shared", "root"}.
     Refuses a non-empty destination."""
     t = src if isinstance(src, Table) else Table.load(src)
-    if t.branch is not None:
-        raise ValueError("clone from a branch handle is not supported; "
-                         "clone main (branch pointers come along)")
     if os.path.exists(dst_root) and os.listdir(dst_root):
         raise ValueError(f"clone destination {dst_root!r} is not empty")
     dst = Table.create(dst_root)
@@ -78,28 +73,8 @@ def _capture(t: Table, dst: Table, dst_root: str) -> dict:
         if fn in _SKIP_META or fn.endswith(_SKIP_META_SUFFIXES):
             continue
         if os.path.isdir(src_p):
-            if fn in _SKIP_META_DIRS:
-                continue
             shutil.copytree(src_p, os.path.join(dst.metadata_dir, fn))
             continue
-        if fn.startswith("snap-") and fn.endswith(".json"):
-            # skip staged snapshots belonging to in-flight MULTI-TABLE
-            # transactions (summary carries both 'staged' and 'txn_log'):
-            # the clone deliberately drops txns/ markers, so these could
-            # never heal or publish there — but once the SOURCE's shared
-            # log reads committed, the clone's copy would count as
-            # logically published and pin its files forever (ADVICE r5).
-            # Plain single-table WAP stages (no txn_log) age out normally
-            # and are kept, as before.
-            import json as _json
-
-            try:
-                with open(src_p) as f:
-                    summ = (_json.load(f).get("summary") or {})
-                if summ.get("staged") and summ.get("txn_log"):
-                    continue
-            except (OSError, ValueError):
-                pass  # unreadable snapshot file: copy as before
         shutil.copy2(src_p, os.path.join(dst.metadata_dir, fn))
 
     # every data file (and MoR tombstone file) referenced by ANY retained

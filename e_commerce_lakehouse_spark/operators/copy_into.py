@@ -45,9 +45,9 @@ def _canon(path: str) -> str:
 def loaded_files(table: Table) -> set[str]:
     """Union of every copy_into ledger on the published ancestor chain.
 
-    Walks parent pointers from the current head so staged/abandoned
-    snapshots and deleted branches never contribute (their loads were
-    never visible, so their files are still unloaded)."""
+    Walks parent pointers from the current head, so a crash orphan (a
+    snapshot written but never flipped to by VERSION) never contributes:
+    its load was never visible, so its files are still unloaded."""
     out: set[str] = set()
     sid = table.current_snapshot_id()
     while sid is not None:

@@ -73,51 +73,6 @@ def expire_snapshots(
                 retained.add(sid)
     # tagged snapshots are pinned until untagged (Iceberg tag semantics)
     retained |= {sid for sid in table.tags().values() if sid in set(ids)}
-    # staged snapshots belonging to a multi-table transaction: a COMMITTED
-    # txn's snapshot is logically published (its head flip may simply not
-    # have healed yet) and must never expire; an undecided (pending) txn
-    # within the stale bound is an in-flight writer, same as orphan grace.
-    # Aborted/stale-pending ones fall through to normal abandoned-stage GC.
-    _txn_marker_dir = os.path.join(table.metadata_dir, "txns")
-    if os.path.isdir(_txn_marker_dir) and os.listdir(_txn_marker_dir):
-        # marker present <=> some txn here is pending or committed-unhealed
-        # (heal/abort remove markers), so tables that never transacted (or
-        # whose txns all healed) skip the per-snapshot summary reads
-        import time as _time
-
-        from ..table.txn import STALE_TXN_S, txn_state
-
-        _now_ms = _time.time() * 1000
-        for sid in ids:
-            snap = table.snapshot(sid)
-            if snap.summary.get("staged") and snap.summary.get("txn_log"):
-                state = txn_state(snap.summary["txn_log"])
-                if state == "committed" or (
-                    state in ("pending", "absent")
-                    and _now_ms - snap.timestamp_ms < STALE_TXN_S * 1000
-                ):
-                    retained.add(sid)
-    # EVERY ref's head pins itself AND its parent chain down to the first
-    # already-retained ancestor: the head keeps that ref readable, the
-    # connecting chain keeps fast_forward's ancestry walk (and CDC)
-    # intact. delete_branch releases a branch's share. Main's VERSION
-    # head is pinned explicitly — ``table`` may be a BRANCH handle, whose
-    # ``current`` is the branch head; without this, expire run from a
-    # branch could delete main-exclusive snapshots and leave VERSION
-    # pointing at a missing snapshot (review finding).
-    id_set = set(ids)
-    ref_heads = list(table.branches().values())
-    main_head = Table(table.root).current_snapshot_id()
-    if main_head is not None:
-        ref_heads.append(main_head)
-    for bsid in ref_heads:
-        sid = bsid
-        while sid is not None and sid not in retained and sid in id_set:
-            retained.add(sid)
-            try:
-                sid = table.snapshot(sid).parent_id
-            except FileNotFoundError:
-                break
     expired = [sid for sid in ids if sid not in retained]
 
     live_rel: set[str] = set()

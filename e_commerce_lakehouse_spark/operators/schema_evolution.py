@@ -58,16 +58,6 @@ def current_schema(table: Table, snapshot_id: int | None = None) -> T.StructType
 def _commit_evolution(table: Table, new_schema: T.StructType, change: dict,
                       field_ids: dict | None = None,
                       mapped: bool = False) -> dict:
-    if table.branch is not None:
-        # schema versions resolve by `as_of_snapshot <= sid`, and ids are
-        # table-global: a branch-committed version would become visible
-        # to MAIN the moment main's head id passes it (a dropped column
-        # silently hidden from main reads). Evolution is main-line only.
-        raise ValueError(
-            "schema evolution on a branch is not supported (schema "
-            "versions are resolved by snapshot id table-wide); evolve on "
-            "main, before or after fast_forward"
-        )
     from ..table.fieldids import version_field_maps
 
     if not table.schema_versions():
@@ -182,19 +172,6 @@ def drop_columns(table: Table, names: list[str]) -> dict:
     return _commit_evolution(table, T.StructType(keep), {"dropped": list(names)})
 
 
-def _require_main(table: Table) -> None:
-    """Refuse branch evolution BEFORE any metadata write: rename/widen
-    pin version 1 up front, and a refused branch op must not leave that
-    side effect behind (review finding) — _commit_evolution re-checks
-    for the add/drop paths."""
-    if table.branch is not None:
-        raise ValueError(
-            "schema evolution on a branch is not supported (schema "
-            "versions are resolved by snapshot id table-wide); evolve on "
-            "main, before or after fast_forward"
-        )
-
-
 def _constraint_offenders(table: Table, name: str) -> list[str]:
     import re
 
@@ -219,7 +196,6 @@ def rename_column(table: Table, old: str, new: str) -> dict:
     unambiguous forever), columns referenced by CHECK constraints,
     partition-spec sources, or bloom-spec columns (those specs address
     columns by name; rewrite them first)."""
-    _require_main(table)
     schema = current_schema(table)
     existing = {f.name for f in schema.fields}
     if old in CORE_COLUMNS:
@@ -279,7 +255,6 @@ def widen_column(table: Table, name: str, to_type: str) -> dict:
     float->double) — metadata-only. Old files keep their narrow bytes;
     reads cast each vintage losslessly onto the current type
     (scan.read_entries); new files are written wide."""
-    _require_main(table)
     schema = current_schema(table)
     by_name = {f.name: f for f in schema.fields}
     if name in CORE_COLUMNS:

@@ -171,32 +171,6 @@ UNION ALL SELECT 'window-migrated' AS slice, * FROM win
 """
 
 
-# q60: branch isolation relationally — pre-publish main reads batch 1
-# only; the published union is batch1+batch2; the dropped poisoned
-# branch changes nothing.
-ALL["q60_branch_isolation"] = """
-WITH base AS (
-    SELECT 'conv-' || lpad(CAST(event_id % 500 AS VARCHAR), 6, '0') AS conv_id,
-           CAST(event_id // 500 AS INTEGER) AS turn_idx,
-           CASE event_id % 3 WHEN 0 THEN 'user' WHEN 1 THEN 'assistant'
-                ELSE 'tool' END AS role,
-           ts
-    FROM events),
-b1 AS (
-    SELECT role, count(*) AS n_rows, sum(turn_idx)::BIGINT AS sum_turn,
-           min(ts) AS min_ts, max(ts) AS max_ts
-    FROM base WHERE turn_idx % 2 = 0 GROUP BY role),
-full_t AS (
-    SELECT role, count(*) AS n_rows, sum(turn_idx)::BIGINT AS sum_turn,
-           min(ts) AS min_ts, max(ts) AS max_ts
-    FROM base GROUP BY role)
-SELECT 'main-pre' AS slice, * FROM b1
-UNION ALL SELECT 'branch' AS slice, * FROM full_t
-UNION ALL SELECT 'main-post' AS slice, * FROM full_t
-UNION ALL SELECT 'main-final' AS slice, * FROM full_t
-"""
-
-
 # q61: exactly-once append ingest relationally — both slices (after the
 # drain, and after a FULL re-delivery whose epochs the txn guard skips)
 # must equal the plain aggregate over the whole derivation; a
@@ -967,21 +941,6 @@ SELECT conv_id, window_id, fingerprint, n_turns,
     (row_number() OVER (PARTITION BY fingerprint
                         ORDER BY conv_id, window_id) = 1) AS is_canonical
 FROM w
-"""
-
-
-# q220: multi-table atomic transaction — both tables hold exactly the
-# union of their even and odd halves iff the txn committed on BOTH and
-# the aborted duplicate txn leaked on NEITHER; the twin is the plain
-# two-table join aggregate over the full inputs. Quantities are integral
-# doubles, so the sums are exact in both engines.
-ALL["q220_multitable_txn"] = """
-SELECT o.o_orderpriority,
-       count(*)::BIGINT AS n_items,
-       SUM(l.l_quantity) AS sum_qty,
-       count(DISTINCT o.o_orderkey)::BIGINT AS n_orders
-FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-GROUP BY o.o_orderpriority
 """
 
 

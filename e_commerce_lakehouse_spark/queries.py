@@ -592,62 +592,6 @@ def q59_partition_evolution(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q60_branch_isolation(spark, sf_dir):
-    """Branch isolation + fast-forward publish, value-hash oracled: main
-    is created from batch 1 of the q30 derivation; batch 2 is appended on
-    a BRANCH (main must still read batch 1 only — slice 'main-pre'), the
-    branch is audited and fast-forwarded (slice 'main-post' = union), and
-    a poisoned batch appended on a second branch is dropped unpublished
-    (slice 'main-final' must STILL equal the union). The DuckDB twin
-    recomputes each slice relationally, so the hash proves branch commits
-    are invisible until publish and discarded branches leak nothing —
-    the write-audit-publish contract over mutable refs."""
-    import os
-    import shutil
-    import uuid
-
-    from .table import scan
-    from .table.writer import append_dataframe, create_transcripts_table
-
-    df = _q30_transcripts(spark, sf_dir)
-    batch1 = df.where(F.col("turn_idx") % 2 == 0)
-    batch2 = df.where(F.col("turn_idx") % 2 == 1)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(base, f"spark_graft_q60_{uuid.uuid4().hex[:12]}")
-    rpf = max(400, df.count() // 8)
-    try:
-        t = create_transcripts_table(spark, root, batch1, rows_per_file=rpf)
-
-        def agg(sl, d):
-            return d.groupBy("role").agg(
-                F.count("*").alias("n_rows"),
-                F.sum("turn_idx").alias("sum_turn"),
-                F.min("ts").alias("min_ts"),
-                F.max("ts").alias("max_ts"),
-            ).select(F.lit(sl).alias("slice"), "role", "n_rows",
-                     "sum_turn", "min_ts", "max_ts")
-
-        bt = t.create_branch("audit")
-        append_dataframe(spark, bt, batch2, rows_per_file=rpf)
-        rows = agg("main-pre", scan(spark, t)).collect()
-        rows += agg("branch", scan(spark, t, ref="audit")).collect()
-        # audit passes (the batch is clean by construction) -> publish
-        t.fast_forward("audit")
-        rows += agg("main-post", scan(spark, t)).collect()
-        # a poisoned branch never published leaks nothing into main
-        rt = t.create_branch("reject")
-        poisoned = batch2.withColumn(
-            "conv_id", F.concat(F.lit("BAD-"), F.col("conv_id"))
-        )
-        append_dataframe(spark, rt, poisoned, rows_per_file=rpf)
-        t.delete_branch("reject")
-        rows += agg("main-final", scan(spark, t)).collect()
-        schema = agg("x", batch1).schema
-        return spark.createDataFrame(rows, schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def q61_exactly_once_ingest(spark, sf_dir):
     """Append-only streaming ingest with txn markers, value-hash oracled:
     two landing files drain as two micro-batch append commits
@@ -1674,96 +1618,6 @@ def q215_window_dedup(spark, sf_dir):
     return window_dedup(tr, window_turns=8, stride=4)
 
 
-def q220_multitable_txn(spark, sf_dir):
-    """Multi-table ATOMIC transaction (table/txn.py, the reference's
-    Parallel multi-table ETL fan-out made all-or-nothing, reference
-    etl_orchestrator.json:249-353): orders and lineitem each ingest
-    their even-key half, then ONE transaction stages both odd-key
-    halves and publishes them with a single atomic decision record
-    (2PC over write-audit-publish; interrupted flips heal at next
-    load/commit). A second transaction stages duplicate rows and
-    ABORTS — nothing from it may surface. The proof is a cross-table
-    join aggregate over the final state: only if both tables hold
-    exactly their full halves (txn committed everywhere, abort leaked
-    nowhere) does the hash match the plain two-table SQL twin."""
-    import os
-    import shutil
-    import uuid
-
-    from .table.meta import Table
-    from .table.scan import scan as scan_table
-    from .table.txn import MultiTableTransaction
-    from .table.writer import append_dataframe
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    orders = _t(spark, sf_dir, "orders")
-    items = _t(spark, sf_dir, "lineitem")
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    root = os.path.join(base, f"spark_graft_q220_{uuid.uuid4().hex[:12]}")
-    try:
-        ta = Table.create(os.path.join(root, "orders"))
-        ta.append_schema_version(orders.schema.jsonValue(), as_of_snapshot=0)
-        tb = Table.create(os.path.join(root, "lineitem"))
-        tb.append_schema_version(items.schema.jsonValue(), as_of_snapshot=0)
-
-        # the two tables are independent until commit(): overlap each
-        # append pair on driver threads so the second write's job
-        # back-fills executors the first leaves idle (guide §2.6 pattern;
-        # the FAIR scheduler the session runs makes them share the pool).
-        # Same writes, same commits, same final state — only the wall
-        # changes; the txn's _staged list order is irrelevant (commit
-        # locks sort by realpath).
-        def _both(fa, fb):
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                for f in [ex.submit(fa), ex.submit(fb)]:
-                    f.result()
-
-        _both(
-            lambda: append_dataframe(
-                spark, ta, orders.where(F.col("o_orderkey") % 2 == 0),
-                rows_per_file=1_000_000),
-            lambda: append_dataframe(
-                spark, tb, items.where(F.col("l_orderkey") % 2 == 0),
-                rows_per_file=1_000_000),
-        )
-
-        txn = MultiTableTransaction(os.path.join(root, "_txns"))
-        _both(
-            lambda: txn.stage_append(
-                spark, ta, orders.where(F.col("o_orderkey") % 2 == 1),
-                rows_per_file=1_000_000),
-            lambda: txn.stage_append(
-                spark, tb, items.where(F.col("l_orderkey") % 2 == 1),
-                rows_per_file=1_000_000),
-        )
-        txn.commit()
-
-        dup = MultiTableTransaction(os.path.join(root, "_txns"))
-        _both(
-            lambda: dup.stage_append(spark, ta, orders.limit(10),
-                                     rows_per_file=1_000_000),
-            lambda: dup.stage_append(spark, tb, items.limit(10),
-                                     rows_per_file=1_000_000),
-        )
-        dup.abort()  # must leak nowhere
-
-        a = scan_table(spark, Table.load(ta.root))
-        b = scan_table(spark, Table.load(tb.root))
-        result = (
-            a.join(b, a.o_orderkey == b.l_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                F.sum("l_quantity").alias("sum_qty"),
-                F.countDistinct("o_orderkey").alias("n_orders"),
-            )
-        )
-        return spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def q222_shallow_clone(spark, sf_dir):
     """Zero-copy SHALLOW CLONE (operators/clone.shallow_clone, Delta
     SHALLOW CLONE / Snowflake zero-copy analog): clone the documents
@@ -1827,7 +1681,6 @@ ALL = {
     "q57_cdc_changes": q57_cdc_changes,
     "q58_partitioned_scan": q58_partitioned_scan,
     "q59_partition_evolution": q59_partition_evolution,
-    "q60_branch_isolation": q60_branch_isolation,
     "q61_exactly_once_ingest": q61_exactly_once_ingest,
     "q62_partial_progress_compact": q62_partial_progress_compact,
     "q74_csv_reader_roundtrip": q74_csv_reader_roundtrip,
@@ -1865,6 +1718,5 @@ ALL = {
     "q211_cache_economics": q211_cache_economics,
     "q214_turn_windows": q214_turn_windows,
     "q215_window_dedup": q215_window_dedup,
-    "q220_multitable_txn": q220_multitable_txn,
     "q222_shallow_clone": q222_shallow_clone,
 }

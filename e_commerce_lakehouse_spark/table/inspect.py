@@ -53,7 +53,7 @@ _SNAPSHOTS_SCHEMA = T.StructType(
         T.StructField("operation", T.StringType(), False),
         T.StructField("timestamp_ms", T.LongType(), False),
         T.StructField("is_current", T.BooleanType(), False),
-        T.StructField("staged", T.BooleanType(), False),
+        T.StructField("orphan", T.BooleanType(), False),
         T.StructField("tags", T.ArrayType(T.StringType()), False),
         T.StructField("n_manifests", T.LongType(), False),
         T.StructField("n_removed_files", T.LongType(), False),
@@ -82,7 +82,7 @@ def _part_map(partition: dict | None) -> dict | None:
 
 _REFS_SCHEMA = T.StructType([
     T.StructField("name", T.StringType(), False),
-    T.StructField("type", T.StringType(), False),  # main | tag | branch
+    T.StructField("type", T.StringType(), False),  # main | tag
     T.StructField("snapshot_id", T.LongType(), True),
     T.StructField("mutable", T.BooleanType(), False),
 ])
@@ -127,7 +127,8 @@ def files_df(spark: SparkSession, table: Table, snapshot_id: int | None = None):
 
 def snapshots_df(spark: SparkSession, table: Table):
     """The retained snapshot log (Iceberg ``.snapshots`` + ``.history``
-    in one): chain position, staged/published, tags, commit shape."""
+    in one): chain position, crash orphans (``Table.history``), tags,
+    commit shape."""
     rows = []
     for h in table.history():
         s = table.snapshot(h["snapshot_id"])
@@ -138,7 +139,7 @@ def snapshots_df(spark: SparkSession, table: Table):
                 h["operation"],
                 h["timestamp_ms"],
                 h["is_current"],
-                h["staged"],
+                h["orphan"],
                 h["tags"],
                 len(s.manifests),
                 len(s.removed_files),
@@ -207,12 +208,10 @@ def schemas_df(spark: SparkSession, table: Table,
 
 def refs_df(spark: SparkSession, table: Table,
             snapshot_id: int | None = None):
-    """Every named ref (Iceberg ``.refs``): the main pointer, immutable
-    tags (GC-pinned), and mutable branch heads."""
+    """Every named ref (Iceberg ``.refs``): the main pointer and
+    immutable tags (GC-pinned)."""
     rows = [("main", "main", table.current_snapshot_id(), True)]
     rows += [(n, "tag", int(s), False) for n, s in sorted(table.tags().items())]
-    rows += [(n, "branch", int(s), True)
-             for n, s in sorted(table.branches().items())]
     return spark.createDataFrame(rows, _REFS_SCHEMA)
 
 

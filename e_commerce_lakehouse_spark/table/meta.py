@@ -56,7 +56,6 @@ from __future__ import annotations
 import contextlib
 import json
 import os
-import re
 import time
 from dataclasses import dataclass, field
 
@@ -81,8 +80,6 @@ class CommitConflictError(RuntimeError):
     - ``"tombstones"`` — a merge-on-read tombstone landed between plan
       and commit; re-plan from the head (outputs would be wrongly
       exempt from the new tombstone).
-    - ``"parent-moved"`` — a staged snapshot's parent is no longer head;
-      re-stage.
     """
 
     def __init__(self, msg: str, kind: str = "lock",
@@ -215,16 +212,10 @@ class Snapshot:
 class Table:
     """A lakehouse table rooted at a directory."""
 
-    def __init__(self, root: str, branch: str | None = None):
+    def __init__(self, root: str):
         self.root = os.path.abspath(root)
         self.data_dir = os.path.join(self.root, "data")
         self.metadata_dir = os.path.join(self.root, "metadata")
-        #: None = the main line (VERSION pointer). A named branch is a
-        #: MUTABLE ref (Iceberg branch semantics): same snapshot store,
-        #: own head pointer — every commit/publish on a branch-loaded
-        #: Table flips BRANCH-<name> instead of VERSION, so main readers
-        #: never see branch work until fast_forward.
-        self.branch = branch
         #: seconds a commit will WAIT for a fresh foreign COMMIT.lock
         #: before raising CommitConflictError. 0 (default) = fail fast —
         #: the historical single-writer contract. A positive value turns
@@ -252,37 +243,16 @@ class Table:
         return t
 
     @classmethod
-    def load(cls, root: str, branch: str | None = None,
-             lock_wait_s: float = 0.0) -> "Table":
-        t = cls(root, branch=branch)
+    def load(cls, root: str, lock_wait_s: float = 0.0) -> "Table":
+        t = cls(root)
         if not os.path.isdir(t.metadata_dir):
             raise FileNotFoundError(f"not a table: {root}")
-        if branch is not None and not os.path.exists(t._version_path()):
-            raise ValueError(f"no such branch: {branch}")
         t.lock_wait_s = lock_wait_s
-        tdir = os.path.join(t.metadata_dir, "txns")
-        if os.path.isdir(tdir) and os.listdir(tdir):
-            # finish/clean multi-table transactions this table took part
-            # in BEFORE handing out the handle: a decided (committed) txn
-            # whose head flip was interrupted mid-crash completes here,
-            # so no commit through this handle can build on the pre-txn
-            # head (table/txn.py crash-atomicity contract). BEST-EFFORT:
-            # a live coordinator holds the commit lock across its flip
-            # window (CommitConflictError here = it will finish its own
-            # flips), and read-only mounts cannot heal (OSError) — both
-            # must not fail a load; the commit-lock acquisition heal is
-            # the hard guarantee for writers.
-            from .txn import heal_table_txns
-
-            with contextlib.suppress(CommitConflictError, OSError):
-                heal_table_txns(t)
         return t
 
     # ---------- metadata reads ----------
 
     def _version_path(self) -> str:
-        if self.branch is not None:
-            return os.path.join(self.metadata_dir, f"BRANCH-{self.branch}")
         return os.path.join(self.metadata_dir, "VERSION")
 
     def current_snapshot_id(self) -> int | None:
@@ -290,10 +260,6 @@ class Table:
             with open(self._version_path()) as f:
                 return int(f.read().strip())
         except FileNotFoundError:
-            if self.branch is not None:
-                # a branch pointer never legitimately starts absent (it
-                # is created FROM an existing head); treat as deleted
-                raise ValueError(f"no such branch: {self.branch}") from None
             return None
 
     def _snap_path(self, sid: int) -> str:
@@ -366,24 +332,8 @@ class Table:
         can win; a remove-then-create window would let two writers both
         acquire). Release removes the lock only if it still carries OUR
         token, so a writer whose lock was broken as stale mid-commit
-        cannot delete the new holder's lock."""
-        import threading
-
-        if (getattr(self, "_lock_depth", 0) > 0
-                and getattr(self, "_lock_owner", None) == threading.get_ident()):
-            # RE-ENTRANT per Table handle AND owning thread: a multi-table
-            # transaction holds the lock across verify→mark→flip and then
-            # publishes through this same handle; the nested acquisition is
-            # a no-op (the outer holder IS this writer). A DIFFERENT thread
-            # sharing the handle falls through to the file lock and fails
-            # fast exactly as before — re-entrancy must not weaken mutual
-            # exclusion between threads (review finding).
-            self._lock_depth += 1
-            try:
-                yield
-            finally:
-                self._lock_depth -= 1
-            return
+        cannot delete the new holder's lock. Not re-entrant: a second
+        acquisition, even through the same handle, is another writer."""
         path = self._lock_path()
         token = f"{os.getpid()}-{time.time_ns()}"
         # lock_wait_s > 0: bounded poll turns contention into transparent
@@ -418,23 +368,8 @@ class Table:
         try:
             os.write(fd, token.encode())
             os.close(fd)
-            self._lock_depth = 1
-            self._lock_owner = threading.get_ident()
-            if self.branch is None:
-                # belt+braces to Table.load's heal: a commit through a
-                # long-lived in-process handle must ALSO finish a decided
-                # multi-table txn before building on the pre-txn head.
-                # Runs at depth 1, so heal's own nested _commit_lock (and
-                # publish_snapshot's) re-enter without re-triggering.
-                tdir = os.path.join(self.metadata_dir, "txns")
-                if os.path.isdir(tdir) and os.listdir(tdir):
-                    from .txn import heal_table_txns
-
-                    heal_table_txns(self)
             yield
         finally:
-            self._lock_depth = 0
-            self._lock_owner = None
             try:
                 with open(path) as f:
                     still_ours = f.read() == token
@@ -456,31 +391,24 @@ class Table:
         os.replace(tmp, os.path.join(self.metadata_dir, name))
         return name
 
-    def _commit(self, snap: Snapshot, publish: bool = True) -> Snapshot:
-        if self.branch is not None:
-            # record branch provenance EXPLICITLY (same rule as the staged
-            # marker): a branch-exclusive snapshot retained below main's
-            # walkable-chain floor (its pinning branch outlives expired
-            # main-exclusive history) must never read as published main
-            # history — id ordering alone would let main's time travel
-            # serve it. fast_forward to main clears the marker on the
-            # snapshots it adopts.
-            snap.summary["branch"] = self.branch
+    def _commit(self, snap: Snapshot) -> Snapshot:
+        """Write the snapshot file, then flip VERSION to it. A crash
+        between the two leaves the snapshot file as a crash orphan: on
+        disk, off the published chain, never current."""
         tmp = self._snap_path(snap.snapshot_id) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(snap.to_dict(), f)
         os.replace(tmp, self._snap_path(snap.snapshot_id))
-        if publish:
-            vtmp = self._version_path() + ".tmp"
-            with open(vtmp, "w") as f:
-                f.write(str(snap.snapshot_id))
-            os.replace(vtmp, self._version_path())  # the atomic flip
+        vtmp = self._version_path() + ".tmp"
+        with open(vtmp, "w") as f:
+            f.write(str(snap.snapshot_id))
+        os.replace(vtmp, self._version_path())  # the atomic flip
         return snap
 
     def _next_id(self) -> int:
-        # max over snapshot FILES, not VERSION: a staged (write-audit-
-        # publish) snapshot exists on disk above the published pointer,
-        # and a later commit must never reuse its id
+        """Max over snapshot FILES, not VERSION, plus one: a crash orphan
+        (snapshot written, VERSION never flipped) sits above the head,
+        and a later commit must never reuse its id."""
         ids = self.snapshot_ids()
         cur = self.current_snapshot_id()
         floor = cur if cur is not None else 0
@@ -490,14 +418,8 @@ class Table:
         self,
         added: list[DataFileEntry],
         summary: dict | None = None,
-        publish: bool = True,
     ) -> Snapshot:
-        """O(delta) append: parent manifests + one new manifest.
-
-        ``publish=False`` STAGES the snapshot (write-audit-publish): the
-        snapshot file lands but VERSION does not flip, so readers keep
-        seeing the parent until ``publish_snapshot`` — audit the staged
-        id with ``scan(snapshot_id=...)`` first."""
+        """O(delta) append: parent manifests + one new manifest."""
         with self._commit_lock():
             sid = self._next_id()
             parent = self.current_snapshot_id()
@@ -506,56 +428,10 @@ class Table:
             tombs = list(self.snapshot(parent).tombstones) if parent else []
             _stamp_seq(added, sid, self.schema_version_count())
             manifests.append(self._write_manifest(sid, len(manifests), added))
-            s = _summarize(added, summary)
-            if not publish:
-                # record staged-ness EXPLICITLY: _published_ids must not
-                # have to infer it from id ordering, which misclassifies a
-                # tag-pinned abandoned stage once its contemporaries expire
-                # (review finding)
-                s["staged"] = True
             snap = Snapshot(sid, parent, "append", manifests, removed,
-                            s, int(time.time() * 1000),
+                            _summarize(added, summary), int(time.time() * 1000),
                             tombstones=tombs)
-            return self._commit(snap, publish=publish)
-
-    def publish_snapshot(self, snapshot_id: int) -> Snapshot:
-        """Publish a staged snapshot (the P of write-audit-publish):
-        atomically flip VERSION to it. Refuses if the table advanced past
-        the staged snapshot's parent meanwhile (CommitConflictError) —
-        re-stage on the new head instead of silently dropping the
-        intervening commit."""
-        with self._commit_lock():
-            snap = self.snapshot(snapshot_id)  # FileNotFoundError if unknown
-            current = self.current_snapshot_id()
-            if current == snapshot_id:
-                raise ValueError(f"snapshot {snapshot_id} is already published")
-            if snap.parent_id != current:
-                raise CommitConflictError(
-                    f"staged snapshot {snapshot_id} was built on parent "
-                    f"{snap.parent_id} but the table is now at {current}; "
-                    f"re-stage on the current head",
-                    kind="parent-moved",
-                )
-            drop = {"staged"}
-            if self.branch is None:
-                # publishing to MAIN also adopts a branch-built snapshot
-                # into main history — its branch provenance marker must go
-                # with the staged flag (see fast_forward)
-                drop.add("branch")
-            if any(k in snap.summary for k in drop):
-                # the snapshot is published from here on: drop the markers
-                # (atomic rewrite) BEFORE the flip so no observer ever sees
-                # a published-but-flagged snapshot
-                snap.summary = {k: v for k, v in snap.summary.items() if k not in drop}
-                tmp = self._snap_path(snapshot_id) + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(snap.to_dict(), f)
-                os.replace(tmp, self._snap_path(snapshot_id))
-            vtmp = self._version_path() + ".tmp"
-            with open(vtmp, "w") as f:
-                f.write(str(snapshot_id))
-            os.replace(vtmp, self._version_path())
-            return snap
+            return self._commit(snap)
 
     def commit_rewrite(
         self,
@@ -744,7 +620,11 @@ class Table:
     def history(self) -> list[dict]:
         """The snapshot log, oldest-first — Iceberg's ``table.history``:
         one dict per retained snapshot (id, parent, operation, timestamp,
-        summary, current flag, tags pointing at it). O(metadata)."""
+        summary, current flag, tags pointing at it). O(metadata).
+
+        ``orphan`` marks a snapshot off the published chain: the one way
+        to get there is a crash between the snapshot write and the
+        VERSION flip, so it was never current (see ``_published_ids``)."""
         current = self.current_snapshot_id()
         chain = self._published_ids()
         tags_by_sid: dict[int, list[str]] = {}
@@ -760,10 +640,7 @@ class Table:
                     "operation": s.operation,
                     "timestamp_ms": s.timestamp_ms,
                     "is_current": sid == current,
-                    # off the published parent chain = staged (pending OR
-                    # abandoned) — `sid > current` mislabeled an abandoned
-                    # stage as ordinary history once the head passed it
-                    "staged": sid not in chain,
+                    "orphan": sid not in chain,
                     "tags": sorted(tags_by_sid.get(sid, [])),
                     "summary": s.summary,
                 }
@@ -795,16 +672,13 @@ class Table:
         """Tag a snapshot (default: current). Fails on duplicate names —
         a tag is immutable; delete it first to move it. Runs under the
         commit lock: refs.json is read-modify-write, so two unserialized
-        taggers would silently lose one tag (and a tag/branch name
-        collision could slip past both sides' checks)."""
+        taggers would silently lose one tag."""
         with self._commit_lock():
             sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
             self.snapshot(sid)  # validate it exists (FileNotFoundError otherwise)
             tags = self.tags()
             if name in tags:
                 raise ValueError(f"tag already exists: {name} -> {tags[name]}")
-            if name in self.branches():
-                raise ValueError(f"a branch named {name!r} already exists")
             tags[name] = sid
             self._write_tags(tags)
             return sid
@@ -819,123 +693,11 @@ class Table:
             return sid
 
     def resolve_ref(self, name: str) -> int:
-        """Tag or branch name -> snapshot id (tags win; creation refuses
-        cross-kind name collisions, so ambiguity cannot arise)."""
+        """Tag name -> snapshot id."""
         tags = self.tags()
-        if name in tags:
-            return tags[name]
-        branches = self.branches()
-        if name in branches:
-            return branches[name]
-        raise KeyError(f"no such tag or branch: {name}")
-
-    # ---------- branches (mutable named refs, Iceberg-style) ----------
-
-    _BRANCH_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
-
-    def branches(self) -> dict[str, int]:
-        """{branch name: head snapshot id} — main (VERSION) excluded."""
-        out = {}
-        for fn in os.listdir(self.metadata_dir):
-            if fn.startswith("BRANCH-"):
-                with open(os.path.join(self.metadata_dir, fn)) as f:
-                    out[fn[len("BRANCH-"):]] = int(f.read().strip())
-        return out
-
-    def create_branch(self, name: str, snapshot_id: int | None = None) -> "Table":
-        """Fork a branch at ``snapshot_id`` (default: this ref's head) and
-        return the branch-loaded Table. The branch shares the snapshot
-        store; its commits flip only BRANCH-<name>, so main stays
-        untouched until ``fast_forward``. Fails on an existing branch OR
-        tag of the same name (``resolve_ref`` must stay unambiguous)."""
-        if not self._BRANCH_NAME_RE.match(name):
-            raise ValueError(f"bad branch name: {name!r}")
-        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            raise ValueError("cannot branch an empty table")
-        self.snapshot(sid)  # validate it exists
-        # under the commit lock so the tag-name check can't race a
-        # concurrent create_tag of the same name (create_tag also locks)
-        with self._commit_lock():
-            if name in self.tags():
-                raise ValueError(f"a tag named {name!r} already exists")
-            path = os.path.join(self.metadata_dir, f"BRANCH-{name}")
-            # O_EXCL: branch creation is first-wins, never a silent overwrite
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            try:
-                os.write(fd, str(sid).encode())
-            finally:
-                os.close(fd)
-        return Table(self.root, branch=name)
-
-    def delete_branch(self, name: str) -> int:
-        """Drop the branch pointer. Its exclusive snapshots stay on disk
-        until ``expire_snapshots`` ages them out (they are no longer
-        pinned as a branch chain)."""
-        path = os.path.join(self.metadata_dir, f"BRANCH-{name}")
-        try:
-            with open(path) as f:
-                sid = int(f.read().strip())
-            os.remove(path)
-        except FileNotFoundError:
-            # covers both the read and the remove: two racing deleters
-            # both get a clean KeyError, not an unhandled OSError
-            raise KeyError(f"no such branch: {name}") from None
-        return sid
-
-    def fast_forward(self, name: str) -> int:
-        """Advance THIS ref (main, or the loaded branch) to branch
-        ``name``'s head — Iceberg ``fast_forward``: only if this ref's
-        head is an ANCESTOR of the branch head (the branch holds a
-        superset of this history), so publishing never drops commits.
-        A diverged ref (commits on both sides) refuses: rebase/merge is
-        out of scope, like Iceberg's fast-forward-only publish. Raises
-        if the connecting chain was expired (expire pins branch chains,
-        so that means the branch itself was deleted meanwhile)."""
-        with self._commit_lock():
-            branches = self.branches()
-            if name not in branches:
-                raise KeyError(f"no such branch: {name}")
-            target = branches[name]
-            cur = self.current_snapshot_id()
-            if cur == target:
-                return target
-            sid = target
-            while sid is not None and sid != cur:
-                try:
-                    sid = self.snapshot(sid).parent_id
-                except FileNotFoundError:
-                    sid = None
-            if sid != cur:
-                raise ValueError(
-                    f"cannot fast-forward: {name!r} (head {target}) does not "
-                    f"descend from this ref's head ({cur}) — diverged or "
-                    "connecting history missing"
-                )
-            if self.branch is None:
-                # publishing to MAIN: the adopted snapshots become ordinary
-                # main history — clear their branch provenance markers
-                # (atomic per-snapshot rewrite, BEFORE the flip) so they
-                # stay servable by time travel even if they later fall
-                # below a broken chain floor. Branch→branch fast-forward
-                # keeps markers: the work is still unpublished to main.
-                sid = target
-                while sid is not None and sid != cur:
-                    snap = self.snapshot(sid)
-                    if "branch" in snap.summary:
-                        snap.summary = {
-                            k: v for k, v in snap.summary.items() if k != "branch"
-                        }
-                        tmp = self._snap_path(sid) + ".tmp"
-                        with open(tmp, "w") as f:
-                            json.dump(snap.to_dict(), f)
-                        os.replace(tmp, self._snap_path(sid))
-                    sid = snap.parent_id
-            vtmp = self._version_path() + ".tmp"
-            with open(vtmp, "w") as f:
-                f.write(str(target))
-            os.replace(vtmp, self._version_path())
-            return target
+        if name not in tags:
+            raise KeyError(f"no such tag: {name}")
+        return tags[name]
 
     # ---------- CHECK constraints ----------
 
@@ -988,11 +750,6 @@ class Table:
         Iceberg puffin analog). ``columns=[]`` drops the index for future
         writes (existing file blooms stay in manifests; they remain
         correct, just unmaintained)."""
-        if self.branch is not None:
-            # table-global write policy (every ref's writers consult it) —
-            # same main-line-only rule as partition/schema evolution
-            raise ValueError("bloom index declaration on a branch is not "
-                             "supported; declare on main")
         from .._bloom import DEFAULT_MAX_BITS
 
         spec = {
@@ -1050,12 +807,6 @@ class Table:
             write_spec_history,
         )
 
-        if self.branch is not None:
-            # the spec is table-global write policy (future writes on
-            # EVERY ref lay out under it) — evolving it from a branch
-            # would silently change main's layout; main-line only
-            raise ValueError("partition evolution on a branch is not "
-                             "supported; evolve on main")
         validate_spec(new_spec, data_columns)
         history = read_spec_history(self.metadata_dir)
         if history and history[-1] == list(new_spec):
@@ -1161,15 +912,12 @@ class Table:
     # ---------- convenience ----------
 
     def _published_ids(self) -> set[int]:
-        """Ids of PUBLISHED snapshots among the retained set: everything on
-        the current head's parent chain, plus anything OLDER than the
-        oldest chain ancestor we could walk to (pre-gap history pinned by
-        tags; the chain breaks at expired ancestors) that is not
-        explicitly flagged staged. The staged marker is recorded at
-        commit_append(publish=False) and cleared by publish_snapshot, so
-        a tag-pinned ABANDONED stage sitting below the chain floor is
-        still excluded — id ordering alone misclassified it (review
-        finding). Excludes staged snapshots pending or abandoned."""
+        """Ids of PUBLISHED snapshots among the retained set: the current
+        head's parent chain, plus every snapshot OLDER than the oldest
+        ancestor the walk reaches (pre-gap history pinned by tags or
+        ``keep_last``; the chain breaks at expired ancestors). The one
+        rule: a snapshot off the chain above its floor is a crash orphan,
+        written but never flipped to by VERSION, so never current."""
         chain: set[int] = set()
         sid = self.current_snapshot_id()
         while sid is not None:
@@ -1179,44 +927,22 @@ class Table:
             except FileNotFoundError:
                 break
         floor = min(chain) if chain else 0
-        # below-floor snapshots carrying a branch marker are branch-only
-        # work (never current on THIS ref at any wall-clock time) kept
-        # alive by their branch pin — excluded just like staged ones. A
-        # branch snapshot adopted into main history had its marker cleared
-        # by fast_forward, and while reachable it is on the chain anyway.
-        def _staged_excluded(summary: dict) -> bool:
-            if not summary.get("staged"):
-                return False
-            if summary.get("txn_log"):
-                # a COMMITTED multi-table txn's snapshot is logically
-                # published even before its head flip heals (txn.py)
-                from .txn import txn_state
-
-                return txn_state(summary["txn_log"]) != "committed"
-            return True
-
-        return chain | {
-            s
-            for s in self.snapshot_ids()
-            if s < floor
-            and not _staged_excluded(self.snapshot(s).summary)
-            and not self.snapshot(s).summary.get("branch")
-        }
+        return chain | {s for s in self.snapshot_ids() if s < floor}
 
     def snapshot_id_as_of(self, ts_ms: int) -> int:
         """Time travel: the snapshot that was current at wall-clock
-        ``ts_ms`` (latest snapshot with timestamp_ms <= ts_ms) — Iceberg's
-        ``FOR SYSTEM_TIME AS OF``. O(snapshots) metadata reads, no data.
-        Raises ValueError if the table didn't exist yet at that time.
+        ``ts_ms`` (latest published snapshot with timestamp_ms <= ts_ms)
+        — Iceberg's ``FOR SYSTEM_TIME AS OF``. O(snapshots) metadata
+        reads, no data. Raises ValueError if the table didn't exist yet
+        at that time.
 
-        Only PUBLISHED history qualifies: a staged (write-audit-publish)
-        snapshot was never current at any wall-clock time, so serving it
-        here would expose unaudited data (review finding)."""
+        Only published history qualifies (``_published_ids``): a crash
+        orphan was never current at any wall-clock time."""
         chain = self._published_ids()
         best = None
         for sid in self.snapshot_ids():
             if sid not in chain:
-                continue  # staged/abandoned — never current
+                continue  # crash orphan — never current
             snap = self.snapshot(sid)
             if snap.timestamp_ms <= ts_ms and (best is None or sid > best):
                 best = sid

@@ -151,7 +151,6 @@ def append_dataframe(
     table: Table,
     df: DataFrame,
     rows_per_file: int = 100_000,
-    publish: bool = True,
     extra_summary: dict | None = None,
 ) -> "Snapshot":
     """Append ``df`` to an existing table as one O(delta) commit.
@@ -195,7 +194,7 @@ def append_dataframe(
     summary = {"appended-rows": sum(e.rows for e in entries)}
     if extra_summary:
         summary.update(extra_summary)
-    return table.commit_append(entries, summary=summary, publish=publish)
+    return table.commit_append(entries, summary=summary)
 
 
 class NonAcidFallbackWarning(RuntimeWarning):

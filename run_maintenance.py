@@ -65,10 +65,8 @@ def main(argv=None) -> int:
             "add-constraint", "drop-constraint", "constraints",
             "materialize-deletes", "skipping-report", "verify", "pipeline",
             "consume-changes", "register", "unregister", "catalog-sql",
-            "evolve-partition", "create-branch", "delete-branch",
-            "branches", "fast-forward", "replicate", "set-bloom",
-            "retention", "count", "depth-report", "semi-scan",
-            "txn-heal", "txn-vacuum", "txn-ingest", "clone",
+            "evolve-partition", "replicate", "set-bloom",
+            "retention", "count", "depth-report", "semi-scan", "clone",
         ],
     )
     p.add_argument("--target-mb", type=int, default=128, help="target data-file MB")
@@ -108,8 +106,6 @@ def main(argv=None) -> int:
                    help="initial backoff seconds (doubles per attempt)")
     p.add_argument("--dest", default=None,
                    help="clone: destination root for the zero-copy clone")
-    p.add_argument("--txn-dir", default=None,
-                   help="txn-vacuum: the shared transaction-log directory")
     p.add_argument("--snapshot", type=int, default=None,
                    help="inspect: pin a snapshot id; diff: the FROM snapshot; "
                         "rollback: the snapshot to restore")
@@ -167,10 +163,6 @@ def main(argv=None) -> int:
                    help="register/unregister: catalog table name")
     p.add_argument("--query", default=None,
                    help="catalog-sql: SQL to run after attaching the catalog")
-    p.add_argument("--branch", default=None,
-                   help="run the op against this branch's head instead of "
-                        "main (create-branch/delete-branch/fast-forward: "
-                        "the branch name itself)")
     args = p.parse_args(argv)
 
     from e_commerce_lakehouse_spark.operators import (
@@ -195,35 +187,19 @@ def main(argv=None) -> int:
                                      ref=args.tag_name)}
         else:
             result = {"unregistered": args.name, **cat.unregister(args.name)}
-    elif args.op in ("create-branch", "delete-branch", "branches",
-                     "fast-forward"):  # metadata-only branch management
-        t = Table.load(args.table)  # branch ops act on main's view
-        if args.op == "branches":
-            result = {"branches": t.branches(),
-                      "main": t.current_snapshot_id()}
-        elif not args.branch:
-            p.error(f"--op {args.op} requires --branch")
-        elif args.op == "create-branch":
-            bt = t.create_branch(args.branch, snapshot_id=args.snapshot)
-            result = {"branch": args.branch, "head": bt.current_snapshot_id()}
-        elif args.op == "delete-branch":
-            result = {"deleted": args.branch, "was_at": t.delete_branch(args.branch)}
-        else:
-            result = {"fast_forwarded_to": t.fast_forward(args.branch),
-                      "branch": args.branch}
     elif args.op == "expire":  # metadata-only: no Spark session needed
         kw = ({"orphan_grace_ms": args.orphan_grace_ms}
               if args.orphan_grace_ms is not None else {})
-        result = expire_snapshots(Table.load(args.table, branch=args.branch), keep_last=args.keep_last,
+        result = expire_snapshots(Table.load(args.table), keep_last=args.keep_last,
                                   dry_run=args.dry_run, **kw)
     elif args.op == "rewrite-manifests":
-        result = rewrite_manifests(Table.load(args.table, branch=args.branch))
+        result = rewrite_manifests(Table.load(args.table))
     elif args.op == "history":  # metadata-only
-        result = {"history": Table.load(args.table, branch=args.branch).history()}
+        result = {"history": Table.load(args.table).history()}
     elif args.op in ("tag", "untag"):  # metadata-only
         if not args.tag_name:
             p.error(f"--op {args.op} requires --tag-name")
-        t = Table.load(args.table, branch=args.branch)
+        t = Table.load(args.table)
         if args.op == "tag":
             sid = t.create_tag(args.tag_name, snapshot_id=args.snapshot)
             result = {"tag": args.tag_name, "snapshot": sid, "tags": t.tags()}
@@ -244,10 +220,10 @@ def main(argv=None) -> int:
                 if not type_str:
                     p.error(f"--columns for add-columns is name:type[,...]; got {spec!r}")
                 fields.append((name.strip(), type_str.strip()))
-            result = add_columns(Table.load(args.table, branch=args.branch), fields)
+            result = add_columns(Table.load(args.table), fields)
         else:
             result = drop_columns(
-                Table.load(args.table, branch=args.branch), [c.strip() for c in args.columns.split(",")]
+                Table.load(args.table), [c.strip() for c in args.columns.split(",")]
             )
     elif args.op == "retention":
         import datetime as dt
@@ -260,7 +236,7 @@ def main(argv=None) -> int:
         spark = get_spark(app_name="retention")
         result = with_retries(
             lambda: retention_delete(
-                spark, Table.load(args.table, branch=args.branch),
+                spark, Table.load(args.table),
                 dt.datetime.fromisoformat(args.before_ts),
                 target_bytes=args.target_mb * 1024 * 1024,
             ),
@@ -284,7 +260,7 @@ def main(argv=None) -> int:
             eq = {c: int(v) if v.lstrip("-").isdigit() else v}
         spark = get_spark(app_name="count")
         result = metadata_count(
-            spark, Table.load(args.table, branch=args.branch),
+            spark, Table.load(args.table),
             ts_range=ts_range, eq=eq, snapshot_id=args.snapshot,
         )
     elif args.op == "clone":  # zero-copy shallow clone (metadata-only)
@@ -292,20 +268,7 @@ def main(argv=None) -> int:
 
         if not args.dest:
             p.error("--op clone requires --dest <new table root>")
-        # --branch surfaces shallow_clone's own clear refusal instead of
-        # silently cloning main (review finding)
-        result = shallow_clone(Table.load(args.table, branch=args.branch),
-                               args.dest)
-    elif args.op == "txn-heal":  # finish/clean multi-table transactions
-        from e_commerce_lakehouse_spark.table.txn import heal_table_txns
-
-        result = heal_table_txns(Table.load(args.table))
-    elif args.op == "txn-vacuum":  # GC decided txn logs (see table/txn.py)
-        from e_commerce_lakehouse_spark.table.txn import vacuum_txn_logs
-
-        if not args.txn_dir:
-            p.error("--op txn-vacuum requires --txn-dir")
-        result = vacuum_txn_logs(args.txn_dir)
+        result = shallow_clone(Table.load(args.table), args.dest)
     elif args.op == "depth-report":  # metadata-only clustering audit
         from e_commerce_lakehouse_spark.operators.analyze import (
             clustering_depth_report,
@@ -314,7 +277,7 @@ def main(argv=None) -> int:
         if not args.columns:
             p.error("--op depth-report requires --columns <one key column>")
         key = args.columns.split(",")[0].strip()
-        t = Table.load(args.table, branch=args.branch)
+        t = Table.load(args.table)
         result = clustering_depth_report(t, key, snapshot_id=args.snapshot)
     elif args.op == "rename-column":  # metadata-only (field-id binding)
         from e_commerce_lakehouse_spark.operators.schema_evolution import (
@@ -324,7 +287,7 @@ def main(argv=None) -> int:
         if not args.columns or ":" not in args.columns:
             p.error("--op rename-column requires --columns old:new")
         old_name, _, new_name = args.columns.partition(":")
-        result = rename_column(Table.load(args.table, branch=args.branch),
+        result = rename_column(Table.load(args.table),
                                old_name.strip(), new_name.strip())
     elif args.op == "widen-column":  # metadata-only (lossless cast on read)
         from e_commerce_lakehouse_spark.operators.schema_evolution import (
@@ -334,20 +297,20 @@ def main(argv=None) -> int:
         if not args.columns or ":" not in args.columns:
             p.error("--op widen-column requires --columns name:type")
         name, _, type_str = args.columns.partition(":")
-        result = widen_column(Table.load(args.table, branch=args.branch),
+        result = widen_column(Table.load(args.table),
                               name.strip(), type_str.strip())
     elif args.op == "drop-constraint":  # metadata-only
         from e_commerce_lakehouse_spark.operators.constraints import drop_constraint
 
         if not args.constraint_name:
             p.error("--op drop-constraint requires --constraint-name")
-        result = drop_constraint(Table.load(args.table, branch=args.branch), args.constraint_name)
+        result = drop_constraint(Table.load(args.table), args.constraint_name)
     elif args.op == "constraints":  # metadata-only
-        result = {"constraints": Table.load(args.table, branch=args.branch).constraints()}
+        result = {"constraints": Table.load(args.table).constraints()}
     elif args.op == "set-bloom":  # metadata-only
         if args.bloom_columns is None:
             p.error("--op set-bloom requires --bloom-columns (may be empty to drop)")
-        t = Table.load(args.table, branch=args.branch)
+        t = Table.load(args.table)
         t.set_bloom_columns(
             [c for c in args.bloom_columns.split(",") if c], fpp=args.bloom_fpp
         )
@@ -355,7 +318,7 @@ def main(argv=None) -> int:
     elif args.op == "skipping-report":  # metadata-only planning probe
         from e_commerce_lakehouse_spark.table.scan import prune_entries
 
-        t = Table.load(args.table, branch=args.branch)
+        t = Table.load(args.table)
         conv_range = None
         if args.conv_id_range:
             lo, _, hi = args.conv_id_range.partition(":")
@@ -396,7 +359,7 @@ def main(argv=None) -> int:
             p.error("--op semi-scan requires --key-cols COL and "
                     "--keys v1,v2,... (or --keys-file keys.parquet)")
         key_col = args.key_cols.split(",")[0].strip()
-        t = Table.load(args.table, branch=args.branch)
+        t = Table.load(args.table)
         spark = get_spark(app_name="semi-scan")
         if args.keys_file:
             keys_in = spark.read.parquet(args.keys_file)
@@ -428,9 +391,9 @@ def main(argv=None) -> int:
 
         if args.snapshot is None:
             p.error("--op rollback requires --snapshot (the id to restore)")
-        result = rollback_to(Table.load(args.table, branch=args.branch), args.snapshot)
+        result = rollback_to(Table.load(args.table), args.snapshot)
     elif args.op == "diff":  # metadata-only
-        t = Table.load(args.table, branch=args.branch)
+        t = Table.load(args.table)
         to_id = args.to_snapshot if args.to_snapshot is not None else t.current_snapshot_id()
         from_id = args.snapshot if args.snapshot is not None else t.snapshot(to_id).parent_id
         if from_id is None:
@@ -456,7 +419,7 @@ def main(argv=None) -> int:
                       "files": len(t.entries()),
                       "partition_spec": [f.to_dict() for f in (spec or [])]}
         elif args.op == "evolve-partition":
-            t = Table.load(args.table, branch=args.branch)
+            t = Table.load(args.table)
             spec = _parse_partition_by(args.partition_by or "")
             from e_commerce_lakehouse_spark.table.scan import resolve_schema
 
@@ -467,7 +430,7 @@ def main(argv=None) -> int:
                                          for f in t.partition_fields_for_pruning()]}
         elif args.op == "compact":
             result = with_retries(
-                lambda: compact(spark, Table.load(args.table, branch=args.branch), target_bytes=target_bytes,
+                lambda: compact(spark, Table.load(args.table), target_bytes=target_bytes,
                                 checkpoint_path=args.checkpoint,
                                 order_preserving=args.order_preserving,
                                 conv_id_range=conv_range,
@@ -476,7 +439,7 @@ def main(argv=None) -> int:
                 attempts=args.retries, backoff_s=args.retry_backoff)
         elif args.op == "cluster":
             result = with_retries(
-                lambda: cluster(spark, Table.load(args.table, branch=args.branch), curve=args.curve,
+                lambda: cluster(spark, Table.load(args.table), curve=args.curve,
                                 target_bytes=target_bytes, shards=args.shards,
                                 checkpoint_path=args.checkpoint,
                                 conv_id_range=conv_range,
@@ -491,51 +454,15 @@ def main(argv=None) -> int:
                 p.error("--op merge requires --source")
             src = spark.read.parquet(args.source)
             result = with_retries(
-                lambda: merge_into(spark, Table.load(args.table, branch=args.branch), src,
+                lambda: merge_into(spark, Table.load(args.table), src,
                                    target_bytes=target_bytes),
                 attempts=args.retries, backoff_s=args.retry_backoff)
-        elif args.op == "txn-ingest":
-            # the reference's Parallel multi-table ETL fan-out, ATOMIC:
-            # one batch per table, all heads flip together or not at all
-            from e_commerce_lakehouse_spark.table.txn import (
-                MultiTableTransaction,
-            )
-
-            if not (args.tables and args.source and args.txn_dir):
-                p.error("--op txn-ingest requires --tables root2[,root3...], "
-                        "--source src1,src2[,...] (one per table incl. "
-                        "--table), and --txn-dir")
-            roots = [args.table] + [r for r in args.tables.split(",") if r]
-            srcs = [c for c in args.source.split(",") if c]
-            if len(roots) != len(srcs):
-                p.error(f"--tables/--source mismatch: {len(roots)} tables "
-                        f"vs {len(srcs)} sources")
-            txn = MultiTableTransaction(args.txn_dir)
-            try:
-                for i, (root, src) in enumerate(zip(roots, srcs)):
-                    # --branch applies to --table (stage_append then
-                    # surfaces its clear branch refusal); extras are main
-                    t = Table.load(root, lock_wait_s=10.0,
-                                   branch=args.branch if i == 0 else None)
-                    df = (spark.read.option("header", True).csv(src)
-                          if args.ingest_format == "csv"
-                          else spark.read.parquet(src))
-                    txn.stage_append(spark, t, df)
-                result = txn.commit()
-            except BaseException:
-                # a staging failure must not leave pending markers pinned
-                # for the whole stale window (review finding)
-                import contextlib as _ctx
-
-                with _ctx.suppress(Exception):
-                    txn.abort()
-                raise
         elif args.op == "ingest-append":
             from e_commerce_lakehouse_spark.streaming.ingest import ingest_append_stream
 
             if not (args.source and args.checkpoint):
                 p.error("--op ingest-append requires --source and --checkpoint")
-            t = Table.load(args.table, branch=args.branch)
+            t = Table.load(args.table)
             result = ingest_append_stream(
                 spark, t, args.source, args.checkpoint,
                 source_format=args.ingest_format,
@@ -580,14 +507,14 @@ def main(argv=None) -> int:
 
             if not (args.source and args.checkpoint):
                 p.error("--op ingest requires --source and --checkpoint")
-            t = Table.load(args.table, branch=args.branch) if _is_table(args.table) else Table.create(args.table)
+            t = Table.load(args.table) if _is_table(args.table) else Table.create(args.table)
             result = ingest_available_now(spark, t, args.source, args.checkpoint)
         elif args.op == "consume":
             from e_commerce_lakehouse_spark.table.cdc import IncrementalConsumer
 
             if not args.checkpoint:
                 p.error("--op consume requires --checkpoint (the cursor file)")
-            consumer = IncrementalConsumer(Table.load(args.table, branch=args.branch), args.checkpoint)
+            consumer = IncrementalConsumer(Table.load(args.table), args.checkpoint)
             batch = consumer.poll(spark)
             if batch is None:
                 result = {"caught_up": True, "cursor": consumer.position()}
@@ -605,7 +532,7 @@ def main(argv=None) -> int:
                 p.error(f"--op {args.op} requires --predicate")
             if args.op == "delete":
                 result = with_retries(
-                    lambda: delete_where(spark, Table.load(args.table, branch=args.branch), args.predicate,
+                    lambda: delete_where(spark, Table.load(args.table), args.predicate,
                                          target_bytes=target_bytes, mode=args.mode),
                     attempts=args.retries, backoff_s=args.retry_backoff)
             else:
@@ -618,7 +545,7 @@ def main(argv=None) -> int:
                     k, v = part.split("=", 1)
                     assignments[k.strip()] = v.strip()
                 result = with_retries(
-                    lambda: update_where(spark, Table.load(args.table, branch=args.branch), args.predicate,
+                    lambda: update_where(spark, Table.load(args.table), args.predicate,
                                          assignments, target_bytes=target_bytes),
                     attempts=args.retries, backoff_s=args.retry_backoff)
         elif args.op == "pipeline":
@@ -648,7 +575,7 @@ def main(argv=None) -> int:
 
             if not args.checkpoint:
                 p.error("--op consume-changes requires --checkpoint (the cursor file)")
-            consumer = ChangeFeedConsumer(Table.load(args.table, branch=args.branch), args.checkpoint)
+            consumer = ChangeFeedConsumer(Table.load(args.table), args.checkpoint)
             batch = consumer.poll_changes(spark)
             if batch is None:
                 result = {"caught_up": True, "cursor": consumer.position()}
@@ -676,13 +603,13 @@ def main(argv=None) -> int:
         elif args.op == "verify":
             from e_commerce_lakehouse_spark.operators.verify import verify_table
 
-            result = verify_table(Table.load(args.table, branch=args.branch), snapshot_id=args.snapshot,
+            result = verify_table(Table.load(args.table), snapshot_id=args.snapshot,
                                   spark=spark, check_blooms=args.check_blooms)
         elif args.op == "materialize-deletes":
             from e_commerce_lakehouse_spark.operators.rowlevel import materialize_deletes
 
             result = with_retries(
-                lambda: materialize_deletes(spark, Table.load(args.table, branch=args.branch),
+                lambda: materialize_deletes(spark, Table.load(args.table),
                                             target_bytes=target_bytes),
                 attempts=args.retries, backoff_s=args.retry_backoff)
         elif args.op == "add-constraint":
@@ -690,15 +617,15 @@ def main(argv=None) -> int:
 
             if not (args.constraint_name and args.predicate):
                 p.error("--op add-constraint requires --constraint-name and --predicate")
-            result = add_constraint(spark, Table.load(args.table, branch=args.branch),
+            result = add_constraint(spark, Table.load(args.table),
                                     args.constraint_name, args.predicate)
         elif args.op == "analyze":
             from e_commerce_lakehouse_spark.operators import analyze
 
             cols = [c.strip() for c in args.columns.split(",")] if args.columns else None
-            result = analyze(spark, Table.load(args.table, branch=args.branch), columns=cols)
+            result = analyze(spark, Table.load(args.table), columns=cols)
         elif args.op == "inspect":
-            t = Table.load(args.table, branch=args.branch)
+            t = Table.load(args.table)
             snap = t.snapshot(args.snapshot)
             result = {
                 "snapshots": t.snapshot_ids(),

@@ -69,10 +69,6 @@ def test_clone_refuses_nonempty_and_branch(spark, tmp_path, src_table):
     (dst / "junk").write_text("x")
     with pytest.raises(ValueError, match="not empty"):
         shallow_clone(t, str(dst))
-    t.create_branch("dev")
-    b = Table.load(t.root, branch="dev")
-    with pytest.raises(ValueError, match="branch"):
-        shallow_clone(b, str(tmp_path / "dst2"))
 
 
 def test_clone_excludes_locks_txns_checkpoints(spark, tmp_path, src_table):
@@ -87,38 +83,10 @@ def test_clone_excludes_locks_txns_checkpoints(spark, tmp_path, src_table):
         shallow_clone(t, str(tmp_path / "dst"))
     assert not os.path.exists(str(tmp_path / "dst"))  # no half-built clone
     os.remove(t._lock_path())
-    # txn markers and resume checkpoints never travel into the clone
-    os.makedirs(os.path.join(t.metadata_dir, "txns"), exist_ok=True)
-    open(os.path.join(t.metadata_dir, "txns", "zz.json"), "w").write("{}")
+    # resume checkpoints never travel into the clone
     open(os.path.join(t.metadata_dir, "x.ckpt.jsonl"), "w").write("")
     shallow_clone(t, str(tmp_path / "dst"))
     c = Table.load(str(tmp_path / "dst"))
     assert not os.path.exists(c._lock_path())
-    assert not os.path.isdir(os.path.join(c.metadata_dir, "txns"))
     assert not any(f.endswith(".ckpt.jsonl")
                    for f in os.listdir(c.metadata_dir))
-
-
-def test_clone_skips_inflight_multitable_txn_stage(spark, tmp_path, src_table):
-    """ADVICE r5: a staged snapshot belonging to an in-flight MULTI-TABLE
-    txn must not be captured — in the clone it can never heal or publish
-    (txns/ markers are deliberately dropped), yet once the shared log
-    reads committed it would count as logically published and pin its
-    files forever. Plain WAP stages (no txn_log) are still captured."""
-    from e_commerce_lakehouse_spark.table.txn import MultiTableTransaction
-
-    t, docs = src_table
-    # plain single-table WAP stage: must survive the clone
-    wap = append_dataframe(spark, t, docs.limit(3), publish=False)
-    # in-flight multi-table txn stage: must be skipped
-    txn = MultiTableTransaction(str(tmp_path / "txns"))
-    staged = txn.stage_append(spark, t, docs.limit(5))
-    dst = str(tmp_path / "dst")
-    shallow_clone(t, dst)
-    c = Table.load(dst)
-    cloned_ids = set(c.snapshot_ids())
-    assert wap.snapshot_id in cloned_ids
-    assert staged.snapshot_id not in cloned_ids
-    # source keeps both, and the txn still commits there
-    assert staged.snapshot_id in set(t.snapshot_ids())
-    txn.commit()

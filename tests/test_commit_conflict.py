@@ -71,3 +71,34 @@ def test_rewrite_conflicts_when_tombstone_lands_after_planning(spark, tiny_table
     # passing the CURRENT list (a correctly re-planned writer) commits fine
     t.commit_rewrite([], [], operation="merge",
                      expected_tombstones=t.tombstones())
+
+
+def test_second_holder_of_same_handle_fails_fast(tmp_path):
+    """The commit lock is not re-entrant: while it is held, a second
+    acquisition through the SAME Table handle, from this thread or
+    another, fails fast instead of riding the first holder's lock."""
+    import os
+    import threading
+
+    t = Table.create(str(tmp_path / "t"))
+    errors = []
+
+    def other_thread():
+        try:
+            with t._commit_lock():
+                pass
+        except CommitConflictError as e:
+            errors.append(e)
+
+    with t._commit_lock():
+        with pytest.raises(CommitConflictError, match="COMMIT.lock"):
+            with t._commit_lock():
+                pass
+        th = threading.Thread(target=other_thread)
+        th.start()
+        th.join()
+        assert len(errors) == 1 and errors[0].kind == "lock"
+        assert os.path.exists(t._lock_path())  # the failed attempts left it held
+    assert not os.path.exists(t._lock_path())
+    with t._commit_lock():  # released: the next writer takes it
+        pass

@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from e_commerce_lakehouse_spark.operators.copy_into import copy_into, loaded_files
+from e_commerce_lakehouse_spark.operators.copy_into import copy_into
 from e_commerce_lakehouse_spark.synth import transcripts_df
 from e_commerce_lakehouse_spark.table import scan
 from e_commerce_lakehouse_spark.table.meta import Table
@@ -76,27 +76,6 @@ def test_explicit_list_missing_file_raises(spark, tmp_path, landing):
     t = _mk(tmp_path)
     with pytest.raises(FileNotFoundError, match="copy_into sources missing"):
         copy_into(spark, t, [os.path.join(d, "nope.parquet")])
-
-
-def test_ledger_is_published_chain_only(spark, tmp_path, landing):
-    """A load on a deleted branch was never published to main — its files
-    must still count as unloaded there."""
-    d, df = landing
-    t = _mk(tmp_path)
-    glob_pat = d + "/*/*.parquet"
-    files = sorted(
-        os.path.join(r, f) for r, _, fs in os.walk(d) for f in fs
-        if f.endswith(".parquet")
-    )
-    copy_into(spark, t, files[:1])  # main knows only file 0
-    bt = t.create_branch("side")
-    copy_into(spark, bt, glob_pat)  # branch loads the other two
-    assert len(loaded_files(bt)) == 3
-    t.delete_branch("side")
-    assert len(loaded_files(t)) == 1
-    r = copy_into(spark, t, glob_pat)
-    assert r["files_loaded"] == 2 and r["files_skipped"] == 1
-    assert scan(spark, t).count() == df.count()
 
 
 def test_ledger_survives_compaction(spark, tmp_path, landing):

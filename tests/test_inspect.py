@@ -56,15 +56,12 @@ def test_snapshots_df_chain_staged_and_tombstones(spark, tmp_path):
     t, df = _table(spark, tmp_path)
     extra = transcripts_df(spark, 300, seed=32)
     append_dataframe(spark, t, extra.withColumnRenamed("x", "x"))
-    staged = append_dataframe(spark, t, transcripts_df(spark, 100, seed=33),
-                              publish=False)
     delete_where(spark, t, "turn_idx = 1", mode="merge-on-read")
     s = snapshots_df(spark, t)
     rows = {r["snapshot_id"]: r for r in s.collect()}
     head = t.current_snapshot_id()
-    assert rows[head]["is_current"] and not rows[head]["staged"]
+    assert rows[head]["is_current"] and not rows[head]["orphan"]
     assert rows[head]["n_tombstones"] == 1
-    assert rows[staged.snapshot_id]["staged"]
     assert rows[1]["operation"] == "append" and rows[1]["parent_id"] is None
     assert json.loads(rows[head]["summary_json"])  # non-empty dict
 
@@ -140,18 +137,16 @@ def test_schemas_metadata_table_tracks_evolution(spark, tmp_path):
 
 
 def test_refs_and_manifests_metadata_tables(spark, tmp_path):
-    """``.refs`` lists main + tags + branches; ``.manifests`` attributes
+    """``.refs`` lists main + tags; ``.manifests`` attributes
     live vs dead entries per manifest (the rewrite-manifests signal)."""
     from e_commerce_lakehouse_spark.operators import compact
     from e_commerce_lakehouse_spark.table.inspect import manifests_df, refs_df
 
     t, df = _table(spark, tmp_path)
     t.create_tag("v1")
-    t.create_branch("dev")
     refs = {r["name"]: r for r in refs_df(spark, t).collect()}
     assert refs["main"]["type"] == "main" and refs["main"]["mutable"]
     assert refs["v1"]["type"] == "tag" and not refs["v1"]["mutable"]
-    assert refs["dev"]["type"] == "branch"
     assert refs["v1"]["snapshot_id"] == t.current_snapshot_id()
 
     pre = manifests_df(spark, t).collect()

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from e_commerce_lakehouse_spark.operators.cluster import cluster
 from e_commerce_lakehouse_spark.operators.compact import compact
 from e_commerce_lakehouse_spark.operators.merge import merge_into
+from e_commerce_lakehouse_spark.operators.transcripts import conversation_cost, sft_examples
 from e_commerce_lakehouse_spark.table import scan
 from e_commerce_lakehouse_spark.table.meta import Table
 from e_commerce_lakehouse_spark.table.writer import append_dataframe
@@ -66,3 +67,20 @@ def test_compact_cluster_and_lookup_job_counts(spark, tiny_table):
     with _job_group(spark, "lookup", counts):
         scan(spark, tiny_table, conv_id="conv-000000000007").collect()
     assert counts == {"compact": 1, "cluster": 3, "lookup": 1}
+
+
+def test_timetravel_and_export_job_counts(spark, tiny_table):
+    """Both read a snapshot a compaction has since replaced. timetravel:
+    one scan of the pinned snapshot's planned files, like a head lookup.
+    export: sft_examples (2 jobs) and conversation_cost (5) over one
+    pinned scan, each run to completion into the noop sink."""
+    sid = tiny_table.current_snapshot_id()
+    compact(spark, tiny_table, target_bytes=256 * 1024)
+    counts: dict[str, int] = {}
+    with _job_group(spark, "timetravel", counts):
+        scan(spark, tiny_table, snapshot_id=sid, conv_id="conv-000000000007").collect()
+    with _job_group(spark, "export", counts):
+        pinned = scan(spark, tiny_table, snapshot_id=sid)
+        for op in (sft_examples, conversation_cost):
+            op(pinned).write.format("noop").mode("overwrite").save()
+    assert counts == {"timetravel": 1, "export": 7}

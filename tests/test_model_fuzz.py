@@ -222,104 +222,6 @@ def test_random_lifecycle_program_matches_model(spark, tmp_path, seed):
         history[t.current_snapshot_id()] = ([dict(r) for r in model], list(cols))
 
 
-@pytest.mark.parametrize("seed", [11, 47])
-def test_random_branch_program_matches_model(spark, tmp_path, seed):
-    """Two-ref fuzz: random interleavings of main commits, branch commits,
-    maintenance on either ref, expire, publish (fast_forward), and branch
-    drop — checked step-by-step against one model per ref. Publish must
-    succeed exactly when main has not advanced past the fork; a dropped
-    or unpublished branch must leak nothing into main."""
-    rng = random.Random(seed)
-    next_conv = [0]
-
-    def fresh_rows(n):
-        rows = []
-        for _ in range(n):
-            conv = next_conv[0]
-            next_conv[0] += 1
-            for turn in range(rng.randint(1, 3)):
-                rows.append(_mkrow(rng, conv, turn, []))
-        return rows
-
-    root = str(tmp_path / f"bfuzz-{seed}")
-    model = fresh_rows(30)
-    t = create_transcripts_table(
-        spark, root, _to_df(spark, model, _BASE_COLS), rows_per_file=25,
-        n_append_commits=2,
-    )
-    cols = list(_BASE_COLS)
-    branch = None  # {"bt": Table, "model": rows, "fork": sid}
-
-    from e_commerce_lakehouse_spark.operators.rowlevel import delete_where
-
-    ops = ["append", "merge", "delete_mor", "compact", "expire",
-           "mk_branch", "branch_append", "branch_compact", "publish",
-           "drop_branch"]
-    for step in range(14):
-        op = rng.choice(ops)
-        if op == "append":
-            rows = fresh_rows(rng.randint(2, 5))
-            append_dataframe(spark, t, _to_df(spark, rows, cols))
-            model = model + rows
-        elif op == "merge":
-            victims = rng.sample(model, min(4, len(model)))
-            corr, seen = [], set()
-            for v in victims:
-                key = (v["conv_id"], v["turn_idx"])
-                if key in seen:
-                    continue
-                seen.add(key)
-                corr.append({**v, "text": f"fixed-{rng.randrange(10**9)}"})
-            merge_into(spark, t, _to_df(spark, corr, cols))
-            by_key = {(c["conv_id"], c["turn_idx"]): c for c in corr}
-            model = [by_key.pop((r["conv_id"], r["turn_idx"]), r) for r in model]
-            model += list(by_key.values())
-        elif op == "delete_mor" and model:
-            role = rng.choice(["user", "assistant"])
-            delete_where(spark, t, f"role = '{role}'", mode="merge-on-read")
-            model = [r for r in model if r["role"] != role]
-        elif op == "compact":
-            compact(spark, t, target_bytes=1 << 20)
-        elif op == "expire":
-            expire_snapshots(t, keep_last=2, orphan_grace_ms=0)
-        elif op == "mk_branch" and branch is None:
-            name = f"dev{step}"
-            bt = t.create_branch(name)
-            branch = {"bt": bt, "name": name,
-                      "model": [dict(r) for r in model],
-                      "fork": t.current_snapshot_id()}
-        elif op == "branch_append" and branch:
-            rows = fresh_rows(rng.randint(1, 4))
-            append_dataframe(spark, branch["bt"], _to_df(spark, rows, cols))
-            branch["model"] = branch["model"] + rows
-        elif op == "branch_compact" and branch:
-            compact(spark, branch["bt"], target_bytes=1 << 20)
-        elif op == "publish" and branch:
-            diverged = t.current_snapshot_id() != branch["fork"]
-            if diverged:
-                with pytest.raises(ValueError, match="does not descend"):
-                    t.fast_forward(branch["name"])
-                t.delete_branch(branch["name"])
-            else:
-                t.fast_forward(branch["name"])
-                model = [dict(r) for r in branch["model"]]
-            branch = None
-        elif op == "drop_branch" and branch:
-            t.delete_branch(branch["name"])
-            branch = None
-        _assert_equal(spark, t, model, cols, f"{step}:{op}:main")
-        if branch is not None:
-            _assert_equal(spark, branch["bt"], branch["model"], cols,
-                          f"{step}:{op}:branch")
-    if branch is not None:
-        t.delete_branch(branch["name"])
-    # final: a full maintenance pass on main changes nothing
-    compact(spark, t, target_bytes=1 << 20)
-    rewrite_manifests(t)
-    expire_snapshots(t, keep_last=1, orphan_grace_ms=0)
-    _assert_equal(spark, t, model, cols, "final")
-
-
 @pytest.mark.parametrize("seed", [13, 59, 101])
 def test_random_lifecycle_with_rename_widen_matches_model(spark, tmp_path, seed):
     """Evolution-heavy fuzz: random interleavings of RENAME and WIDEN with

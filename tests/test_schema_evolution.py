@@ -392,19 +392,6 @@ def test_dropped_field_id_never_recycled(spark, tiny_table, tiny_df):
     assert got.count() == N_TURNS + 60
 
 
-def test_branch_evolution_refused_without_side_effect(spark, tiny_table):
-    """Review finding: a refused branch rename must not leave version 1
-    pinned in the table-global schema history."""
-    from e_commerce_lakehouse_spark.operators.schema_evolution import rename_column
-
-    t = tiny_table
-    dev = t.create_branch("dev")
-    assert t.schema_versions() == []
-    with pytest.raises(ValueError, match="branch"):
-        rename_column(dev, "tool", "tool_name")
-    assert t.schema_versions() == []  # no metadata side effect
-
-
 def test_sink_schema_guard_allows_order_and_lag(spark, tiny_table):
     """Review finding: the sink guard must only refuse UNKNOWN columns —
     reordered and schema-lagged (missing nullable) streams bind by name

@@ -95,3 +95,52 @@ def test_incremental_scan_returns_appended_rows(spark, tiny_table, tiny_df):
 
     with pytest.raises(ValueError, match="must be >"):
         incremental_scan(spark, t, t.current_snapshot_id())
+
+
+def test_crash_orphan_never_served_and_its_id_never_reused(spark, tiny_table, tiny_df,
+                                                          monkeypatch):
+    """A commit that crashes after writing its snapshot file but before
+    flipping VERSION leaves a crash orphan. It was never current, so time
+    travel never serves it and history keeps it off the published chain,
+    also after later commits pass it; the next commit takes a fresh id."""
+    import os
+
+    from e_commerce_lakehouse_spark.table.writer import append_dataframe
+
+    t = tiny_table
+    head = t.current_snapshot_id()
+    base_rows = scan(spark, t).count()
+    extra = tiny_df.limit(50).selectExpr(
+        "concat('conv-orphan-', conv_id) AS conv_id", "turn_idx", "role", "text", "tool", "ts"
+    )
+    real_replace = os.replace
+
+    def crash_on_flip(src, dst):
+        if dst == t._version_path():
+            raise OSError("simulated crash before the VERSION flip")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_on_flip)
+        with pytest.raises(OSError, match="simulated crash"):
+            append_dataframe(spark, t, extra)
+    assert t.current_snapshot_id() == head
+    (orphan,) = [sid for sid in t.snapshot_ids() if sid > head]
+    orphan_ts = t.snapshot(orphan).timestamp_ms
+
+    time.sleep(0.05)
+    now = int(time.time() * 1000)
+    assert t.snapshot_id_as_of(now) == head
+    assert t.snapshot_id_as_of(orphan_ts) == head
+    assert scan(spark, t, as_of_ts_ms=now).count() == base_rows
+    hist = {h["snapshot_id"]: h for h in t.history()}
+    assert hist[orphan]["orphan"] and not hist[head]["orphan"]
+
+    nxt = append_dataframe(spark, t, tiny_df.limit(10).selectExpr(
+        "concat('conv-next-', conv_id) AS conv_id", "turn_idx", "role", "text", "tool", "ts"))
+    assert nxt.snapshot_id > orphan and nxt.parent_id == head
+    assert t.snapshot_id_as_of(orphan_ts) == head
+    assert t.snapshot_id_as_of(int(time.time() * 1000) + 10_000) == nxt.snapshot_id
+    hist = {h["snapshot_id"]: h for h in t.history()}
+    assert hist[orphan]["orphan"] and not hist[nxt.snapshot_id]["orphan"]
+    assert scan(spark, t).count() == base_rows + 10

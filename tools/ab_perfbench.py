@@ -24,6 +24,26 @@ and nothing under ``perfbench/`` changes. Scaled numbers explain a
 change or warn of a regression at a size where pruning and locality
 show; gains are claimed on the unscaled ``BENCHMARK.json`` metrics only.
 One scaled run at K=10 takes about 2.5 minutes on 4 cores.
+
+Run-to-run spread at ``--scale 10``: five untraced ``--workload all
+--seed 1`` runs of one checkout (commit ec417f2) in a row, on a 4-core,
+15 GB host at ``local[4]``, 122-133 s each. Median, interquartile range
+over the median, and the range of the five:
+
+    setup_s                12.48 s          6.5%   10.96-13.36
+    ingest_turns_per_s     56,040 turns/s   2.2%   47,690-57,560
+    maintain_turns_per_s   54,320 turns/s   7.0%   48,340-58,220
+    merge_s.p50            2.18 s           6.6%   2.01-2.43
+    lookup_ms.p50          396 ms           2.5%   378-418
+    lookup_ms.tail         438 ms           7.2%   414-485
+    timetravel_ms.p50      402 ms           8.4%   390-473
+    export_s.p50           7.50 s           3.9%   6.94-7.60
+    write_amp              1.880            0.0%   1.880-1.880
+    stored_bytes_per_turn  29.88 B/turn     0.0%   29.88-29.89
+    peak_rss_mb            4,467 MB         0.7%   4,450-4,542
+
+So a single 10x pair cannot tell a timing change under about 10% from
+noise; byte and amplification metrics repeat exactly.
 """
 
 from __future__ import annotations
